@@ -5,20 +5,144 @@ The reference's property graph is (:Product)-[:IN_CATEGORY]->(:Category)
 on plain DataFrames — vertices(id), edges(src, dst) — so everything is
 joins + aggregations that Catalyst can optimize and AQE can re-plan.
 
-Iterative algorithms (connected components, PageRank) are driver-side
-loops over DataFrame steps with localCheckpoint() per iteration to cut
-the lineage. Connected components uses min-label propagation with a
-pointer-doubling shortcut (component ← label of my component vertex
-each round), so labels travel 2^k hops after k rounds and a diameter-d
-graph converges in O(log d) rounds — the log-round behavior that makes
-the loop viable on 100 TB graphs, where O(diameter) plain propagation
-would not be.
+Every iterative algorithm is a step function run by one of two round
+drivers, which own the per-round lineage cut, the one driver action
+per round and the round guard (Pregelix's shared superstep driver):
+
+- ``superstep`` — state-to-state rounds with an optional convergence
+  test (connected components, PageRank, and the label propagation,
+  k-core and SSSP queries in queries/graphq.py);
+- ``bfs_levels`` — level-synchronous BFS that anti-joins each new
+  level against the settled ones (``bfs_distances`` and the all-pairs
+  BFS queries).
+
+Connected components uses min-label propagation with a pointer-doubling
+shortcut (component ← label of my component vertex each round), so
+labels travel 2^k hops after k rounds and a diameter-d graph converges
+in O(log d) rounds rather than O(d).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Callable, Iterable, Optional, Sequence, Tuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def superstep(
+    state: Optional[DataFrame],
+    step: Callable[[Optional[DataFrame]], DataFrame],
+    *,
+    max_iter: int,
+    converged: Optional[Callable[[DataFrame], bool]] = None,
+) -> Tuple[DataFrame, int]:
+    """Run ``state = step(state)`` for at most ``max_iter`` rounds and
+    return ``(state, rounds_run)``.
+
+    Each round's result is cut from its lineage with a LAZY
+    localCheckpoint. The race rule: a lazy checkpoint must be
+    materialized by a single sequential consumer before any concurrent
+    consumer reads it — concurrent first readers (a broadcast build
+    beside a shuffle stage, two threads) each recompute the whole
+    lineage instead of reading persisted blocks. So a round pays at
+    most one driver action, and that action is the sequential first
+    consumer:
+
+    - ``converged(state)``, called on every round's checkpointed result;
+      it must be a full action over every partition (a count or an
+      aggregate collect — never a limit, which could leave partitions
+      for a later reader to recompute). The loop stops when it returns
+      True.
+    - or, with no ``converged``, the one action ``step`` already takes
+      on its input at the start of the next round (PageRank's
+      dangling-mass collect), or none at all (fixed-round steps whose
+      chain is materialized by the caller's action).
+
+    Return contract: the returned frame is lazily checkpointed, and
+    unless ``converged`` ran on it, it is not materialized yet; its
+    first consumer must be one sequential action (the query's write or
+    a collect), not several concurrent ones.
+    """
+    rounds = 0
+    while rounds < max_iter:
+        state = step(state).localCheckpoint(eager=False)
+        rounds += 1
+        if converged is not None and converged(state):
+            break
+    return state, rounds
+
+
+def bfs_levels(
+    seed: DataFrame,
+    expand: Callable[[DataFrame, int], DataFrame],
+    *,
+    keys: Sequence[str],
+    depths: Iterable[int],
+) -> DataFrame:
+    """Level-synchronous BFS; returns the union of ``seed`` (checkpointed
+    eagerly here) and every level reached.
+
+    ``expand(frontier, depth)`` returns the candidate rows one hop past
+    ``frontier``, stamped with ``depth``. Candidates are anti-joined on
+    ``keys`` against every settled level, so a level holds exactly the
+    keys first reached at that depth, and the next frontier is that
+    level. Settled levels stay a list of frames unioned lazily (no
+    per-level rewrite of the growing visited set). Each level is lazily
+    checkpointed and materialized by a full ``count()`` — the sequential
+    first consumer of ``superstep``'s race rule, one driver action per
+    level. The loop stops at an empty level or after the last of
+    ``depths``.
+    """
+    # An eager seed checkpoint measured faster than a bare seed plan
+    # despite its job (graph_shortest_paths at sf0.1, 4 vCPUs: 2.3-2.5 s
+    # vs 3.8-4.0 s warm).
+    seed = seed.localCheckpoint(eager=True)
+    levels = [seed]
+    frontier = seed
+    for depth in depths:
+        settled = reduce(DataFrame.unionByName, [lv.select(*keys) for lv in levels])
+        nxt = (
+            expand(frontier, depth)
+            .join(settled, list(keys), "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        if nxt.count() == 0:
+            break
+        levels.append(nxt)
+        frontier = nxt
+    return reduce(DataFrame.unionByName, levels)
+
+
+def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Both directions of every edge as (src, dst), from ONE scan of
+    ``edges`` (explode of the forward and reversed pair, not a
+    self-union)."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("src"), F.col(dst).alias("dst")),
+                F.struct(F.col(dst).alias("src"), F.col(src).alias("dst")),
+            )
+        ).alias("p")
+    ).select("p.src", "p.dst")
+
+
+def co_occurrence_edges(
+    facts: DataFrame, group: str, item: str
+) -> DataFrame:
+    """Symmetric, lazily checkpointed (src, dst) edges between distinct
+    ``item``s that share a ``group`` value — the co-purchase graph when
+    facts = lineitem, group = order, item = part. Built as the fact
+    self-join on ``group`` plus DISTINCT: the form the oracles' `pairs`
+    CTE states, and measured faster than a per-group collect_set +
+    array-HOF pair expansion (sql_api_recursive_reachability at sf0.1,
+    4 vCPUs: median 3.6 s vs 5.2 s warm)."""
+    a = facts.select(F.col(group), F.col(item).alias("lo"))
+    b = facts.select(F.col(group), F.col(item).alias("hi"))
+    pairs = a.join(b, group).filter(F.col("lo") < F.col("hi")).select("lo", "hi").distinct()
+    return symmetrize(pairs, "lo", "hi").localCheckpoint(eager=False)
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -39,66 +163,30 @@ def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20
 ) -> DataFrame:
     """Min-label propagation: component(v) = min vertex label reachable.
-    Returns (id, component). Each iteration is one shuffle (groupBy id);
-    the loop stops when no label changes."""
-    # Checkpoint the symmetric edge list ONCE — every iteration joins
-    # against it, and without the checkpoint each iteration re-scans
-    # the source (parquet + projections) from the start of lineage.
-    # Symmetrize via explode(array(fwd, rev)) rather than a self-union:
-    # ONE scan of the edge source instead of two (r03 cold A/B: 0.6s vs
-    # 0.9s warm at sf0.1, and at 100 TB it halves the edge-scan I/O).
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .localCheckpoint(eager=True)
-    )
-    # Init = round 1 for free: with component(b)=b the first propagation
-    # join is redundant (min over the augmented neighborhood is just
-    # min(own id, neighbor ids)), so seed labels with that groupBy —
-    # the same shuffle the plain distinct() init would cost, one fewer
-    # join iteration in the loop.
+    Returns (id, component). Each round is one propagation join and one
+    groupBy on ``superstep``; the loop stops when no label changes."""
+    # Every round joins the symmetric edges: checkpoint them once.
+    sym = symmetrize(edges, src, dst).toDF("a", "b").localCheckpoint(eager=True)
+    # Seeding labels with min(own id, neighbor ids) is round 1 for free
+    # (component(b) = b initially), at the cost of the plain init's shuffle.
     labels = (
         sym.groupBy(F.col("a").alias("id"))
         .agg(F.min("b").alias("minb"))
         .select("id", F.least(F.col("id"), F.col("minb")).alias("component"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
-        # One round = neighbor-min propagation + pointer-doubling
-        # shortcut, FUSED into a single join: the label pointers are
-        # appended to the edge list as (v → component(v)) edges, so
-        # min(component(b)) over the augmented neighborhood covers
-        # both the neighbor minimum AND component(component(v)) — the
-        # shortcut that lets labels travel 2^k hops after k rounds
-        # (O(log d) convergence, the same move that makes
-        # small-star/large-star contraction log-round at 100 TB).
-        # Labels are monotone non-increasing and component(x) <= x,
-        # so the augmented min is always <= the old component: the
-        # update needs no least()/coalesce() against the old label,
-        # and every vertex appears via its own pointer edge (no left
-        # join needed for isolated vertices). One propagation join +
-        # one id-aligned join (for the changed flag) per round,
-        # versus three joins in the unfused form. The changed flag is
-        # materialized with the labels, so convergence detection is a
-        # cheap scan of the checkpointed partitions.
-        # r13 (guide §2.4 — remove a join per round): the old round
-        # ended with `new.join(labels, "id")` purely to fetch the OLD
-        # component for the changed flag — an O(V)⋈O(V) join every
-        # round. Instead a tagged SELF edge (a=id, b=id) rides the
-        # augmented edge list: after the target join its bcomp IS the
-        # old component(id), so one grouped pass yields both the new
-        # min and the old value. Adding component(id) to the min-set
-        # is a no-op (the pointer edge already contributes
-        # component(component(id)) <= component(id), and labels are
-        # monotone), so `component` is unchanged — proven by the
-        # union-find property test and the driver hash.
+
+    def step(labels: DataFrame) -> DataFrame:
+        # Neighbor-min propagation and pointer doubling fused into one
+        # join: the label pointers (v → component(v)) ride the edge
+        # list, so min(component(b)) over the augmented neighborhood
+        # covers both the neighbor minimum and component(component(v)).
+        # Labels are monotone non-increasing with component(x) <= x, so
+        # the min never exceeds the old label and every vertex appears
+        # through its own pointer edge. A tagged SELF edge (a=id, b=id)
+        # carries the old component(id) through the same grouped pass
+        # for the changed flag, without a join back to the old labels;
+        # it adds component(id) to the min-set, a no-op.
         aug = (
             sym.withColumn("self", F.lit(False))
             .unionByName(
@@ -115,18 +203,7 @@ def connected_components(
         target = labels.select(
             F.col("id").alias("bid"), F.col("component").alias("bcomp")
         )
-        # r13 (guide §2.4/§5 — one driver action per round, not two):
-        # the checkpoint is LAZY and the convergence count is the
-        # materializing action. The count's plan is Filter(chg) over
-        # the checkpointed RDD, so the job computes and persists EVERY
-        # partition of new_labels (no limit/early-exit — a limit could
-        # leave partitions unmaterialized for a later consumer to
-        # recompute) and returns the changed-row count in the same job
-        # the old protocol spent on the eager checkpoint alone. Safe
-        # from the lazy-checkpoint race: this count is the first,
-        # sequential consumer — blocks are persisted before any other
-        # consumer (next round / final return) can touch them.
-        new_labels = (
+        return (
             aug.join(target, F.col("b") == F.col("bid"))
             .groupBy(F.col("a").alias("id"))
             .agg(
@@ -138,13 +215,15 @@ def connected_components(
                 "component",
                 (F.col("component") < F.col("oldc")).alias("chg"),
             )
-            .localCheckpoint(eager=False)
         )
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            break
-    return labels
+
+    labels, _ = superstep(
+        labels,
+        step,
+        max_iter=max_iter,
+        converged=lambda s: s.filter("chg").count() == 0,
+    )
+    return labels.select("id", "component")
 
 
 def pagerank(
@@ -155,7 +234,13 @@ def pagerank(
     n_iter: int = 10,
 ) -> DataFrame:
     """Fixed-iteration PageRank on the directed edge list. Returns
-    (id, rank); Σ rank ≈ N. Dangling mass is redistributed uniformly."""
+    (id, rank); Σ rank ≈ N. Dangling mass is redistributed uniformly.
+
+    Runs on ``superstep``: each iteration's one driver action is the
+    dangling-mass collect over the previous iteration's ranks. The
+    result is the last iteration's lazily checkpointed frame, not yet
+    materialized — see ``superstep``'s return contract: consume it with
+    one sequential action first."""
     verts = (
         edges.select(F.col(src).alias("id"))
         .unionByName(edges.select(F.col(dst).alias("id")))
@@ -163,22 +248,14 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = verts.count()
-    # out_deg is probed twice per iteration (contrib join + dangling
-    # anti-join) across n_iter rounds — checkpoint it once, same move
-    # as connected_components' sym table.
+    # Probed twice per iteration (contrib join + dangling anti-join).
     out_deg = (
         edges.groupBy(F.col(src).alias("id"))
         .agg(F.count(F.lit(1)).alias("deg"))
         .localCheckpoint(eager=True)
     )
-    ranks = verts.withColumn("rank", F.lit(1.0))
-    for _ in range(n_iter):
-        # r13 (guide §5 — one driver action per iteration, not two):
-        # the dangling-mass collect() is the materializing action for
-        # the PREVIOUS iteration's lazy checkpoint (it is its first,
-        # sequential consumer), so each iteration pays exactly one
-        # blocking job instead of eager-checkpoint + collect. contrib
-        # consumes the same already-persisted blocks afterwards.
+
+    def step(ranks: DataFrame) -> DataFrame:
         dangling = (
             ranks.join(out_deg.select("id"), "id", "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
@@ -191,18 +268,16 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("contrib"))
         )
-        ranks = (
-            verts.join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(1 - damping)
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
+        return verts.join(contrib, "id", "left").select(
+            "id",
+            (
+                F.lit(1 - damping)
+                + F.lit(damping)
+                * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dangling / n))
+            ).alias("rank"),
         )
+
+    ranks, _ = superstep(verts.withColumn("rank", F.lit(1.0)), step, max_iter=n_iter)
     return ranks
 
 
@@ -253,60 +328,23 @@ def bfs_distances(
     max_depth: int = 10,
 ) -> DataFrame:
     """Unweighted shortest-path distances from ``source`` over the
-    undirected graph: frontier-expansion BFS as a driver loop of
-    DataFrame steps (one join + one anti-join per level, localCheckpoint
-    to cut lineage — the connected_components loop pattern). Returns
-    (id, distance) for every vertex within ``max_depth`` hops.
+    undirected graph, on ``bfs_levels``: one frontier join + one
+    anti-join per level. Returns (id, distance) for every vertex within
+    ``max_depth`` hops.
 
     Scale shape: each level shuffles only the CURRENT frontier against
-    the edge list (|frontier|·avg-degree), and the visited set grows
-    monotonically — the standard iterative BFS on 100 TB graphs, where
-    per-level cost tracks the expanding wavefront, not the whole
-    graph. Converges early when a frontier empties."""
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    # r13 (guide §2.4/§5): two fixes from the r12/r13 loop protocol —
-    # (1) settled levels accumulate as a LIST of checkpointed frames
-    # unioned lazily (no per-level re-checkpoint of the whole growing
-    # visited set), and (2) the checkpoint is lazy with the convergence
-    # count as its materializing action: one driver job per level
-    # instead of three (nxt checkpoint + limit-count + visited
-    # re-checkpoint). The count is full (no limit) so every partition
-    # of nxt is persisted before any later consumer reads it.
-    levels = [
-        spark.createDataFrame([(source, 0)], ["id", "distance"]).localCheckpoint(
-            eager=True
-        )
-    ]
-    frontier = levels[0].select("id")
-    for depth in range(1, max_depth + 1):
-        seen = levels[0].select("id")
-        for lv in levels[1:]:
-            seen = seen.unionByName(lv.select("id"))
-        nxt = (
-            sym.join(frontier, sym.a == frontier.id)
-            .select(F.col("b").alias("id"))
+    the edge list (|frontier|·avg-degree), so per-level cost tracks the
+    expanding wavefront, not the whole graph. Converges early when a
+    frontier empties."""
+    sym = symmetrize(edges, src, dst).localCheckpoint(eager=True)
+
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
+        return (
+            sym.join(frontier, sym.src == frontier.id)
+            .select(F.col("dst").alias("id"))
             .distinct()
-            .join(seen, "id", "left_anti")
             .withColumn("distance", F.lit(depth))
-            .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        frontier = nxt.select("id")
-    visited = levels[0]
-    for lv in levels[1:]:
-        visited = visited.unionByName(lv)
-    return visited
+
+    seed = edges.sparkSession.createDataFrame([(source, 0)], ["id", "distance"])
+    return bfs_levels(seed, expand, keys=["id"], depths=range(1, max_depth + 1))

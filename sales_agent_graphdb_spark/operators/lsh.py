@@ -585,7 +585,13 @@ def _portable_banded(
     """(id, band, bucket) rows from distinct shingle tokens via the md5
     hash family — the banded-signature stage shared by the portable
     pairs/join/cluster twins. Bucket = md5 of the seed-ordered minhash
-    row concat, reproduced in SQL as md5(string_agg(.. ORDER BY seed))."""
+    row concat, reproduced in SQL as md5(string_agg(.. ORDER BY seed)).
+    Raises ValueError unless n_bands divides n_hashes (a remainder would
+    silently drop the trailing hashes from every band)."""
+    if n_bands <= 0 or n_hashes % n_bands:
+        raise ValueError(
+            f"n_hashes ({n_hashes}) must be a multiple of n_bands ({n_bands})"
+        )
     rows_per_band = n_hashes // n_bands
     # r13 (guide §2.3 — hash once per DISTINCT gram, then attach): the
     # md5-per-(shingle, seed) family used to be evaluated per token

@@ -325,6 +325,25 @@ def graph_brand_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _proximity_edges(c: DataFrame) -> DataFrame:
+    """The derived customer proximity graph shared by
+    graph_triangle_count, graph_label_propagation and graph_k_core:
+    each customer linked to the next 1 and next 2 custkeys within its
+    nation, as (src, dst) with src < dst. _LPA_EDGES_SQL mirrors it."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("c_nationkey").orderBy("c_custkey")
+    nbr = c.select(
+        F.col("c_custkey").alias("src"),
+        F.array(
+            F.lead("c_custkey", 1).over(w), F.lead("c_custkey", 2).over(w)
+        ).alias("ns"),
+    )
+    return nbr.select("src", F.explode("ns").alias("dst")).filter(
+        F.col("dst").isNotNull()
+    )
+
+
 @register(
     "graph_triangle_count",
     oracle="""
@@ -359,24 +378,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (operators/graph.py:triangle_count); the oracle mirrors the
     same windowed edge derivation and closes wedges with the same two
     joins."""
-    from pyspark.sql import Window as W
-
     c = catalog.load_table(spark, sf_dir, "customer")
-    w = W.partitionBy("c_nationkey").orderBy("c_custkey")
-    nbr = c.select(
-        F.col("c_custkey").alias("k"),
-        F.lead("c_custkey", 1).over(w).alias("n1"),
-        F.lead("c_custkey", 2).over(w).alias("n2"),
-    )
-    edges = (
-        nbr.filter(F.col("n1").isNotNull())
-        .select(F.col("k").alias("src"), F.col("n1").alias("dst"))
-        .unionByName(
-            nbr.filter(F.col("n2").isNotNull()).select(
-                F.col("k").alias("src"), F.col("n2").alias("dst")
-            )
-        )
-    )
+    edges = _proximity_edges(c)
     return graph.triangle_count(edges).orderBy("id")
 
 
@@ -468,63 +471,38 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark-first shape: per round, ONE equi-join (labels onto edge
     sources, partitioned by node key) + ONE map-side-combinable count
-    agg + a per-node argmax window (sharded by node, never global) +
-    a left join back for isolated nodes. The symmetrized edge frame is
-    localCheckpointed once and reused by all rounds. Per-round cost is
-    O(|E|) shuffle — the same budget as one PageRank iteration
-    (operators/graph.py:118); rounds are a fixed small constant. The
-    proximity graph derivation cites graph_triangle_count."""
-    from pyspark.sql import Window as W
-
+    agg + a per-node argmax aggregate (sharded by node, never global) +
+    a left join back for isolated nodes, as a fixed-round step on
+    graph.superstep. The symmetrized edge frame is localCheckpointed
+    once and reused by all rounds. Per-round cost is O(|E|) shuffle —
+    the same budget as one PageRank iteration; rounds are a fixed small
+    constant. Edges: _proximity_edges."""
     c = catalog.load_table(spark, sf_dir, "customer")
-    w = W.partitionBy("c_nationkey").orderBy("c_custkey")
-    nbr = c.select(
-        F.col("c_custkey").alias("k"),
-        F.lead("c_custkey", 1).over(w).alias("n1"),
-        F.lead("c_custkey", 2).over(w).alias("n2"),
-    )
-    e1 = nbr.filter(F.col("n1").isNotNull()).select(
-        F.col("k").alias("lo"), F.col("n1").alias("hi")
-    )
-    e2 = nbr.filter(F.col("n2").isNotNull()).select(
-        F.col("k").alias("lo"), F.col("n2").alias("hi")
-    )
-    edges = e1.unionByName(e2)
-    sym = (
-        edges.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionByName(edges.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
-    labels = c.select(
-        F.col("c_custkey").alias("node"), F.col("c_custkey").cast("bigint").alias("label")
-    )
-    for _ in range(_LPA_ROUNDS):
+    sym = graph.symmetrize(_proximity_edges(c)).localCheckpoint(eager=False)
+
+    def step(labels: DataFrame) -> DataFrame:
         votes = (
             sym.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("wt"))
         )
-        # r13 (guide §2.3 — aggregate instead of window): the per-node
-        # argmax used to be a row_number() window (exchange on node +
-        # per-partition SORT of every vote row). min(struct(-wt,
-        # label)) picks the identical row — struct ordering compares
-        # -wt first (ascending = wt DESC) then label (ascending = the
-        # MIN-label tie-break) — as a map-side-combinable aggregate:
-        # same exchange, no sort, partial aggregation before it.
+        # Per-node argmax as an aggregate, not a row_number window:
+        # min(struct(-wt, label)) orders by wt DESC, then the MIN-label
+        # tie-break, and combines map-side (no per-partition sort).
         # wt >= 1 is a group count, so -wt cannot overflow.
         best = (
             votes.groupBy("node")
             .agg(F.min(F.struct((-F.col("wt")).alias("nw"), F.col("label"))).alias("b"))
             .select("node", F.col("b.label").alias("new_label"))
         )
-        labels = (
-            labels.join(best, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(best, "node", "left").select(
+            "node", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
         )
+
+    labels = c.select(
+        F.col("c_custkey").alias("node"), F.col("c_custkey").cast("bigint").alias("label")
+    )
+    labels, _ = graph.superstep(labels, step, max_iter=_LPA_ROUNDS)
     return labels.select("node", F.col("label").alias("community")).orderBy("node")
 
 
@@ -558,6 +536,28 @@ def _kcore_oracle(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
     return "".join(parts)
 
 
+def _peel_step(sym: DataFrame, k: int):
+    """One k-core peeling round for graph.superstep over a symmetric
+    (src, dst) edge frame: state = (node, deg) of the previous round,
+    whose survivors are the nodes with deg >= k; returns each
+    survivor's degree in the subgraph the survivors induce. State None
+    means nothing has been peeled yet, so round 1 is one groupBy over
+    the edges with no survivor joins."""
+
+    def step(deg):
+        edges = sym
+        if deg is not None:
+            alive = deg.filter(F.col("deg") >= k).select("node")
+            edges = sym.join(alive.withColumnRenamed("node", "src"), "src").join(
+                alive.withColumnRenamed("node", "dst"), "dst"
+            )
+        return edges.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).alias("deg")
+        )
+
+    return step
+
+
 @register("graph_k_core", oracle=_kcore_oracle())
 def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded {k}-core peeling over the customer proximity graph
@@ -571,44 +571,14 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round ONE degree aggregation over edges whose BOTH
     endpoints survive (two semi-join-shaped equi-joins against the
-    checkpointed survivor set, each O(|E|)); the survivor frame
-    shrinks monotonically, so later rounds cost less, never more.
-    Edge derivation shared with graph_triangle_count /
-    graph_label_propagation."""
-    from pyspark.sql import Window as W
-
+    checkpointed survivor set, each O(|E|); _peel_step); the survivor
+    frame shrinks monotonically, so later rounds cost less, never more.
+    Edges: _proximity_edges."""
     c = catalog.load_table(spark, sf_dir, "customer")
-    w = W.partitionBy("c_nationkey").orderBy("c_custkey")
-    nbr = c.select(
-        F.col("c_custkey").alias("k"),
-        F.lead("c_custkey", 1).over(w).alias("n1"),
-        F.lead("c_custkey", 2).over(w).alias("n2"),
-    )
-    e1 = nbr.filter(F.col("n1").isNotNull()).select(
-        F.col("k").alias("lo"), F.col("n1").alias("hi")
-    )
-    e2 = nbr.filter(F.col("n2").isNotNull()).select(
-        F.col("k").alias("lo"), F.col("n2").alias("hi")
-    )
-    edges = e1.unionByName(e2)
-    sym = (
-        edges.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionByName(edges.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
-    nodes = c.select(F.col("c_custkey").alias("node"))
-    deg = None
-    for _ in range(_KCORE_ROUNDS):
-        deg = (
-            sym.join(nodes.withColumnRenamed("node", "src"), "src")
-            .join(nodes.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=False)
-        )
-        nodes = deg.filter(F.col("deg") >= _KCORE_K).select("node")
+    sym = graph.symmetrize(_proximity_edges(c)).localCheckpoint(eager=False)
+    deg, _ = graph.superstep(None, _peel_step(sym, _KCORE_K), max_iter=_KCORE_ROUNDS)
     return (
-        nodes.join(deg, "node")
+        deg.filter(F.col("deg") >= _KCORE_K)
         .select("node", F.col("deg").cast("bigint").alias("residual_degree"))
         .orderBy("node")
     )
@@ -689,87 +659,32 @@ def graph_k_core_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unrolled cardinality sequence.
 
     Scale: the edge build is the bounded per-order basket self-join
-    (same shape as basket_pair_counts — fanout is items-per-order²,
-    never corpus²). Per round: ONE degree aggregation over edges whose
-    both endpoints survive (two equi-joins against the checkpointed
-    survivor set, O(|E|) each); later rounds cost strictly less as the
-    subgraph shrinks, and the loop runs only as long as the data
-    demands. Each round's survivor frame is localCheckpointed so
-    lineage stays O(1) across iterations — the same discipline as
-    connected_components (operators/graph.py) — and the changed-flag
-    count doubles as the materializing action.
+    (graph.co_occurrence_edges — fanout is items-per-order², never
+    corpus²). Per round: ONE degree aggregation over edges whose both
+    endpoints survive (_peel_step, on graph.superstep); later rounds
+    cost strictly less as the subgraph shrinks, and the loop runs only
+    as long as the data demands. Each round's one driver action is the
+    survivor count that tests convergence.
     """
-    li = catalog.load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
+    li = catalog.load_table(spark, sf_dir, "lineitem")
+    sym = graph.co_occurrence_edges(li, "l_orderkey", "l_partkey")
+    sizes = []
+
+    def converged(deg: DataFrame) -> bool:
+        total, alive = deg.agg(
+            F.count(F.lit(1)), F.count(F.when(F.col("deg") >= _KCORE_FIX_K, 1))
+        ).collect()[0]
+        # |n0| = every node of sym (all have deg >= 1 in round 1).
+        prev = sizes[-1] if sizes else total
+        sizes.append(alive)
+        return alive == prev
+
+    deg, rounds = graph.superstep(
+        None, _peel_step(sym, _KCORE_FIX_K), max_iter=_KCORE_FIX_GUARD,
+        converged=converged,
     )
-    # r13 (guide §2.4 — one exchange where the self-join paid a sort):
-    # the co-purchase pairs used to come from a lineitem self-join on
-    # l_orderkey (SMJ: exchange + two sorts of the fact projection,
-    # then a 2.4M-row join output into the distinct). The basket form
-    # groups each order's DISTINCT sorted parts once and expands the
-    # lo<hi pairs map-side with array HOFs — same exchange count (one
-    # groupBy + the distinct) but no sort-merge pass and no pre-distinct
-    # join blowup. Identical pair set: collect_set dedups parts within
-    # an order, array_sort + strictly-later slice enumerates exactly
-    # the lo<hi combinations (interleaved A/B in both orders: 1.8 s vs
-    # 2.1-2.3 s warm, byte-identical 1,196,000 pairs at sf0.1). The
-    # per-order fanout stays items-per-order²-bounded — the same
-    # basket bound the old join had.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), "
-                    "y -> struct(x AS lo, y AS hi))))"
-                )
-            ).alias("p")
-        )
-        .select("p.lo", "p.hi")
-        .distinct()
-    )
-    sym = (
-        pairs.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Round 1 shortcut: the survivor set starts as ALL nodes, so the
-    # first degree pass needs no survivor joins — one groupBy over sym.
-    deg = (
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    # r13: |n0| and |n1| in ONE materializing job (guide §5 — the old
-    # deg.count() + nodes.count() paid two driver actions for two
-    # counts over the same checkpointed frame).
-    init = deg.agg(
-        F.count(F.lit(1)).alias("n0"),
-        F.sum(F.when(F.col("deg") >= _KCORE_FIX_K, 1).otherwise(0)).alias("n1"),
-    ).collect()[0]
-    prev_count = init["n0"]  # |n0| = every node has deg >= 1 in sym
-    nodes = deg.filter(F.col("deg") >= _KCORE_FIX_K).select("node")
-    cur_count = init["n1"] or 0
-    rounds = 1
-    while cur_count != prev_count and rounds < _KCORE_FIX_GUARD:
-        prev_count = cur_count
-        deg = (
-            sym.join(nodes.withColumnRenamed("node", "src"), "src")
-            .join(nodes.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=False)
-        )
-        nodes = deg.filter(F.col("deg") >= _KCORE_FIX_K).select("node")
-        cur_count = nodes.count()
-        rounds += 1
     return (
-        nodes.join(deg, "node")
+        deg.filter(F.col("deg") >= _KCORE_FIX_K)
         .select(
             F.col("node").cast("bigint").alias("node"),
             F.col("deg").cast("bigint").alias("residual_degree"),
@@ -826,9 +741,10 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from identical integer group counts.
 
     At 100 TB: relaxation rounds are bounded frontier joins; the dist
-    state co-partitions with the edge list on the node key, and a
-    localCheckpoint per round truncates the lineage exactly like
-    k-core/CC."""
+    state co-partitions with the edge list on the node key, and each
+    round is a fixed-round step on graph.superstep. The weighted edge
+    build stays its own (not graph.co_occurrence_edges): weights count
+    duplicate (order, part) rows."""
     li = catalog.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -845,18 +761,15 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"), w))
         .localCheckpoint()
     )
-    dist = spark.createDataFrame([(_SSSP_SEED, 0.0)], "node long, dist double")
-    for _ in range(_SSSP_HOPS):
-        relaxed = (
-            dist.join(edges, dist.node == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+
+    def relax(dist: DataFrame) -> DataFrame:
+        relaxed = dist.join(edges, dist.node == edges.src).select(
+            F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    seed = spark.createDataFrame([(_SSSP_SEED, 0.0)], "node long, dist double")
+    dist, _ = graph.superstep(seed, relax, max_iter=_SSSP_HOPS)
     return dist.orderBy("node")
 
 
@@ -1440,43 +1353,21 @@ def _bfs_all_pairs(edges: DataFrame) -> DataFrame:
     distinct, checkpointed (src, dst) edge frame (depth cap 8 — shared
     with every oracle's recursive CTE). Shared by
     graph_harmonic_closeness (full projected edges) and
-    graph_avg_path_length (weight-thresholded backbone)."""
-    # r12: settled levels accumulate as a LIST of already-checkpointed
-    # frames unioned lazily — the old per-level `reach` re-checkpoint
-    # re-materialized ALL settled pairs every level (one extra job +
-    # one full rewrite of a growing frame per level); a union of
-    # checkpointed RDDs reads their blocks with zero recompute, so the
-    # anti-join sees identical data for one job less per level.
-    levels = [edges.withColumn("d", F.lit(1)).localCheckpoint(eager=True)]
-    frontier = edges
-    for depth in range(2, 9):
-        step = edges.select(
-            F.col("src").alias("mid"), F.col("dst").alias("nxt")
-        )
-        cand = (
+    graph_avg_path_length (weight-thresholded backbone), on
+    graph.bfs_levels. Returns (src, dst, d)."""
+    step = edges.select(F.col("src").alias("mid"), F.col("dst").alias("nxt"))
+
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
+        return (
             frontier.join(step, frontier.dst == step.mid)
             .select("src", F.col("nxt").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
             .distinct()
+            .withColumn("d", F.lit(depth))
         )
-        settled = levels[0].select("src", "dst")
-        for lv in levels[1:]:
-            settled = settled.unionByName(lv.select("src", "dst"))
-        # r13: lazy checkpoint + full count — ONE driver job per level
-        # (the count materializes every partition of the checkpoint;
-        # no limit, so nothing is left for a later consumer to
-        # recompute) instead of eager-checkpoint + limit-count.
-        nxt = cand.join(
-            settled, ["src", "dst"], "left_anti"
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        levels.append(nxt.withColumn("d", F.lit(depth)))
-        frontier = nxt
-    reach = levels[0]
-    for lv in levels[1:]:
-        reach = reach.unionByName(lv)
-    return reach
+
+    seed = edges.withColumn("d", F.lit(1))
+    return graph.bfs_levels(seed, expand, keys=["src", "dst"], depths=range(2, 9))
 
 
 # The shared backbone CTE prefix (ob -> e0 -> ranked -> kept -> e) —
@@ -1507,45 +1398,23 @@ def _bfs_sigma(edges: DataFrame) -> DataFrame:
     shortest paths (depth cap 8, shared with every oracle's DP).
     Returns (src, dst, d, sg) for every reachable ordered pair.
     Sibling of _bfs_all_pairs with per-level aggregation instead of
-    distinct."""
-    # r12: same lazily-unioned level list as _bfs_all_pairs — one job
-    # less per level (no re-checkpoint of the growing settled set).
-    levels = [
-        edges.select("src", "dst")
-        .withColumn("d", F.lit(1))
-        .withColumn("sg", F.lit(1).cast("bigint"))
-        .localCheckpoint(eager=True)
-    ]
-    frontier = levels[0]
-    for depth in range(2, 9):
-        step = edges.select(
-            F.col("src").alias("mid"), F.col("dst").alias("nxt")
-        )
-        cand = (
+    distinct, on graph.bfs_levels."""
+    step = edges.select(F.col("src").alias("mid"), F.col("dst").alias("nxt"))
+
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
+        return (
             frontier.join(step, frontier.dst == step.mid)
             .select("src", F.col("nxt").alias("dst"), "sg")
             .filter(F.col("src") != F.col("dst"))
             .groupBy("src", "dst")
             .agg(F.sum("sg").cast("bigint").alias("sg"))
+            .withColumn("d", F.lit(depth))
         )
-        settled = levels[0].select("src", "dst")
-        for lv in levels[1:]:
-            settled = settled.unionByName(lv.select("src", "dst"))
-        # r13: lazy checkpoint + full count — one driver job per level
-        # (same protocol as _bfs_all_pairs).
-        nxt = cand.join(
-            settled, ["src", "dst"], "left_anti"
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        levels.append(
-            nxt.withColumn("d", F.lit(depth)).select("src", "dst", "d", "sg")
-        )
-        frontier = nxt
-    reach = levels[0]
-    for lv in levels[1:]:
-        reach = reach.unionByName(lv)
-    return reach
+
+    seed = edges.select(
+        "src", "dst", F.lit(1).alias("d"), F.lit(1).cast("bigint").alias("sg")
+    )
+    return graph.bfs_levels(seed, expand, keys=["src", "dst"], depths=range(2, 9))
 
 
 def _betweenness_oracle() -> str:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.operators import graph
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -781,17 +782,9 @@ SELECT node, CAST(MIN(depth) AS INT) AS min_depth,
 FROM walk GROUP BY node ORDER BY min_depth, node
 """
 
-# Engine-side statement (r12 optimization): the RECURSIVE walk +
-# aggregate only, over a pre-materialized symmetric edge view. Spark
-# has no MATERIALIZED hint for CTEs, and its recursive execution
-# re-evaluates every non-recursive CTE referenced from the recursive
-# step ON EACH ITERATION — measured at sf0.1, the lineitem self-join +
-# DISTINCT ran once per walk step (8.5 s warm); with the edge list
-# materialized once (localCheckpoint) the same walk is 3.8 s warm and
-# the recursion joins a frontier against cached blocks. DuckDB's
-# optimizer materializes multi-referenced CTEs itself, so the oracle
-# keeps the single-statement form (_SQL_RCTE) — both engines compute
-# the identical walk multiset (parity re-proven r12).
+# Engine-side statement: the RECURSIVE walk + aggregate only, over a
+# pre-materialized symmetric edge view (see
+# sql_api_recursive_reachability for why).
 _SQL_RCTE_WALK = """
 WITH RECURSIVE walk(node, depth) AS (
   SELECT CAST(42 AS BIGINT) AS node, 0 AS depth
@@ -822,58 +815,25 @@ def sql_api_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFram
     the hash certifies the full multiset of walks, not just
     reachability.
 
-    r12 optimization (guide §2.4 — remove repeated work): the
-    co-purchase edge list is built once with the DataFrame API and
-    localCheckpointed behind a temp view; only the recursive walk runs
-    as SQL text. Spark's recursive-CTE execution re-evaluates
-    non-recursive CTEs referenced from the recursive step once PER
-    ITERATION (the DISTINCT self-join ran once per walk step — the
-    exact failure mode the betweenness oracle's MATERIALIZED hints
-    guard against on the DuckDB side). Measured at sf0.1: 8.5 s → 3.8 s
-    warm, identical output. The oracle stays the original
-    single-statement form (DuckDB materializes multi-referenced CTEs
-    itself).
+    The co-purchase edge list is built once with the DataFrame API
+    (graph.co_occurrence_edges — the lineitem self-join + DISTINCT the
+    oracle's `pairs` CTE states) and lazily checkpointed behind a temp
+    view; only the recursive walk runs as SQL text. Spark's
+    recursive-CTE execution re-evaluates non-recursive CTEs referenced
+    from the recursive step once PER ITERATION, so the single-statement
+    form would rebuild the edges every walk step (8.5 s vs 3.8 s warm
+    at sf0.1). The oracle stays the single-statement form (DuckDB
+    materializes multi-referenced CTEs itself); the full statement
+    still runs through the engine in
+    tests/test_r13_optimizations.py::test_full_rcte_statement_engine_coverage.
 
     Scale: recursion depth is a CONSTANT (2) — each step is one
     equi-join of the frontier against the MATERIALIZED edge list (at
     100 TB: the edge build is paid once, not once per hop), the same
     per-round budget as the iterative graph operators; the final
     GROUP BY is map-side combinable."""
-    li = catalog.load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    # r13 (guide §2.4, same move as graph_k_core_fixpoint): the edge
-    # build's lineitem self-join (SMJ + pre-distinct 2.4M-row blowup)
-    # is replaced by the basket form — per-order DISTINCT sorted parts
-    # expanded to lo<hi pairs map-side with array HOFs. The pair SET is
-    # identical to the oracle's `pairs` CTE (collect_set dedups within
-    # the order; sorted strictly-later slices enumerate exactly the
-    # lo<hi combinations — byte-identical 1,196,000 pairs at sf0.1),
-    # so the materialized `sym` view feeds the SQL walk the same edge
-    # multiset as before. The full single-statement _SQL_RCTE still
-    # runs through the engine in
-    # tests/test_r13_optimizations.py::test_full_rcte_statement_engine_coverage.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), "
-                    "y -> struct(x AS lo, y AS hi))))"
-                )
-            ).alias("p")
-        )
-        .select("p.lo", "p.hi")
-        .distinct()
-    )
-    sym = (
-        pairs.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        .unionByName(pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
+    li = catalog.load_table(spark, sf_dir, "lineitem")
+    sym = graph.co_occurrence_edges(li, "l_orderkey", "l_partkey")
     sym.createOrReplaceTempView("sqlapi_rcte_sym")
     return spark.sql(_SQL_RCTE_WALK.format(sym="sqlapi_rcte_sym"))
 

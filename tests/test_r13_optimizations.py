@@ -10,7 +10,8 @@ Each test pins an equivalence the r13 optimization round relies on:
    construction byte-for-byte.
 3. The lazy-checkpoint + full-count convergence protocol (one driver
    action per round) leaves connected_components / bfs_distances /
-   pagerank results identical to driver-side references.
+   pagerank results identical to driver-side references, within a
+   fixed job budget.
 """
 
 from __future__ import annotations
@@ -121,6 +122,12 @@ def test_portable_banded_matches_old_construction(spark, docs):
     assert len(new_rows) == 6 * n_bands
 
 
+def test_portable_banded_rejects_indivisible_bands(spark, docs):
+    toks = lsh.shingle_tokens(docs, "text", "doc_id", 5).distinct()
+    with pytest.raises(ValueError, match="multiple of n_bands"):
+        lsh._portable_banded(toks, 16, 5)
+
+
 def _union_find_components(edges, nodes):
     parent = {n: n for n in nodes}
 
@@ -137,26 +144,60 @@ def _union_find_components(edges, nodes):
     return {n: find(n) for n in nodes}
 
 
+# A path (long diameter — exercises several pointer-doubling rounds), a
+# star, and an isolated self-contained pair.
+_CC_EDGES = [(i, i + 1) for i in range(1, 10)] + [
+    (20, 21),
+    (20, 22),
+    (20, 23),
+    (30, 31),
+]
+_BFS_EDGES = [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6), (6, 7), (8, 9)]
+
+
 def test_connected_components_lazy_count_protocol(spark):
-    # A path (long diameter — exercises several pointer-doubling
-    # rounds), a star, and an isolated self-contained pair.
-    edges = [(i, i + 1) for i in range(1, 10)] + [
-        (20, 21),
-        (20, 22),
-        (20, 23),
-        (30, 31),
-    ]
-    nodes = sorted({x for e in edges for x in e})
-    e = spark.createDataFrame(edges, ["src", "dst"])
+    nodes = sorted({x for e in _CC_EDGES for x in e})
+    e = spark.createDataFrame(_CC_EDGES, ["src", "dst"])
     got = {r["id"]: r["component"] for r in graph.connected_components(e).collect()}
-    assert got == _union_find_components(edges, nodes)
+    assert got == _union_find_components(_CC_EDGES, nodes)
 
 
 def test_bfs_distances_level_list_protocol(spark):
-    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6), (6, 7), (8, 9)]
-    e = spark.createDataFrame(edges, ["src", "dst"])
+    e = spark.createDataFrame(_BFS_EDGES, ["src", "dst"])
     got = {r["id"]: r["distance"] for r in graph.bfs_distances(e, 1, max_depth=10).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 6: 2, 4: 3, 7: 3, 5: 4}
+
+
+def _jobs_in_group(spark, group, action):
+    """Spark jobs launched by ``action()`` (graph build + collect),
+    counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_round_drivers_job_budget(spark):
+    """One driver action per round (graph.superstep, graph.bfs_levels):
+    the job counts of connected_components and bfs_distances on the
+    fixtures above may not exceed the counts measured before the loops
+    moved onto the round drivers (34 and 42 jobs, AQE stage jobs
+    included, 8 shuffle partitions). A second action per round adds
+    one job per round and fails this."""
+    cc = spark.createDataFrame(_CC_EDGES, ["src", "dst"])
+    bfs = spark.createDataFrame(_BFS_EDGES, ["src", "dst"])
+    n_cc = _jobs_in_group(
+        spark, "budget:cc", lambda: graph.connected_components(cc).collect()
+    )
+    n_bfs = _jobs_in_group(
+        spark, "budget:bfs", lambda: graph.bfs_distances(bfs, 1, max_depth=10).collect()
+    )
+    assert n_cc <= 34, n_cc
+    assert n_bfs <= 42, n_bfs
 
 
 def test_pagerank_single_action_protocol(spark):
@@ -230,11 +271,11 @@ walk = [os.path.join(d, f) for d, _, fs in os.walk(ck) for f in fs]
 assert walk, "no reliable checkpoint files were written under " + ck
 print("RELIABLE_OK", len(walk))
 """
-    env = dict(
-        **{k: v for k, v in __import__("os").environ.items()},
-        SPARK_GRAFT_RELIABLE_CHECKPOINT=ckdir,
-        SPARK_GRAFT_CPUS="4",
-    )
+    env = {
+        **__import__("os").environ,
+        "SPARK_GRAFT_RELIABLE_CHECKPOINT": ckdir,
+        "SPARK_GRAFT_CPUS": "4",
+    }
     r = subprocess.run(
         [_sys.executable, "-c", prog], env=env, capture_output=True, text=True,
         timeout=600,
@@ -244,10 +285,10 @@ print("RELIABLE_OK", len(walk))
 
 
 def test_basket_pair_expansion_equals_self_join(spark):
-    """r13: the co-purchase edge build (k-core fixpoint, recursive
-    reachability) moved from a lineitem self-join + distinct to a
-    per-basket HOF expansion. Pin set equality on data with duplicate
-    (order, part) rows and singleton baskets."""
+    """The per-basket HOF pair expansion equals the lineitem self-join +
+    distinct, and graph.co_occurrence_edges (the self-join form the
+    co-purchase queries use) yields both directions of that pair set.
+    Data has duplicate (order, part) rows and singleton baskets."""
     li = spark.createDataFrame(
         [(1, 10), (1, 20), (1, 10), (1, 30), (2, 5), (2, 7), (3, 9),
          (4, 2), (4, 2)],
@@ -279,3 +320,8 @@ def test_basket_pair_expansion_equals_self_join(spark):
     assert sorted(tuple(r) for r in join_pairs.collect()) == sorted(
         tuple(r) for r in hof_pairs.collect()
     ) == [(5, 7), (10, 20), (10, 30), (20, 30)]
+    sym = graph.co_occurrence_edges(li, "l_orderkey", "l_partkey")
+    pairs = [(5, 7), (10, 20), (10, 30), (20, 30)]
+    assert sorted(tuple(r) for r in sym.collect()) == sorted(
+        pairs + [(hi, lo) for lo, hi in pairs]
+    )
