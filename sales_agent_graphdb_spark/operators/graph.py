@@ -30,6 +30,8 @@ from typing import Callable, Iterable, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sales_agent_graphdb_spark.session import materialize
+
 
 def superstep(
     state: Optional[DataFrame],
@@ -41,14 +43,9 @@ def superstep(
     """Run ``state = step(state)`` for at most ``max_iter`` rounds and
     return ``(state, rounds_run)``.
 
-    Each round's result is cut from its lineage with a LAZY
-    localCheckpoint. The race rule: a lazy checkpoint must be
-    materialized by a single sequential consumer before any concurrent
-    consumer reads it — concurrent first readers (a broadcast build
-    beside a shuffle stage, two threads) each recompute the whole
-    lineage instead of reading persisted blocks. So a round pays at
-    most one driver action, and that action is the sequential first
-    consumer:
+    Each round's result is cut from its lineage with a lazy
+    ``materialize`` (see its race rule), so a round pays at most one
+    driver action, and that action is the sequential first consumer:
 
     - ``converged(state)``, called on every round's checkpointed result;
       it must be a full action over every partition (a count or an
@@ -67,7 +64,7 @@ def superstep(
     """
     rounds = 0
     while rounds < max_iter:
-        state = step(state).localCheckpoint(eager=False)
+        state = materialize(step(state), eager=False)
         rounds += 1
         if converged is not None and converged(state):
             break
@@ -91,22 +88,18 @@ def bfs_levels(
     level. Settled levels stay a list of frames unioned lazily (no
     per-level rewrite of the growing visited set). Each level is lazily
     checkpointed and materialized by a full ``count()`` — the sequential
-    first consumer of ``superstep``'s race rule, one driver action per
+    first consumer of ``materialize``'s race rule, one driver action per
     level. The loop stops at an empty level or after the last of
     ``depths``.
     """
-    # An eager seed checkpoint measured faster than a bare seed plan
-    # despite its job (graph_shortest_paths at sf0.1, 4 vCPUs: 2.3-2.5 s
-    # vs 3.8-4.0 s warm).
-    seed = seed.localCheckpoint(eager=True)
+    # Eager: measured faster than a bare seed plan (graph_shortest_paths, sf0.1).
+    seed = materialize(seed, eager=True)
     levels = [seed]
     frontier = seed
     for depth in depths:
         settled = reduce(DataFrame.unionByName, [lv.select(*keys) for lv in levels])
-        nxt = (
-            expand(frontier, depth)
-            .join(settled, list(keys), "left_anti")
-            .localCheckpoint(eager=False)
+        nxt = materialize(
+            expand(frontier, depth).join(settled, list(keys), "left_anti"), eager=False
         )
         if nxt.count() == 0:
             break
@@ -142,7 +135,7 @@ def co_occurrence_edges(
     a = facts.select(F.col(group), F.col(item).alias("lo"))
     b = facts.select(F.col(group), F.col(item).alias("hi"))
     pairs = a.join(b, group).filter(F.col("lo") < F.col("hi")).select("lo", "hi").distinct()
-    return symmetrize(pairs, "lo", "hi").localCheckpoint(eager=False)
+    return materialize(symmetrize(pairs, "lo", "hi"), eager=False)
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -166,14 +159,14 @@ def connected_components(
     Returns (id, component). Each round is one propagation join and one
     groupBy on ``superstep``; the loop stops when no label changes."""
     # Every round joins the symmetric edges: checkpoint them once.
-    sym = symmetrize(edges, src, dst).toDF("a", "b").localCheckpoint(eager=True)
+    sym = materialize(symmetrize(edges, src, dst).toDF("a", "b"), eager=True)
     # Seeding labels with min(own id, neighbor ids) is round 1 for free
     # (component(b) = b initially), at the cost of the plain init's shuffle.
-    labels = (
+    labels = materialize(
         sym.groupBy(F.col("a").alias("id"))
         .agg(F.min("b").alias("minb"))
-        .select("id", F.least(F.col("id"), F.col("minb")).alias("component"))
-        .localCheckpoint(eager=True)
+        .select("id", F.least(F.col("id"), F.col("minb")).alias("component")),
+        eager=True,
     )
 
     def step(labels: DataFrame) -> DataFrame:
@@ -241,18 +234,18 @@ def pagerank(
     result is the last iteration's lazily checkpointed frame, not yet
     materialized — see ``superstep``'s return contract: consume it with
     one sequential action first."""
-    verts = (
+    # count() is the one sequential first consumer.
+    verts = materialize(
         edges.select(F.col(src).alias("id"))
         .unionByName(edges.select(F.col(dst).alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=False,
     )
     n = verts.count()
     # Probed twice per iteration (contrib join + dangling anti-join).
-    out_deg = (
-        edges.groupBy(F.col(src).alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
+    out_deg = materialize(
+        edges.groupBy(F.col(src).alias("id")).agg(F.count(F.lit(1)).alias("deg")),
+        eager=True,
     )
 
     def step(ranks: DataFrame) -> DataFrame:
@@ -297,14 +290,14 @@ def triangle_count(
     is rooted at its middle vertex; skew-salting applies if a hub
     vertex dominates). Each closed triangle (a,b,c) is then credited
     to all three vertices via one explode."""
-    canon = (
+    canon = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("lo"),
             F.greatest(F.col(src), F.col(dst)).alias("hi"),
         )
         .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     e1 = canon.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     e2 = canon.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
@@ -336,7 +329,7 @@ def bfs_distances(
     the edge list (|frontier|·avg-degree), so per-level cost tracks the
     expanding wavefront, not the whole graph. Converges early when a
     frontier empties."""
-    sym = symmetrize(edges, src, dst).localCheckpoint(eager=True)
+    sym = materialize(symmetrize(edges, src, dst), eager=True)
 
     def expand(frontier: DataFrame, depth: int) -> DataFrame:
         return (

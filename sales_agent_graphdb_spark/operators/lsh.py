@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sales_agent_graphdb_spark.session import materialize
+
 
 def normalized(c: Column) -> Column:
     return F.regexp_replace(F.lower(c), r"[^a-z0-9 ]", "")
@@ -192,19 +194,9 @@ def minhash_lsh_pairs(
     # (A single nested-HOF expression would be re-inlined by
     # CollapseProject and re-evaluate the shingle array once per
     # seed — O(seeds · |shingles|²) interpreted work per row.)
-    # Checkpoint the shingle stream: both the signature build and the
-    # exact-verify shingle sets consume it — shingling (regex + explode
-    # + substr over the whole corpus) should run once.
-    tokens = shingle_tokens(df, text_col, id_col, shingle_k).localCheckpoint(eager=False)
-
-    # minhash_sigs: double-hash signature build (see its docstring).
-    # sig feeds three consumers (banding + both sides of the estimate
-    # join); cut lineage so the token→hash→min pipeline runs once, not
-    # three times. Lazy is SAFE here (r12): the eager `survivors`
-    # checkpoint below materializes tokens+sig exactly once on its
-    # sequential path before any concurrent consumer (the sh broadcast
-    # threads) can race them.
-    sig = minhash_sigs(tokens, n_hashes).localCheckpoint(eager=False)
+    # tokens and sig: first consumer is the eager `survivors` build below.
+    tokens = materialize(shingle_tokens(df, text_col, id_col, shingle_k), eager=False)
+    sig = materialize(minhash_sigs(tokens, n_hashes), eager=False)
     banded = band_rows(sig, n_bands, rows_per_band)
 
     if max_bucket_size is not None:
@@ -261,18 +253,13 @@ def minhash_lsh_pairs(
     for i in range(n_hashes):
         t = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         agree = t if agree is None else agree + t
-    survivors = (
+    # Eager: the sh broadcast build and the final pair join read it concurrently.
+    survivors = materialize(
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .filter((agree / float(n_hashes)) >= est_threshold)
-        .select("id_a", "id_b")
-        # survivors feeds both the shingle-set build (via the id prune)
-        # and the final pair join — checkpoint so the band join +
-        # estimate cascade runs once, not once per consumer. EAGER
-        # (r12): the two consumers materialize concurrently (the sh
-        # broadcast thread + the main pair join); a lazy checkpoint
-        # lets both race and re-run the whole cascade from scratch.
-        .localCheckpoint(eager=True)
+        .select("id_a", "id_b"),
+        eager=True,
     )
     # Cascade stage 3 — exact-Jaccard verify on survivors only, over
     # HASHED shingle sets (long compares, not 4-char strings); one
@@ -282,16 +269,13 @@ def minhash_lsh_pairs(
         .unionByName(survivors.select(F.col("id_b").alias("cid")))
         .distinct()
     )
-    sh = (
+    # Eager: the a-side and b-side broadcast builds read it concurrently.
+    sh = materialize(
         tokens.join(cand_ids, F.col("id") == F.col("cid"), "left_semi")
         .groupBy("id")
         .agg(F.collect_set(F.xxhash64("g")).alias("sh"))
-        .withColumn("n", F.size("sh"))
-        # two broadcast builds (a-side, b-side) consume this — compute
-        # the hashed shingle sets once. EAGER (r12): each F.broadcast
-        # build thread otherwise races to materialize the lazy
-        # checkpoint and recomputes the semi-join + collect_set twice.
-        .localCheckpoint(eager=True)
+        .withColumn("n", F.size("sh")),
+        eager=True,
     )
     # Broadcast the per-doc shingle-set table (survivor docs only, a
     # few MB of hashed-long arrays) so the pair join stays map-side —
@@ -347,14 +331,10 @@ def minhash_lsh_join(
     ``max_bucket_size`` caps template-cluster buckets on the corpus
     side only (the batch side is already bounded)."""
     rows_per_band = n_hashes // n_bands
-    toks_new = shingle_tokens(new_df, text_col, id_col, shingle_k).localCheckpoint(
-        eager=False
-    )
-    toks_cor = shingle_tokens(corpus_df, text_col, id_col, shingle_k).localCheckpoint(
-        eager=False
-    )
-    sig_new = minhash_sigs(toks_new, n_hashes).localCheckpoint(eager=False)
-    sig_cor = minhash_sigs(toks_cor, n_hashes).localCheckpoint(eager=False)
+    toks_new = materialize(shingle_tokens(new_df, text_col, id_col, shingle_k), eager=False)
+    toks_cor = materialize(shingle_tokens(corpus_df, text_col, id_col, shingle_k), eager=False)
+    sig_new = materialize(minhash_sigs(toks_new, n_hashes), eager=False)
+    sig_cor = materialize(minhash_sigs(toks_cor, n_hashes), eager=False)
     bands_new = band_rows(sig_new, n_bands, rows_per_band)
     bands_cor = band_rows(sig_cor, n_bands, rows_per_band)
     if max_bucket_size is not None:
@@ -388,12 +368,12 @@ def minhash_lsh_join(
     for i in range(n_hashes):
         t = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         agree = t if agree is None else agree + t
-    survivors = (
+    survivors = materialize(
         cand.join(sa, "new_id")
         .join(sb, "corpus_id")
         .filter((agree / float(n_hashes)) >= jaccard_threshold)
-        .select("new_id", "corpus_id")
-        .localCheckpoint(eager=False)
+        .select("new_id", "corpus_id"),
+        eager=False,
     )
     # Exact verify on survivors, hashed shingle sets per side.
     def _sets(tokens: DataFrame, ids: DataFrame) -> DataFrame:
@@ -579,13 +559,42 @@ def _portable_hash(s: Column, seed: Column) -> Column:
     ).cast("bigint")
 
 
-def _portable_banded(
-    toks: DataFrame, n_hashes: int, n_bands: int
-) -> DataFrame:
-    """(id, band, bucket) rows from distinct shingle tokens via the md5
-    hash family — the banded-signature stage shared by the portable
-    pairs/join/cluster twins. Bucket = md5 of the seed-ordered minhash
-    row concat, reproduced in SQL as md5(string_agg(.. ORDER BY seed)).
+def _portable_signatures(toks: DataFrame, n_hashes: int) -> DataFrame:
+    """(id, mh0..mh{n_hashes-1}): each doc's md5-family MinHash
+    signature over its distinct shingle tokens (id, g).
+
+    All n_hashes hashes are computed once per DISTINCT gram (the
+    dictionary is vocabulary-bounded) and broadcast-joined back, so the
+    signature is one grouped pass of n_hashes partial mins, not an
+    n_hashes-way seed explode of every token occurrence. Bit-identical
+    to the explode form (same md5 on the same strings, min over the
+    same per-doc set); pinned by tests/test_r13_optimizations.py and the
+    portable twins' driver hashes. A dictionary too large to broadcast
+    (>10^8 grams) needs the hint removed; the hashing saving stays."""
+    # Eager: the broadcast build is the first reader.
+    gh = materialize(
+        toks.select("g").distinct().select(
+            "g",
+            *[
+                _portable_hash(F.col("g"), F.lit(s)).alias(f"h{s}")
+                for s in range(n_hashes)
+            ],
+        ),
+        eager=True,
+    )
+    return (
+        toks.join(F.broadcast(gh), "g")
+        .groupBy("id")
+        .agg(*[F.min(F.col(f"h{s}")).alias(f"mh{s}") for s in range(n_hashes)])
+    )
+
+
+def _band_buckets(sig: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
+    """(id, band, bucket) rows from a ``_portable_signatures`` frame,
+    derived map-side. Bucket = md5 of the band's seed-ordered minhash
+    concat, reproduced in SQL as md5(string_agg(.. ORDER BY seed));
+    concat_ws would skip a null min, but every doc has >= 1 token, so
+    every min is defined.
     Raises ValueError unless n_bands divides n_hashes (a remainder would
     silently drop the trailing hashes from every band)."""
     if n_bands <= 0 or n_hashes % n_bands:
@@ -593,33 +602,7 @@ def _portable_banded(
             f"n_hashes ({n_hashes}) must be a multiple of n_bands ({n_bands})"
         )
     rows_per_band = n_hashes // n_bands
-    # r13 (guide §2.3 — hash once per DISTINCT gram, then attach): the
-    # md5-per-(shingle, seed) family used to be evaluated per token
-    # occurrence under an n_hashes-way seed explode (n_hashes md5s ×
-    # |tokens| rows through a Generate + (id, seed) exchange + a second
-    # (id, band) ObjectHashAggregate). The gram dictionary is
-    # vocabulary-bounded, so all n_hashes hashes are computed once per
-    # distinct gram and broadcast-joined back; the signature is ONE
-    # grouped pass of n_hashes partial mins, and the band buckets
-    # derive map-side: concat_ws over the seed-ordered min columns is
-    # byte-identical to the old md5(array_join(array_sort(
-    # collect_list(struct(seed, mh))))) string (seed-ordered, no nulls
-    # possible — every doc has >= 1 token, so every min is defined).
-    # Bit-equality pinned by tests/test_r13_optimizations.py and the
-    # portable twins' driver hashes.
-    gh = toks.select("g").distinct().select(
-        "g",
-        *[
-            _portable_hash(F.col("g"), F.lit(s)).alias(f"h{s}")
-            for s in range(n_hashes)
-        ],
-    ).localCheckpoint(eager=True)
-    minw = (
-        toks.join(F.broadcast(gh), "g")
-        .groupBy("id")
-        .agg(*[F.min(F.col(f"h{s}")).alias(f"mh{s}") for s in range(n_hashes)])
-    )
-    return minw.select(
+    return sig.select(
         "id",
         F.explode(
             F.array(
@@ -643,6 +626,15 @@ def _portable_banded(
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+def _portable_banded(
+    toks: DataFrame, n_hashes: int, n_bands: int
+) -> DataFrame:
+    """(id, band, bucket) rows from distinct shingle tokens via the md5
+    hash family — the banded-signature stage shared by the portable
+    pairs/join/cluster twins."""
+    return _band_buckets(_portable_signatures(toks, n_hashes), n_hashes, n_bands)
+
+
 def minhash_lsh_pairs_portable(
     df: DataFrame,
     text_col: str = "text",
@@ -663,7 +655,7 @@ def minhash_lsh_pairs_portable(
     rows for the candidate join, shingle sets joined back only for the
     verified candidates, and every aggregation map-side combinable."""
     toks = shingle_tokens(df, text_col, id_col, shingle_k).distinct()
-    toks = toks.localCheckpoint(eager=False)  # feeds minhash AND verify
+    toks = materialize(toks, eager=False)  # feeds minhash AND verify
     banded = _portable_banded(toks, n_hashes, n_bands)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -708,8 +700,8 @@ def minhash_lsh_join_portable(
     threshold."""
     toks_new = shingle_tokens(new_df, text_col, id_col, shingle_k).distinct()
     toks_cor = shingle_tokens(corpus_df, text_col, id_col, shingle_k).distinct()
-    toks_new = toks_new.localCheckpoint(eager=False)
-    toks_cor = toks_cor.localCheckpoint(eager=False)
+    toks_new = materialize(toks_new, eager=False)
+    toks_cor = materialize(toks_cor, eager=False)
     bands_new = _portable_banded(toks_new, n_hashes, n_bands)
     bands_cor = _portable_banded(toks_cor, n_hashes, n_bands)
     cand = (

@@ -6,7 +6,7 @@ self-flagged weakness of w5_ntile_buckets); this operator computes the
 identical result with no single-partition stage:
 
 1. range-repartition by the order key (partitions hold disjoint,
-   ordered key ranges) and materialize ONCE (localCheckpoint) so every
+   ordered key ranges) and materialize ONCE (``materialize``) so every
    consumer sees the same physical partitioning;
 2. local pass: per-partition running sum (window partitioned by
    ``spark_partition_id()`` — each partition sorts independently);
@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sales_agent_graphdb_spark.session import materialize
+
 
 def global_prefix_sum(
     df: DataFrame,
@@ -58,10 +60,11 @@ def global_prefix_sum(
     if num_partitions is None:
         conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         num_partitions = int(conf) if str(conf).isdigit() else 32  # "auto" etc.
-    ranged = (
-        df.repartitionByRange(num_partitions, F.col(order_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    ranged = materialize(
+        df.repartitionByRange(num_partitions, F.col(order_col)).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
     )
     w_local = (
         Window.partitionBy("_pid")
@@ -108,7 +111,7 @@ def global_prefix_sum_single_exchange(
 
     1. range-repartition by the order key and sortWithinPartitions
        (the only full-data exchange), tag rows with the partition id,
-       and materialize ONCE (localCheckpoint) so both consumers see
+       and materialize ONCE (``materialize``) so both consumers see
        the same physical partitions;
     2. per-partition totals → exclusive prefix offsets: n_partitions
        rows aggregated map-side and collected to the driver — an
@@ -142,11 +145,12 @@ def global_prefix_sum_single_exchange(
     if num_partitions is None:
         conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         num_partitions = int(conf) if str(conf).isdigit() else 32
-    ranged = (
+    # First consumer: the totals collect below.
+    ranged = materialize(
         df.repartitionByRange(num_partitions, F.col(order_col))
         .sortWithinPartitions(order_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("_pid", F.spark_partition_id()),
+        eager=False,
     )
     totals = {
         r["_pid"]: r["_ptotal"]

@@ -66,8 +66,8 @@ def scd2_apply(
     ONE unbroken lineage builds a ~6^k-path plan tree — Catalyst
     analysis cost explodes exponentially. Materialize between batches:
     in production each run writes the history table (lineage truncates
-    at the table); for in-memory chains, ``.localCheckpoint(eager=
-    True)`` after each apply (see tests/test_merge_properties.py).
+    at the table); for in-memory chains, ``session.materialize(...,
+    eager=True)`` after each apply (see tests/test_merge_properties.py).
     """
     cur = history.filter(F.col("valid_to").isNull()).alias("cur")
     closed_hist = history.filter(F.col("valid_to").isNotNull())

@@ -20,6 +20,7 @@ from sales_agent_graphdb_spark.operators import ann
 from sales_agent_graphdb_spark.sources import stamp
 from sales_agent_graphdb_spark.queries.vector import _query_vec
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 
 # Repo-local index storage (the "ingest side" of the materialized ANN
 # paths); one subdir per scale factor so driver runs at different SFs
@@ -337,8 +338,8 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite exactly those directories
     (spark.sql.sources.partitionOverwriteMode=dynamic; static mode
     would wipe the untouched partitions). The union frame is
-    localCheckpointed eagerly before the write so the self-overwrite
-    read is cut from the plan. The returned per-partition profile
+    materialized eagerly before the write so the self-overwrite read
+    is cut from the plan. The returned per-partition profile
     (count + id checksum) must hash-equal the oracle's FROM-SCRATCH
     rebuild over the full corpus: the driver row certifies the merge
     semantics, not just the arithmetic.
@@ -372,11 +373,10 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(affected), ["t", "bucket"])
             .select("id", "t", "bucket")
         )
-        updated = (
-            existing.unionByName(new_sigs.select("id", "t", "bucket"))
-            # cut the self-read from the write plan AND materialize
-            # before the target partitions are replaced underneath it
-            .localCheckpoint(eager=True)
+        # Eager: detach from the partitions the write replaces.
+        updated = materialize(
+            existing.unionByName(new_sigs.select("id", "t", "bucket")),
+            eager=True,
         )
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -454,7 +454,8 @@ def ann_ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(affected), ["cell"])
             .select("vec_id", "cell")
         )
-        updated = existing.unionByName(new_rows).localCheckpoint(eager=True)
+        # Eager: detach from the partitions the write replaces.
+        updated = materialize(existing.unionByName(new_rows), eager=True)
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 
 # THE md5-prefix modular hash — bigint(first 15 hex chars of md5) % m.
 # Engine-portable (DuckDB mirror: CAST(('0x' || substr(md5(x), 1, 15))
@@ -133,15 +134,13 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts eval grams and the check is one map-side pass over
     train grams."""
     toks = _tokenized(spark, sf_dir).withColumn("shard", _shard10(F.col("doc_id")))
-    # Checkpoint: BOTH join sides filter this frame — without it the
-    # tokenize→gram-explode→distinct pipeline evaluates twice per run
-    # (the dedup_containment / text_gopher_repetition move).
-    flat = (
+    # Read by both join sides.
+    flat = materialize(
         toks.select(
             "doc_id", "shard", F.explode(_word_ngrams(F.col("w"))).alias("gram")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     train = flat.filter(F.col("shard") != 0).select("doc_id", "gram")
     eval_set = flat.filter(F.col("shard") == 0).select(
@@ -704,12 +703,12 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     an exploded aggregate the InjectRuntimeFilter rule does not
     reach (and bloom_filter_agg is not a public SQL routine)."""
     toks = _tokenized(spark, sf_dir).withColumn("shard", _shard10(F.col("doc_id")))
-    flat = (
+    flat = materialize(
         toks.select(
             "doc_id", "shard", F.explode(_word_ngrams(F.col("w"))).alias("gram")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     train = flat.filter(F.col("shard") != 0).select("doc_id", "gram")
     eval_set = flat.filter(F.col("shard") == 0).select(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.operators import ann, lsh, similarity as sim
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 
 DUP_OFFSET = 100_000
 
@@ -763,19 +764,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = corpus.select("doc_id", _alnum_tokens(F.col("text")).alias("t"))
     from sales_agent_graphdb_spark.queries.curation import _word_ngrams
 
-    # Checkpoint the shingle stream: FOUR consumers (the df count, both
-    # sides of the inverted-index self-join, and the per-doc sizes) —
-    # without it the tokenize→explode→distinct pipeline re-runs per
-    # consumer (same move as minhash_lsh_pairs' token checkpoint).
-    # EAGER (r12): the stop-shingle cap below broadcasts `big`, whose
-    # lineage roots in this checkpoint — a lazy checkpoint lets the
-    # broadcast-build thread and the main stages race the first
-    # materialization and re-run tokenize→explode→distinct per racer
-    # (the measured minhash_lsh pathology).
-    sh = (
+    # Eager: the `big` broadcast build and the main stages read it concurrently.
+    sh = materialize(
         toks.select("doc_id", F.explode(_word_ngrams(F.col("t"), 5)).alias("g"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     big = (
         sh.groupBy("g")
@@ -783,9 +776,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dfreq") > _CONTAIN_MAX_DF)
         .select("g")
     )
-    # EAGER: three consumers (sz + both sides of the inverted-index
-    # self-join) otherwise race the anti-join's first materialization.
-    shf = sh.join(F.broadcast(big), "g", "left_anti").localCheckpoint(eager=True)
+    # Eager: sz and both self-join sides read it concurrently.
+    shf = materialize(sh.join(F.broadcast(big), "g", "left_anti"), eager=True)
     sz = shf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = shf.alias("a"), shf.alias("b")
     pairs = (
@@ -965,12 +957,10 @@ def dedup_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # Both the count agg and the join-back consume this frame; without
-    # the checkpoint the tokenize->segment explode evaluates twice
-    # (same move as decontaminate_ngram_overlap).
-    segs = (
-        toks.select("doc_id", F.explode(seg_exprs).alias("seg_hash"))
-        .localCheckpoint(eager=False)
+    # Read by the count agg and the join-back.
+    segs = materialize(
+        toks.select("doc_id", F.explode(seg_exprs).alias("seg_hash")),
+        eager=False,
     )
     counts = segs.groupBy("seg_hash").agg(F.countDistinct("doc_id").alias("n_docs"))
     flagged = segs.join(counts, "seg_hash").select(
@@ -1099,72 +1089,13 @@ def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
     hashing cost is the honest price of 16 independent permutations."""
     corpus = dup_corpus(spark, sf_dir)
     toks = lsh.shingle_tokens(corpus, "text", "doc_id", 5).distinct()
-    toks = toks.localCheckpoint(eager=True)  # one materialization: minhash + verify
-    # r13 optimization (guide §2.3 — aggregate/hash before you join,
-    # VERDICT r12 #4): the md5-per-(shingle, seed) family is the
-    # oracle-pinned computation, but the OLD shape paid it per token
-    # OCCURRENCE — a 16-way seed explode multiplied the token table
-    # 16× through a Generate + (id, seed) exchange and hashed every
-    # (occurrence, seed) pair (16 md5s × ~1M rows at sf0.1). The gram
-    # DICTIONARY is tiny by comparison (2,115 distinct 5-shingles at
-    # sf0.1 — vocabulary-bounded, not corpus-bounded), so all 16
-    # portable hashes are now computed ONCE PER DISTINCT GRAM and
-    # attached back with a broadcast join; the per-doc signature is a
-    # single grouped pass of 16 partial mins (no explode, no (id, seed)
-    # exchange, no second pivot aggregation). Bit-identical mh values
-    # (same md5 on the same strings; min over the same per-doc set) —
-    # pinned by tests/test_r13_optimizations.py and the driver hash.
-    # gh is EAGER-checkpointed before the broadcast hint so the
-    # broadcast build reads materialized blocks (the r12 lazy-ckpt race
-    # rule); at corpus scale a >10⁸-gram dictionary would outgrow a
-    # broadcast — there the hint comes off and AQE shuffles both sides,
-    # with the hashing win (one md5 set per distinct gram) unchanged.
-    gh = (
-        toks.select("g")
-        .distinct()
-        .select(
-            "g",
-            *[
-                lsh._portable_hash(F.col("g"), F.lit(s)).alias(f"h{s}")
-                for s in range(16)
-            ],
-        )
-        .localCheckpoint(eager=True)
-    )
-    minw = (
-        toks.join(F.broadcast(gh), "g")
-        .groupBy("id")
-        .agg(*[F.min(F.col(f"h{s}")).alias(f"mh{s}") for s in range(16)])
-        # Lazy is safe: the eager `verify` checkpoint below is the
-        # first consumer and materializes banding→cand→minw on its
-        # sequential build path before any concurrent consumer (the
-        # wa/wb broadcast builds in the final assembly) exists.
-        .localCheckpoint(eager=False)  # feeds banding AND both join sides
-    )
-    banded = minw.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).cast("int").alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"mh{4 * b + r}").cast("string")
-                                    for r in range(4)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    toks = materialize(toks, eager=True)  # one materialization: minhash + verify
+    # First consumer: the eager `verify` build below.
+    minw = materialize(lsh._portable_signatures(toks, 16), eager=False)
+    banded = lsh._band_buckets(minw, 16, 4)
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (
+    # Read by the agreement join and the exact verify.
+    cand = materialize(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -1172,8 +1103,8 @@ def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
             & (F.col("a.id") < F.col("b.id")),
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint(eager=False)  # feeds agreement AND exact verify
+        .dropDuplicates(["id_a", "id_b"]),
+        eager=False,
     )
     wa = minw.select(
         F.col("id").alias("id_a"), *[F.col(f"mh{s}").alias(f"a{s}") for s in range(16)]
@@ -1207,16 +1138,13 @@ def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
         % 8
         == 0
     )
-    # Eager: three consumers (cand_ids inside the sh build plus the
-    # final assembly) materialize this concurrently when lazy — with a
-    # lazy checkpoint each concurrent first-consumer re-computes the
-    # full banding cascade (measured 40 s vs 6 s at sf0.1, r12).
-    verify = (
+    # Eager: the sh build's cand_ids and the final assembly read it concurrently.
+    verify = materialize(
         cand.select(
             "id_a", "id_b", planted.alias("is_planted"), in_sample.alias("in_sample")
         )
-        .filter(F.col("is_planted") | F.col("in_sample"))
-        .localCheckpoint(eager=True)
+        .filter(F.col("is_planted") | F.col("in_sample")),
+        eager=True,
     )
     # r12 optimization (guide §2.3/§3): the exact-verify intersection was
     # an inverted-index double join of the verify pairs against the FULL
@@ -1235,19 +1163,14 @@ def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
         .unionByName(verify.select(F.col("id_b").alias("cid")))
         .distinct()
     )
-    sh = (
+    sh = materialize(
         toks.join(cand_ids, F.col("id") == F.col("cid"), "left_semi")
         .groupBy("id")
         .agg(
             F.collect_set(F.xxhash64("g")).alias("sh"),
             F.count(F.lit(1)).alias("n"),
-        )
-        # Eager, and the pair joins below stay UNHINTED: an explicit
-        # F.broadcast() over a lazy checkpoint makes each broadcast
-        # thread race to build the whole upstream cascade from scratch;
-        # eager + AQE lets the runtime broadcast the materialized
-        # blocks (it does, at these sizes) or shuffle at corpus scale.
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     sha = sh.select(
         F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("n").alias("na")

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.operators import fulltext, graph
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources import stamp
 from sales_agent_graphdb_spark.sources.bucketing import write_bucketed
 
@@ -473,12 +474,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources, partitioned by node key) + ONE map-side-combinable count
     agg + a per-node argmax aggregate (sharded by node, never global) +
     a left join back for isolated nodes, as a fixed-round step on
-    graph.superstep. The symmetrized edge frame is localCheckpointed
-    once and reused by all rounds. Per-round cost is O(|E|) shuffle —
+    graph.superstep. The symmetrized edge frame is materialized once
+    and reused by all rounds. Per-round cost is O(|E|) shuffle —
     the same budget as one PageRank iteration; rounds are a fixed small
     constant. Edges: _proximity_edges."""
     c = catalog.load_table(spark, sf_dir, "customer")
-    sym = graph.symmetrize(_proximity_edges(c)).localCheckpoint(eager=False)
+    sym = materialize(graph.symmetrize(_proximity_edges(c)), eager=False)
 
     def step(labels: DataFrame) -> DataFrame:
         votes = (
@@ -575,7 +576,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame shrinks monotonically, so later rounds cost less, never more.
     Edges: _proximity_edges."""
     c = catalog.load_table(spark, sf_dir, "customer")
-    sym = graph.symmetrize(_proximity_edges(c)).localCheckpoint(eager=False)
+    sym = materialize(graph.symmetrize(_proximity_edges(c)), eager=False)
     deg, _ = graph.superstep(None, _peel_step(sym, _KCORE_K), max_iter=_KCORE_ROUNDS)
     return (
         deg.filter(F.col("deg") >= _KCORE_K)
@@ -756,10 +757,10 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     w = (F.lit(1.0) / F.col("cnt")).alias("w")
-    edges = (
+    edges = materialize(
         pairs.select(F.col("lo").alias("src"), F.col("hi").alias("dst"), w)
-        .unionByName(pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"), w))
-        .localCheckpoint()
+        .unionByName(pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"), w)),
+        eager=True,
     )
 
     def relax(dist: DataFrame) -> DataFrame:
@@ -913,12 +914,15 @@ def graph_random_walk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     from pyspark.sql import Window as W
 
-    adj = und.select(
-        "src",
-        "dst",
-        (F.row_number().over(W.partitionBy("src").orderBy("dst")) - 1).alias("rn"),
-        F.count(F.lit(1)).over(W.partitionBy("src")).alias("deg"),
-    ).localCheckpoint(eager=False)
+    adj = materialize(
+        und.select(
+            "src",
+            "dst",
+            (F.row_number().over(W.partitionBy("src").orderBy("dst")) - 1).alias("rn"),
+            F.count(F.lit(1)).over(W.partitionBy("src")).alias("deg"),
+        ),
+        eager=False,
+    )
 
     def h(node_col: F.Column, step: int) -> F.Column:
         return F.conv(
@@ -1089,11 +1093,11 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the shared okey-BUCKETED layout (_order_brand_pairs)."""
     ob = _order_brand_pairs(spark, sf_dir)
     a, b = ob.alias("a"), ob.alias("b")
-    proj = (
+    proj = materialize(
         a.join(b, (F.col("a.okey") == F.col("b.okey")) & (F.col("a.brand") < F.col("b.brand")))
         .groupBy(F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("w")),
+        eager=False,
     )
     comm = ob.select("brand").distinct().select(
         "brand",
@@ -1274,15 +1278,16 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition orientation."""
     ob = _order_brand_pairs(spark, sf_dir)
     a, b = ob.alias("a"), ob.alias("b")
-    e = (
+    # Feeds degrees and the 3-join.
+    e = materialize(
         a.join(
             b,
             (F.col("a.okey") == F.col("b.okey"))
             & (F.col("a.brand") < F.col("b.brand")),
         )
         .select(F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb"))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds degrees AND the 3-join
+        .distinct(),
+        eager=False,
     )
     und = e.select(F.col("ba").alias("v"), F.col("bb").alias("w")).unionByName(
         e.select(F.col("bb").alias("v"), F.col("ba").alias("w"))
@@ -1291,11 +1296,11 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     e1 = e.select(F.col("ba").alias("x"), F.col("bb").alias("y"))
     e2 = e.select(F.col("ba").alias("y2"), F.col("bb").alias("z"))
     e3 = e.select(F.col("ba").alias("x3"), F.col("bb").alias("z3"))
-    tris = (
+    tris = materialize(
         e1.join(e2, F.col("y") == F.col("y2"))
         .join(e3, (F.col("x") == F.col("x3")) & (F.col("z") == F.col("z3")))
-        .select("x", "y", "z")
-        .localCheckpoint(eager=False)
+        .select("x", "y", "z"),
+        eager=False,
     )
     corners = (
         tris.select(F.col("x").alias("v"))
@@ -1335,15 +1340,15 @@ def _all_pairs_brand_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (src, dst, d) for every reachable ordered pair."""
     ob = _order_brand_pairs(spark, sf_dir)
     a, b = ob.alias("a"), ob.alias("b")
-    edges = (
+    edges = materialize(
         a.join(
             b,
             (F.col("a.okey") == F.col("b.okey"))
             & (F.col("a.brand") != F.col("b.brand")),
         )
         .select(F.col("a.brand").alias("src"), F.col("b.brand").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     return _bfs_all_pairs(edges)
 
@@ -1650,15 +1655,16 @@ def graph_weighted_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table never moves."""
     ob = _order_brand_pairs(spark, sf_dir)
     a, b = ob.alias("a"), ob.alias("b")
-    e = (
+    # Feeds strengths and the moment pass.
+    e = materialize(
         a.join(
             b,
             (F.col("a.okey") == F.col("b.okey"))
             & (F.col("a.brand") != F.col("b.brand")),
         )
         .groupBy(F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .localCheckpoint(eager=False)  # feeds strengths AND the moment pass
+        .agg(F.count(F.lit(1)).cast("bigint").alias("w")),
+        eager=False,
     )
     st = e.groupBy(F.col("ba").alias("v")).agg(F.sum("w").cast("bigint").alias("s"))
     ed = (
@@ -1722,12 +1728,12 @@ def _backbone_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = ranked.filter(F.col("rk") <= F.expr("(ne * 2) div 5")).select(
         "ba", "bb"
     )
-    return (
+    return materialize(
         kept.select(F.col("ba").alias("src"), F.col("bb").alias("dst"))
         .unionByName(
             kept.select(F.col("bb").alias("src"), F.col("ba").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
 
 
@@ -1864,7 +1870,8 @@ def graph_rich_club_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ob = _order_brand_pairs(spark, sf_dir)
     a, b = ob.alias("a"), ob.alias("b")
-    e = (
+    # Feeds strengths and both rankings.
+    e = materialize(
         a.join(
             b,
             (F.col("a.okey") == F.col("b.okey"))
@@ -1873,8 +1880,8 @@ def graph_rich_club_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb")
         )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .localCheckpoint(eager=False)  # feeds strengths AND both rankings
+        .agg(F.count(F.lit(1)).cast("bigint").alias("w")),
+        eager=False,
     )
     st = (
         e.select(F.col("ba").alias("v"), "w")

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.queries.curation import alnum_tokens, _TOKENS_SQL
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 
 
 # THE md5-prefix modular hash lives in curation.py (single definition
@@ -201,9 +202,8 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(alnum_tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    # localCheckpoint: tf feeds BOTH the df aggregation and the scored
-    # join (the decontaminate_ngram_overlap multi-consumer move).
-    tf = tf.localCheckpoint(eager=False)
+    # Read by the df aggregation and the scored join.
+    tf = materialize(tf, eager=False)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

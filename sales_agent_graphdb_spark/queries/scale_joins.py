@@ -21,6 +21,7 @@ from sales_agent_graphdb_spark.operators.skew import (
     salted_join_hot_keys,
 )
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources.bucketing import (
     collocated_join,
     write_bucketed,
@@ -393,7 +394,7 @@ def join_runtime_bloom_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the creation side small — at test SFs the fact is far below
     that, so the thresholds are lowered and broadcast disabled FOR
     THIS PLAN ONLY: the frame is materialized eagerly
-    (localCheckpoint) while the confs are active and every conf is
+    (``materialize``) while the confs are active and every conf is
     restored in `finally`, so nothing leaks into the session's other
     queries. tests/test_plans.py pins `might_contain` + the
     bloom_filter_agg subquery in the plan and the SMJ above it. At
@@ -425,7 +426,8 @@ def join_runtime_bloom_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = li.join(sel, li.l_partkey == sel.p_partkey)
-        out = (
+        # Eager: plan and execution must run under the confs.
+        out = materialize(
             joined.groupBy(F.col("p_size").cast("int").alias("size"))
             .agg(
                 F.count(F.lit(1)).alias("n_items"),
@@ -439,8 +441,8 @@ def join_runtime_bloom_native(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("revenue"),
             )
-            .orderBy("size")
-            .localCheckpoint()  # eager: plan + execution under the confs
+            .orderBy("size"),
+            eager=True,
         )
     finally:
         for k, v in saved.items():

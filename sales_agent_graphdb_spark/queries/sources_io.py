@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources import connectors
 
 # r13 (guide §5 — keep one-time setup off the query path): importing
@@ -807,7 +808,7 @@ def s14_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     lose data — PERMISSIVE + quarantine is the only shape that is both
     complete and auditable.
 
-    The parsed frame is localCheckpointed before the split: Spark
+    The parsed frame is checkpointed (``materialize``) before the split: Spark
     disallows filtering ONLY the internal corrupt-record column on a
     raw file scan (the parser would need a second pass), so the
     materialization is load-bearing, not a cache nicety. Scale: the
@@ -830,15 +831,15 @@ def s14_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .text(path)
     )
-    parsed = (
+    parsed = materialize(
         spark.read.schema(
             "o_orderkey long, o_orderstatus string, o_totalprice double, "
             "_corrupt_record string"
         )
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-        .localCheckpoint(eager=False)
+        .json(path),
+        eager=False,
     )
     valid = parsed.filter(F.col("_corrupt_record").isNull())
     quarantined = parsed.filter(F.col("_corrupt_record").isNotNull())

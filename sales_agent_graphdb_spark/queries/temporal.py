@@ -31,6 +31,7 @@ from pyspark.sql.window import Window as W
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 
 VAL = "decimal(20,6)"
 
@@ -1025,13 +1026,13 @@ def ts_cross_correlation_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-lag-sweep production form computes every offset in one
     self-joined frame; the fixed five keep the oracle enumerable."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    series = (
+    series = materialize(
         ev.filter(F.col("event_type").isin("view", "purchase"))
         .groupBy(
             F.date_trunc("hour", "ts").alias("h"), "event_type"
         )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("c")),
+        eager=False,
     )
     v = series.filter(F.col("event_type") == "view").select(
         F.col("h").alias("vh"), F.col("c").cast("decimal(19,6)").alias("x")

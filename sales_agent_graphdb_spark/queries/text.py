@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.operators.chunker import chunk_documents, duckdb_chunk_sql
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deterministic tie-break: first language in this order wins.
@@ -511,14 +512,8 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id. No corpus-global state, so the plan shards linearly at
     100 TB."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    # Checkpoint the token arrays: THREE consumers (word stats, bigram
-    # leg, trigram leg) — without it the split pipeline re-runs per leg.
-    # EAGER (r12): the consumer leaf stages run concurrently under AQE
-    # and race a lazy checkpoint's first materialization, re-running
-    # the tokenize per racer.
-    toks = d.select("doc_id", _tokens(F.col("text")).alias("t")).localCheckpoint(
-        eager=True
-    )
+    # Eager: the word-stats, bigram and trigram leaf stages read it concurrently.
+    toks = materialize(d.select("doc_id", _tokens(F.col("text")).alias("t")), eager=True)
     base = toks.select(
         "doc_id",
         F.size("t").cast("int").alias("n_words"),
@@ -539,10 +534,9 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("doc_id", "p.n", "p.g")
-    gc = (
-        grams.groupBy("doc_id", "n", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)  # two consumers below race if lazy (r12)
+    # Eager: the top-bigram and trigram legs below read it concurrently.
+    gc = materialize(
+        grams.groupBy("doc_id", "n", "g").agg(F.count(F.lit(1)).alias("c")), eager=True
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("c"), F.desc(F.length("g")), F.asc("g")
@@ -703,26 +697,20 @@ def text_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles on both engines (and ln itself matched bit-exactly, as in
     the BM25 family)."""
     docs = catalog.load_table(spark, sf_dir, "documents")
-    # r12: checkpoint the token arrays and the exploded bigram frame —
-    # the docstring's "tokenized exactly once" held only per PLAN, not
-    # per EXECUTION: with no checkpoint the three bigram consumers
-    # (c12, c1, scoring join) are separate leaf stages that each re-ran
-    # tokenize+explode from the scan (different group keys, so no
-    # exchange reuse), and |V| re-tokenized a fourth time.
-    toks = docs.select(
-        "doc_id", alnum_tokens(F.col("text")).alias("t")
-    ).localCheckpoint(eager=True)
+    # Eager: the c12, c1, scoring-join and |V| leaf stages read these concurrently.
+    toks = materialize(docs.select("doc_id", alnum_tokens(F.col("text")).alias("t")), eager=True)
     n = F.size("t")
-    big = toks.select(
-        "doc_id",
-        F.explode(
-            F.arrays_zip(
-                F.slice("t", 1, n - 1).alias("w1"), F.slice("t", 2, n - 1).alias("w2")
-            )
-        ).alias("bg"),
-    ).select(
-        "doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
-    ).localCheckpoint(eager=True)
+    big = materialize(
+        toks.select(
+            "doc_id",
+            F.explode(
+                F.arrays_zip(
+                    F.slice("t", 1, n - 1).alias("w1"), F.slice("t", 2, n - 1).alias("w2")
+                )
+            ).alias("bg"),
+        ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")),
+        eager=True,
+    )
     c12 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     v = toks.select(F.explode("t").alias("w")).agg(F.countDistinct("w").alias("v"))

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.operators import similarity as sim
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.session import materialize
 
 # Reference constants: retriever k=5 (db_service.py:201-204), cache
 # threshold 0.85 (semantic_cache.py:35-49). The testdata embeddings are
@@ -452,7 +453,8 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash pins it)."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    cands = (
+    # Eager: tiny (k' rows); both self-join sides below read it.
+    cands = materialize(
         emb.filter(F.col("vec_id") != 0)
         .select(
             "vec_id",
@@ -460,8 +462,8 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             sim.cosine(F.col("embedding"), sim.lit_vector(qv)).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(_MMR_PREFETCH)
-        .localCheckpoint()  # tiny (k' rows); both consumers below reuse it
+        .limit(_MMR_PREFETCH),
+        eager=True,
     )
     a, b = cands.alias("a"), cands.alias("b")
     pairs = (

@@ -11,8 +11,11 @@ cannot change the result).
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,236 +45,45 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
-# Driver-budget ordering. The per-round correctness driver iterates the
-# queries() dict in insertion order and stops after a fixed budget
-# (rounds 1 and 2 each recorded exactly the first 50 entries). So
-# iteration order IS the verification schedule: names in _PRIORITY run
-# first (newly-registered queries that need their first driver row),
-# then every query that still has no green driver row, and
-# already-hash-verified names run last, ordered OLDEST green first
-# (VERDICT r06 #3) so the driver's spare budget refreshes the stalest
-# rows instead of re-checking last round's.
-_PRIORITY: list[str] = [
-    # Round 12 new registrations (kept to EXACTLY 7 — VERDICT r11 #1:
-    # the round's job is finishing the stamp rotation to a zero tail,
-    # so 7 priority names + the 15 r04-stamped + the 28 r05-stamped
-    # verified names fill the driver's 50 slots precisely; after r12
-    # the minimum stamp becomes r06).
-    "graph_betweenness_backbone", "ts_seasonal_profile",
-    "stats_spearman_rho", "eval_map_at_k",
-    "text_ttr_lexical_diversity", "ts_theil_sen_slope",
-    "s19_parquet_bloom_probe",
-]
+def _green_stamps(root: Path) -> dict[str, int]:
+    """name -> round of its LATEST fully green driver row (rows, schema
+    and hash green or absent, no err) in ``root``'s CORRECTNESS_r*.json
+    records. A name whose latest record is red gets no stamp, so it is
+    scheduled with the never-green names until it is re-verified."""
+    stamp: dict[str, int] = {}
+    records = {int(re.search(r"_r(\d+)", p.name).group(1)): p
+               for p in root.glob("CORRECTNESS_r*.json")}
+    for rnd, p in sorted(records.items()):
+        for name, row in json.loads(p.read_text()).items():
+            green = (
+                isinstance(row, dict)
+                and row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match") in (True, None)
+                and not row.get("err")
+            )
+            if green:
+                stamp[name] = rnd
+            else:
+                stamp.pop(name, None)
+    return stamp
 
 
-# name -> round of the LATEST hash-green driver row (rows+schema+hash
-# green, no err), derived from CORRECTNESS_r01..r11. The verified tail
-# runs in ascending stamp order so re-check budget lands on the names
-# the driver has not seen longest; every name here has been green at
-# least once and never red. Regenerate with:
-#   python tools/check_queries.py --stamp  (or the snippet in
-#   CHANGES_r07.md) after each round, folding the new greens in.
-_VERIFIED_ROUND: dict[str, int] = {
-    # --- latest green row: CORRECTNESS_r04 (15 names) ---
-    "sample_group_topk": 4, "sample_weighted_hash": 4,
-    "split_leakage_safe": 4, "st_stream_dedup": 4,
-    "st_stream_interval_join_outer": 4, "st_stream_sliding_exec": 4,
-    "st_stream_static_enrich": 4, "st_stream_user_profile": 4,
-    "text_bm25_phrase": 4, "text_tfidf_keywords": 4, "text_vocab_build": 4,
-    "ts_gap_fill_locf": 4, "vec_centroid_per_label": 4,
-    "w7b_running_sum_single_exchange": 4, "w8_time_range_frame": 4,
-    # --- latest green row: CORRECTNESS_r05 (28 names) ---
-    "ann_hard_negatives": 5, "ann_index_incremental_upsert": 5,
-    "ann_ivf_index_incremental": 5, "ann_ivf_pruned_portable": 5,
-    "ann_ivf_topk_portable": 5, "ann_lsh_pruned_portable": 5,
-    "ann_lsh_topk_portable": 5, "asof_join_nearest": 5,
-    "corpus_shuffle_epoch": 5, "dedup_repeated_passages": 5,
-    "graph_k_core": 5, "graph_label_propagation": 5, "m8_cdc_apply": 5,
-    "mm_resize_plan": 5, "o5_keyset_pagination": 5,
-    "s13_compact_small_files": 5, "s8b_api_stream_ingest": 5,
-    "sample_quality_bins": 5, "set_ops_bag_semantics": 5,
-    "sql_api_revenue_by_nation": 5, "st_stream_ewma_exec": 5,
-    "ts_downsample_ohlc": 5, "ts_ewma_per_user": 5,
-    "v4_deterministic_embed": 5, "v6_conditional_format": 5,
-    "v8_embedding_qc": 5, "vec_quantize_int8": 5,
-    "w9_cumulative_distinct_users": 5,
-    # --- latest green row: CORRECTNESS_r06 (50 names) ---
-    "a1_order_totals": 6, "a2_count_by_group": 6, "a3_distinct_categories": 6,
-    "a4_dedup_last_wins": 6, "a5_dedup_normalized_content": 6,
-    "a6_string_agg": 6, "agg_approx_distinct": 6, "agg_cube": 6,
-    "agg_equidepth_histogram": 6, "agg_grouping_sets": 6,
-    "agg_mode_per_group": 6, "agg_pivot_unpivot": 6, "agg_rollup": 6,
-    "agg_value_histogram": 6, "ann_ivf_pruned_topk": 6, "ann_ivf_topk": 6,
-    "ann_lsh_pruned_topk": 6, "ann_lsh_topk": 6, "basket_pair_counts": 6,
-    "dedup_cluster_canonical": 6, "dedup_incremental_minhash": 6,
-    "dedup_minhash_lsh": 6, "dedup_simhash": 6, "dq_drift_chi_square": 6,
-    "f16_variant_semistructured": 6, "feature_zscore_stats": 6,
-    "graph_k_core_fixpoint": 6, "join_salted_hot_keys": 6,
-    "s14_corrupt_quarantine": 6, "s15_api_sink_roundtrip": 6,
-    "s8c_stream_restart_resume": 6, "sql_api_cte_rank": 6,
-    "sql_api_exists_in": 6, "sql_api_having": 6, "sql_api_parameterized": 6,
-    "sql_api_recursive_reachability": 6, "sql_api_window_topn": 6,
-    "st_stream_scd2_enrich": 6, "tpch_q10_returned_items": 6,
-    "tpch_q18_large_volume_customer": 6, "tpch_q1_pricing_summary": 6,
-    "tpch_q3_shipping_priority": 6, "tpch_q4_order_priority": 6,
-    "tpch_q5_local_supplier_volume": 6, "tpch_q6_forecast_revenue": 6,
-    "udtf_ngram_expand": 6, "v1_knn_cosine_top5": 6,
-    "v2_semantic_cache_probe": 6, "v3_cache_upsert": 6, "w5_ntile_buckets": 6,
-    # --- latest green row: CORRECTNESS_r07 (49 names) ---
-    "ann_filtered_exact_topk": 7, "attr_multi_touch_credit": 7,
-    "dedup_embedding_cosine": 7, "dedup_exact_hash": 7,
-    "dedup_ngram_jaccard": 7, "dpp_partition_pruned": 7,
-    "dq_observe_one_pass": 7, "f17_try_arithmetic": 7,
-    "f18_collation_compare": 7, "g1_merge_create_only": 7,
-    "g2_merge_overwrite": 7, "g3_detach_delete": 7, "g6_fulltext_fuzzy": 7,
-    "graph_2hop_neighbors": 7, "graph_connected_components": 7,
-    "graph_degrees": 7, "graph_sssp_bounded": 7, "j1_one_hop_traversal": 7,
-    "j2_order_nest_strform": 7, "j3_lookup_join": 7, "j4_validation_join": 7,
-    "j5_customer_orders": 7, "j6_semi_join_exists": 7, "j7_anti_join": 7,
-    "m1_product_crud": 7, "m3_stock_decrement": 7, "mm_frame_sample": 7,
-    "mm_media_features": 7, "p8_graph_category_filter": 7, "s7_html_clean": 7,
-    "sql_api_exec_immediate_vars": 7, "sql_api_group_by_all": 7,
-    "sql_api_lateral_topk": 7, "sql_api_not_in_null_aware": 7,
-    "st_stream_interval_join_full": 7, "text_lm_perplexity_filter": 7,
-    "tpch_q12_priority_classes": 7, "tpch_q13_customer_distribution": 7,
-    "tpch_q14_promo_revenue": 7, "tpch_q15_top_supplier": 7,
-    "tpch_q17_prefiltered_twin": 7, "tpch_q17_small_quantity_revenue": 7,
-    "tpch_q19_disjunctive_or": 7, "tpch_q21_one_pass_twin": 7,
-    "tpch_q21_waiting_supplier": 7, "tpch_q22_global_sales_opportunity": 7,
-    "tpch_q2_top_supplier_per_nation": 7, "tpch_q7_volume_shipping": 7,
-    "tpch_q8_market_share": 7,
-    # --- latest green row: CORRECTNESS_r08 (49 names) ---
-    "agg_bitmap_distinct": 8, "agg_exchange_reuse_mom": 8,
-    "agg_kmv_incremental": 8, "agg_kmv_intersection": 8,
-    "agg_multi_distinct_expand": 8, "agg_scalar_subquery_reuse": 8,
-    "ann_filtered_adaptive_topk": 8, "ann_filtered_ivf_topk": 8,
-    "ann_filtered_partitioned_topk": 8, "ann_ivfpq_pruned_topk": 8,
-    "ann_pq_adc_topk": 8, "anomaly_mad_robust_z": 8,
-    "anomaly_seasonal_baseline": 8, "decontaminate_bloom_prefilter": 8,
-    "dq_referential_integrity": 8, "f19_url_parse": 8,
-    "feature_target_encoding_loo": 8, "graph_hits_hubs_authorities": 8,
-    "graph_modularity_score": 8, "graph_node_jaccard": 8,
-    "graph_random_walk_corpus": 8, "join_runtime_bloom_native": 8,
-    "m10_forget_user_cascade": 8, "m9_dynamic_partition_overwrite": 8,
-    "mm_audio_segment_plan": 8, "pct_weighted_median": 8,
-    "s16_nested_schema_pruning": 8, "s17_snapshot_time_travel": 8,
-    "sample_stratified_exact_n": 8, "sample_weighted_reservoir": 8,
-    "sessionize_gap_batch": 8, "sql_api_filter_clause": 8,
-    "sql_api_identifier_clause": 8, "sql_api_pivot_stmt": 8,
-    "sql_api_sql_udf": 8, "sql_api_unpivot_stmt": 8,
-    "st_stream_kmv_maintain": 8, "stats_ab_test_lift": 8,
-    "text_entropy_filter": 8, "text_quality_classifier_linear": 8,
-    "udaf_grouped_pandas_median": 8, "udf_apply_in_pandas_iqr": 8,
-    "udf_scalar_iter_embed": 8, "vec_binary_hamming_topk": 8,
-    "vec_mmr_rerank": 8, "vec_random_projection_topk": 8,
-    "w10_gaps_islands_streak": 8, "w11_markov_transitions": 8,
-    "w12_decay_weighted_score": 8,
-    # --- latest green row: CORRECTNESS_r09 (50 names) ---
-    "agent_turn_check_order": 9, "agg_spacesaving_topk": 9,
-    "corpus_mix_weights": 9, "curation_canonical_by_quality": 9,
-    "decontaminate_ngram_overlap": 9, "dedup_minhash_estimate_accuracy": 9,
-    "dedup_minhash_lsh_portable": 9, "dedup_simhash_portable": 9,
-    "f20_higher_order_kit": 9, "f21_approx_top_k_native": 9,
-    "feature_hashing_vectorizer": 9, "flagship_revenue_by_brand": 9,
-    "funnel_conversion": 9, "graph_brand_projection": 9,
-    "graph_clustering_coefficient": 9, "graph_pagerank": 9,
-    "graph_resource_allocation": 9, "incremental_agg_maintenance": 9,
-    "ingest_invalidate_pipeline": 9, "join_bucketed_collocated": 9,
-    "join_salted_skew": 9, "m2_csv_upsert_preserve": 9,
-    "m4_guarded_cancel": 9, "m5_register_unique": 9,
-    "mm_arrow_fidelity_probe": 9, "nl2plan_broad_scan": 9,
-    "nl2plan_category_browse": 9, "nl2plan_fuzzy_name": 9,
-    "p11_result_validity": 9, "p1_point_lookup_sku": 9,
-    "s18_text_source_roundtrip": 9, "sql_api_lateral_column_alias": 9,
-    "sql_api_limit_offset": 9, "sql_api_named_window": 9,
-    "sql_api_order_by_all": 9, "sql_api_sql_table_udf": 9,
-    "sql_api_values_inline": 9, "st_late_data_policy": 9,
-    "st_session_window": 9, "st_sliding_window": 9, "st_tumbling_window": 9,
-    "stats_calibration_bins": 9, "stats_diff_in_diff": 9, "stats_roc_auc": 9,
-    "ts_cross_correlation_lagged": 9, "ts_interval_union_coverage": 9,
-    "udf_map_in_arrow_sig": 9, "v4b_batch_embed_pandas": 9,
-    "v5_ingest_chunk_embed": 9, "v7_wipe_recreate": 9,
-    # --- latest green row: CORRECTNESS_r10 (50 names) ---
-    "asof_join_last_purchase": 10, "corpus_token_budget_pack": 10,
-    "dedup_cluster_canonical_portable": 10, "dedup_containment": 10,
-    "dedup_embedding_lsh": 10, "dedup_incremental_minhash_portable": 10,
-    "dq_benford_first_digit": 10, "f11_chunk_documents": 10,
-    "f12_f13_json_coalesce": 10, "f14_f15_validation": 10,
-    "f2_f3_price_and_surrogate": 10, "f4_f5_dates_numbers": 10,
-    "f6_f8_f9_text_kit": 10, "graph_harmonic_closeness": 10,
-    "graph_weighted_assortativity": 10, "j2_order_items_nested": 10,
-    "o1_orderby_desc": 10, "o2_two_key_sort": 10, "o4_topk_by_score": 10,
-    "p10_validity_filter": 10, "p2_lookup_by_email": 10,
-    "p3_ilike_substring": 10, "p4_conjunctive_ilike": 10,
-    "p5_multistage_fallback": 10, "p6_isin_status": 10, "p7_compound_key": 10,
-    "p9_client_search_filter": 10, "pct_approx_value": 10,
-    "pct_exact_disc": 10, "pipeline_curate_corpus": 10,
-    "retention_cohorts": 10, "route_dispatch": 10, "s6_graph_scan_limit": 10,
-    "s9b_orc_roundtrip": 10, "s9c_schema_evolution": 10,
-    "sample_balanced_class": 10, "sample_stratified_hash": 10,
-    "st_stream_foreachbatch_upsert": 10, "st_stream_interval_join": 10,
-    "st_stream_sessions_complete": 10, "stats_cuped_variance_reduction": 10,
-    "stats_ks_two_sample": 10, "stats_power_analysis": 10,
-    "text_bm25_search": 10, "text_boilerplate_ngrams": 10,
-    "text_pii_scrub": 10, "ts_cusum_changepoint": 10,
-    "ts_gap_fill_linear": 10, "ts_rolling_regression_slope": 10,
-    "w6_rank_distributions": 10,
-    # --- latest green row: CORRECTNESS_r11 (50 names) ---
-    "agg_countmin_portable": 11, "agg_hll_rollup": 11,
-    "anomaly_rolling_zscore": 11, "curation_pareto_front": 11,
-    "data_quality_report": 11, "dedup_semantic_cell": 11,
-    "eval_ndcg_at_k": 11, "feature_correlation": 11, "feature_winsorize": 11,
-    "graph_avg_path_length": 11, "graph_rich_club_weighted": 11,
-    "graph_shortest_paths": 11, "graph_triangle_count": 11,
-    "join_fuzzy_blocked": 11, "join_runtime_prefilter": 11,
-    "join_scd2_asof": 11, "m6_scd2_history": 11, "m7_table_diff": 11,
-    "range_join_grid_bucketed": 11, "range_join_interval_overlap": 11,
-    "range_join_value_bands": 11, "rollup_hierarchy": 11,
-    "s10_sorted_scan_pruning": 11, "s11_xml_roundtrip": 11,
-    "s12_zorder_pruning": 11, "s1_s2_csv_roundtrip_golden_dialect": 11,
-    "s1_s2_csv_roundtrip_scraper_dialect": 11,
-    "s3_s4_json_envelope_roundtrip": 11, "s8_api_source_ingest": 11,
-    "set_intersect_except": 11, "set_union_sources": 11,
-    "st_stream_stateful_sessions": 11, "st_stream_topk_maintain": 11,
-    "st_stream_tumbling_exec": 11, "stats_bootstrap_ci_hash": 11,
-    "stats_gini_concentration": 11, "stats_mann_whitney_u": 11,
-    "text_bpe_token_estimate": 11, "text_fingerprint": 11,
-    "text_gopher_repetition": 11, "text_langid": 11, "text_quality_score": 11,
-    "text_token_count": 11, "ts_acf_hourly": 11,
-    "ts_var_expected_shortfall": 11, "w1_last6_per_session": 11,
-    "w2_running_sum": 11, "w3_topn_per_group": 11, "w4_lag_delta": 11,
-    "w7_global_running_sum": 11,
-}
-
-
-# Kept for compatibility with tools that membership-test the verified
-# set (tools/plan_audit.py iterates all_queries() and does not, but
-# external snippets may).
-_VERIFIED: frozenset[str] = frozenset(_VERIFIED_ROUND)
-
-
-# Slow (multi-second, mostly real Structured-Streaming execs) queries to
-# run at the END of the unverified block so a time-budgeted driver checks
-# many cheap queries before them. All r05/r06 members earned green rows
-# and are ordered by their stamps now; this only orders NEW slow queries
-# registered this round.
-_SLOW_TAIL: frozenset[str] = frozenset({
-    # r07: full-outer interval stream drain (two watermark flushes).
-    "st_stream_interval_join_full",
-})
+# The per-round correctness driver iterates the queries() dict in
+# insertion order and records a fixed budget of rows, so iteration
+# order IS the verification schedule.
+_VERIFIED_ROUND: dict[str, int] = _green_stamps(Path(__file__).resolve().parent.parent)
 
 
 def _driver_order(names: list[str]) -> list[str]:
-    prio = [n for n in _PRIORITY if n in names]
-    rest = [n for n in names if n not in prio]
-    unverified = [n for n in rest if n not in _VERIFIED_ROUND]
-    cheap = [n for n in unverified if n not in _SLOW_TAIL]
-    slow = [n for n in unverified if n in _SLOW_TAIL]
-    verified = sorted(
-        (n for n in rest if n in _VERIFIED_ROUND),
-        key=lambda n: (_VERIFIED_ROUND[n], n),
+    """Never-green names in registration order, then green names
+    oldest-stamp-first (ties by name), so spare budget refreshes the
+    stalest rows."""
+    never = [n for n in names if n not in _VERIFIED_ROUND]
+    green = sorted(
+        (n for n in names if n in _VERIFIED_ROUND), key=lambda n: (_VERIFIED_ROUND[n], n)
     )
-    return [*prio, *cheap, *slow, *verified]
+    return [*never, *green]
 
 
 def all_queries() -> dict[str, QuerySpec]:

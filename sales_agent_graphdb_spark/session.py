@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -75,51 +75,40 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _install_reliable_checkpoint(spark)
     return spark
 
 
-def _install_reliable_checkpoint(spark: SparkSession) -> None:
-    """SPARK_GRAFT_RELIABLE_CHECKPOINT=<dir> routes every
-    DataFrame.localCheckpoint() in the process through RELIABLE
-    checkpointing into <dir>.
+def materialize(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Cut ``df``'s lineage with a checkpoint; the one place the engine
+    checkpoints.
 
-    Why a switch exists: the hot paths cut lineage with
-    localCheckpoint(), which pins intermediate blocks to
-    executor-local storage — cheap (no replication, no remote write),
-    but on a real cluster a lost executor makes those blocks
-    irrecoverable and fails the job instead of recomputing. That is
-    the right default here (local mode cannot lose an executor), but a
-    deployment that wants executor-loss recovery sets this env to a
-    shared checkpoint directory (HDFS/object store). Dataset.checkpoint
-    has the same eager/lazy materialization contract as
-    localCheckpoint, only the storage is durable.
+    Storage: a local checkpoint (executor-local blocks, no replication)
+    unless SPARK_GRAFT_RELIABLE_CHECKPOINT=<dir> is set, which writes a
+    reliable checkpoint into <dir> instead. Local mode cannot lose an
+    executor, so local blocks are the right default; on a cluster a lost
+    executor makes them irrecoverable and fails the job, so a deployment
+    that wants executor-loss recovery points the variable at a shared
+    directory. A reliable checkpoint is not persisted first, so
+    materializing it computes the frame twice (the action, then the
+    file write) and reads it back; every checkpointed plan is therefore
+    assumed deterministic.
 
-    Cost and assumption: the frame is not persisted before
-    Dataset.checkpoint, so materializing it computes the frame TWICE —
-    once for the action and once more to write the checkpoint files —
-    and then reads it back from the shared filesystem. Both
-    computations must produce the same rows, so every checkpointed plan
-    is assumed deterministic; a nondeterministic plan (e.g. rand(),
-    or order-dependent first()) could leave the checkpoint differing
-    from what the triggering action saw.
+    The race rule: a lazy (``eager=False``) checkpoint must be
+    materialized by one sequential full action before any concurrent
+    consumer reads it. Concurrent first readers (a broadcast build
+    beside a shuffle stage, two threads) each recompute the whole
+    lineage instead of reading stored blocks, and a limit leaves
+    partitions for a later reader to recompute. Use ``eager=True`` when
+    the first readers are concurrent; it costs one job here.
 
-    The patch replaces the method on the concrete DataFrame class, so
-    it is process-wide: it also applies to non-engine code in the same
-    process, and it is switched at the session boundary rather than at
-    the engine's many call sites. Off by default; pinned by
-    tests/test_r13_optimizations.py via a subprocess session.
+    The method is looked up on ``df`` at call time, never bound at
+    import, so a wrapper installed on the DataFrame class later (a
+    profiler counting checkpoints) still sees every call.
     """
     ckpt_dir = os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT")
     if not ckpt_dir:
-        return
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        spark.sparkContext.setCheckpointDir(ckpt_dir)
-    # Patch the CONCRETE DataFrame class (pyspark.sql.DataFrame is an
-    # abstract front in Spark 4; instances are the classic subclass,
-    # whose own localCheckpoint would shadow a base-class patch).
-    cls = type(spark.range(1))
-    if not getattr(cls, "_graft_reliable_ckpt", False):
-        reliable = cls.checkpoint
-        cls._graft_reliable_ckpt = True
-        cls.localCheckpoint = lambda self, eager=True: reliable(self, eager=eager)
+        return df.localCheckpoint(eager=eager)
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.sc().getCheckpointDir().isEmpty():
+        sc.setCheckpointDir(ckpt_dir)
+    return df.checkpoint(eager=eager)

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from sales_agent_graphdb_spark.session import materialize
+
 SCRATCH = "/root/repo/.scratch/streaming"
 
 # events schema as written. ts has shipped as TIMESTAMP(NANOS) (=> long
@@ -638,7 +640,7 @@ def make_upsert_sink(tbl_root: str):  # noqa: ANN201
         os.makedirs(tbl_root, exist_ok=True)
         build = os.path.join(tbl_root, f".build_{uuid.uuid4().hex[:12]}")
         # Writes into a FRESH dir — the previous version being read
-        # stays intact, so no localCheckpoint detachment is needed.
+        # stays intact, so no checkpoint detachment is needed.
         out.write.mode("overwrite").parquet(build)
         try:
             os.rename(build, version_dir)  # THE commit: data+marker, atomic
@@ -704,15 +706,15 @@ def foreachbatch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"no committed version under {tbl_dir}: the drained stream "
         "produced zero batches"
     )
-    final = (
+    final = materialize(
         spark.read.parquet(current[1])
         .select(
             "event_type",
             "n_events",
             F.col("total_d").cast("double").alias("total_value"),
         )
-        .orderBy("event_type")
-        .localCheckpoint(eager=True)
+        .orderBy("event_type"),
+        eager=True,
     )
     shutil.rmtree(src_dir, ignore_errors=True)
     shutil.rmtree(tbl_dir, ignore_errors=True)
@@ -1100,7 +1102,7 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.repartition(3).write.mode("overwrite").parquet(src_dir)
     batch_schema = spark.read.parquet(src_dir).schema
 
-    hist = scd2_history(spark, sf_dir).localCheckpoint(eager=True)
+    hist = materialize(scd2_history(spark, sf_dir), eager=True)
 
     def enrich(batch_df, batch_id):  # noqa: ANN001
         side0 = hist.select(
@@ -1230,12 +1232,13 @@ def make_kmv_fold_sink(tbl_dir: str, applied_dir: str):  # noqa: ANN201
             merged = existing.unionByName(batch_sk)
         else:
             merged = batch_sk
-        out = (
+        # Eager: detach from the table being overwritten.
+        out = materialize(
             merged.select("h")
             .distinct()
             .orderBy("h")
-            .limit(_KMV_STREAM_K)
-            .localCheckpoint(eager=True)  # detach from the table being overwritten
+            .limit(_KMV_STREAM_K),
+            eager=True,
         )
         out.write.mode("overwrite").parquet(tbl_dir)
         os.makedirs(applied_dir, exist_ok=True)
@@ -1293,15 +1296,15 @@ def kmv_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     union_est = F.when(
         F.col("m") < _KMV_STREAM_K, F.col("m").cast("double")
     ).otherwise(F.lit(float(_KMV_STREAM_K - 1)) / F.col("kth"))
-    final = (
+    final = materialize(
         est.crossJoin(F.broadcast(exact))
         .select(
             F.lit(_KMV_STREAM_K).alias("k"),
             "m",
             "exact_users",
             F.round(union_est, 6).alias("union_est"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     shutil.rmtree(src_dir, ignore_errors=True)
     shutil.rmtree(tbl_dir, ignore_errors=True)
@@ -1415,7 +1418,7 @@ def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "produced zero batches"
     )
     w = W.partitionBy("event_type").orderBy(F.col("v").desc(), "event_id")
-    final = (
+    final = materialize(
         spark.read.parquet(current[1])
         .withColumn("rk", F.row_number().over(w))
         .select(
@@ -1424,8 +1427,8 @@ def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             F.col("v").cast("double").alias("value"),
         )
-        .orderBy("event_type", "rank")
-        .localCheckpoint(eager=True)
+        .orderBy("event_type", "rank"),
+        eager=True,
     )
     shutil.rmtree(src_dir, ignore_errors=True)
     shutil.rmtree(tbl_root, ignore_errors=True)

@@ -16,59 +16,8 @@ from driver_protocol import make_duck, make_spark, vhash  # noqa: E402
 from sales_agent_graphdb_spark.registry import all_queries  # noqa: E402
 
 
-def print_stamp_map() -> None:
-    """Regenerate the registry's _VERIFIED_ROUND dict body from the
-    CORRECTNESS_r*.json records: each name maps to the LATEST round
-    with a fully-green driver row (rows+schema green, hash green or
-    absent, no err). Paste the output into registry.py after each
-    round to fold the new greens in."""
-    import glob
-    import json
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    stamp: dict[str, int] = {}
-    latest_red: dict[str, int] = {}  # name -> latest NON-green round
-    for p in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
-                    key=lambda p: int(re.search(r"_r(\d+)", p).group(1))):
-        rnd = int(re.search(r"_r(\d+)", p).group(1))
-        for name, row in json.load(open(p)).items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-                and not row.get("err")
-            ):
-                stamp[name] = rnd
-                latest_red.pop(name, None)
-            else:
-                latest_red[name] = rnd
-    # A name whose MOST RECENT driver record is red/errored must not
-    # carry a "verified" stamp — it would be deprioritized by the
-    # driver schedule while actually regressed (ADVICE r07 #1).
-    for name, rnd in sorted(latest_red.items()):
-        if name in stamp:
-            print(f"    # DROPPED {name}: green r{stamp.pop(name):02d} but "
-                  f"latest record r{rnd:02d} is red/errored — re-verify first")
-    for rnd in sorted(set(stamp.values())):
-        names = sorted(n for n, v in stamp.items() if v == rnd)
-        print(f"    # --- latest green row: CORRECTNESS_r{rnd:02d} ({len(names)} names) ---")
-        line = "   "
-        for n in names:
-            tok = f' "{n}": {rnd},'
-            if len(line) + len(tok) > 78:
-                print(line)
-                line = "   "
-            line += tok
-        print(line)
-
-
 def main() -> None:
     args = sys.argv[1:]
-    if args == ["--stamp"]:
-        print_stamp_map()
-        return
     sf = "/root/testdata/sf0.01"
     if "--sf" in args:
         i = args.index("--sf")
