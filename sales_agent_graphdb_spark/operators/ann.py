@@ -64,6 +64,46 @@ def _bucket_col(vec: Column, planes: np.ndarray) -> Column:
     return out
 
 
+def _signature_rows(
+    embeddings: DataFrame, planes: np.ndarray, id_col: str, vec_col: str
+) -> DataFrame:
+    """Skinny (id, t, bucket) rows, one per vector and table — no
+    vector payload, so T·n small rows."""
+    v = F.col(vec_col)
+    return embeddings.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(F.array(*[_bucket_col(v, p) for p in planes])).alias("t", "bucket"),
+    )
+
+
+def _fold_dot(a, b) -> float:
+    """Strict left-to-right Python-float fold — the same sequential
+    double fold as Spark's aggregate() and DuckDB's list_sum, so all
+    three engines agree bit-for-bit."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def _query_buckets(planes: np.ndarray, query_vec: list[float]) -> list[int]:
+    """The query's bucket id in each of the T tables, from fold-order
+    dots, so each sign bit equals ``_bucket_col``'s in-plan fold and
+    the DuckDB mirror's, even for a dot on a sign boundary."""
+    return [
+        sum(int(_fold_dot(p, query_vec) > 0) << j for j, p in enumerate(table))
+        for table in planes
+    ]
+
+
+def _probe_cells(cents: np.ndarray, query_vec: list[float], n_probe: int) -> list[int]:
+    """Top-n_probe cells by fold-order dot with the query, ties →
+    lowest cell id (mirrors the oracle's ORDER BY dot DESC, cid)."""
+    return sorted(
+        range(len(cents)), key=lambda c: (-_fold_dot(cents[c], query_vec), c)
+    )[:n_probe]
+
+
 def hyperplane_lsh_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -82,13 +122,8 @@ def hyperplane_lsh_topk(
     real-world embeddings (θ small for true neighbors) support much
     larger b with high recall — tune b to the neighbor angle, T to the
     recall target."""
-    dim = len(query_vec)
-    planes = _hyperplanes(n_tables, n_planes, dim)
-    q = np.asarray(query_vec)
-    q_buckets = [
-        int(sum(int(p @ q > 0) << j for j, p in enumerate(planes[t])))
-        for t in range(n_tables)
-    ]
+    planes = _hyperplanes(n_tables, n_planes, len(query_vec))
+    q_buckets = _query_buckets(planes, query_vec)
     v = F.col(vec_col)
     match_any = None
     for t in range(n_tables):
@@ -136,8 +171,7 @@ def ivf_topk(
     filter is the partition-pruning surrogate — at scale it prunes
     (n_cells - n_probe)/n_cells of the corpus before any scoring."""
     cents = _ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    q = np.asarray(query_vec)
-    probe = np.argsort(-(cents @ q))[:n_probe].tolist()
+    probe = _probe_cells(cents, query_vec, n_probe)
     assigned = ivf_assign(embeddings, cents, vec_col)
     scored = assigned.filter(F.col("cell").isin(probe)).select(
         F.col(id_col), cosine(F.col(vec_col), lit_vector(query_vec)).alias("sim")
@@ -190,9 +224,7 @@ def kmeans_centroids(
     recall-contingent driver row. (Previously ``F.avg`` on doubles
     merged partials in shuffle-arrival order — ulp-level wobble.) The
     18-fractional-digit quantization of the input doubles is
-    irrelevant to clustering quality; the SQL-mirrorable path for
-    oracle checking remains the portable first-N-centroid variant
-    (write_ivf_index_portable), which does no averaging."""
+    irrelevant to clustering quality."""
     cents = _unit_rows(_ivf_centroids(embeddings, n_cells, id_col, vec_col))
     for _ in range(n_iter):
         assigned = ivf_assign(embeddings, cents, vec_col)
@@ -355,13 +387,21 @@ def write_ivf_index(
     tiny sidecar table). Pay the assignment scan once at ingest,
     amortize over every query."""
     cents = kmeans_centroids(embeddings, n_cells, n_iter, id_col, vec_col)
+    _write_cells(embeddings, cents, path, vec_col)
+    return cents
+
+
+def _write_cells(
+    embeddings: DataFrame, cents: np.ndarray, path: str, vec_col: str = "embedding"
+) -> None:
+    """Assign every row its cell (``ivf_assign``) and write the frame
+    partitioned by ``cell`` — the IVF index layout."""
     (
         ivf_assign(embeddings, cents, vec_col)
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
     )
-    return cents
 
 
 def ivf_pruned_topk(
@@ -373,18 +413,13 @@ def ivf_pruned_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe: list[int] | None = None,
 ) -> DataFrame:
     """IVF top-k over the MATERIALIZED index: probe = equi-filter on
     the ``cell`` partition column → the parquet scan's PartitionFilters
     skip (n_cells - n_probe)/n_cells of the files before any cosine is
     evaluated (asserted by plan probe in tests/test_ann.py). This is
-    the scale path ``ivf_topk`` only simulated. ``probe`` overrides the
-    numpy probe-cell selection (the portable twin passes fold-order
-    dots so DuckDB reproduces the choice bit-for-bit)."""
-    if probe is None:
-        q = np.asarray(query_vec)
-        probe = [int(c) for c in np.argsort(-(centroids @ q))[:n_probe]]
+    the scale path ``ivf_topk`` only simulated."""
+    probe = _probe_cells(centroids, query_vec, n_probe)
     idx = spark.read.parquet(index_path)
     scored = idx.filter(F.col("cell").isin(probe)).select(
         F.col(id_col), cosine(F.col(vec_col), lit_vector(query_vec)).alias("sim")
@@ -410,13 +445,7 @@ def write_lsh_index(
     size b so each bucket partition lands in the 128-512 MB file-size
     sweet spot."""
     planes = _hyperplanes(n_tables, n_planes, dim)
-    v = F.col(vec_col)
-    sigs = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.array(*[_bucket_col(v, planes[t]) for t in range(n_tables)])
-        ).alias("t", "bucket"),
-    )
+    sigs = _signature_rows(embeddings, planes, id_col, vec_col)
     sigs.write.mode("overwrite").partitionBy("t", "bucket").parquet(path)
 
 
@@ -430,7 +459,6 @@ def lsh_pruned_topk(
     n_planes: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    q_buckets: list[int] | None = None,
 ) -> DataFrame:
     """LSH top-k over the MATERIALIZED index: compute the query's T
     bucket ids driver-side (T·b dot products on one vector), prune-read
@@ -440,13 +468,7 @@ def lsh_pruned_topk(
     table is bucketed by id — sources/bucketing.py — so the join-back
     prunes too); contrast ``hyperplane_lsh_topk``, which re-signs the
     whole corpus per query."""
-    if q_buckets is None:
-        planes = _hyperplanes(n_tables, n_planes, len(query_vec))
-        q = np.asarray(query_vec)
-        q_buckets = [
-            int(sum(int(p @ q > 0) << j for j, p in enumerate(planes[t])))
-            for t in range(n_tables)
-        ]
+    q_buckets = _query_buckets(_hyperplanes(n_tables, n_planes, len(query_vec)), query_vec)
     idx = spark.read.parquet(index_path)
     probe = None
     for t, qb in enumerate(q_buckets):
@@ -480,14 +502,7 @@ def hyperplane_dedup_pairs(
     joining the vectors back. Cost is O(Σ_bucket |bucket|²) instead of
     O(n²); recall per true pair at angle θ is 1-(1-(1-θ/π)^b)^T
     (pytest pins it against the exact kernel)."""
-    planes = _hyperplanes(n_tables, n_planes, dim)
-    v = F.col(vec_col)
-    sigs = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.array(*[_bucket_col(v, planes[t]) for t in range(n_tables)])
-        ).alias("t", "bucket"),
-    )
+    sigs = _signature_rows(embeddings, _hyperplanes(n_tables, n_planes, dim), id_col, vec_col)
     a, b = sigs.alias("a"), sigs.alias("b")
     cand = (
         a.join(
@@ -501,52 +516,12 @@ def hyperplane_dedup_pairs(
     )
     ea = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("ea"))
     eb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("eb"))
-    from sales_agent_graphdb_spark.operators.similarity import cosine as _cos
-
-    verified = (
+    return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
-        .select("id_a", "id_b", _cos(F.col("ea"), F.col("eb")).alias("cos_sim"))
+        .select("id_a", "id_b", cosine(F.col("ea"), F.col("eb")).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
-    return verified
-
-
-# ---------------------------------------------------------------------------
-# Engine-portable hyperplane-LSH top-k — the oracle-checkable twin of
-# hyperplane_lsh_topk. Same hyperplanes (seeded standard normal, inlined
-# as literals), but the QUERY bucket is computed inside the plan with
-# the same left-to-right fold dot product as the corpus side — so the
-# whole pipeline (sign bits, bucket equality, cosine rerank) is
-# reproducible in DuckDB bit-for-bit. The numpy-side q-bucket variant
-# stays the perf path (one driver-side dot vs a per-row crossJoin col).
-# ---------------------------------------------------------------------------
-
-
-def hyperplane_lsh_topk_portable(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_tables: int = 8,
-    n_planes: int = 4,
-    dim: int = 64,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    planes = _hyperplanes(n_tables, n_planes, dim)
-    q = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("qv")
-    )
-    joined = embeddings.crossJoin(F.broadcast(q))
-    v, qv = F.col(vec_col), F.col("qv")
-    match_any = None
-    for t in range(n_tables):
-        cond = _bucket_col(v, planes[t]) == _bucket_col(qv, planes[t])
-        match_any = cond if match_any is None else (match_any | cond)
-    scored = joined.filter(match_any).select(
-        F.col(id_col), cosine(v, qv).alias("sim")
-    )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
 
 def duckdb_lsh_topk_sql(
@@ -556,9 +531,11 @@ def duckdb_lsh_topk_sql(
     dim: int = 64,
     query_id: int = 0,
 ) -> str:
-    """Full SQL mirror of hyperplane_lsh_topk_portable: literal planes,
-    fold-order dot products (list_sum over list order — matches
-    Spark's aggregate fold, proven bit-exact by the v1 oracle)."""
+    """Full SQL mirror of hyperplane_lsh_topk (and of lsh_pruned_topk
+    over a write_lsh_index index) for the query vector of id
+    ``query_id``: literal planes, fold-order dot products (list_sum
+    over list order — matches Spark's aggregate fold and
+    ``_fold_dot``, proven bit-exact by the v1 oracle)."""
     from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
 
     planes = _hyperplanes(n_tables, n_planes, dim)
@@ -604,164 +581,14 @@ def _bucket_sql(vec: str, table_planes, n_planes: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _fold_dot(a, b) -> float:
-    """Strict left-to-right Python-float fold — the same sequential
-    double fold as Spark's aggregate() and DuckDB's list_sum, so all
-    three engines agree bit-for-bit."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc += float(x) * float(y)
-    return acc
-
-
-def _portable_probe(
-    cents: np.ndarray, qv: list[float], n_probe: int
-) -> list[int]:
-    """Top-n_probe cells by fold-order dot with the query, ties →
-    lowest cell id (mirrors the oracle's ORDER BY dot DESC, cid)."""
-    return sorted(
-        range(len(cents)), key=lambda c: (-_fold_dot(cents[c], qv), c)
-    )[:n_probe]
-
-
-def ivf_topk_portable(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k, oracle-checkable twin of ivf_topk: deterministic
-    first-N-by-id centroids (readable identically in SQL), argmax-dot
-    cell assignment with ties→lowest cell, probe = top-n_probe
-    centroids by dot with the query. The probe dots are computed
-    driver-side as a strict left-to-right Python-float fold — the same
-    sequential double fold as Spark's aggregate() and DuckDB's
-    list_sum, so all three agree bit-for-bit."""
-    cents = _ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    qrow = (
-        embeddings.filter(F.col(id_col) == query_id).select(vec_col).head()
-    )
-    qv = [float(x) for x in qrow[0]]
-    probe = _portable_probe(cents, qv, n_probe)
-    assigned = ivf_assign(embeddings, cents, vec_col)
-    scored = assigned.filter(F.col("cell").isin(probe)).select(
-        F.col(id_col), cosine(F.col(vec_col), lit_vector(qv)).alias("sim")
-    )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
-
-
-def write_ivf_index_portable(
-    spark,
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Materialize the IVF index with the PORTABLE centroid choice
-    (deterministic first-N-by-id, no k-means) so the whole
-    write→prune→rerank pipeline is reproducible in SQL: assignment is
-    the same argmax-fold-dot the oracle computes, the written ``cell``
-    partition values are therefore bit-identical to the oracle's
-    ``assign`` CTE, and a pruned read over them must return exactly the
-    oracle's probed subset. The k-means writer (write_ivf_index) stays
-    the quality path; this twin exists to hash-check the materialized
-    machinery end-to-end (index build + partition prune + rerank)."""
-    cents = _ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    (
-        ivf_assign(embeddings, cents, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    return cents
-
-
-def ivf_pruned_topk_portable(
-    spark,
-    index_path: str,
-    embeddings: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query side of the portable MATERIALIZED IVF path: recompute the
-    deterministic first-N centroids (16 rows — a footer-stat point
-    read, not a scan), pick probe cells by fold-order dots, then
-    partition-prune-read the index written by write_ivf_index_portable
-    and rerank exact. Hash-checking this against duckdb_ivf_topk_sql
-    verifies the whole write→prune→rerank pipeline: a wrong cell
-    assignment at write time, a mispruned partition, or a rerank skew
-    all surface as a value-hash mismatch."""
-    cents = _ivf_centroids(embeddings, n_cells, id_col, vec_col)
-    qrow = embeddings.filter(F.col(id_col) == query_id).select(vec_col).head()
-    qv = [float(x) for x in qrow[0]]
-    probe = _portable_probe(cents, qv, n_probe)
-    return ivf_pruned_topk(
-        spark, index_path, cents, qv, k=k, id_col=id_col, vec_col=vec_col,
-        probe=probe,
-    )
-
-
-def lsh_pruned_topk_portable(
-    spark,
-    index_path: str,
-    embeddings: DataFrame,
-    k: int = 5,
-    n_tables: int = 8,
-    n_planes: int = 4,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query side of the portable MATERIALIZED LSH path. The index
-    written by write_lsh_index is ALREADY portable — its per-row bucket
-    sign bits come from Spark's aggregate fold, the same sequential
-    double fold the DuckDB mirror computes — so the production index is
-    shared with ann_lsh_pruned_topk; only the query-side bucket choice
-    differs: here the T query buckets come from ``_fold_dot`` (not
-    numpy) so a sign-boundary dot can never diverge from the oracle.
-    Hash-checking this against duckdb_lsh_topk_sql therefore certifies
-    the index BUILD (per-row signatures at write), the physical
-    partition PRUNE, and the exact-cosine rerank end-to-end."""
-    qrow = embeddings.filter(F.col(id_col) == query_id).select(vec_col).head()
-    qv = [float(x) for x in qrow[0]]
-    planes = _hyperplanes(n_tables, n_planes, len(qv))
-    q_buckets = [
-        int(
-            sum(
-                int(_fold_dot(planes[t][j], qv) > 0) << j
-                for j in range(n_planes)
-            )
-        )
-        for t in range(n_tables)
-    ]
-    return lsh_pruned_topk(
-        spark,
-        index_path,
-        embeddings,
-        qv,
-        k=k,
-        n_tables=n_tables,
-        n_planes=n_planes,
-        id_col=id_col,
-        vec_col=vec_col,
-        q_buckets=q_buckets,
-    )
-
-
 def duckdb_ivf_topk_sql(
     k: int = 5, n_cells: int = 16, n_probe: int = 4, query_id: int = 0
 ) -> str:
-    """SQL mirror of ivf_topk_portable. Centroids come from the same
-    first-N-by-id rows; every dot is the same fold; assignment ties
-    break to the lowest cell id via ORDER BY (dot DESC, cid)."""
+    """SQL mirror of ivf_topk (and of ivf_pruned_topk over an index
+    written with the first-N-by-id centroids) for the query vector of
+    id ``query_id``. Centroids come from the same first-N-by-id rows;
+    every dot is the same fold as ``_fold_dot``; probe and assignment
+    ties break to the lowest cell id via ORDER BY (dot DESC, cid)."""
     from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
 
     cos = duckdb_cosine_sql("a.embedding", "q.qv")

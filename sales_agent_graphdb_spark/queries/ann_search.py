@@ -94,14 +94,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUERY-TIME variant (re-signs the corpus per query) — kept as the
     index-free form; the scale path is ann_lsh_pruned_topk below.
 
-    ORACLED DIRECTLY since r06 (VERDICT r05 #1): the only difference
-    from the hash-green portable twin is the QUERY-side bucket (numpy
-    double dot vs the oracle's fold-order dot) — identical unless a
-    query·plane dot sits exactly on a sign boundary, and the corpus
-    side plus the exact rerank are the same plan. Output verified
-    bit-equal to ann_lsh_topk_portable at sf0.001/0.01
-    (tools/twin_compare.py); tests/test_ann.py pins the equality so
-    local runs catch any drift before the driver does."""
+    ORACLED DIRECTLY: the planes are seeded literals and every dot —
+    the corpus side in-plan, the query buckets driver-side
+    (``ann._query_buckets``) — is a fold-order sum the DuckDB mirror
+    reproduces bit-for-bit, so the candidate set and the exact rerank
+    are the oracle's. ann_lsh_topk_portable runs the same operator;
+    tests/test_ann.py pins the equality."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     _require_dim64(len(qv), "ann_lsh_topk")
@@ -118,12 +116,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query) — the scale path is ann_ivf_pruned_topk below, which
     materializes the assignment at ingest.
 
-    ORACLED DIRECTLY since r06: centroids are the deterministic
-    first-16-by-id (same derivation as the oracle's CTE); only the
-    probe-cell argsort runs in numpy doubles vs the oracle's fold-order
-    dots — identical unless two centroid·query dots tie to the last
-    bit. Verified bit-equal to ann_ivf_topk_portable at sf0.001/0.01;
-    equality pinned in tests/test_ann.py."""
+    ORACLED DIRECTLY: centroids are the deterministic first-16-by-id
+    (same derivation as the oracle's CTE) and the probe cells come
+    from the same fold-order dots with the same lowest-cell tie break
+    (``ann._probe_cells``). ann_ivf_topk_portable runs the same
+    operator; tests/test_ann.py pins the equality."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     return ann.ivf_topk(emb, _query_vec(spark, sf_dir), k=5, n_cells=16, n_probe=4)
 
@@ -194,11 +191,10 @@ def ann_lsh_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranks exact — no per-query corpus scan. pytest pins recall and
     asserts the partition-pruned plan.
 
-    ORACLED DIRECTLY since r06: the index build IS the portable twin's
-    (shared write_lsh_index, fold-order sign bits); only the query
-    bucket runs in numpy. Verified bit-equal to
-    ann_lsh_pruned_portable at sf0.001/0.01; equality pinned in
-    tests/test_ann.py."""
+    ORACLED DIRECTLY: write_lsh_index's per-row sign bits and the
+    query buckets are both fold-order dots, exactly what the DuckDB
+    mirror computes. ann_lsh_pruned_portable runs the same operator
+    over the same index; tests/test_ann.py pins the equality."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     _require_dim64(len(qv), "ann_lsh_pruned_topk")
@@ -219,19 +215,16 @@ def ann_ivf_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes the corpus partitioned by cell using the deterministic
     first-16-by-id centroids (the same ones the SQL mirror derives),
     the query prune-reads the 4 fold-order-probed cell partitions and
-    reranks exact — so the driver's value hash covers the index BUILD
+    reranks exact with the same ``ann.ivf_pruned_topk`` the k-means
+    path serves — so the driver's value hash covers the index BUILD
     (cell assignment at write), the physical partition PRUNE, and the
-    rerank, not just the query-time arithmetic the r02 twin proved.
-    The k-means variant stays the quality/scale path."""
+    rerank. The k-means variant stays the quality/scale path."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     path = _index_path(sf_dir, "ivf_portable")
-    _ensure_index(
-        path,
-        sf_dir,
-        lambda: ann.write_ivf_index_portable(spark, emb, path, n_cells=16),
-    )
-    return ann.ivf_pruned_topk_portable(
-        spark, path, emb, k=5, n_cells=16, n_probe=4, query_id=0
+    cents = ann._ivf_centroids(emb, 16, "vec_id", "embedding")
+    _ensure_index(path, sf_dir, lambda: ann._write_cells(emb, cents, path))
+    return ann.ivf_pruned_topk(
+        spark, path, cents, _query_vec(spark, sf_dir), k=5, n_probe=4
     )
 
 
@@ -245,9 +238,7 @@ def ann_lsh_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     (write_lsh_index's per-row sign bits are Spark fold dots — exactly
     what the DuckDB mirror computes), so this row certifies the shared
     production index build + the (t, bucket) partition prune + the
-    exact rerank. Only the query-side bucket selection differs from
-    the perf path: fold-order dots instead of numpy, so a
-    sign-boundary dot cannot diverge from the oracle."""
+    exact rerank; the query runs the same ``ann.lsh_pruned_topk``."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     _require_dim64(len(qv), "ann_lsh_pruned_portable")
@@ -255,7 +246,7 @@ def ann_lsh_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_index(
         path, sf_dir, lambda: ann.write_lsh_index(spark, emb, path, dim=len(qv))
     )
-    return ann.lsh_pruned_topk_portable(spark, path, emb, k=5, query_id=0)
+    return ann.lsh_pruned_topk(spark, path, emb, qv, k=5)
 
 
 @register(
@@ -263,17 +254,17 @@ def ann_lsh_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=ann.duckdb_lsh_topk_sql(k=5, n_tables=8, n_planes=4, dim=64, query_id=0),
 )
 def ann_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH top-5, HASH-CHECKED END-TO-END: the
-    oracle-checkable twin of ann_lsh_topk. The seeded hyperplanes are
-    inlined as literals on BOTH engines, and the query bucket is
-    computed inside the plan with the same left-to-right fold dot
-    product as the corpus side — so sign bits, bucket equality, and
-    the exact-cosine rerank are all reproducible in DuckDB bit-for-bit
-    (the fold-order trick proven by the v1 oracle). The numpy-q-bucket
-    variant stays the perf path."""
+    """Hyperplane-LSH top-5, HASH-CHECKED END-TO-END: the same
+    ``ann.hyperplane_lsh_topk`` as ann_lsh_topk. The seeded hyperplanes
+    are inlined as literals on BOTH engines, and the query buckets use
+    the same left-to-right fold dot product as the corpus side — so
+    sign bits, bucket equality, and the exact-cosine rerank are all
+    reproducible in DuckDB bit-for-bit (the fold-order trick proven by
+    the v1 oracle)."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    _require_dim64(len(_query_vec(spark, sf_dir)), "ann_lsh_topk_portable")
-    return ann.hyperplane_lsh_topk_portable(emb, k=5)
+    qv = _query_vec(spark, sf_dir)
+    _require_dim64(len(qv), "ann_lsh_topk_portable")
+    return ann.hyperplane_lsh_topk(emb, qv, k=5)
 
 
 @register(
@@ -285,11 +276,11 @@ def ann_ivf_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids (read identically by the SQL mirror), argmax-dot cell
     assignment with ties→lowest cell, top-4-cell probe, exact-cosine
     rerank — every dot the same sequential double fold on Spark,
-    Python (driver-side probe), and DuckDB. The k-means variant
-    (ann_ivf_pruned_topk) stays the quality/scale path; this twin
-    proves the IVF mechanics against a full SQL oracle."""
+    Python (driver-side probe), and DuckDB; the same ``ann.ivf_topk``
+    as ann_ivf_topk. The k-means variant (ann_ivf_pruned_topk) stays
+    the quality/scale path."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    return ann.ivf_topk_portable(emb, k=5)
+    return ann.ivf_topk(emb, _query_vec(spark, sf_dir), k=5, n_cells=16, n_probe=4)
 
 
 # ---------------------------------------------------------------------------
@@ -335,11 +326,11 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id < 400), then MERGE the new batch (vec_id >= 400) in with
     dynamic partition overwrite — union the new signature rows with
     the existing rows of ONLY the affected (t, bucket) partitions and
-    rewrite exactly those directories
-    (spark.sql.sources.partitionOverwriteMode=dynamic; static mode
-    would wipe the untouched partitions). The union frame is
-    materialized eagerly before the write so the self-overwrite read
-    is cut from the plan. The returned per-partition profile
+    rewrite exactly those directories (the write's own
+    partitionOverwriteMode=dynamic option; static mode would wipe the
+    untouched partitions, and the session conf is never touched). The
+    union frame is materialized eagerly before the write so the
+    self-overwrite read is cut from the plan. The returned per-partition profile
     (count + id checksum) must hash-equal the oracle's FROM-SCRATCH
     rebuild over the full corpus: the driver row certifies the merge
     semantics, not just the arithmetic.
@@ -359,13 +350,11 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann.write_lsh_index(
             spark, base, path, dim=64, n_tables=_INC_TABLES, n_planes=_INC_PLANES
         )
-        planes = ann._hyperplanes(_INC_TABLES, _INC_PLANES, 64)
-        v = F.col("embedding")
-        new_sigs = emb.filter(F.col("vec_id") >= _INC_SPLIT).select(
-            F.col("vec_id").alias("id"),
-            F.posexplode(
-                F.array(*[ann._bucket_col(v, planes[t]) for t in range(_INC_TABLES)])
-            ).alias("t", "bucket"),
+        new_sigs = ann._signature_rows(
+            emb.filter(F.col("vec_id") >= _INC_SPLIT),
+            ann._hyperplanes(_INC_TABLES, _INC_PLANES, 64),
+            "vec_id",
+            "embedding",
         )
         affected = new_sigs.select("t", "bucket").distinct()
         existing = (
@@ -374,16 +363,13 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id", "t", "bucket")
         )
         # Eager: detach from the partitions the write replaces.
-        updated = materialize(
-            existing.unionByName(new_sigs.select("id", "t", "bucket")),
-            eager=True,
+        updated = materialize(existing.unionByName(new_sigs), eager=True)
+        (
+            updated.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("t", "bucket")
+            .parquet(path)
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            updated.write.mode("overwrite").partitionBy("t", "bucket").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     stamp.ensure(path, src, "incr-v1-upserted", _build_incr)
     idx = spark.read.parquet(path)
@@ -438,32 +424,20 @@ def ann_ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build_ivf_incr():
         base = emb.filter(F.col("vec_id") < _INC_SPLIT)
         cents = ann._ivf_centroids(base, 16, "vec_id", "embedding")
+        ann._write_cells(base, cents, path)
+        new_rows = ann.ivf_assign(emb.filter(F.col("vec_id") >= _INC_SPLIT), cents)
+        affected = new_rows.select("cell").distinct()
+        existing = spark.read.parquet(path).join(F.broadcast(affected), ["cell"])
+        # Eager: detach from the partitions the write replaces.
+        updated = materialize(existing.unionByName(new_rows), eager=True)
         (
-            ann.ivf_assign(base, cents)
-            .select("vec_id", "cell")
-            .write.mode("overwrite")
+            updated.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("cell")
             .parquet(path)
         )
-        new_rows = ann.ivf_assign(
-            emb.filter(F.col("vec_id") >= _INC_SPLIT), cents
-        ).select("vec_id", "cell")
-        affected = new_rows.select("cell").distinct()
-        existing = (
-            spark.read.parquet(path)
-            .join(F.broadcast(affected), ["cell"])
-            .select("vec_id", "cell")
-        )
-        # Eager: detach from the partitions the write replaces.
-        updated = materialize(existing.unionByName(new_rows), eager=True)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            updated.write.mode("overwrite").partitionBy("cell").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    stamp.ensure(path, src, "ivf-incr-v1-upserted", _build_ivf_incr)
+    stamp.ensure(path, src, "ivf-incr-v2-upserted", _build_ivf_incr)
     idx = spark.read.parquet(path)
     return (
         idx.groupBy(F.col("cell").cast("int").alias("cell"))
@@ -521,8 +495,7 @@ def ann_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda t: np.asarray(json.loads(t)),
     )
     qv = _query_vec(spark, sf_dir)
-    q = np.asarray(qv)
-    probe = [int(c) for c in np.argsort(-(cents @ q))[:8]]
+    probe = ann._probe_cells(cents, qv, 8)
     from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
     from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
 
@@ -634,15 +607,11 @@ def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame
         lambda t: {int(k): np.asarray(v) for k, v in json.loads(t).items()},
     )
     qv = _query_vec(spark, sf_dir)
-    q = np.asarray(qv)
     from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
     from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
 
     idx = spark.read.parquet(path)
-    probes = {
-        lbl: [int(c) for c in np.argsort(-(cbl[lbl] @ q))[:4]]
-        for lbl in _FILTER_LABELS
-    }
+    probes = {lbl: ann._probe_cells(cbl[lbl], qv, 4) for lbl in _FILTER_LABELS}
     pruned_pred = None
     for lbl, cells in sorted(probes.items()):
         p = (F.col("label") == lbl) & F.col("cell").isin(cells)
@@ -734,14 +703,13 @@ def ann_filtered_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda t: np.asarray(json.loads(t)),
     )
     qv = _query_vec(spark, sf_dir)
-    q = np.asarray(qv)
     row = emb.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_if(F.col("label").isin(*_ADAPTIVE_LABELS)).alias("c"),
     ).collect()[0]
     total, cnt = int(row["n"]), int(row["c"])
     probe_n = min(16, (_ADAPTIVE_BASE_PROBE * total + cnt - 1) // cnt)
-    probe = [int(c) for c in np.argsort(-(cents @ q))[:probe_n]]
+    probe = ann._probe_cells(cents, qv, probe_n)
     from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
 
     idx = spark.read.parquet(path)
@@ -965,7 +933,7 @@ def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )(json.loads(t)),  # parse the sidecar payload once (ADVICE r10)
     )
     qv = _query_vec(spark, sf_dir)
-    probe = [int(c) for c in np.argsort(-(cents @ np.asarray(qv)))[:_IVFPQ_PROBE]]
+    probe = ann._probe_cells(cents, qv, _IVFPQ_PROBE)
     idx = spark.read.parquet(path)
     cands = (
         idx.filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))

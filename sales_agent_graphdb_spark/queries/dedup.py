@@ -374,48 +374,32 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard ≥ 0.5. pytest pins recall on the raw match frame
     (incremental_minhash_pairs_frame)."""
     pairs = incremental_minhash_pairs_frame(spark, sf_dir)
-    d = catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    planted = d.filter(F.col("doc_id") < _N_PLANTED).select(
-        (F.col("doc_id") + DUP_OFFSET).alias("new_id"),
-        F.col("doc_id").alias("corpus_id"),
-        (F.col("doc_id") >= 40).alias("is_exact"),
-    )
-    hits = planted.join(
-        pairs.select("new_id", "corpus_id").withColumn("hit", F.lit(1)),
-        ["new_id", "corpus_id"],
-        "left",
-    )
-    stats = hits.agg(
-        (F.coalesce(F.sum(F.when(F.col("is_exact"), F.col("hit"))), F.lit(0))
-         == _N_EXACT).alias("exact_all_found"),
-        (F.coalesce(F.sum("hit"), F.lit(0)) >= _MINHASH_RECALL_FLOOR).alias(
-            "planted_recall_ok"
-        ),
-    )
-    fp = pairs.agg(
-        F.coalesce(F.min("jaccard_sim") >= 0.5, F.lit(False)).alias("fp_verified")
-    )
-    return (
-        planted.crossJoin(F.broadcast(stats.crossJoin(fp)))
-        .select(
-            "new_id", "corpus_id", "is_exact",
-            "exact_all_found", "planted_recall_ok", "fp_verified",
-        )
-        .orderBy("new_id")
+    # The planted source doc is the corpus side: (corpus_id, new_id) =
+    # (d, d + DUP_OFFSET).
+    return _minhash_verdict(spark, sf_dir, pairs, "corpus_id", "new_id").select(
+        "new_id", "corpus_id", "is_exact",
+        "exact_all_found", "planted_recall_ok", "fp_verified",
     )
 
 
-def _cluster_canonical(spark, sf_dir: str, pairs: "DataFrame") -> DataFrame:
-    """Shared clustering tail of both cluster-canonical queries: pairs →
-    edges → pointer-doubling connected components → per-cluster
-    canonical (min doc_id) + size + sorted member-id JSON, clusters of
-    >= 2. ONE definition so the portable twin certifies exactly the
-    pipeline the perf path runs."""
+def _components(pairs: DataFrame) -> DataFrame:
+    """(id, component): verified near-dup pairs → edges →
+    pointer-doubling connected components; shared by every
+    cluster-canonical query."""
     from sales_agent_graphdb_spark.operators.graph import connected_components
 
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    comp = connected_components(edges)
-    clusters = comp.groupBy("component").agg(
+    return connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    )
+
+
+def _cluster_canonical(pairs: DataFrame) -> DataFrame:
+    """Shared clustering tail of both cluster-canonical frames:
+    ``_components`` → per-cluster canonical (min doc_id) + size +
+    sorted member-id JSON, clusters of >= 2. ONE definition so the
+    portable query certifies exactly the pipeline the perf path
+    runs."""
+    clusters = _components(pairs).groupBy("component").agg(
         F.min("id").alias("canonical_doc_id"),
         F.count(F.lit(1)).alias("cluster_size"),
         F.to_json(F.sort_array(F.collect_list("id"))).alias("member_ids"),
@@ -432,9 +416,7 @@ def cluster_canonical_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the xxhash64 perf cascade — consumed by the verdict query's
     sibling tests (tests/test_dedup_properties.py pins subset-of-exact
     -components + canonical/min invariants on it)."""
-    return _cluster_canonical(
-        spark, sf_dir, minhash_lsh_pairs_frame(spark, sf_dir)
-    )
+    return _cluster_canonical(minhash_lsh_pairs_frame(spark, sf_dir))
 
 
 @register(
@@ -459,11 +441,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (pairs → pointer-doubling CC) executes in-plan to produce
     the verdict; pytest checks the raw cluster frame
     (cluster_canonical_frame) against exact-Jaccard components."""
-    from sales_agent_graphdb_spark.operators.graph import connected_components
-
-    pairs = minhash_lsh_pairs_frame(spark, sf_dir)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    comp = connected_components(edges)
+    comp = _components(minhash_lsh_pairs_frame(spark, sf_dir))
     planted = _planted(spark, sf_dir)
     ca = comp.select(F.col("id").alias("id_a"), F.col("component").alias("comp_a"))
     cb = comp.select(F.col("id").alias("id_b"), F.col("component").alias("comp_b"))
@@ -487,8 +465,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Shared CTE chain for the md5-portable minhash family (16 hashes, 4
 # bands, 5-char shingles) over the planted-duplicate corpus — the text
-# mirror of lsh._portable_banded + shingle_tokens, shared by all three
-# portable minhash queries (pairs / incremental / cluster-canonical).
+# mirror of lsh.shingle_tokens + the md5 signatures and bands
+# (portable=True), shared by all three portable minhash queries
+# (pairs / incremental / cluster-canonical).
 _PORTABLE_MINHASH_CTES = f"""
     corpus AS ({_CORPUS_SQL}),
     norm AS (
@@ -535,18 +514,19 @@ _PORTABLE_MINHASH_CTES = f"""
 )
 def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, HASH-CHECKED END-TO-END: the
-    oracle-checkable twin of dedup_minhash_lsh. Same cascade, but the
-    hash family is md5-derived (portable to DuckDB bit-for-bit), so
-    the driver verifies the ENTIRE pipeline — shingling, 16-seed
-    minhash signatures, 4-band bucketing, candidate join, exact
-    Jaccard verify — against a full SQL mirror, not just row counts.
-    The xxhash64 variant stays the performance path; pytest ties the
-    two together via the shared recall pin. 16 hashes / 4 bands keeps
-    the banding curve near the 32/8 perf config (r = 4 rows per band
-    in both)."""
+    oracle-checkable twin of dedup_minhash_lsh. The same
+    lsh.minhash_lsh_pairs cascade with portable=True: the hash family
+    is md5-derived (portable to DuckDB bit-for-bit) and the cost-only
+    pruning stages are off, so the driver verifies the ENTIRE
+    pipeline — shingling, 16-seed minhash signatures, 4-band
+    bucketing, candidate join, exact Jaccard verify — against a full
+    SQL mirror, not just row counts. The xxhash64 family stays the
+    performance path. 16 hashes / 4 bands keeps the banding curve
+    near the 32/8 perf config (r = 4 rows per band in both)."""
     corpus = dup_corpus(spark, sf_dir)
-    return lsh.minhash_lsh_pairs_portable(
-        corpus, n_hashes=16, n_bands=4, shingle_k=5, jaccard_threshold=0.5
+    return lsh.minhash_lsh_pairs(
+        corpus, n_hashes=16, n_bands=4, shingle_k=5, jaccard_threshold=0.5,
+        portable=True,
     ).orderBy("id_a", "id_b")
 
 
@@ -587,14 +567,16 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, HASH-CHECKED END-TO-END: the
-    oracle-checkable twin of dedup_simhash (same Charikar signature +
-    pigeonhole banding, md5-portable 60-bit token hashes). The driver
-    verifies the whole pipeline — token hashing, signed bit votes,
-    60-char signature, 4×15-bit banding, hamming verify — against a
-    full SQL mirror. The xxhash64 variant stays the performance
-    path."""
+    oracle-checkable twin of dedup_simhash (the same
+    lsh.simhash_near_dup_pairs with portable=True: md5-portable 60-bit
+    token hashes). The driver verifies the whole pipeline — token
+    hashing, signed bit votes, 60-char signature, 4×15-bit banding,
+    hamming verify — against a full SQL mirror. The xxhash64 family
+    stays the performance path."""
     corpus = dup_corpus(spark, sf_dir)
-    return lsh.simhash_portable_pairs(corpus, max_hamming=3).orderBy("id_a", "id_b")
+    return lsh.simhash_near_dup_pairs(corpus, max_hamming=3, portable=True).orderBy(
+        "id_a", "id_b"
+    )
 
 
 
@@ -632,14 +614,15 @@ def dedup_incremental_minhash_portable(
     corpus² — but the hash family is md5-derived, so the driver
     verifies the whole incremental cascade (per-side shingling, 16-seed
     signatures, 4-band bucketing, cross-side candidate join, exact
-    Jaccard verify) against a full SQL mirror. The xxhash64 variant
-    stays the performance path."""
+    Jaccard verify) against a full SQL mirror: lsh.minhash_lsh_join
+    with portable=True. The xxhash64 family stays the performance
+    path."""
     full = dup_corpus(spark, sf_dir)
     batch = full.filter(F.col("doc_id") >= DUP_OFFSET)
     corpus = full.filter(F.col("doc_id") < DUP_OFFSET)
-    return lsh.minhash_lsh_join_portable(
+    return lsh.minhash_lsh_join(
         batch, corpus, n_hashes=16, n_bands=4, shingle_k=5,
-        jaccard_threshold=0.5,
+        jaccard_threshold=0.5, portable=True,
     ).orderBy("new_id", "corpus_id")
 
 
@@ -695,10 +678,11 @@ def dedup_cluster_canonical_portable(
     AND the canonical/member aggregation, bit-for-bit including the
     sorted member-id JSON."""
     corpus = dup_corpus(spark, sf_dir)
-    pairs = lsh.minhash_lsh_pairs_portable(
-        corpus, n_hashes=16, n_bands=4, shingle_k=5, jaccard_threshold=0.5
+    pairs = lsh.minhash_lsh_pairs(
+        corpus, n_hashes=16, n_bands=4, shingle_k=5, jaccard_threshold=0.5,
+        portable=True,
     )
-    return _cluster_canonical(spark, sf_dir, pairs)
+    return _cluster_canonical(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -1091,33 +1075,11 @@ def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
     toks = lsh.shingle_tokens(corpus, "text", "doc_id", 5).distinct()
     toks = materialize(toks, eager=True)  # one materialization: minhash + verify
     # First consumer: the eager `verify` build below.
-    minw = materialize(lsh._portable_signatures(toks, 16), eager=False)
-    banded = lsh._band_buckets(minw, 16, 4)
-    a, b = banded.alias("a"), banded.alias("b")
+    minw = materialize(lsh._signatures(toks, 16, portable=True), eager=False)
+    banded = lsh._bands(minw, 16, 4, portable=True)
     # Read by the agreement join and the exact verify.
-    cand = materialize(
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"]),
-        eager=False,
-    )
-    wa = minw.select(
-        F.col("id").alias("id_a"), *[F.col(f"mh{s}").alias(f"a{s}") for s in range(16)]
-    )
-    wb = minw.select(
-        F.col("id").alias("id_b"), *[F.col(f"mh{s}").alias(f"b{s}") for s in range(16)]
-    )
-    n_agree = sum(
-        F.when(F.col(f"a{s}") == F.col(f"b{s}"), 1).otherwise(0) for s in range(16)
-    )
-    agree = cand.join(wa, "id_a").join(wb, "id_b").select(
-        "id_a", "id_b", n_agree.alias("n_agree")
-    )
+    cand = materialize(lsh._candidates(banded, None), eager=False)
+    agree = lsh._with_agreement(cand, minw, minw, 16)
     planted = F.col("id_b") == F.col("id_a") + DUP_OFFSET
     in_sample = (
         F.conv(

@@ -549,21 +549,22 @@ def m8_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def m9_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M9 — DYNAMIC partition overwrite (partitionOverwriteMode =
-    dynamic): restate ONE month of the hive-partitioned lineitem
-    layout (a 10% price correction to 1996-07) with
-    mode('overwrite').partitionBy(...) — Spark replaces ONLY the
-    partitions present in the written frame; every other month's
-    files are untouched (the restatement write path of a date-
-    partitioned 100 TB fact: correcting a day never rewrites the
+    """M9 — DYNAMIC partition overwrite (the write's own
+    partitionOverwriteMode=dynamic option): restate ONE month of the
+    hive-partitioned lineitem layout (a 10% price correction to
+    1996-07) with mode('overwrite').partitionBy(...) — Spark replaces
+    ONLY the partitions present in the written frame; every other
+    month's files are untouched (the restatement write path of a
+    date-partitioned 100 TB fact: correcting a day never rewrites the
     table; STATIC overwrite mode would truncate it). The query reads
     the corrected month and its two untouched neighbors back from the
     layout; the oracle recomputes all three from the ORIGINAL
     lineitem, so the hash certifies both the correction (1996-07) and
-    the non-damage (1996-06/08). The session conf is set around the
-    write only and restored in finally. The layout is m9's OWN
-    stamped copy (lineitem_by_month_m9) — mutating the shared DPP
-    layout would silently corrupt dpp_partition_pruned's oracle."""
+    the non-damage (1996-06/08). The mode is set per write, never on
+    the session, so concurrent queries in the session keep their own
+    mode. The layout is m9's OWN stamped copy (lineitem_by_month_m9) —
+    mutating the shared DPP layout would silently corrupt
+    dpp_partition_pruned's oracle."""
     from sales_agent_graphdb_spark.queries.sources_io import _scratch
     from sales_agent_graphdb_spark.sources import stamp
 
@@ -610,13 +611,12 @@ def m9_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .repartition(F.col("ship_month"))
     )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key, "STATIC")
-    try:
-        spark.conf.set(key, "dynamic")
-        corrected.write.mode("overwrite").partitionBy("ship_month").parquet(root)
-    finally:
-        spark.conf.set(key, before)
+    (
+        corrected.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ship_month")
+        .parquet(root)
+    )
     back = spark.read.parquet(root).filter(
         F.col("ship_month").isin("1996-06", "1996-07", "1996-08")
     )

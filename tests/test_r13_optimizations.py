@@ -4,10 +4,11 @@ Each test pins an equivalence the r13 optimization round relies on:
 
 1. The gram-dictionary pre-hash (md5 portable minhash family) produces
    BIT-IDENTICAL signatures to the old per-occurrence seed-explode
-   form (dedup.dedup_minhash_estimate_accuracy, lsh._portable_banded).
-2. The banded (id, band, bucket) rows from the rewritten
-   _portable_banded equal the old collect_list/array_sort/array_join
-   construction byte-for-byte.
+   form (lsh._signatures with portable=True).
+2. The md5-family banded (id, band, bucket) rows (lsh._bands over
+   lsh._signatures) equal the old collect_list/array_sort/array_join
+   construction byte-for-byte; both families reject an n_bands that
+   does not divide n_hashes.
 3. The lazy-checkpoint + full-count convergence protocol (one driver
    action per round) leaves connected_components / bfs_distances /
    pagerank results identical to driver-side references, within a
@@ -117,7 +118,9 @@ def test_portable_banded_matches_old_construction(spark, docs):
             ).alias("bucket")
         )
     )
-    new = lsh._portable_banded(toks, n_hashes, n_bands)
+    new = lsh._bands(
+        lsh._signatures(toks, n_hashes, portable=True), n_hashes, n_bands, portable=True
+    )
     old_rows = sorted(tuple(r) for r in old.collect())
     new_rows = sorted(tuple(r) for r in new.collect())
     assert old_rows == new_rows
@@ -125,9 +128,11 @@ def test_portable_banded_matches_old_construction(spark, docs):
 
 
 def test_portable_banded_rejects_indivisible_bands(spark, docs):
+    """Both hash families share the banding step and its check."""
     toks = lsh.shingle_tokens(docs, "text", "doc_id", 5).distinct()
-    with pytest.raises(ValueError, match="multiple of n_bands"):
-        lsh._portable_banded(toks, 16, 5)
+    for portable in (True, False):
+        with pytest.raises(ValueError, match="multiple of n_bands"):
+            lsh._bands(lsh._signatures(toks, 16, portable), 16, 5, portable)
 
 
 def _union_find_components(edges, nodes):
@@ -202,6 +207,27 @@ def test_round_drivers_job_budget(spark):
     assert n_bfs <= 42, n_bfs
 
 
+def test_minhash_cascade_job_budget(spark, docs):
+    """The shared MinHash cascade runs the self-join schedule in both
+    modes: survivors are checkpointed eagerly because the shingle-set
+    builds and the final pair join read them concurrently. Budgets on
+    the fixture above (xxhash64 family, 8 shuffle partitions): pairs
+    mode at most the 13 jobs measured before the modes shared the
+    cascade, join mode at most that 19 plus the one eager job."""
+    batch = docs.filter("doc_id % 2 = 0")
+    corpus = docs.filter("doc_id % 2 = 1")
+    n_pairs = _jobs_in_group(
+        spark, "budget:minhash_pairs", lambda: lsh.minhash_lsh_pairs(docs).collect()
+    )
+    n_join = _jobs_in_group(
+        spark,
+        "budget:minhash_join",
+        lambda: lsh.minhash_lsh_join(batch, corpus).collect(),
+    )
+    assert n_pairs <= 13, n_pairs
+    assert n_join <= 20, n_join
+
+
 def test_pagerank_single_action_protocol(spark):
     # Reference: dense driver-side power iteration with the operator's
     # exact update rule (damping 0.85, dangling redistribution).
@@ -255,8 +281,9 @@ def test_reliable_checkpoint_switch(tmp_path):
     """SPARK_GRAFT_RELIABLE_CHECKPOINT makes session.materialize write
     reliable checkpoints (VERDICT r12 #6) without patching the DataFrame
     class. Checkpoints from two modules (graph's superstep, lsh's
-    portable twin) must each write reliable files. Runs in a subprocess
-    so the checkpoint directory is set on a fresh SparkContext."""
+    md5-family MinHash cascade) must each write reliable files. Runs in
+    a subprocess so the checkpoint directory is set on a fresh
+    SparkContext."""
     import subprocess
     import sys as _sys
 
@@ -285,7 +312,7 @@ docs = spark.createDataFrame(
      (3, "an entirely different sentence about spark")],
     ["doc_id", "text"],
 )
-pairs = [(r["id_a"], r["id_b"]) for r in lsh.minhash_lsh_pairs_portable(docs).collect()]
+pairs = [(r["id_a"], r["id_b"]) for r in lsh.minhash_lsh_pairs(docs, portable=True).collect()]
 assert pairs == [(1, 2)], pairs
 assert rdd_dirs() - after_graph, "lsh wrote no reliable checkpoint files under " + ck
 print("RELIABLE_OK", len(rdd_dirs()))

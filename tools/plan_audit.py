@@ -52,7 +52,6 @@ ALLOW_BNLJ = {
     "dedup_ngram_jaccard",  # exact-Jaccard kernel on a bounded 20-doc slice
     "st_late_data_policy",  # one-row max-event-time crossJoin (watermark cutoff)
     "funnel_conversion",  # crossJoin of three single-row stage counts
-    "ann_lsh_topk_portable",  # single-row query-vector crossJoin
     "text_tfidf_keywords",  # one-row corpus-count crossJoin (idf factor)
     "ts_gap_fill_locf",  # one-row min/max-hour bounds crossJoin (spine gen)
     "agg_hll_rollup",  # one-row merged-sketch × one-row exact-total join
