@@ -51,7 +51,8 @@ def superstep(
       it must be a full action over every partition (a count or an
       aggregate collect — never a limit, which could leave partitions
       for a later reader to recompute). The loop stops when it returns
-      True.
+      True; if it still returns False after ``max_iter`` rounds, the
+      state has not converged and the loop raises ``RuntimeError``.
     - or, with no ``converged``, the one action ``step`` already takes
       on its input at the start of the next round (PageRank's
       dangling-mass collect), or none at all (fixed-round steps whose
@@ -62,13 +63,13 @@ def superstep(
     first consumer must be one sequential action (the query's write or
     a collect), not several concurrent ones.
     """
-    rounds = 0
-    while rounds < max_iter:
+    for rounds in range(1, max_iter + 1):
         state = materialize(step(state), eager=False)
-        rounds += 1
         if converged is not None and converged(state):
-            break
-    return state, rounds
+            return state, rounds
+    if converged is not None:
+        raise RuntimeError(f"superstep did not converge within max_iter={max_iter} rounds")
+    return state, max_iter
 
 
 def bfs_levels(
@@ -157,7 +158,9 @@ def connected_components(
 ) -> DataFrame:
     """Min-label propagation: component(v) = min vertex label reachable.
     Returns (id, component). Each round is one propagation join and one
-    groupBy on ``superstep``; the loop stops when no label changes."""
+    groupBy on ``superstep``; the loop stops when no label changes and
+    raises ``RuntimeError`` if labels still change after ``max_iter``
+    rounds."""
     # Every round joins the symmetric edges: checkpoint them once.
     sym = materialize(symmetrize(edges, src, dst).toDF("a", "b"), eager=True)
     # Seeding labels with min(own id, neighbor ids) is round 1 for free

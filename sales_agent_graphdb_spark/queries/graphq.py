@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.operators import fulltext, graph
+from sales_agent_graphdb_spark.queries import sources_io
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources import stamp
@@ -245,7 +246,7 @@ def _order_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would reintroduce delete-under-reader.
     key = hashlib.md5(stamp.src_stamp(li_src, version).encode()).hexdigest()[:12]
     table = f"graph_ob_pairs_{tag}_{key}"
-    path = f"/root/repo/.scratch/graph_ob/{tag}_{key}"
+    path = f"{sources_io.SCRATCH}/graph_ob/{tag}_{key}"
     if not stamp.is_fresh(path, li_src, version):
         li = catalog.load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -599,7 +600,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KCORE_FIX_K = 65        # below the core-collapse threshold at every test SF
 _KCORE_FIX_UNROLL = 8    # oracle unroll; measured fixpoint: 4 rounds at
                          # sf0.001, 2 at sf0.01 (probe in CHANGES_r06.md)
-_KCORE_FIX_GUARD = 32    # Spark-side max-round guard
+_KCORE_FIX_GUARD = 32    # Spark-side max-round guard (raises if reached)
 
 
 # MATERIALIZED hints are load-bearing: each n_i is referenced twice by
@@ -654,10 +655,10 @@ def graph_k_core_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes below degree {k}; the loop exits on a changed-flag — survivor
     sets shrink monotonically (n_i ⊆ n_{{i-1}}), so a count-equality
     check is a sound set-equality check — under a max-round guard of
-    {guard}. The returned `rounds_to_fixpoint` is data-determined (4 at
-    sf0.001, 2 at sf0.01), certifying the loop really converged rather
-    than running a hardcoded schedule; the oracle reproduces it from
-    the unrolled cardinality sequence.
+    {guard} that raises if reached. The returned `rounds_to_fixpoint`
+    is data-determined (4 at sf0.001, 2 at sf0.01), certifying the loop
+    really converged rather than running a hardcoded schedule; the
+    oracle reproduces it from the unrolled cardinality sequence.
 
     Scale: the edge build is the bounded per-order basket self-join
     (graph.co_occurrence_edges — fanout is items-per-order², never

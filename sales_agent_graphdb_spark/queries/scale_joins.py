@@ -20,6 +20,7 @@ from sales_agent_graphdb_spark.operators.skew import (
     salted_join,
     salted_join_hot_keys,
 )
+from sales_agent_graphdb_spark.queries import sources_io
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources.bucketing import (
@@ -152,7 +153,7 @@ def join_bucketed_collocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query shape is unchanged."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_") or "sf"
     li_t, o_t = f"bq_lineitem_{tag}", f"bq_orders_{tag}"
-    scratch = f"/root/repo/.scratch/bucketed/{tag}"
+    scratch = f"{sources_io.SCRATCH}/bucketed/{tag}"
     li = catalog.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity"
     )

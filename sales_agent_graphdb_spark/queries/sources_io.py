@@ -6,12 +6,13 @@ source connector (dialect translation included), and returns the
 normalized rows — so the DuckDB oracle, written over the original
 parquet views, passes only if schema mapping, typing, and value
 fidelity survive the full write→read cycle. Scratch files live under
-``/root/repo/.scratch`` (gitignored).
+``SCRATCH``, the checkout's ``.scratch`` directory (gitignored).
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +30,10 @@ from sales_agent_graphdb_spark.sources import connectors
 # imports below then resolve instantly from sys.modules.
 from sales_agent_graphdb_spark.sources import api_source as _api_source  # noqa: F401
 
-SCRATCH = "/root/repo/.scratch"
+# The engine's one scratch root: every scratch directory it writes
+# (stamped layouts, sink round-trips, streaming sources and checkpoints)
+# is built from this string at call time, so redirecting it moves them all.
+SCRATCH = str(Path(__file__).resolve().parents[2] / ".scratch")
 
 
 def _scratch(sf_dir: str, name: str) -> str:

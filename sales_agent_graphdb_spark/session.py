@@ -67,6 +67,18 @@ def get_spark(
         # accumulation at negligible System.gc() cost; scale-neutral
         # (any long-lived driver, local or cluster, wants this).
         .config("spark.cleaner.periodicGC.interval", "90s")
+        # Generated-code cache. Invariant: it holds a session's warm
+        # working set of generated classes, so a warm call compiles
+        # nothing. Spark's default, 100 entries in a segmented LRU that
+        # evicts before it is full, does not: batch_mix (107 classes)
+        # recompiled 11.7 per warm call, 35 in connected components.
+        # Measured working sets (distinct classes, one session): the
+        # lookup_mix workload 80, batch_mix 107, the 166 bench.py
+        # headline queries at sf0.01 2,520, all 348 registered queries
+        # at sf0.01 4,133, which is past 4096, hence 8192. A class
+        # costs ~25 KB of Metaspace, so a full cache is ~200 MB. Static
+        # conf: fixed when the first session of the JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

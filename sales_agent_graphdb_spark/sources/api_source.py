@@ -115,8 +115,11 @@ def ensure_api_pages(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the simulated endpoint: the part table written as
     8 JSON-lines pages (page = p_partkey % 8), source-stamped so a
     testdata regeneration rebuilds them. Returns the endpoint dir."""
+    # Call-time import: sources_io imports this module.
+    from sales_agent_graphdb_spark.queries.sources_io import SCRATCH
+
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_") or "sf"
-    endpoint = f"/root/repo/.scratch/api_pages/{tag}"
+    endpoint = f"{SCRATCH}/api_pages/{tag}"
     src = f"{sf_dir}/part.parquet"
     def _build_pages() -> None:
         part = spark.read.parquet(src).select(

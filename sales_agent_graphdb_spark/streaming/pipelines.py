@@ -31,7 +31,14 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from sales_agent_graphdb_spark.session import materialize
 
-SCRATCH = "/root/repo/.scratch/streaming"
+
+def _scratch(name: str) -> str:
+    """``name`` under the engine's scratch root (``sources_io.SCRATCH``),
+    read at call time: the queries package imports this module."""
+    from sales_agent_graphdb_spark.queries.sources_io import SCRATCH
+
+    return os.path.join(SCRATCH, "streaming", name)
+
 
 # events schema as written. ts has shipped as TIMESTAMP(NANOS) (=> long
 # ns with nanosAsLong) or plain TIMESTAMP_NTZ depending on testdata
@@ -75,7 +82,7 @@ def _run_to_memory(stream: DataFrame, mode: str) -> DataFrame:
     """Execute a bounded streaming query into a memory sink and return
     the result table. Checkpoint + sink name are per-run unique."""
     run_id = uuid.uuid4().hex[:12]
-    ckpt = os.path.join(SCRATCH, f"ckpt_{run_id}")
+    ckpt = _scratch(f"ckpt_{run_id}")
     q = (
         stream.writeStream.format("memory")
         .queryName(f"sink_{run_id}")
@@ -457,7 +464,7 @@ def _sentinel_source(
     would seed state at the far-future sentinel ts and absorb every
     real event into a never-emitted sentinel session.)"""
     run_id = uuid.uuid4().hex[:12]
-    src_dir = os.path.join(SCRATCH, f"sentinel_src_{run_id}")
+    src_dir = _scratch(f"sentinel_src_{run_id}")
     os.makedirs(src_dir, exist_ok=True)
     os.symlink(
         os.path.realpath(f"{sf_dir}/events.parquet"),
@@ -668,8 +675,8 @@ def foreachbatch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish of the tiny aggregate stands in with identical commit
     semantics (see make_upsert_sink)."""
     run_id = uuid.uuid4().hex[:12]
-    src_dir = os.path.join(SCRATCH, f"febu_src_{run_id}")
-    tbl_dir = os.path.join(SCRATCH, f"febu_tbl_{run_id}")
+    src_dir = _scratch(f"febu_src_{run_id}")
+    tbl_dir = _scratch(f"febu_tbl_{run_id}")
 
     from sales_agent_graphdb_spark import catalog as _catalog
 
@@ -690,7 +697,7 @@ def foreachbatch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/*.parquet")
     )
-    ckpt = os.path.join(SCRATCH, f"ckpt_febu_{run_id}")
+    ckpt = _scratch(f"ckpt_febu_{run_id}")
     q = (
         stream.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", ckpt)
@@ -1093,8 +1100,8 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sales_agent_graphdb_spark.queries.temporal import scd2_history
 
     run_id = uuid.uuid4().hex[:12]
-    src_dir = os.path.join(SCRATCH, f"scd2e_src_{run_id}")
-    out_dir = os.path.join(SCRATCH, f"scd2e_out_{run_id}")
+    src_dir = _scratch(f"scd2e_src_{run_id}")
+    out_dir = _scratch(f"scd2e_out_{run_id}")
 
     from sales_agent_graphdb_spark import catalog as _catalog
 
@@ -1151,7 +1158,7 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/*.parquet")
     )
-    ckpt = os.path.join(SCRATCH, f"ckpt_scd2e_{run_id}")
+    ckpt = _scratch(f"ckpt_scd2e_{run_id}")
     q = (
         stream.writeStream.foreachBatch(enrich)
         .option("checkpointLocation", ckpt)
@@ -1259,15 +1266,15 @@ def kmv_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     of stream length: at 100 TB this is the always-on distinct /
     overlap dashboard with O(k) memory per (segment, window)."""
     run_id = uuid.uuid4().hex[:12]
-    src_dir = os.path.join(SCRATCH, f"kmv_src_{run_id}")
-    tbl_dir = os.path.join(SCRATCH, f"kmv_tbl_{run_id}")
+    src_dir = _scratch(f"kmv_src_{run_id}")
+    tbl_dir = _scratch(f"kmv_tbl_{run_id}")
     # Idempotency markers live BESIDE the table, not inside it: each
     # batch's overwrite deletes tbl_dir wholesale, so a marker stored
     # within it would survive only for the latest batch and replay
     # protection would be vacuous (ADVICE r08) — correct results would
     # then rest on the KMV fold's idempotence alone instead of the
     # exactly-once contract this query demonstrates.
-    applied_dir = os.path.join(SCRATCH, f"kmv_applied_{run_id}")
+    applied_dir = _scratch(f"kmv_applied_{run_id}")
 
     from sales_agent_graphdb_spark import catalog as _catalog
 
@@ -1282,7 +1289,7 @@ def kmv_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/*.parquet")
     )
-    ckpt = os.path.join(SCRATCH, f"ckpt_kmv_{run_id}")
+    ckpt = _scratch(f"ckpt_kmv_{run_id}")
     q = (
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
@@ -1385,8 +1392,8 @@ def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     k·|types| rows, the merge is map-side trivial, and the version
     publish is the same atomic-rename commit as the SUM/COUNT upsert."""
     run_id = uuid.uuid4().hex[:12]
-    src_dir = os.path.join(SCRATCH, f"topk_src_{run_id}")
-    tbl_root = os.path.join(SCRATCH, f"topk_tbl_{run_id}")
+    src_dir = _scratch(f"topk_src_{run_id}")
+    tbl_root = _scratch(f"topk_tbl_{run_id}")
 
     from sales_agent_graphdb_spark import catalog as _catalog
 
@@ -1402,7 +1409,7 @@ def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/*.parquet")
     )
-    ckpt = os.path.join(SCRATCH, f"ckpt_topk_{run_id}")
+    ckpt = _scratch(f"ckpt_topk_{run_id}")
     q = (
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)

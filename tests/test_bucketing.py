@@ -119,7 +119,7 @@ def test_order_brand_layout_version_addressed_no_inplace_rewrite(spark, monkeypa
     in place."""
     import os
 
-    from sales_agent_graphdb_spark.queries import graphq
+    from sales_agent_graphdb_spark.queries import graphq, sources_io
 
     import shutil
     import uuid
@@ -130,7 +130,7 @@ def test_order_brand_layout_version_addressed_no_inplace_rewrite(spark, monkeypa
     # locate the published dir for the current recipe version
     # (exclude in-flight private build dirs, named '*.build_<id>' —
     # not '_tmp'; ADVICE r10 fixed the dead filter)
-    base = "/root/repo/.scratch/graph_ob"
+    base = os.path.join(sources_io.SCRATCH, "graph_ob")
     dirs_before = {d for d in os.listdir(base) if ".build_" not in d}
     # simulate a recipe change: bump the version tag -> new key
     # (unique per run — a fixed fake tag would already be published

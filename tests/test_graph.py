@@ -3,6 +3,7 @@ correctness on a known topology, degree totals."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
@@ -51,6 +52,17 @@ def test_connected_components_star_topology(spark):
         assert comp[cat] == expected
         for s in skus:
             assert comp[s] == expected
+
+
+def test_connected_components_raises_at_round_guard(spark):
+    """A 64-vertex path converges in a few rounds, but not in two: at
+    ``max_iter=2`` labels are still changing, so the call must raise
+    instead of returning split components."""
+    e = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
+    comps = {r.component for r in graph.connected_components(e).collect()}
+    assert comps == {0}
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        graph.connected_components(e, max_iter=2)
 
 
 def test_degrees_total_equals_edges(spark):

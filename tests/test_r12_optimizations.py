@@ -57,10 +57,11 @@ def test_api_sink_arrow_writes_same_json_bytes(spark):
     """The DataSourceArrowWriter must emit byte-identical JSON lines to
     the old row-iterator path (json.dumps of schema-ordered dicts with
     shortest round-trip floats)."""
+    from sales_agent_graphdb_spark.queries.sources_io import SCRATCH
     from sales_agent_graphdb_spark.sources.api_source import register_api_sink
 
     register_api_sink(spark)
-    tgt = "/root/repo/.scratch/test_r12_api_sink"
+    tgt = os.path.join(SCRATCH, "test_r12_api_sink")
     shutil.rmtree(tgt, ignore_errors=True)
     os.makedirs(tgt, exist_ok=True)
     df = spark.createDataFrame(

@@ -300,7 +300,7 @@ def test_no_foreachbatch_sink_keeps_state_in_its_output_dir():
     import pathlib
     import re
 
-    pkg = pathlib.Path("/root/repo/sales_agent_graphdb_spark")
+    pkg = pathlib.Path(pipelines.__file__).resolve().parents[1]
     offenders = []
     for py in pkg.rglob("*.py"):
         for m in re.finditer(

@@ -10,10 +10,11 @@ changelog's "all green" claim must be backed by a committed artifact,
 not a working-tree note).
 """
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from driver_protocol import make_duck, make_spark, vhash
 
 import __spark_entry__ as E

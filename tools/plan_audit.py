@@ -14,10 +14,12 @@ Run: python tools/plan_audit.py
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sales_agent_graphdb_spark.registry import all_queries  # noqa: E402
 from sales_agent_graphdb_spark.session import get_spark  # noqa: E402
@@ -144,7 +146,7 @@ def main() -> None:
         if counts["BroadcastNestedLoopJoin"] and name not in ALLOW_BNLJ:
             hard_fails.append((name, "BroadcastNestedLoopJoin (unallowlisted)"))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — registry-wide physical-plan audit (generated by "
             "tools/plan_audit.py at sf0.001)\n\n"

@@ -6,7 +6,10 @@ and report wall seconds, Spark JOB count (each job = one driver-side
 action barrier — the dominant fixed cost at small SF), stage/task
 counts, plus final-plan operator tallies (Exchange / joins / Python
 eval nodes / generators). Jobs are attributed via a job group per
-query.
+query. Each run also reports the classes codegen compiled and the
+compile milliseconds (the JVM-wide counters, read before and after the
+run): a warm run that still compiles is missing from the session's
+codegen cache.
 
 Usage: python tools/query_profile.py name1 name2 ... [--sf DIR] [--runs N]
        python tools/query_profile.py --top 20        # slowest from BENCH_LOCAL
@@ -46,21 +49,33 @@ PLAN_NODES = (
 )
 
 
+def codegen_counters(spark) -> tuple[int, float]:
+    """Cumulative (classes compiled, compile ms) of the session's JVM."""
+    jvm = spark._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return hist.getCount(), gen.compileTime() / 1e6
+
+
 def profile(spark, specs, name: str, sf_dir: str, runs: int) -> dict:
     sc = spark.sparkContext
     fn = specs[name].fn
     out: dict = {"name": name}
-    walls = []
+    walls, compiles, compile_ms = [], [], []
     for r in range(runs):
         tracker = sc.statusTracker()
         sc.setJobGroup(f"prof:{name}:{r}", name)
+        n0, ms0 = codegen_counters(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t_build = time.perf_counter() - t0
         df.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
+        n1, ms1 = codegen_counters(spark)
         sc.setJobGroup("", "")
         walls.append(round(wall, 3))
+        compiles.append(n1 - n0)
+        compile_ms.append(round(ms1 - ms0, 1))
         if r == 0:
             out["build_sec"] = round(t_build, 3)
             jobs = tracker.getJobIdsForGroup(f"prof:{name}:{r}") or []
@@ -88,6 +103,8 @@ def profile(spark, specs, name: str, sf_dir: str, runs: int) -> dict:
             except Exception as e:  # pragma: no cover
                 out["plan_err"] = str(e)[:100]
     out["walls"] = walls
+    out["codegen_compiles"] = compiles
+    out["codegen_compile_ms"] = compile_ms
     return out
 
 

@@ -138,7 +138,7 @@ def main() -> int:
 
         from gen_synth_decade import ensure, ensure_decade3
 
-        from sales_agent_graphdb_spark.queries import graphq
+        from sales_agent_graphdb_spark.queries import graphq, sources_io
 
         names = GRAPH3
         sfs = (ensure(), ensure_decade3())
@@ -146,7 +146,7 @@ def main() -> int:
         spark3 = get_spark(app_name="scaling_curve", shuffle_partitions=32)
         for sf_dir in sfs:
             tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-            for d in glob.glob(f"/root/repo/.scratch/graph_ob/{tag}_*"):
+            for d in glob.glob(f"{sources_io.SCRATCH}/graph_ob/{tag}_*"):
                 shutil.rmtree(d, ignore_errors=True)
             t0 = time.monotonic()
             n_pairs = graphq._order_brand_pairs(spark3, sf_dir).count()
