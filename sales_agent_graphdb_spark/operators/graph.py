@@ -16,10 +16,14 @@ per round and the round guard (Pregelix's shared superstep driver):
   level against the settled ones (``bfs_distances`` and the all-pairs
   BFS queries).
 
-Connected components uses min-label propagation with a pointer-doubling
-shortcut (component ← label of my component vertex each round), so
-labels travel 2^k hops after k rounds and a diameter-d graph converges
-in O(log d) rounds rather than O(d).
+Connected components first contracts the leaves (vertices with one
+distinct neighbour), which halt at round 0 as in Pregelix's shrinking
+active graph. A core of at most ``_DRIVER_CORE`` vertices and edges is
+then solved by union-find on the driver with no round at all; a larger
+one runs min-label propagation with a pointer-doubling shortcut
+(component ← label of my component vertex each round) on ``superstep``,
+so labels travel 2^k hops after k rounds and a diameter-d core
+converges in O(log d) rounds rather than O(d).
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from __future__ import annotations
 from functools import reduce
 from typing import Callable, Iterable, Optional, Sequence, Tuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -153,41 +158,148 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     )
 
 
+# A core of at most this many vertices and at most this many edges is
+# solved on the driver (two bounded collects plus union-find); a larger
+# one runs the superstep loop. Sized so that the driver finish costs no
+# more than one superstep round on the same core. Measured on random
+# long-id cores (about 2 edges per vertex), local[4], 4 vCPUs, warm,
+# driver finish vs the median round: 30k edges 0.40-0.51 s vs 0.43 s;
+# 50k 0.41 s vs 0.41 s; 100k 0.59-0.70 s vs 0.46 s; 200k 0.97 s vs
+# 0.57 s.
+_DRIVER_CORE = 50_000
+
+
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20
 ) -> DataFrame:
-    """Min-label propagation: component(v) = min vertex label reachable.
-    Returns (id, component). Each round is one propagation join and one
-    groupBy on ``superstep``; the loop stops when no label changes and
-    raises ``RuntimeError`` if labels still change after ``max_iter``
-    rounds."""
-    # Every round joins the symmetric edges: checkpoint them once.
-    sym = materialize(symmetrize(edges, src, dst).toDF("a", "b"), eager=True)
-    # Seeding labels with min(own id, neighbor ids) is round 1 for free
-    # (component(b) = b initially), at the cost of the plain init's shuffle.
-    labels = materialize(
+    """Min-label connected components: component(v) = the least vertex
+    id reachable from v. Returns (id, component) for every non-null
+    endpoint. Null endpoints are not vertices: an endpoint whose only
+    partners are null is a singleton.
+
+    Three steps: contract the leaves, solve the core, expand.
+
+    1. One grouped pass over the symmetric edges gives every vertex its
+       seed label least(id, min neighbour), and marks it a leaf when it
+       has exactly one distinct neighbour, its root (a vertex whose only
+       edges are self-loops is its own root). A leaf lies on no path
+       between two other vertices and its id is already in its root's
+       seed, so the core — the non-leaf vertices and the edges between
+       them — has the same partition and min labels as the whole graph,
+       seeds standing in for the leaves.
+    2. A core of at most ``_DRIVER_CORE`` vertices and edges is
+       collected (the vertices with their seeds, then the edges between
+       them, found against a broadcast of the vertices) and solved by
+       union-find on the driver. A larger core runs min-label
+       propagation with pointer doubling on ``superstep`` (one join and
+       one groupBy per round); it raises ``RuntimeError`` if labels
+       still change after ``max_iter`` rounds.
+    3. One join gives every vertex the core label of its root, or its
+       own seed when the root is a leaf (a leaf-leaf pair or a vertex
+       with only self-loops).
+    """
+    # A null partner becomes a self-loop, which connects nothing. Lazy:
+    # vtx's eager checkpoint below is the one full first consumer.
+    sym = materialize(
+        symmetrize(edges, src, dst)
+        .filter(F.col("src").isNotNull())
+        .select(F.col("src").alias("a"), F.coalesce("dst", "src").alias("b")),
+        eager=False,
+    )
+    # Eager: the bounded collect below must not be its first consumer.
+    vtx = materialize(
         sym.groupBy(F.col("a").alias("id"))
-        .agg(F.min("b").alias("minb"))
-        .select("id", F.least(F.col("id"), F.col("minb")).alias("component")),
+        .agg(F.min("b").alias("lo"), F.max("b").alias("hi"))
+        .select(
+            "id",
+            F.least("id", "lo").alias("seed"),
+            F.when(F.col("lo") == F.col("hi"), F.col("lo"))
+            .otherwise(F.col("id"))
+            .alias("root"),
+            (F.col("lo") != F.col("hi")).alias("in_core"),
+        ),
         eager=True,
     )
+    seeds = vtx.filter("in_core").select("id", "seed")
+    # Arrow collects: one job each and no per-row Python objects.
+    core_v = seeds.limit(_DRIVER_CORE + 1).toArrow()
+    if core_v.num_rows == 0:
+        return vtx.select("id", F.col("seed").alias("component"))
+    small = core_v.num_rows <= _DRIVER_CORE
+    ids = F.broadcast(seeds.select("id")) if small else seeds.select("id")
+    core_edges = (
+        sym.filter(F.col("a") < F.col("b"))
+        .join(ids.toDF("a"), "a", "left_semi")
+        .join(ids.toDF("b"), "b", "left_semi")
+    )
+    core_e = core_edges.limit(_DRIVER_CORE + 1).toArrow() if small else None
+    if small and core_e.num_rows <= _DRIVER_CORE:
+        label = _union_find(
+            zip(*core_v.to_pydict().values()), zip(*core_e.to_pydict().values())
+        )
+        labels = F.broadcast(
+            edges.sparkSession.createDataFrame(
+                pa.table({"id": list(label), "seed": list(label.values())}),
+                seeds.schema,
+            )
+        )
+    else:
+        labels = _propagate(core_edges, seeds, max_iter)
+    return vtx.join(labels.toDF("root", "label"), "root", "left").select(
+        "id", F.coalesce("label", "seed").alias("component")
+    )
+
+
+def _union_find(seeds: Iterable[Tuple], edges: Iterable[Tuple]) -> dict:
+    """{vertex: least seed in its component} for the (vertex, seed)
+    pairs ``seeds`` joined by the (a, b) pairs ``edges``. Each union
+    hangs the root with the larger seed under the other, so a root's
+    seed is its component's least. Ids are longs or strings; Python
+    orders both as Spark does (UTF-8 byte order is code-point order)."""
+    low = dict(seeds)
+    parent = {v: v for v in low}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]  # path halving
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if low[rb] < low[ra]:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {v: low[find(v)] for v in parent}
+
+
+def _propagate(core: DataFrame, seeds: DataFrame, max_iter: int) -> DataFrame:
+    """(id, component) of every vertex in ``seeds`` (id, seed) by
+    min-label propagation over the undirected ``core`` edges (a, b)
+    on ``superstep``. A label is the pair (seed, carrier): the least
+    seed seen and a core vertex whose own seed it is. A seed may be a
+    contracted leaf's id, which has no label to point at; the carrier
+    always has one, so pointer doubling follows the carrier."""
+    # Every round joins the symmetric core edges: checkpoint them once.
+    sym = materialize(symmetrize(core, "a", "b").toDF("a", "b"), eager=True)
 
     def step(labels: DataFrame) -> DataFrame:
         # Neighbor-min propagation and pointer doubling fused into one
-        # join: the label pointers (v → component(v)) ride the edge
-        # list, so min(component(b)) over the augmented neighborhood
-        # covers both the neighbor minimum and component(component(v)).
-        # Labels are monotone non-increasing with component(x) <= x, so
-        # the min never exceeds the old label and every vertex appears
-        # through its own pointer edge. A tagged SELF edge (a=id, b=id)
-        # carries the old component(id) through the same grouped pass
-        # for the changed flag, without a join back to the old labels;
-        # it adds component(id) to the min-set, a no-op.
+        # join: the label pointers (v → carrier of component(v)) ride
+        # the edge list, so min(component(b)) over the augmented
+        # neighborhood covers both the neighbor minimum and
+        # component(carrier(v)). Labels are monotone non-increasing
+        # with component(x) <= (seed(x), x), so the min never exceeds
+        # the old label and every vertex appears through its own
+        # pointer edge. A tagged SELF edge (a=id, b=id) carries the old
+        # component(id) through the same grouped pass for the changed
+        # flag, without a join back to the old labels; it adds
+        # component(id) to the min-set, a no-op.
         aug = (
             sym.withColumn("self", F.lit(False))
             .unionByName(
                 labels.select(
-                    F.col("id").alias("a"), F.col("component").alias("b")
+                    F.col("id").alias("a"), F.col("component.carrier").alias("b")
                 ).withColumn("self", F.lit(False))
             )
             .unionByName(
@@ -214,12 +326,14 @@ def connected_components(
         )
 
     labels, _ = superstep(
-        labels,
+        seeds.select(
+            "id", F.struct("seed", F.col("id").alias("carrier")).alias("component")
+        ),
         step,
         max_iter=max_iter,
         converged=lambda s: s.filter("chg").count() == 0,
     )
-    return labels.select("id", "component")
+    return labels.select("id", F.col("component.seed").alias("component"))
 
 
 def pagerank(

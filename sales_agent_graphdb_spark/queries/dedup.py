@@ -384,8 +384,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _components(pairs: DataFrame) -> DataFrame:
     """(id, component): verified near-dup pairs → edges →
-    pointer-doubling connected components; shared by every
-    cluster-canonical query."""
+    graph.connected_components; shared by every cluster-canonical
+    query."""
     from sales_agent_graphdb_spark.operators.graph import connected_components
 
     return connected_components(
@@ -429,7 +429,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER canonicalization — the final step of a corpus
     dedup pipeline, composed from two existing operators: MinHash-LSH
     verified pairs (the similarity graph's edges) → connected
-    components (transitive closure, O(log d) pointer-doubling) →
+    components (transitive closure, graph.connected_components) →
     per-cluster canonical = min doc_id, with cluster size. This is
     what actually gets APPLIED to a 100 TB corpus: keep the canonical,
     drop the rest — pairwise output alone can't express transitive
@@ -438,7 +438,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     each planted (d, d+OFFSET) pair must land in the SAME connected
     component — all 20 exact copies (guaranteed: exact dups always
     band-collide), ≥ 54/60 overall (measured 59/60). The full cluster
-    pipeline (pairs → pointer-doubling CC) executes in-plan to produce
+    pipeline (pairs → connected components) executes to produce
     the verdict; pytest checks the raw cluster frame
     (cluster_canonical_frame) against exact-Jaccard components."""
     comp = _components(minhash_lsh_pairs_frame(spark, sf_dir))
@@ -670,8 +670,8 @@ def dedup_cluster_canonical_portable(
 ) -> DataFrame:
     """Near-dup cluster canonicalization, HASH-CHECKED END-TO-END: the
     oracle-checkable twin of dedup_cluster_canonical (VERDICT r02 #2).
-    md5-portable MinHash-LSH pairs feed the same pointer-doubling
-    connected components; the DuckDB mirror closes the identical edge
+    md5-portable MinHash-LSH pairs feed the same connected
+    components; the DuckDB mirror closes the identical edge
     set with a recursive-CTE transitive closure (the technique proven
     by graph_pagerank's oracle) and groups members per component — so
     the driver hash-checks edge discovery AND the transitive clustering

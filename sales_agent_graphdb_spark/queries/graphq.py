@@ -128,12 +128,14 @@ _BRIDGE = [("Brand#1", "Brand#2"), ("Brand#2", "Brand#3"),
     """,
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by min-label propagation over the
-    product-category graph + brand bridges. Components are identified
-    by their minimum vertex label; with the bridges, Brand#1…#5 and all
-    their products collapse into one component. The oracle derives the
-    same partition closed-form (the graph is a forest of stars plus a
-    known path)."""
+    """Connected components of the product-category graph + brand
+    bridges (graph.connected_components). Components are identified by
+    their minimum vertex label; with the bridges, Brand#1…#5 and all
+    their products collapse into one component. Every product is a
+    leaf, so the core left after contraction is the brands and the
+    bridges (25 vertices, 4 edges) and is solved on the driver. The
+    oracle derives the same partition closed-form (the graph is a
+    forest of stars plus a known path)."""
     e = _edges(spark, sf_dir)
     bridges = spark.createDataFrame(_BRIDGE, ["src", "dst"])
     cc = graph.connected_components(e.unionByName(bridges))

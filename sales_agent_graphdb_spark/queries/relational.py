@@ -807,8 +807,8 @@ def sql_api_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFram
     returning per-node minimum hop distance and ≤2-hop path counts —
     the transitive-traversal class (§2.10's graph walks) expressed in
     SQL TEXT, where the DataFrame side needs an explicit iteration
-    loop (graph_k_core_fixpoint) or pointer doubling
-    (connected_components). Both engines' WITH RECURSIVE executes the
+    loop (graph_k_core_fixpoint) or a union-find of the contracted
+    graph (connected_components). Both engines' WITH RECURSIVE executes the
     same anchor + UNION ALL step semantics, and the depth bound
     guarantees termination on the cyclic graph without relying on
     either engine's cycle handling. Path counts are exact integers, so

@@ -54,15 +54,41 @@ def test_connected_components_star_topology(spark):
             assert comp[s] == expected
 
 
-def test_connected_components_raises_at_round_guard(spark):
+def test_connected_components_raises_at_round_guard(spark, monkeypatch):
     """A 64-vertex path converges in a few rounds, but not in two: at
     ``max_iter=2`` labels are still changing, so the call must raise
-    instead of returning split components."""
+    instead of returning split components. A zero driver bound keeps
+    the path's 62-vertex core on the superstep loop."""
+    monkeypatch.setattr(graph, "_DRIVER_CORE", 0)
     e = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
     comps = {r.component for r in graph.connected_components(e).collect()}
     assert comps == {0}
     with pytest.raises(RuntimeError, match="max_iter=2"):
         graph.connected_components(e, max_iter=2)
+
+
+def test_connected_components_loop_doubles_through_leaf_seeds(spark, monkeypatch):
+    """A caterpillar: a 64-vertex path whose every vertex holds a
+    pendant leaf with a smaller id, so every core seed is a contracted
+    leaf's id. The loop (bound 0) must still double its pointers and
+    converge well inside the default 20 rounds; one hop per round would
+    need 63."""
+    monkeypatch.setattr(graph, "_DRIVER_CORE", 0)
+    path = [(1000 + i, 1001 + i) for i in range(63)]
+    legs = [(1000 + i, i) for i in range(64)]
+    e = spark.createDataFrame(path + legs, "src long, dst long")
+    got = {r.id: r.component for r in graph.connected_components(e).collect()}
+    assert got == {v: 0 for v in [*range(64), *range(1000, 1064)]}
+
+
+def test_connected_components_null_endpoints(spark):
+    """Null endpoints are not vertices: b's only other partner is null,
+    so it keeps a's component, and no row has a null id."""
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", None), ("c", "c"), ("d", "e")], "src string, dst string"
+    )
+    got = sorted(tuple(r) for r in graph.connected_components(e).collect())
+    assert got == [("a", "a"), ("b", "a"), ("c", "c"), ("d", "d"), ("e", "d")]
 
 
 def test_degrees_total_equals_edges(spark):

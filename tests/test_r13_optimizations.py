@@ -17,6 +17,7 @@ Each test pins an equivalence the r13 optimization round relies on:
 
 from __future__ import annotations
 
+import random
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -135,7 +136,11 @@ def test_portable_banded_rejects_indivisible_bands(spark, docs):
             lsh._bands(lsh._signatures(toks, 16, portable), 16, 5, portable)
 
 
-def _union_find_components(edges, nodes):
+def _union_find_components(edges, nodes=None):
+    """Min-label union-find over long or string ids; null endpoints are
+    not vertices. ``nodes`` defaults to every non-null endpoint."""
+    if nodes is None:
+        nodes = {x for e in edges for x in e if x is not None}
     parent = {n: n for n in nodes}
 
     def find(x):
@@ -145,6 +150,8 @@ def _union_find_components(edges, nodes):
         return x
 
     for a, b in edges:
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
@@ -169,6 +176,63 @@ def test_connected_components_lazy_count_protocol(spark):
     assert got == _union_find_components(_CC_EDGES, nodes)
 
 
+# String ids whose string order differs from their numeric order, and
+# non-ASCII ids (UTF-8 byte order is code-point order).
+_STRING_IDS = (
+    [str(i) for i in range(1, 31)]
+    + [f"Brand#{i}" for i in range(1, 31)]
+    + ["z", "é", "Ω", "a b"]
+)
+
+
+def _random_edges(seed, kind):
+    """Stars, paths, leaf-leaf pairs and a self-loop-only vertex, then
+    self-loops, duplicate and reversed edges and random cross edges
+    that merge some of them into larger cores."""
+    rng = random.Random(seed)
+    if kind == "long":
+        pool = rng.sample(range(1, 1 << 40), 64)
+    else:
+        pool = rng.sample(_STRING_IDS, 64)
+    fresh = iter(pool)
+    edges = []
+    for _ in range(3):
+        hub = next(fresh)
+        edges += [(hub, next(fresh)) for _ in range(rng.randint(2, 5))]
+    for _ in range(2):
+        path = [next(fresh) for _ in range(rng.randint(3, 7))]
+        edges += list(zip(path, path[1:]))
+    edges += [(next(fresh), next(fresh)) for _ in range(3)]
+    loop = next(fresh)
+    edges.append((loop, loop))
+    used = sorted({x for e in edges for x in e})
+    edges += [(v, v) for v in rng.sample(used, 3)]
+    edges += rng.sample(edges, 4)
+    edges += [(b, a) for a, b in rng.sample(edges, 3)]
+    edges += [(rng.choice(used), rng.choice(used)) for _ in range(3)]
+    rng.shuffle(edges)
+    return edges
+
+
+@pytest.mark.parametrize("bound", ["default", "zero"])
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_connected_components_matches_union_find(spark, monkeypatch, kind, bound):
+    """Random graphs through both core paths: the driver finish at the
+    default bound, the superstep loop at bound 0. The empty edge list
+    has no vertices."""
+    if bound == "zero":
+        monkeypatch.setattr(graph, "_DRIVER_CORE", 0)
+    schema = f"src {kind}, dst {kind}"
+    for seed in (1, 2):
+        edges = _random_edges(seed, kind)
+        e = spark.createDataFrame(edges, schema)
+        rows = graph.connected_components(e).collect()
+        got = {r["id"]: r["component"] for r in rows}
+        assert len(got) == len(rows)
+        assert got == _union_find_components(edges), (seed, edges)
+    assert graph.connected_components(spark.createDataFrame([], schema)).collect() == []
+
+
 def test_bfs_distances_level_list_protocol(spark):
     e = spark.createDataFrame(_BFS_EDGES, ["src", "dst"])
     got = {r["id"]: r["distance"] for r in graph.bfs_distances(e, 1, max_depth=10).collect()}
@@ -188,13 +252,14 @@ def _jobs_in_group(spark, group, action):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_round_drivers_job_budget(spark):
+def test_round_drivers_job_budget(spark, monkeypatch):
     """One driver action per round (graph.superstep, graph.bfs_levels):
-    the job counts of connected_components and bfs_distances on the
-    fixtures above may not exceed the counts measured before the loops
-    moved onto the round drivers (34 and 42 jobs, AQE stage jobs
-    included, 8 shuffle partitions). A second action per round adds
-    one job per round and fails this."""
+    the job counts of bfs_distances and of connected_components's
+    superstep path (bound 0) on the fixtures above may not exceed the
+    measured 42 and 41 jobs (AQE stage jobs included, 8 shuffle
+    partitions); a second action per round adds one job per round and
+    fails this. connected_components at the default bound finishes its
+    core on the driver in 7 jobs and runs no round at all."""
     cc = spark.createDataFrame(_CC_EDGES, ["src", "dst"])
     bfs = spark.createDataFrame(_BFS_EDGES, ["src", "dst"])
     n_cc = _jobs_in_group(
@@ -203,7 +268,12 @@ def test_round_drivers_job_budget(spark):
     n_bfs = _jobs_in_group(
         spark, "budget:bfs", lambda: graph.bfs_distances(bfs, 1, max_depth=10).collect()
     )
-    assert n_cc <= 34, n_cc
+    monkeypatch.setattr(graph, "_DRIVER_CORE", 0)
+    n_cc_loop = _jobs_in_group(
+        spark, "budget:cc_loop", lambda: graph.connected_components(cc).collect()
+    )
+    assert n_cc <= 7, n_cc
+    assert n_cc_loop <= 41, n_cc_loop
     assert n_bfs <= 42, n_bfs
 
 

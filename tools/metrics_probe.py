@@ -39,7 +39,7 @@ PROBED = [
     "dedup_minhash_lsh",           # band shuffle (skinny by design)
     "dedup_repeated_passages",     # md5-keyed segment shuffle
     "text_bm25_search",            # inverted-index posting shuffle
-    "graph_connected_components",  # iterative pointer doubling
+    "graph_connected_components",  # leaf contraction + driver union-find
     "graph_label_propagation",     # per-round O(|E|) join
     "ts_downsample_ohlc",          # single-exchange window+agg
     "ann_hard_negatives",          # broadcast hash join, no shuffle
