@@ -21,8 +21,11 @@ back to the parquet scan.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -51,11 +54,108 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP_NTZ (read natively). Detect from the file schema and
     normalize both to session-TZ TimestampType so downstream window /
     watermark / oracle code sees one type regardless of generation."""
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        path = f"{sf_dir}/{name}.parquet"
         ensure_events_readable(spark, path)
-        return normalize_events_ts(spark.read.parquet(path))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_events_ts(read_parquet(spark, path))
+    return read_parquet(spark, path)
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# Inferred schemas by absolute path: (signature key, StructType). One
+# entry per path, replaced when its key changes, so the cache holds at
+# most one schema per stable path the engine reads. Each entry carries
+# its key, so a racing writer can cost a re-inference, never a wrong
+# schema.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def path_signature(path: str) -> tuple | None:
+    """What a parquet read of ``path`` sees on disk: ``(mtime_ns, size)``
+    for a file; for a directory the sorted ``(relpath, mtime_ns, size)``
+    of every file under it (a Spark overwrite writes new part-file
+    names, so it changes the signature). None when ``path`` does not
+    stat (a glob, a non-local URI)."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    if not os.path.isdir(path):
+        return (st.st_mtime_ns, st.st_size)
+    sig = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            try:
+                fst = os.stat(full)
+            except OSError:  # removed under the walk: not what a read sees
+                continue
+            sig.append((os.path.relpath(full, path), fst.st_mtime_ns, fst.st_size))
+    return tuple(sorted(sig))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    a repeat read. The schema Spark inferred is cached under the path's
+    signature (``path_signature``) plus the session's ``nanosAsLong``
+    value, which changes what inference returns; a hit passes it to
+    ``spark.read.schema``. Invariant: a changed signature re-infers, so
+    a cached schema is only ever applied to the files it was inferred
+    from. A path without a signature is read with plain inference.
+    Only paths that outlive a call belong here: a per-call scratch path
+    would add one entry per call."""
+    sig = path_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (sig, spark.conf.get(_NANOS_AS_LONG, "false"))
+    apath = os.path.abspath(path)
+    hit = _SCHEMAS.get(apath)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[apath] = (key, df.schema)
+    return df
+
+
+def written_schema(df: DataFrame) -> T.StructType:
+    """The schema a parquet read of ``df``'s write returns: the same
+    fields with every column and nested field nullable, because Spark
+    writes them all as optional."""
+
+    def nullable(dt: T.DataType) -> T.DataType:
+        if isinstance(dt, T.StructType):
+            return T.StructType(
+                [T.StructField(f.name, nullable(f.dataType), True, f.metadata) for f in dt]
+            )
+        if isinstance(dt, T.ArrayType):
+            return T.ArrayType(nullable(dt.elementType), True)
+        if isinstance(dt, T.MapType):
+            return T.MapType(nullable(dt.keyType), nullable(dt.valueType), True)
+        return dt
+
+    return nullable(df.schema)
+
+
+class WrittenParquet:
+    """The parquet path a per-call writer (a ``foreachBatch`` sink, a
+    streaming lake) last wrote, with the schema it wrote there, so the
+    next batch and the driver read it back without a schema-inference
+    job and without a ``read_parquet`` cache entry per call. A path it
+    did not record (a restart leaves no schema in memory) is read with
+    inference."""
+
+    def __init__(self) -> None:
+        self.path: str | None = None
+        self.schema: T.StructType | None = None
+
+    def record(self, path: str, df: DataFrame) -> None:
+        self.path, self.schema = path, written_schema(df)
+
+    def read(self, spark: SparkSession, path: str) -> DataFrame:
+        if path == self.path:
+            return spark.read.schema(self.schema).parquet(path)
+        return spark.read.parquet(path)
 
 
 # Paths already probed for the TIMESTAMP(NANOS) encoding this session.
@@ -71,9 +171,9 @@ def ensure_events_readable(spark: SparkSession, path: str) -> None:
     if path in _NANOS_PROBED:
         return
     try:
-        spark.read.parquet(path).schema
+        read_parquet(spark, path)
     except Exception:  # AnalysisException: Illegal Parquet type TIMESTAMP(NANOS)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(_NANOS_AS_LONG, "true")
     _NANOS_PROBED.add(path)
 
 

@@ -41,7 +41,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sales_agent_graphdb_spark.operators.similarity import cosine, dot, lit_vector
+from sales_agent_graphdb_spark.catalog import read_parquet
+from sales_agent_graphdb_spark.operators.similarity import cosine, cosine_to, dot, lit_vector
 
 SEED = 42
 
@@ -131,7 +132,7 @@ def hyperplane_lsh_topk(
         match_any = cond if match_any is None else (match_any | cond)
     candidates = embeddings.filter(match_any)
     scored = candidates.select(
-        F.col(id_col), cosine(v, lit_vector(query_vec)).alias("sim")
+        F.col(id_col), cosine_to(v, query_vec).alias("sim")
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
@@ -174,7 +175,7 @@ def ivf_topk(
     probe = _probe_cells(cents, query_vec, n_probe)
     assigned = ivf_assign(embeddings, cents, vec_col)
     scored = assigned.filter(F.col("cell").isin(probe)).select(
-        F.col(id_col), cosine(F.col(vec_col), lit_vector(query_vec)).alias("sim")
+        F.col(id_col), cosine_to(F.col(vec_col), query_vec).alias("sim")
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
@@ -420,9 +421,9 @@ def ivf_pruned_topk(
     evaluated (asserted by plan probe in tests/test_ann.py). This is
     the scale path ``ivf_topk`` only simulated."""
     probe = _probe_cells(centroids, query_vec, n_probe)
-    idx = spark.read.parquet(index_path)
+    idx = read_parquet(spark, index_path)
     scored = idx.filter(F.col("cell").isin(probe)).select(
-        F.col(id_col), cosine(F.col(vec_col), lit_vector(query_vec)).alias("sim")
+        F.col(id_col), cosine_to(F.col(vec_col), query_vec).alias("sim")
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
@@ -469,7 +470,7 @@ def lsh_pruned_topk(
     prunes too); contrast ``hyperplane_lsh_topk``, which re-signs the
     whole corpus per query."""
     q_buckets = _query_buckets(_hyperplanes(n_tables, n_planes, len(query_vec)), query_vec)
-    idx = spark.read.parquet(index_path)
+    idx = read_parquet(spark, index_path)
     probe = None
     for t, qb in enumerate(q_buckets):
         cond = (F.col("t") == t) & (F.col("bucket") == qb)
@@ -477,7 +478,7 @@ def lsh_pruned_topk(
     cand_ids = idx.filter(probe).select(F.col("id").alias(id_col)).distinct()
     cand = embeddings.join(F.broadcast(cand_ids), id_col)
     scored = cand.select(
-        F.col(id_col), cosine(F.col(vec_col), lit_vector(query_vec)).alias("sim")
+        F.col(id_col), cosine_to(F.col(vec_col), query_vec).alias("sim")
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 

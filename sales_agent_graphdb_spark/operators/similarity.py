@@ -41,6 +41,18 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def cosine_to(a: Column, query_vec: Sequence[float]) -> Column:
+    """``cosine(a, lit_vector(query_vec))`` with the query vector's
+    literal in the plan once, not three times: its norm is computed on
+    the driver by the same left-to-right double fold as ``norm``, so
+    every double is bit-identical to the all-Spark form."""
+    vals = [float(x) for x in query_vec]
+    acc = 0.0
+    for x in vals:
+        acc += x * x
+    return dot(a, lit_vector(vals)) / (norm(a) * F.lit(math.sqrt(acc)))
+
+
 def lit_vector(vec: Sequence[float]) -> Column:
     """A query vector as an array<double> literal (broadcast to every
     task inside the serialized plan — no shuffle, no closure). Built as
@@ -70,10 +82,9 @@ def knn(
     db_service.py:336-358). One scan, map-side score, global top-k via
     sort+limit (TakeOrderedAndProject: each partition keeps k, driver
     merges — no full sort, no shuffle of the scored set)."""
-    q = lit_vector(query_vec)
     scored = embeddings.select(
         F.col(id_col),
-        cosine(F.col(vec_col), q).alias("sim"),
+        cosine_to(F.col(vec_col), query_vec).alias("sim"),
     )
     if exclude_ids:
         scored = scored.filter(~F.col(id_col).isin(*[int(i) for i in exclude_ids]))

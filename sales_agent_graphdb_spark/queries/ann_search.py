@@ -70,6 +70,24 @@ def _ensure_sidecar_index(path: str, sf_dir: str, side_name: str, build, decode)
     return holder["v"]
 
 
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, np.ndarray]:
+    """The k-means IVF index (16 cells, partitioned by ``cell``) and its
+    centroids, built once per embeddings stamp; a warm call reads only
+    the centroid sidecar."""
+    path = _index_path(sf_dir, "ivf")
+
+    def _build_ivf():
+        emb = catalog.load_table(spark, sf_dir, "embeddings")
+        c = ann.write_ivf_index(spark, emb, path, n_cells=16, n_iter=3)
+        (Path(path) / "_CENTROIDS.json").write_text(json.dumps(c.tolist()))
+        return c
+
+    cents = _ensure_sidecar_index(
+        path, sf_dir, "_CENTROIDS.json", _build_ivf, lambda t: np.asarray(json.loads(t))
+    )
+    return path, cents
+
+
 def _require_dim64(dim: int, query: str) -> None:
     """The portable LSH oracles inline 64-dim hyperplane literals at
     registration; a silently different runtime dim would use a
@@ -160,20 +178,7 @@ def ann_ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index rebuilds at sf0.01 (Lloyd's float-summation jitter does not
     move the probed set enough to drop a true neighbor);
     tests/test_ann.py re-pins equality on a fresh rebuild each run."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    path = _index_path(sf_dir, "ivf")
-    def _build_ivf():
-        c = ann.write_ivf_index(spark, emb, path, n_cells=16, n_iter=3)
-        (Path(path) / "_CENTROIDS.json").write_text(json.dumps(c.tolist()))
-        return c
-
-    cents = _ensure_sidecar_index(
-        path,
-        sf_dir,
-        "_CENTROIDS.json",
-        _build_ivf,
-        lambda t: np.asarray(json.loads(t)),
-    )
+    path, cents = _ivf_index(spark, sf_dir)
     return ann.ivf_pruned_topk(
         spark, path, cents, _query_vec(spark, sf_dir), k=5, n_probe=4
     )
@@ -341,11 +346,11 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (t, bucket)). Reference parity: ChromaDB add() on an existing
     collection (db_service.py:193-199) — here the add is a
     partition-local merge instead of an HNSW mutation."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
     _require_dim64(len(_query_vec(spark, sf_dir)), "ann_index_incremental_upsert")
     path = _index_path(sf_dir, "lsh_incremental")
     src = _emb_src(sf_dir)
     def _build_incr():
+        emb = catalog.load_table(spark, sf_dir, "embeddings")
         base = emb.filter(F.col("vec_id") < _INC_SPLIT)
         ann.write_lsh_index(
             spark, base, path, dim=64, n_tables=_INC_TABLES, n_planes=_INC_PLANES
@@ -358,7 +363,7 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         affected = new_sigs.select("t", "bucket").distinct()
         existing = (
-            spark.read.parquet(path)
+            catalog.read_parquet(spark, path)
             .join(F.broadcast(affected), ["t", "bucket"])
             .select("id", "t", "bucket")
         )
@@ -372,7 +377,7 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stamp.ensure(path, src, "incr-v1-upserted", _build_incr)
-    idx = spark.read.parquet(path)
+    idx = catalog.read_parquet(spark, path)
     return (
         idx.groupBy("t", F.col("bucket").cast("bigint").alias("bucket"))
         .agg(
@@ -417,17 +422,19 @@ def ann_ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     here are the deterministic first-16-by-id (all inside the base
     corpus), so the frozen-centroid contract and the oracle's
     full-corpus derivation agree exactly."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
     _require_dim64(len(_query_vec(spark, sf_dir)), "ann_ivf_index_incremental")
     path = _index_path(sf_dir, "ivf_incremental")
     src = _emb_src(sf_dir)
     def _build_ivf_incr():
+        emb = catalog.load_table(spark, sf_dir, "embeddings")
         base = emb.filter(F.col("vec_id") < _INC_SPLIT)
         cents = ann._ivf_centroids(base, 16, "vec_id", "embedding")
         ann._write_cells(base, cents, path)
         new_rows = ann.ivf_assign(emb.filter(F.col("vec_id") >= _INC_SPLIT), cents)
         affected = new_rows.select("cell").distinct()
-        existing = spark.read.parquet(path).join(F.broadcast(affected), ["cell"])
+        existing = catalog.read_parquet(spark, path).join(
+            F.broadcast(affected), ["cell"]
+        )
         # Eager: detach from the partitions the write replaces.
         updated = materialize(existing.unionByName(new_rows), eager=True)
         (
@@ -438,7 +445,7 @@ def ann_ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stamp.ensure(path, src, "ivf-incr-v2-upserted", _build_ivf_incr)
-    idx = spark.read.parquet(path)
+    idx = catalog.read_parquet(spark, path)
     return (
         idx.groupBy(F.col("cell").cast("int").alias("cell"))
         .agg(
@@ -480,29 +487,16 @@ def ann_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output are computed in-plan from the unpruned index and are
     the oracle-checked truth; recall_ok is derived from the pruned
     path's actual output."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    path = _index_path(sf_dir, "ivf")
-    def _build_ivf():
-        c = ann.write_ivf_index(spark, emb, path, n_cells=16, n_iter=3)
-        (Path(path) / "_CENTROIDS.json").write_text(json.dumps(c.tolist()))
-        return c
-
-    cents = _ensure_sidecar_index(
-        path,
-        sf_dir,
-        "_CENTROIDS.json",
-        _build_ivf,
-        lambda t: np.asarray(json.loads(t)),
-    )
+    path, cents = _ivf_index(spark, sf_dir)
     qv = _query_vec(spark, sf_dir)
     probe = ann._probe_cells(cents, qv, 8)
-    from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
+    from sales_agent_graphdb_spark.operators.similarity import cosine_to
     from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
 
-    idx = spark.read.parquet(path)
+    idx = catalog.read_parquet(spark, path)
     filt = F.col("label").isin(*_FILTER_LABELS) & (F.col("vec_id") != 0)
     score = lambda df: df.select(  # noqa: E731
-        "vec_id", cosine(F.col("embedding"), lit_vector(qv)).alias("sim")
+        "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
     )
     pruned_top = (
         score(idx.filter(F.col("cell").isin(probe)).filter(filt))
@@ -590,9 +584,9 @@ def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     label-pruned-only read, fully hash-checked per row), plus a
     recall_ok verdict from the pruned probe (floor 3, measured 4 —
     slack 1 against k-means ulp wobble across rebuilds)."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
     path = _index_path(sf_dir, "ivf_labeled")
     def _build_labeled():
+        emb = catalog.load_table(spark, sf_dir, "embeddings")
         c = ann.write_ivf_index_labeled(spark, emb, path, n_cells=16, n_iter=3)
         (Path(path) / "_CENTROIDS_BY_LABEL.json").write_text(
             json.dumps({str(k): v.tolist() for k, v in c.items()})
@@ -607,10 +601,10 @@ def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame
         lambda t: {int(k): np.asarray(v) for k, v in json.loads(t).items()},
     )
     qv = _query_vec(spark, sf_dir)
-    from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
+    from sales_agent_graphdb_spark.operators.similarity import cosine_to
     from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
 
-    idx = spark.read.parquet(path)
+    idx = catalog.read_parquet(spark, path)
     probes = {lbl: ann._probe_cells(cbl[lbl], qv, 4) for lbl in _FILTER_LABELS}
     pruned_pred = None
     for lbl, cells in sorted(probes.items()):
@@ -618,7 +612,7 @@ def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame
         pruned_pred = p if pruned_pred is None else (pruned_pred | p)
     base = F.col("vec_id") != 0
     score = lambda df: df.select(  # noqa: E731
-        "vec_id", "label", cosine(F.col("embedding"), lit_vector(qv)).alias("sim")
+        "vec_id", "label", cosine_to(F.col("embedding"), qv).alias("sim")
     )
     exact_top = (
         score(idx.filter(F.col("label").isin(*_FILTER_LABELS)).filter(base))
@@ -688,21 +682,9 @@ def ann_filtered_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output contract as the ivf/partitioned siblings: the exact
     filtered top-5 ids (computed in-plan from the unpruned index
     read, hash-checked) + the adaptively-chosen width + recall_ok."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    path = _index_path(sf_dir, "ivf")
-    def _build_ivf():
-        c = ann.write_ivf_index(spark, emb, path, n_cells=16, n_iter=3)
-        (Path(path) / "_CENTROIDS.json").write_text(json.dumps(c.tolist()))
-        return c
-
-    cents = _ensure_sidecar_index(
-        path,
-        sf_dir,
-        "_CENTROIDS.json",
-        _build_ivf,
-        lambda t: np.asarray(json.loads(t)),
-    )
+    path, cents = _ivf_index(spark, sf_dir)
     qv = _query_vec(spark, sf_dir)
+    emb = catalog.load_table(spark, sf_dir, "embeddings")
     row = emb.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_if(F.col("label").isin(*_ADAPTIVE_LABELS)).alias("c"),
@@ -710,12 +692,12 @@ def ann_filtered_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     total, cnt = int(row["n"]), int(row["c"])
     probe_n = min(16, (_ADAPTIVE_BASE_PROBE * total + cnt - 1) // cnt)
     probe = ann._probe_cells(cents, qv, probe_n)
-    from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
+    from sales_agent_graphdb_spark.operators.similarity import cosine_to
 
-    idx = spark.read.parquet(path)
+    idx = catalog.read_parquet(spark, path)
     filt = F.col("label").isin(*_ADAPTIVE_LABELS) & (F.col("vec_id") != 0)
     score = lambda df: df.select(  # noqa: E731
-        "vec_id", cosine(F.col("embedding"), lit_vector(qv)).alias("sim")
+        "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
     )
     pruned_top = (
         score(idx.filter(F.col("cell").isin(probe)).filter(filt))
@@ -829,10 +811,10 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("adc").desc(), "vec_id")
         .limit(_PQ_CAND)
     )
-    from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
+    from sales_agent_graphdb_spark.operators.similarity import cosine_to
 
     score = lambda df: df.select(  # noqa: E731
-        "vec_id", cosine(F.col("embedding"), lit_vector(qv)).alias("sim")
+        "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
     )
     pq_top = score(cands).orderBy(F.col("sim").desc(), "vec_id").limit(5)
     exact_top = score(base).orderBy(F.col("sim").desc(), "vec_id").limit(5)
@@ -934,19 +916,19 @@ def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qv = _query_vec(spark, sf_dir)
     probe = ann._probe_cells(cents, qv, _IVFPQ_PROBE)
-    idx = spark.read.parquet(path)
+    idx = catalog.read_parquet(spark, path)
     cands = (
         idx.filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
         .select("vec_id", ann.pq_adc_score(books, qv).alias("adc"))
         .orderBy(F.col("adc").desc(), "vec_id")
         .limit(_IVFPQ_CAND)
     )
-    from sales_agent_graphdb_spark.operators.similarity import cosine, lit_vector
+    from sales_agent_graphdb_spark.operators.similarity import cosine_to
 
     rerank = (
         cands.join(idx.select("vec_id", "embedding"), "vec_id")
         .select(
-            "vec_id", cosine(F.col("embedding"), lit_vector(qv)).alias("sim")
+            "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
         )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(5)
@@ -954,7 +936,7 @@ def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_top = (
         emb.filter(F.col("vec_id") != 0)
         .select(
-            "vec_id", cosine(F.col("embedding"), lit_vector(qv)).alias("sim")
+            "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
         )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(5)

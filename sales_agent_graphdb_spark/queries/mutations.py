@@ -617,7 +617,7 @@ def m9_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
         .partitionBy("ship_month")
         .parquet(root)
     )
-    back = spark.read.parquet(root).filter(
+    back = catalog.read_parquet(spark, root).filter(
         F.col("ship_month").isin("1996-06", "1996-07", "1996-08")
     )
     return (

@@ -267,7 +267,7 @@ def s10_sorted_scan_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(root)
         ),
     )
-    back = spark.read.parquet(root)
+    back = catalog.read_parquet(spark, root)
     year = back.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -414,7 +414,7 @@ def s12_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stamp.ensure(root, src, _Z_RECIPE, _build_zorder, valid=_maxes_valid)
     mx = holder["mx"]
-    back = spark.read.parquet(root)
+    back = catalog.read_parquet(spark, root)
     # SF-relative box (20%-30% of each key range, integer arithmetic
     # identical to the oracle's) so the check is non-vacuous at every
     # scale.
@@ -542,14 +542,14 @@ def s13_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         src,
         "compact1",
         lambda: (
-            spark.read.parquet(frag)
+            catalog.read_parquet(spark, frag)
             .repartition(F.col("day"))  # one task owns each day => one file
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(compact)
         ),
     )
-    back = spark.read.parquet(compact)
+    back = catalog.read_parquet(spark, compact)
     return (
         back.groupBy("day")
         .agg(
@@ -686,6 +686,7 @@ def s8c_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake = _scratch(sf_dir, f"s8c_lake_{run_id}")
 
     run2_batches: list[int] = []
+    landed = catalog.WrittenParquet()
 
     def _writer(batch_ids: list[int] | None):
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -693,13 +694,14 @@ def s8c_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_ids.append(batch_id)
             if batch_df.isEmpty():
                 return
+            batch = batch_df.withColumn("batch_id", F.lit(batch_id))
             (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
+                batch.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id")
                 .parquet(lake)
             )
+            landed.record(lake, batch)
 
         return write_batch
 
@@ -723,14 +725,14 @@ def s8c_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # Run 1: endpoint serves pages 0-2 only; drain and stop.
         _drain(3, None)
-        mid = spark.read.parquet(lake).agg(
+        mid = landed.read(spark, lake).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("p_partkey").alias("key_sum"),
             F.max("batch_id").alias("max_bid"),
         ).collect()[0]
         # Run 2: full endpoint, SAME checkpoint; resumes at page 3.
         _drain(None, run2_batches)
-        final = spark.read.parquet(lake)
+        final = landed.read(spark, lake)
 
         part = catalog.load_table(spark, sf_dir, "part")
         prefix = part.filter(F.col("p_partkey") % 8 < 3).agg(
@@ -1013,8 +1015,8 @@ def dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost no rows (date_format vs strftime month keys, exact-DECIMAL
     revenue)."""
     build_dpp_layout(spark, sf_dir)
-    fact = spark.read.parquet(dpp_fact_path(sf_dir))
-    dim = spark.read.parquet(dpp_dim_path(sf_dir)).filter(
+    fact = catalog.read_parquet(spark, dpp_fact_path(sf_dir))
+    dim = catalog.read_parquet(spark, dpp_dim_path(sf_dir)).filter(
         (F.col("cal_year") == 1996) & (F.col("cal_quarter") == 3)
     )
     joined = fact.join(F.broadcast(dim), "ship_month")
@@ -1103,7 +1105,7 @@ def s16_nested_schema_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     same answer from the ORIGINAL flat orders, so the hash also
     certifies the nested rewrite lost nothing."""
     build_nested_orders(spark, sf_dir)
-    n = spark.read.parquet(nested_orders_path(sf_dir))
+    n = catalog.read_parquet(spark, nested_orders_path(sf_dir))
     return (
         n.filter(F.col("o_orderstatus") == "F")
         .groupBy(F.col("customer.priority").alias("priority"))
@@ -1177,7 +1179,7 @@ def read_snapshot(spark: SparkSession, sf_dir: str, version: str | None = None) 
     v = version or manifest["current"]
     if v not in manifest["versions"]:
         raise ValueError(f"unknown snapshot version: {v}")
-    return spark.read.parquet(os.path.join(root, v))
+    return catalog.read_parquet(spark, os.path.join(root, v))
 
 
 @register(
@@ -1356,7 +1358,7 @@ def s19_parquet_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stamp.ensure(root, src, _RECIPE, _build)
-    back = spark.read.parquet(root)
+    back = catalog.read_parquet(spark, root)
     mx = back.agg(F.max("l_orderkey")).head()[0]
     keys = [mx // 2, mx // 3, mx // 5]
     return (

@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.sources import stamp
 
 _SCHEMA_DDL = "p_partkey bigint, p_name string, p_brand string, p_retailprice double"
@@ -122,7 +123,7 @@ def ensure_api_pages(spark: SparkSession, sf_dir: str) -> str:
     endpoint = f"{SCRATCH}/api_pages/{tag}"
     src = f"{sf_dir}/part.parquet"
     def _build_pages() -> None:
-        part = spark.read.parquet(src).select(
+        part = catalog.load_table(spark, sf_dir, "part").select(
             "p_partkey", "p_name", "p_brand", "p_retailprice"
         )
         (

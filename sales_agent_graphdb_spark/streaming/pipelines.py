@@ -29,6 +29,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from sales_agent_graphdb_spark.catalog import (
+    WrittenParquet,
+    ensure_events_readable,
+    read_parquet,
+    written_schema,
+)
 from sales_agent_graphdb_spark.session import materialize
 
 
@@ -45,11 +51,9 @@ def _scratch(name: str) -> str:
 # generation; the streaming source pins whichever the file actually has
 # (streaming sources never infer), detected via a cheap batch read.
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    from sales_agent_graphdb_spark.catalog import ensure_events_readable
-
     path = f"{sf_dir}/events.parquet"
     ensure_events_readable(spark, path)
-    ts_type = spark.read.parquet(path).schema["ts"].dataType
+    ts_type = read_parquet(spark, path).schema["ts"].dataType
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -623,6 +627,8 @@ def make_upsert_sink(tbl_root: str):  # noqa: ANN201
     crash between the table write and the publication rename, and
     replay-after-prune."""
 
+    written = WrittenParquet()
+
     def upsert(batch_df, batch_id):  # noqa: ANN001
         version_dir = os.path.join(tbl_root, f"v_{batch_id}")
         prev = latest_committed_version(tbl_root)
@@ -636,7 +642,7 @@ def make_upsert_sink(tbl_root: str):  # noqa: ANN201
             F.sum(F.col("value").cast("decimal(20,6)")).alias("total_d"),
         )
         if prev is not None:
-            existing = batch_df.sparkSession.read.parquet(prev[1])
+            existing = written.read(batch_df.sparkSession, prev[1])
             merged = existing.unionByName(part)
         else:
             merged = part
@@ -656,8 +662,10 @@ def make_upsert_sink(tbl_root: str):  # noqa: ANN201
             if os.path.exists(version_dir):
                 return  # lost a publish race; the committed version wins
             raise  # genuine failure: nothing published, retry is safe
+        written.record(version_dir, out)
         prune_versions(tbl_root)  # after commit only; keeps last N markers
 
+    upsert.written = written
     return upsert
 
 
@@ -685,8 +693,7 @@ def foreachbatch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maxFilesPerTrigger=1: the upsert must be exercised as an UPDATE
     # of existing keys, not just a first insert.
     ev.repartition(3).write.mode("overwrite").parquet(src_dir)
-
-    batch_schema = spark.read.parquet(src_dir).schema
+    batch_schema = written_schema(ev)
 
     # Version-addressed root: each batch publishes v_<id> (data+marker
     # in one atomic rename — see make_upsert_sink).
@@ -714,7 +721,7 @@ def foreachbatch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "produced zero batches"
     )
     final = materialize(
-        spark.read.parquet(current[1])
+        upsert.written.read(spark, current[1])
         .select(
             "event_type",
             "n_events",
@@ -1107,7 +1114,9 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _catalog.load_table(spark, sf_dir, "events")
     ev.repartition(3).write.mode("overwrite").parquet(src_dir)
-    batch_schema = spark.read.parquet(src_dir).schema
+    batch_schema = written_schema(ev)
+    landed = os.path.join(out_dir, "*")  # every batch's dir, read back at the end
+    written = WrittenParquet()
 
     hist = materialize(scd2_history(spark, sf_dir), eager=True)
 
@@ -1152,6 +1161,7 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
+        written.record(landed, enriched)
 
     stream = (
         spark.readStream.schema(batch_schema)
@@ -1168,7 +1178,7 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
 
     out = (
-        spark.read.parquet(os.path.join(out_dir, "*"))
+        written.read(spark, landed)
         .groupBy(F.col("seg_at").alias("segment"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1224,6 +1234,8 @@ def make_kmv_fold_sink(tbl_dir: str, applied_dir: str):  # noqa: ANN201
     ``tbl_dir`` (each batch's overwrite deletes tbl_dir wholesale —
     ADVICE r08; tests/test_streaming.py pins the class)."""
 
+    written = WrittenParquet()
+
     def fold(batch_df, batch_id):  # noqa: ANN001
         marker = os.path.join(applied_dir, str(batch_id))
         if os.path.exists(marker):
@@ -1235,7 +1247,7 @@ def make_kmv_fold_sink(tbl_dir: str, applied_dir: str):  # noqa: ANN201
             .limit(_KMV_STREAM_K)
         )
         if os.path.exists(os.path.join(tbl_dir, "_SUCCESS")):
-            existing = batch_df.sparkSession.read.parquet(tbl_dir)
+            existing = written.read(batch_df.sparkSession, tbl_dir)
             merged = existing.unionByName(batch_sk)
         else:
             merged = batch_sk
@@ -1248,9 +1260,11 @@ def make_kmv_fold_sink(tbl_dir: str, applied_dir: str):  # noqa: ANN201
             eager=True,
         )
         out.write.mode("overwrite").parquet(tbl_dir)
+        written.record(tbl_dir, out)
         os.makedirs(applied_dir, exist_ok=True)
         open(marker, "w").close()
 
+    fold.written = written
     return fold
 
 
@@ -1279,8 +1293,9 @@ def kmv_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sales_agent_graphdb_spark import catalog as _catalog
 
     ev = _catalog.load_table(spark, sf_dir, "events")
-    ev.select("user_id").repartition(3).write.mode("overwrite").parquet(src_dir)
-    batch_schema = spark.read.parquet(src_dir).schema
+    staged = ev.select("user_id")
+    staged.repartition(3).write.mode("overwrite").parquet(src_dir)
+    batch_schema = written_schema(staged)
 
     fold = make_kmv_fold_sink(tbl_dir, applied_dir)
 
@@ -1297,7 +1312,7 @@ def kmv_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    sk = spark.read.parquet(tbl_dir)
+    sk = fold.written.read(spark, tbl_dir)
     est = sk.agg(F.count(F.lit(1)).alias("m"), F.max("h").alias("kth"))
     exact = ev.agg(F.countDistinct("user_id").alias("exact_users"))
     union_est = F.when(
@@ -1341,6 +1356,8 @@ def make_topk_fold_sink(tbl_root: str):  # noqa: ANN201
 
     w = W.partitionBy("event_type").orderBy(F.col("v").desc(), "event_id")
 
+    written = WrittenParquet()
+
     def fold(batch_df, batch_id):  # noqa: ANN001
         version_dir = os.path.join(tbl_root, f"v_{batch_id}")
         prev = latest_committed_version(tbl_root)
@@ -1357,7 +1374,7 @@ def make_topk_fold_sink(tbl_root: str):  # noqa: ANN201
             .drop("rk")
         )
         if prev is not None:
-            standing = batch_df.sparkSession.read.parquet(prev[1])
+            standing = written.read(batch_df.sparkSession, prev[1])
             merged = standing.unionByName(topb).dropDuplicates(
                 ["event_type", "event_id"]
             )
@@ -1378,8 +1395,10 @@ def make_topk_fold_sink(tbl_root: str):  # noqa: ANN201
             if os.path.exists(version_dir):
                 return
             raise
+        written.record(version_dir, out)
         prune_versions(tbl_root)
 
+    fold.written = written
     return fold
 
 
@@ -1398,10 +1417,9 @@ def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sales_agent_graphdb_spark import catalog as _catalog
 
     ev = _catalog.load_table(spark, sf_dir, "events")
-    ev.select("event_id", "event_type", "value").repartition(3).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    batch_schema = spark.read.parquet(src_dir).schema
+    staged = ev.select("event_id", "event_type", "value")
+    staged.repartition(3).write.mode("overwrite").parquet(src_dir)
+    batch_schema = written_schema(staged)
 
     fold = make_topk_fold_sink(tbl_root)
     stream = (
@@ -1426,7 +1444,7 @@ def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = W.partitionBy("event_type").orderBy(F.col("v").desc(), "event_id")
     final = materialize(
-        spark.read.parquet(current[1])
+        fold.written.read(spark, current[1])
         .withColumn("rk", F.row_number().over(w))
         .select(
             "event_type",
