@@ -70,22 +70,34 @@ def _ensure_sidecar_index(path: str, sf_dir: str, side_name: str, build, decode)
     return holder["v"]
 
 
-def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, np.ndarray]:
-    """The k-means IVF index (16 cells, partitioned by ``cell``) and its
-    centroids, built once per embeddings stamp; a warm call reads only
-    the centroid sidecar."""
-    path = _index_path(sf_dir, "ivf")
+def _centroid_index(
+    spark: SparkSession, sf_dir: str, kind: str, write
+) -> tuple[str, np.ndarray]:
+    """An IVF index partitioned by ``cell`` plus its ``_CENTROIDS.json``
+    sidecar, written by ``write(embeddings, path)`` (which returns the
+    centroids) once per embeddings stamp; a warm call reads only the
+    sidecar."""
+    path = _index_path(sf_dir, kind)
 
-    def _build_ivf():
-        emb = catalog.load_table(spark, sf_dir, "embeddings")
-        c = ann.write_ivf_index(spark, emb, path, n_cells=16, n_iter=3)
+    def _build():
+        c = write(catalog.load_table(spark, sf_dir, "embeddings"), path)
         (Path(path) / "_CENTROIDS.json").write_text(json.dumps(c.tolist()))
         return c
 
     cents = _ensure_sidecar_index(
-        path, sf_dir, "_CENTROIDS.json", _build_ivf, lambda t: np.asarray(json.loads(t))
+        path, sf_dir, "_CENTROIDS.json", _build, lambda t: np.asarray(json.loads(t))
     )
     return path, cents
+
+
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, np.ndarray]:
+    """The k-means IVF index (16 cells) and its centroids."""
+    return _centroid_index(
+        spark,
+        sf_dir,
+        "ivf",
+        lambda emb, path: ann.write_ivf_index(spark, emb, path, n_cells=16, n_iter=3),
+    )
 
 
 def _require_dim64(dim: int, query: str) -> None:
@@ -224,10 +236,13 @@ def ann_ivf_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     path serves — so the driver's value hash covers the index BUILD
     (cell assignment at write), the physical partition PRUNE, and the
     rerank. The k-means variant stays the quality/scale path."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    path = _index_path(sf_dir, "ivf_portable")
-    cents = ann._ivf_centroids(emb, 16, "vec_id", "embedding")
-    _ensure_index(path, sf_dir, lambda: ann._write_cells(emb, cents, path))
+
+    def write(emb, path):  # noqa: ANN001, ANN202
+        cents = ann._ivf_centroids(emb, 16, "vec_id", "embedding")
+        ann._write_cells(emb, cents, path)
+        return cents
+
+    path, cents = _centroid_index(spark, sf_dir, "ivf_portable", write)
     return ann.ivf_pruned_topk(
         spark, path, cents, _query_vec(spark, sf_dir), k=5, n_probe=4
     )

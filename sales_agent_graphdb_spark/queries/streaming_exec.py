@@ -384,9 +384,8 @@ def st_stream_topk_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 leaderboard across 3 microbatches. Top-k selection is a
     semilattice (topk(topk(A) ∪ topk(B)) = topk(A ∪ B)), so the
     drained k·|types|-row state must equal the one-shot batch top-k,
-    which the driver hash-checks. Publication reuses the
-    version-addressed atomic-rename commit (second consumer of
-    make_upsert_sink's protocol; the fold is also idempotent, so
-    replay is safe by algebra AND by marker). See
+    which the driver hash-checks. Publication is the version-addressed
+    atomic-rename commit every fold sink shares (the fold is also
+    idempotent, so replay is safe by algebra AND by marker). See
     streaming/pipelines.py:topk_maintain_stream."""
     return pipelines.topk_maintain_stream(spark, sf_dir)

@@ -2,9 +2,12 @@
 clustered table rewrites): a marker file records the source parquet's
 ``mtime:size`` so repeated queries in a round reuse the expensive
 ingest-side write, while any testdata regeneration invalidates it
-automatically. ONE protocol definition — ann_search.py and
-sources_io.py both build on it (review r03: it was hand-rolled per
-site)."""
+automatically. ONE protocol definition (review r03: it was hand-rolled
+per site); its consumers are the ANN indexes (queries/ann_search.py),
+the clustered and snapshot layouts (queries/sources_io.py,
+queries/mutations.py), the API pages (sources/api_source.py) and the
+streaming sources (streaming/pipelines.py: the 3-file events staging
+and the sentinel sources)."""
 
 from __future__ import annotations
 

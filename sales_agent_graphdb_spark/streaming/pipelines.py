@@ -4,12 +4,34 @@ The reference has no data streaming (SURVEY.md §2.12 — its SSE chat is
 token transport; Redis TTL is its only time-based semantics). The
 events table is the designated extension surface: here the SAME window
 expressions used by the batch queries in ``queries/event_windows.py``
-run as real ``readStream`` pipelines — file source over the testdata
-parquet, event-time watermark, windowed aggregation, memory sink,
-``availableNow`` trigger so a bounded run drains the source and
-terminates. Batch/stream parity is the correctness claim: the driver
-oracle-checks the streamed result against the same DuckDB SQL as the
-batch form.
+run as real ``readStream`` pipelines, and the driver oracle-checks each
+streamed result against the same DuckDB SQL as the batch form.
+
+Every pipeline is one bounded run of three steps, each owned by one
+helper:
+
+- **Stage** (``_stamped``). A source other than the testdata file
+  itself is a stamped layout (``sources/stamp.py``), built once per
+  stamp of ``events.parquet`` and shared by every later run:
+  ``_staged_events`` (the normalized events in 3 files, one file per
+  microbatch, for the ``foreachBatch`` sinks) and ``_sentinel_source``
+  (the raw events plus one end-of-stream sentinel per user, one layout
+  per sentinel gap). ``stream_events`` reads the testdata file directly.
+- **Drain** (``_drain``). A per-run checkpoint, the ``availableNow``
+  trigger (the run drains its source, then stops), start and
+  ``awaitTermination``; the query is stopped, the memory-sink view
+  dropped and the checkpoint removed in a ``finally``, so a failed run
+  leaves no stream, view or scratch dir behind. A memory sink's rows
+  are collected and returned: the sink would otherwise pin the whole
+  result in driver memory for the session.
+- **Commit** (``_versioned_fold``). Every fold sink (upsert, top-k,
+  KMV) is a merge function over one protocol: batch ``b``'s folded
+  table is written to a private ``.build_*`` dir and published as
+  ``<root>/v_<b>`` with one atomic ``os.rename``, so the table version
+  and its applied-batch marker are the same filesystem object.
+
+Per-run scratch is then only the checkpoint and the sink's table
+(``_run_dir``), both removed when the run ends.
 
 Scale design: in production the source is a real log stream (Kafka/
 files on object storage); state lives in the state store partitioned
@@ -23,12 +45,14 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.catalog import (
     WrittenParquet,
     ensure_events_readable,
@@ -36,6 +60,7 @@ from sales_agent_graphdb_spark.catalog import (
     written_schema,
 )
 from sales_agent_graphdb_spark.session import materialize
+from sales_agent_graphdb_spark.sources import stamp
 
 
 def _scratch(name: str) -> str:
@@ -44,6 +69,28 @@ def _scratch(name: str) -> str:
     from sales_agent_graphdb_spark.queries.sources_io import SCRATCH
 
     return os.path.join(SCRATCH, "streaming", name)
+
+
+@contextmanager
+def _run_dir(prefix: str):
+    """A per-run scratch path (a checkpoint or a sink's table), removed
+    on exit whether or not the run succeeded."""
+    path = _scratch(f"{prefix}_{uuid.uuid4().hex[:12]}")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _stamped(sf_dir: str, name: str, version: str, build) -> str:
+    """Stage: the layout ``name`` of ``sf_dir``'s events, built by
+    ``build(root)`` once per stamp of ``events.parquet`` and recipe tag
+    ``version``; returns its root."""
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    root = _scratch(os.path.join(tag, name))
+    src = f"{sf_dir.rstrip('/')}/events.parquet"
+    stamp.ensure(root, src, version, lambda: build(root))
+    return root
 
 
 # events schema as written. ts has shipped as TIMESTAMP(NANOS) (=> long
@@ -77,34 +124,54 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{sf_dir}/events.[p]arquet")  # glob => file-source basePath is the dir
     )
-    from sales_agent_graphdb_spark.catalog import normalize_events_ts
-
-    return normalize_events_ts(raw)
+    return catalog.normalize_events_ts(raw)
 
 
-def _run_to_memory(stream: DataFrame, mode: str) -> DataFrame:
-    """Execute a bounded streaming query into a memory sink and return
-    the result table. Checkpoint + sink name are per-run unique."""
-    run_id = uuid.uuid4().hex[:12]
-    ckpt = _scratch(f"ckpt_{run_id}")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(f"sink_{run_id}")
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+def _staged_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The normalized events split into 3 files, streamed one file per
+    microbatch, so a ``foreachBatch`` fold must merge into standing
+    state (an UPDATE of existing keys), not just insert once. Each
+    pipeline selects its columns from the stream."""
+    ev = catalog.load_table(spark, sf_dir, "events")
+    root = _stamped(
+        sf_dir,
+        "events_3f",
+        "",
+        lambda r: ev.repartition(3).write.mode("overwrite").parquet(r),
     )
-    q.awaitTermination()
-    spark_ = stream.sparkSession
-    sink = spark_.table(f"sink_{run_id}")
-    # Materialize and DROP the memory-sink view: the sink pins the full
-    # result in driver memory for the session lifetime otherwise (one
-    # orphaned table per streaming run — tests/audits run dozens).
-    out = spark_.createDataFrame(sink.collect(), schema=sink.schema)
-    spark_.catalog.dropTempView(f"sink_{run_id}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return (
+        spark.readStream.schema(written_schema(ev))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{root}/*.parquet")
+    )
+
+
+def _drain(stream: DataFrame, sink=None, mode: str = "append") -> DataFrame | None:
+    """Drain: run ``stream`` to the end of its source into ``sink`` (a
+    ``foreachBatch`` function; returns None) or, without one, into a
+    memory sink in output ``mode`` and return its rows. Re-raises a
+    failed run after stopping it and removing its checkpoint and view."""
+    spark = stream.sparkSession
+    name = f"sink_{uuid.uuid4().hex[:12]}"
+    with _run_dir("ckpt") as ckpt:
+        writer = stream.writeStream.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        )
+        if sink is None:
+            writer = writer.format("memory").queryName(name).outputMode(mode)
+        else:
+            writer = writer.foreachBatch(sink)
+        query = None
+        try:
+            query = writer.start()
+            query.awaitTermination()
+            if sink is None:
+                table = spark.table(name)
+                return spark.createDataFrame(table.collect(), schema=table.schema)
+        finally:
+            if query is not None:
+                query.stop()
+            spark.catalog.dropTempView(name)
 
 
 def _windowed_counts_stream(
@@ -124,7 +191,7 @@ def _windowed_counts_stream(
             F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("total_value"),
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out = _drain(agg, mode="complete")
     return out.select(
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -189,7 +256,7 @@ def stateful_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(result, "append")
+    out = _drain(result)
     return out.select(
         "user_id",
         F.date_format(F.col("session_start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -217,7 +284,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = _run_to_memory(deduped, "append")
+    out = _drain(deduped)
     return out.select("event_id", "event_type", "value").orderBy("event_id")
 
 
@@ -233,144 +300,32 @@ def interval_join_cond():
     )
 
 
-def interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: purchase events joined to the same
-    user's view events from the preceding hour — the attribution join
-    every clickstream pipeline runs. Both sides are watermarked, so the
-    join STATE is bounded: a buffered view can be evicted once the
-    purchase-side watermark passes view_ts + 1h (the time-range
-    condition gives Spark the eviction bound; an unconstrained
-    stream-stream join would buffer forever). Inner-join matches emit
-    as they form; availableNow drains the source, so the streamed
-    result equals the batch join exactly and the driver hash-checks it
-    against the batch SQL. At 100 TB/day both sides shard by user_id
-    in the state store across executors."""
-    views = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "2 hours")
-    )
-    buys = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("b_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("buy_ts"),
-        )
-        .withWatermark("buy_ts", "2 hours")
-    )
-    joined = views.join(buys, interval_join_cond(), "inner")
-    out = _run_to_memory(joined, "append")
-    return out.select(
-        F.col("v_user_id").alias("user_id"), "view_id", "purchase_id"
-    ).orderBy("user_id", "view_id", "purchase_id")
+def _interval_join(views_src, buys_src, how: str, sentinels: bool) -> DataFrame:
+    """Drain the view→purchase interval join (``interval_join_cond``,
+    both sides watermarked 2 hours) of ``views_src`` and ``buys_src``
+    in join type ``how``. With ``sentinels`` the ``__sentinel__`` rows
+    pass both event-type filters: each side's watermark must pass every
+    eviction bound for the outer joins' null rows to flush, and a
+    sentinel reaches a watermark only through its side's filter.
+    Sentinels (event_id -1) only ever pair with the same user's
+    sentinel on the other side (equal ts; real events lie more than 1h
+    before it), so dropping a -1 on either side drops exactly them."""
 
-
-def interval_join_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every view event, with
-    its attributed purchase (next hour, same user) or NULL if none —
-    the attribution join that also has to account for the views that
-    converted to nothing. Unlike the inner form, the null rows are
-    WATERMARK-DRIVEN: Spark can only declare a view unmatched once the
-    watermark passes view_ts + 1h (the range bound) — before that a
-    matching purchase could still arrive — so each null row emits at
-    state eviction in a later microbatch.
-
-    Bounded-run determinism: the sentinel (10h past the global max on
-    BOTH sides — it must survive each side's event-type filter or it
-    cannot advance that side's watermark) pushes the final watermark
-    past every view's eviction bound, so ALL unmatched views flush
-    their null rows in the drain's no-data batch and the streamed
-    result equals the complete batch LEFT JOIN, which the oracle
-    states. At 100 TB/day the state store shards by user_id and holds
-    only the watermark horizon on each side."""
-    src_dir, stream = _sentinel_source(spark, sf_dir, sentinel_gap_s=36000)
-    try:
-        views = (
-            stream.filter(F.col("event_type").isin("view", "__sentinel__"))
+    def side(stream, event_type, user, eid, ts):
+        keep = [event_type, "__sentinel__"] if sentinels else [event_type]
+        return (
+            stream.filter(F.col("event_type").isin(*keep))
             .select(
-                F.col("user_id").alias("v_user_id"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("view_ts"),
-                F.col("event_type").alias("v_type"),
+                F.col("user_id").alias(user),
+                F.col("event_id").alias(eid),
+                F.col("ts").alias(ts),
             )
-            .withWatermark("view_ts", "2 hours")
+            .withWatermark(ts, "2 hours")
         )
-        buys = (
-            stream.filter(F.col("event_type").isin("purchase", "__sentinel__"))
-            .select(
-                F.col("user_id").alias("b_user_id"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("buy_ts"),
-            )
-            .withWatermark("buy_ts", "2 hours")
-        )
-        joined = views.join(buys, interval_join_cond(), "leftOuter")
-        out = _run_to_memory(joined, "append")
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-    # Sentinel view rows pair with the same user's sentinel purchase
-    # (equal ts satisfies the range) — dropped here either way.
-    return (
-        out.filter(F.col("v_type") != "__sentinel__")
-        .select(F.col("v_user_id").alias("user_id"), "view_id", "purchase_id")
-        .orderBy("user_id", "view_id", "purchase_id")
-    )
 
-
-def interval_join_full_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream FULL OUTER interval join (the last outer-join
-    shape after inner + left outer): every view with its attributed
-    purchase, every unconverted view with NULL purchase, AND every
-    unattributed purchase with NULL view — the complete attribution
-    reconciliation both sides of a funnel audit need. Null flushes are
-    watermark-driven on BOTH sides: an unmatched view flushes when the
-    watermark passes view_ts + 1h, an unmatched purchase when it
-    passes buy_ts (its candidate views all precede it), so the state
-    store holds only each side's horizon and evicts symmetrically.
-
-    Bounded-run determinism: the shared per-user sentinel (10h past
-    the global max, surviving BOTH event-type filters) advances both
-    watermarks past every eviction bound, so the drain's no-data batch
-    flushes ALL remaining null rows on both sides and the streamed
-    result equals the complete batch FULL JOIN the oracle states.
-    Sentinel rows can only pair with the same user's sentinel on the
-    other side (equal ts; real events are >1h away in event time on
-    the wrong side of the bound), so they emit as matched pairs
-    identified by event_id -1 on both columns and are dropped after
-    the drain. At 100 TB/day both state sides shard by user_id."""
-    src_dir, stream = _sentinel_source(spark, sf_dir, sentinel_gap_s=36000)
-    try:
-        views = (
-            stream.filter(F.col("event_type").isin("view", "__sentinel__"))
-            .select(
-                F.col("user_id").alias("v_user_id"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("view_ts"),
-            )
-            .withWatermark("view_ts", "2 hours")
-        )
-        buys = (
-            stream.filter(F.col("event_type").isin("purchase", "__sentinel__"))
-            .select(
-                F.col("user_id").alias("b_user_id"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("buy_ts"),
-            )
-            .withWatermark("buy_ts", "2 hours")
-        )
-        joined = views.join(buys, interval_join_cond(), "fullOuter")
-        out = _run_to_memory(joined, "append")
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-    # Sentinels always emit as same-user matched pairs (never against a
-    # real event), so event_id -1 on either column marks the whole row.
+    views = side(views_src, "view", "v_user_id", "view_id", "view_ts")
+    buys = side(buys_src, "purchase", "b_user_id", "purchase_id", "buy_ts")
+    out = _drain(views.join(buys, interval_join_cond(), how))
     return (
         out.filter(
             (F.coalesce(F.col("view_id"), F.lit(0)) != -1)
@@ -383,6 +338,50 @@ def interval_join_full_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id", "view_id", "purchase_id")
     )
+
+
+def interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join: purchase events joined to the same
+    user's view events from the preceding hour — the attribution join
+    every clickstream pipeline runs. Both sides are watermarked, so the
+    join STATE is bounded: a buffered view can be evicted once the
+    purchase-side watermark passes view_ts + 1h (the time-range
+    condition gives Spark the eviction bound; an unconstrained
+    stream-stream join would buffer forever). Inner-join matches emit
+    as they form, so the drained result equals the batch join exactly.
+    At 100 TB/day both sides shard by user_id in the state store."""
+    return _interval_join(
+        stream_events(spark, sf_dir), stream_events(spark, sf_dir), "inner", False
+    )
+
+
+def interval_join_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream LEFT OUTER interval join: every view event, with
+    its attributed purchase (next hour, same user) or NULL if none.
+    Unlike the inner form, the null rows are WATERMARK-DRIVEN: Spark
+    can only declare a view unmatched once the watermark passes
+    view_ts + 1h, so each null row emits at state eviction in a later
+    microbatch. The sentinel (10h past the global max) pushes the final
+    watermark past every view's eviction bound (view_ts + 1h + 2h
+    delay), so the drain flushes ALL unmatched views and the result
+    equals the complete batch LEFT JOIN the oracle states."""
+    stream = _sentinel_source(spark, sf_dir, sentinel_gap_s=36000)
+    return _interval_join(stream, stream, "leftOuter", True)
+
+
+def interval_join_full_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream FULL OUTER interval join: every view with its
+    attributed purchase, every unconverted view with NULL purchase, AND
+    every unattributed purchase with NULL view — the reconciliation
+    both sides of a funnel audit need. Null flushes are watermark-driven
+    on BOTH sides: an unmatched view flushes when the watermark passes
+    view_ts + 1h, an unmatched purchase when it passes buy_ts (its
+    candidate views all precede it), so the state store holds only each
+    side's horizon. The shared sentinel advances both watermarks past
+    every eviction bound, so the drained result equals the batch FULL
+    JOIN the oracle states."""
+    stream = _sentinel_source(spark, sf_dir, sentinel_gap_s=36000)
+    return _interval_join(stream, stream, "fullOuter", True)
 
 
 def _make_session_fn_exact(gap_s: int):
@@ -450,16 +449,13 @@ _STATE_SCHEMA_EXACT = "last_ts long, session_start long, n long, total string"
 
 def _sentinel_source(
     spark: SparkSession, sf_dir: str, sentinel_gap_s: int = 2 * SESSION_GAP_S
-) -> tuple[str, DataFrame]:
-    """Scratch streaming source = the events parquet (symlinked;
-    testdata is read-only) plus one end-of-stream sentinel event per
-    user at event-time ``sentinel_gap_s`` (default 2*SESSION_GAP_S)
-    past the global max — the drain-a-bounded-run move every
-    sentinel-flushed stateful query shares. The outer interval join
-    passes a larger gap: its null-side flush needs the watermark to
-    clear every view's eviction bound (view_ts + 1h + 2h delay), not
-    just the session gap. Returns (scratch dir to rm after the run,
-    normalized stream).
+) -> DataFrame:
+    """The raw events (symlinked; testdata is read-only) plus one
+    end-of-stream sentinel event per user at event-time
+    ``sentinel_gap_s`` past the global max, as a normalized stream —
+    the drain-a-bounded-run move every sentinel-flushed stateful query
+    shares. One stamped layout per gap; the raw ``ts`` type, which the
+    sentinel file must match, is part of its recipe tag.
 
     No maxFilesPerTrigger: both files land in ONE microbatch, so the
     state fn's in-batch event-time sort fully determines order. (With
@@ -467,66 +463,58 @@ def _sentinel_source(
     mtime ordering putting the sentinel last — a sentinel-first batch
     would seed state at the far-future sentinel ts and absorb every
     real event into a never-emitted sentinel session.)"""
-    run_id = uuid.uuid4().hex[:12]
-    src_dir = _scratch(f"sentinel_src_{run_id}")
-    os.makedirs(src_dir, exist_ok=True)
-    os.symlink(
-        os.path.realpath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-
     schema = _events_raw_schema(spark, sf_dir)
-    ts_kind = schema["ts"].dataType.simpleString()
-    # Batch-read the events to compute per-user sentinels (one tiny
-    # row per user; 2*gap past the global max so every user's gap to
-    # its sentinel exceeds the session gap).
-    from sales_agent_graphdb_spark import catalog as _catalog
+    ts_type = schema["ts"].dataType
 
-    ev = _catalog.load_table(spark, sf_dir, "events")
-    sent = (
-        ev.select("user_id")
-        .distinct()
-        .crossJoin(ev.agg(F.max("ts").alias("gmx")))
-        .select(
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.col("gmx") + F.expr(f"INTERVAL {sentinel_gap_s} SECONDS")).alias(
-                "ts_t"
-            ),
-            F.col("user_id"),
-            F.lit("__sentinel__").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
+    def build(root: str) -> None:
+        shutil.rmtree(root, ignore_errors=True)
+        os.makedirs(root)
+        os.symlink(
+            os.path.realpath(f"{sf_dir}/events.parquet"),
+            os.path.join(root, "events.parquet"),
         )
-    )
-    if ts_kind == "bigint":
-        sent = sent.withColumn("ts", F.unix_micros(F.col("ts_t")) * F.lit(1000))
-    else:
-        sent = sent.withColumn("ts", F.col("ts_t").cast(schema["ts"].dataType))
-    sent = sent.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    sent.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(src_dir, "sentinel.parquet")
-    )
+        ev = catalog.load_table(spark, sf_dir, "events")
+        sent = (
+            ev.select("user_id")
+            .distinct()
+            .crossJoin(ev.agg(F.max("ts").alias("gmx")))
+            .select(
+                F.lit(-1).cast("long").alias("event_id"),
+                (F.col("gmx") + F.expr(f"INTERVAL {sentinel_gap_s} SECONDS")).alias(
+                    "ts_t"
+                ),
+                F.col("user_id"),
+                F.lit("__sentinel__").alias("event_type"),
+                F.lit(0.0).alias("value"),
+                F.lit(None).cast("string").alias("props"),
+            )
+        )
+        if ts_type.simpleString() == "bigint":
+            sent = sent.withColumn("ts", F.unix_micros(F.col("ts_t")) * F.lit(1000))
+        else:
+            sent = sent.withColumn("ts", F.col("ts_t").cast(ts_type))
+        sent = sent.select("event_id", "ts", "user_id", "event_type", "value", "props")
+        sent.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(root, "sentinel.parquet")
+        )
 
-    raw = spark.readStream.schema(schema).parquet(f"{src_dir}/*.parquet")
-    return src_dir, _catalog.normalize_events_ts(raw)
+    root = _stamped(
+        sf_dir, f"sentinel_{sentinel_gap_s}", ts_type.simpleString(), build
+    )
+    raw = spark.readStream.schema(schema).parquet(f"{root}/*.parquet")
+    return catalog.normalize_events_ts(raw)
 
 
 def stateful_sessions_complete_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL sessions from the stateful operator — open sessions are
-    closed by injecting one end-of-stream sentinel event per user
-    (event-time 2 gaps past the global max), the standard
-    drain-a-bounded-run move for stateful streaming: the sentinel
-    exceeds every user's inactivity gap, so each final real session
-    flushes, while the sentinel's own singleton session stays in
-    state unemitted. The streamed result then equals the batch
-    gap-and-islands sessionization EXACTLY, and the driver
-    hash-checks it against the same DuckDB oracle as
-    st_session_window. Source = a scratch dir holding the original
-    events parquet plus the tiny sentinel file (testdata itself is
-    read-only)."""
-    src_dir, stream = _sentinel_source(spark, sf_dir)
-
-    events = stream.select(
+    closed by the per-user end-of-stream sentinel (``_sentinel_source``,
+    event-time 2 gaps past the global max): the sentinel exceeds every
+    user's inactivity gap, so each final real session flushes, while
+    the sentinel's own singleton session stays in state unemitted. The
+    streamed result then equals the batch gap-and-islands
+    sessionization EXACTLY, hash-checked against the same DuckDB oracle
+    as st_session_window."""
+    events = _sentinel_source(spark, sf_dir).select(
         "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), "event_id", "value"
     )
     result = events.groupBy("user_id").applyInPandasWithState(
@@ -536,8 +524,7 @@ def stateful_sessions_complete_stream(spark: SparkSession, sf_dir: str) -> DataF
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(result, "append")
-    shutil.rmtree(src_dir, ignore_errors=True)
+    out = _drain(result)
     return out.select(
         "user_id",
         F.date_format(F.col("session_start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -548,192 +535,153 @@ def stateful_sessions_complete_stream(spark: SparkSession, sf_dir: str) -> DataF
     ).orderBy("user_id", "session_start")
 
 
-def latest_committed_version(tbl_root: str):  # noqa: ANN201
-    """Highest committed version under a version-addressed table root:
-    ``(batch_id, path)`` of the max ``v_<batch_id>`` dir, or None. Only
-    dirs published by the atomic rename in ``make_upsert_sink`` exist
-    under these names, so "present" == "committed"."""
+def _versions(tbl_root: str) -> list[tuple[int, str]]:
+    """The committed ``(batch_id, path)`` pairs under a version-addressed
+    table root, ascending. Only the atomic rename in
+    ``_versioned_fold`` creates ``v_<batch_id>`` names, so "present" ==
+    "committed"."""
     if not os.path.isdir(tbl_root):
-        return None
-    best = None
-    for name in os.listdir(tbl_root):
-        if not name.startswith("v_"):
-            continue
-        try:
-            bid = int(name[2:])
-        except ValueError:
-            continue
-        if best is None or bid > best[0]:
-            best = (bid, os.path.join(tbl_root, name))
-    return best
+        return []
+    return sorted(
+        (int(name[2:]), os.path.join(tbl_root, name))
+        for name in os.listdir(tbl_root)
+        if name.startswith("v_") and name[2:].isdigit()
+    )
+
+
+def latest_committed_version(tbl_root: str):  # noqa: ANN201
+    """``(batch_id, path)`` of the highest committed version, or None."""
+    versions = _versions(tbl_root)
+    return versions[-1] if versions else None
 
 
 # Superseded versions kept after each publish (VERDICT r11 #3). N+1
 # dirs bound the root regardless of stream length; the N most recent
 # markers stay on disk so the common replay (latest batch re-delivered
 # after a crash) hits its own marker, and OLDER replays no-op via the
-# monotone-batch guard in the sinks (any committed version with
-# bid >= batch_id proves the batch was applied, because foreachBatch
-# only starts batch b+1 after batch b's checkpoint commit).
+# monotone-batch guard in ``_versioned_fold`` (any committed version
+# with bid >= batch_id proves the batch was applied, because
+# foreachBatch only starts batch b+1 after batch b's checkpoint commit).
 _RETAIN_VERSIONS = 3
 
 
 def prune_versions(tbl_root: str, keep_last: int = _RETAIN_VERSIONS) -> None:
-    """Keep-last-N retention for a version-addressed table root: remove
-    ``v_<bid>`` dirs with ``bid < max_committed - keep_last``. Runs
-    only AFTER a successful publish, never touches the current version
-    or the ``keep_last`` behind it, and tolerates concurrent pruners
-    (rmtree ignore_errors — losing a delete race is success)."""
-    cur = latest_committed_version(tbl_root)
-    if cur is None:
-        return
-    cutoff = cur[0] - keep_last
-    for name in os.listdir(tbl_root):
-        if not name.startswith("v_"):
-            continue
-        try:
-            bid = int(name[2:])
-        except ValueError:
-            continue
-        if bid < cutoff:
-            shutil.rmtree(os.path.join(tbl_root, name), ignore_errors=True)
+    """Keep-last-N retention: remove ``v_<bid>`` dirs with
+    ``bid < max_committed - keep_last``. Runs only AFTER a successful
+    publish, never touches the current version or the ``keep_last``
+    behind it, and tolerates concurrent pruners (losing a delete race
+    is success)."""
+    versions = _versions(tbl_root)
+    for bid, path in versions:
+        if bid < versions[-1][0] - keep_last:
+            shutil.rmtree(path, ignore_errors=True)
 
 
-def make_upsert_sink(tbl_root: str):  # noqa: ANN201
-    """The foreachBatch fold of ``foreachbatch_upsert_stream``, exposed
-    as a factory so tests can drive replay directly. foreachBatch's
-    contract is at-least-once per batch_id: on a retry after a
-    completed write but before the checkpoint commit, the same batch is
-    re-delivered — and this SUM/COUNT merge (unlike the idempotent KMV
-    k-min fold) would double-count it.
+def _versioned_fold(tbl_root: str, merge):  # noqa: ANN201
+    """Commit: the ``foreachBatch`` function of a fold sink whose batch
+    ``b`` publishes ``merge(batch_df, standing)`` as ``tbl_root/v_<b>``,
+    where ``standing`` is the latest committed version (None before
+    the first). foreachBatch is at-least-once per batch_id: a batch
+    re-delivered after a completed write but before the checkpoint
+    commit must not fold in twice.
 
-    Exactly-once is achieved by making the applied-batch marker and the
-    new table version the SAME filesystem object: each batch writes the
-    merged aggregate to a private ``.build_*`` dir, then publishes it
-    as ``tbl_root/v_<batch_id>`` with one atomic ``os.rename`` (the
-    ``_order_brand_pairs`` publication template, queries/graphq.py).
-    There is no table-write→marker-write window (VERDICT r10 #2): a
-    crash before the rename leaves only an orphaned build dir and the
-    retry re-merges from the previous version; a crash after it leaves
-    the version visible and the retry no-ops. A builder losing a
-    publish race discards its own build and defers to the committed
-    winner. The last ``_RETAIN_VERSIONS`` superseded versions are
-    retained as replay markers and older ones pruned after each
-    publish (the lakehouse VACUUM analogue, VERDICT r11 #3) — safe
-    because batch ids are monotone: any committed version with
-    ``bid >= batch_id`` proves that batch was applied, so a replay of
-    a PRUNED batch still no-ops on the newer marker.
-    tests/test_streaming.py pins replay of batch 0, a simulated
-    crash between the table write and the publication rename, and
-    replay-after-prune."""
+    - Replay guard: a committed version with ``bid >= b`` proves batch
+      ``b`` was applied (batch ids are monotone), so the batch no-ops,
+      even after its own version was pruned.
+    - Publish: the merge is written to a private ``.build_*`` dir, then
+      renamed to ``v_<b>`` in one atomic ``os.rename`` (the
+      ``_order_brand_pairs`` template, queries/graphq.py). Data and
+      applied-batch marker are one object, so a crash before the rename
+      leaves an orphaned build and the retry re-merges from the previous
+      version; a crash after it leaves the version and the retry no-ops.
+    - Race: a builder whose rename loses to a committed ``v_<b>``
+      discards its build and defers to the winner.
+    - After each publish the version is recorded (``WrittenParquet``,
+      so the next batch reads it without schema inference) and versions
+      older than ``_RETAIN_VERSIONS`` behind it are pruned.
 
+    The returned function's ``read_committed(spark)`` reads the current
+    version for the pipeline's driver and fails loudly, naming the
+    root, when the drain committed none (an empty source)."""
     written = WrittenParquet()
 
-    def upsert(batch_df, batch_id):  # noqa: ANN001
-        version_dir = os.path.join(tbl_root, f"v_{batch_id}")
+    def fold(batch_df, batch_id):  # noqa: ANN001
         prev = latest_committed_version(tbl_root)
         if prev is not None and prev[0] >= batch_id:
-            # Replay of an applied batch: its own marker, or ANY newer
-            # committed version (its own may have been pruned), proves
-            # the checkpoint-commit ordering already folded it in.
             return
-        part = batch_df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,6)")).alias("total_d"),
-        )
-        if prev is not None:
-            existing = written.read(batch_df.sparkSession, prev[1])
-            merged = existing.unionByName(part)
-        else:
-            merged = part
-        out = merged.groupBy("event_type").agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("total_d").alias("total_d"),
-        )
-        os.makedirs(tbl_root, exist_ok=True)
+        standing = None if prev is None else written.read(batch_df.sparkSession, prev[1])
+        out = merge(batch_df, standing)
+        version_dir = os.path.join(tbl_root, f"v_{batch_id}")
         build = os.path.join(tbl_root, f".build_{uuid.uuid4().hex[:12]}")
-        # Writes into a FRESH dir — the previous version being read
-        # stays intact, so no checkpoint detachment is needed.
+        os.makedirs(tbl_root, exist_ok=True)
         out.write.mode("overwrite").parquet(build)
         try:
-            os.rename(build, version_dir)  # THE commit: data+marker, atomic
+            os.rename(build, version_dir)
         except OSError:
             shutil.rmtree(build, ignore_errors=True)
             if os.path.exists(version_dir):
                 return  # lost a publish race; the committed version wins
             raise  # genuine failure: nothing published, retry is safe
         written.record(version_dir, out)
-        prune_versions(tbl_root)  # after commit only; keeps last N markers
+        prune_versions(tbl_root)
 
-    upsert.written = written
-    return upsert
+    def read_committed(spark: SparkSession) -> DataFrame:
+        current = latest_committed_version(tbl_root)
+        if current is None:
+            raise RuntimeError(
+                f"no committed version under {tbl_root}: the drained stream "
+                "produced zero batches"
+            )
+        return written.read(spark, current[1])
+
+    fold.read_committed = read_committed
+    return fold
+
+
+def make_upsert_sink(tbl_root: str):  # noqa: ANN201
+    """The SUM/COUNT fold of ``foreachbatch_upsert_stream`` on the
+    ``_versioned_fold`` commit: each batch's per-event_type partial
+    aggregate merges into the standing table. Unlike the top-k and KMV
+    folds this merge is not idempotent, so exactly-once rests on the
+    commit protocol alone."""
+
+    def merge(batch_df, standing):  # noqa: ANN001, ANN202
+        part = batch_df.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(20,6)")).alias("total_d"),
+        )
+        merged = part if standing is None else standing.unionByName(part)
+        return merged.groupBy("event_type").agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("total_d").alias("total_d"),
+        )
+
+    return _versioned_fold(tbl_root, merge)
 
 
 def foreachbatch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming → lake-table maintenance via ``foreachBatch``: the
-    events stream (split into multiple microbatches) incrementally
-    upserts a per-event_type aggregate table on disk — each batch
-    merges its PARTIAL aggregate into the standing table (read → union
-    → re-aggregate → atomic version publish), the exact
-    incremental-view shape of incremental_agg_maintenance driven by a
-    stream. Counts and DECIMAL sums combine associatively, so after
-    the drain the maintained table must equal the one-shot batch
-    aggregate, which the driver hash-checks. At 100 TB the sink is a
-    real MERGE INTO (Delta/Iceberg); the version-addressed parquet
-    publish of the tiny aggregate stands in with identical commit
-    semantics (see make_upsert_sink)."""
-    run_id = uuid.uuid4().hex[:12]
-    src_dir = _scratch(f"febu_src_{run_id}")
-    tbl_dir = _scratch(f"febu_tbl_{run_id}")
-
-    from sales_agent_graphdb_spark import catalog as _catalog
-
-    ev = _catalog.load_table(spark, sf_dir, "events")
-    # Split the source into 3 files => 3 microbatches with
-    # maxFilesPerTrigger=1: the upsert must be exercised as an UPDATE
-    # of existing keys, not just a first insert.
-    ev.repartition(3).write.mode("overwrite").parquet(src_dir)
-    batch_schema = written_schema(ev)
-
-    # Version-addressed root: each batch publishes v_<id> (data+marker
-    # in one atomic rename — see make_upsert_sink).
-    upsert = make_upsert_sink(tbl_dir)
-
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/*.parquet")
-    )
-    ckpt = _scratch(f"ckpt_febu_{run_id}")
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    current = latest_committed_version(tbl_dir)
-    # An empty source drains zero batches and commits nothing — fail
-    # with the table root named instead of an opaque TypeError on
-    # current[1] (ADVICE r11 #2).
-    assert current is not None, (
-        f"no committed version under {tbl_dir}: the drained stream "
-        "produced zero batches"
-    )
-    final = materialize(
-        upsert.written.read(spark, current[1])
-        .select(
-            "event_type",
-            "n_events",
-            F.col("total_d").cast("double").alias("total_value"),
+    events stream (3 microbatches) incrementally upserts a
+    per-event_type aggregate table on disk — the incremental-view shape
+    of incremental_agg_maintenance driven by a stream. Counts and
+    DECIMAL sums combine associatively, so after the drain the
+    maintained table must equal the one-shot batch aggregate, which the
+    driver hash-checks. At 100 TB the sink is a real MERGE INTO
+    (Delta/Iceberg); the version-addressed parquet publish of the tiny
+    aggregate stands in with identical commit semantics."""
+    with _run_dir("febu_tbl") as tbl_root:
+        upsert = make_upsert_sink(tbl_root)
+        _drain(_staged_events(spark, sf_dir), upsert)
+        return materialize(
+            upsert.read_committed(spark)
+            .select(
+                "event_type",
+                "n_events",
+                F.col("total_d").cast("double").alias("total_value"),
+            )
+            .orderBy("event_type"),
+            eager=True,
         )
-        .orderBy("event_type"),
-        eager=True,
-    )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(tbl_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -818,8 +766,7 @@ def user_profile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "customer 360" table. Hash-checked against the plain batch GROUP BY
     oracle. State is O(users)·O(types) and sharded by user hash across
     the state store at scale."""
-    src_dir, stream = _sentinel_source(spark, sf_dir)
-    events = stream.select(
+    events = _sentinel_source(spark, sf_dir).select(
         "user_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
         "event_id",
@@ -833,9 +780,7 @@ def user_profile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(result, "append")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out.orderBy("user_id")
+    return _drain(result).orderBy("user_id")
 
 
 def _protobuf_available() -> bool:
@@ -934,19 +879,16 @@ def user_profile_transform_with_state(
     prev_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
-    src_dir = None
     # Everything after reading prev_provider sits inside the try: a
     # failure in the conf set, the sentinel-source build, or the run
-    # must not leak the RocksDB override (or the scratch dir) into the
-    # rest of the session.
+    # must not leak the RocksDB override into the rest of the session.
     try:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-        src_dir, stream = _sentinel_source(spark, sf_dir)
-        events = stream.select(
+        events = _sentinel_source(spark, sf_dir).select(
             "user_id",
             F.unix_micros(F.col("ts")).alias("ts_us"),
             "event_id",
@@ -959,10 +901,8 @@ def user_profile_transform_with_state(
             outputMode="append",
             timeMode="none",
         )
-        out = _run_to_memory(result, "append")
+        out = _drain(result)
     finally:
-        if src_dir is not None:
-            shutil.rmtree(src_dir, ignore_errors=True)
         if prev_provider is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
@@ -982,10 +922,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     join+agg exactly. At 100 TB/day the dim side stays broadcast (or
     becomes a slowly-refreshed Delta snapshot) and the stream never
     shuffles for the join — only for the low-cardinality agg."""
-    from sales_agent_graphdb_spark import catalog as _catalog
-
     events = stream_events(spark, sf_dir)
-    dim = _catalog.load_table(spark, sf_dir, "customer").select(
+    dim = catalog.load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     enriched = events.join(F.broadcast(dim), "user_id")
@@ -995,7 +933,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    out = _run_to_memory(agg, "complete")
+    out = _drain(agg, mode="complete")
     return out.select(
         F.col("c_mktsegment").alias("segment"),
         "event_type",
@@ -1072,7 +1010,7 @@ def ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(result, "append")
+    out = _drain(result)
     return (
         out.groupBy("user_id")
         .agg(
@@ -1106,93 +1044,68 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sales_agent_graphdb_spark.queries.temporal import scd2_history
 
-    run_id = uuid.uuid4().hex[:12]
-    src_dir = _scratch(f"scd2e_src_{run_id}")
-    out_dir = _scratch(f"scd2e_out_{run_id}")
-
-    from sales_agent_graphdb_spark import catalog as _catalog
-
-    ev = _catalog.load_table(spark, sf_dir, "events")
-    ev.repartition(3).write.mode("overwrite").parquet(src_dir)
-    batch_schema = written_schema(ev)
-    landed = os.path.join(out_dir, "*")  # every batch's dir, read back at the end
+    hist = materialize(scd2_history(spark, sf_dir), eager=True)
     written = WrittenParquet()
 
-    hist = materialize(scd2_history(spark, sf_dir), eager=True)
+    with _run_dir("scd2e_out") as out_dir:
+        landed = os.path.join(out_dir, "*")  # every batch's dir
 
-    def enrich(batch_df, batch_id):  # noqa: ANN001
-        side0 = hist.select(
-            "user_id",
-            "ts",
-            F.lit(0).alias("side"),
-            "seg",
-            F.lit(None).cast("long").alias("event_id"),
-            F.lit(None).cast("string").alias("event_type"),
-            F.lit(None).cast("double").alias("value"),
-        )
-        side1 = batch_df.select(
-            "user_id",
-            "ts",
-            F.lit(1).alias("side"),
-            F.lit(None).cast("string").alias("seg"),
-            "event_id",
-            "event_type",
-            "value",
-        )
-        w = (
-            W.partitionBy("user_id")
-            .orderBy("ts", "side", "event_id")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        enriched = (
-            side0.unionByName(side1)
-            .select(
-                "side",
+        def enrich(batch_df, batch_id):  # noqa: ANN001
+            side0 = hist.select(
+                "user_id",
+                "ts",
+                F.lit(0).alias("side"),
+                "seg",
+                F.lit(None).cast("long").alias("event_id"),
+                F.lit(None).cast("string").alias("event_type"),
+                F.lit(None).cast("double").alias("value"),
+            )
+            side1 = batch_df.select(
+                "user_id",
+                "ts",
+                F.lit(1).alias("side"),
+                F.lit(None).cast("string").alias("seg"),
+                "event_id",
                 "event_type",
                 "value",
-                F.last("seg", ignorenulls=True).over(w).alias("seg_at"),
             )
-            .filter(F.col("side") == 1)
-            .select("seg_at", "event_type", "value")
-        )
-        # Idempotent per-batch landing: overwrite of this batch's own
-        # partition dir; an at-least-once redelivery rewrites the same
-        # bytes instead of appending duplicates.
-        enriched.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        written.record(landed, enriched)
+            w = (
+                W.partitionBy("user_id")
+                .orderBy("ts", "side", "event_id")
+                .rowsBetween(W.unboundedPreceding, W.currentRow)
+            )
+            enriched = (
+                side0.unionByName(side1)
+                .select(
+                    "side",
+                    "event_type",
+                    "value",
+                    F.last("seg", ignorenulls=True).over(w).alias("seg_at"),
+                )
+                .filter(F.col("side") == 1)
+                .select("seg_at", "event_type", "value")
+            )
+            # Idempotent per-batch landing: overwrite of this batch's own
+            # partition dir; an at-least-once redelivery rewrites the same
+            # bytes instead of appending duplicates.
+            enriched.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch_id={batch_id}")
+            )
+            written.record(landed, enriched)
 
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/*.parquet")
-    )
-    ckpt = _scratch(f"ckpt_scd2e_{run_id}")
-    q = (
-        stream.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    out = (
-        written.read(spark, landed)
-        .groupBy(F.col("seg_at").alias("segment"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,6)"))
-            .cast("double")
-            .alias("total_value"),
+        _drain(_staged_events(spark, sf_dir), enrich)
+        out = (
+            written.read(spark, landed)
+            .groupBy(F.col("seg_at").alias("segment"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(20,6)"))
+                .cast("double")
+                .alias("total_value"),
+            )
+            .orderBy("segment", "event_type")
         )
-        .orderBy("segment", "event_type")
-    )
-    out = spark.createDataFrame(out.collect(), schema=out.schema)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        return spark.createDataFrame(out.collect(), schema=out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1223,183 +1136,91 @@ def _kmv_h(col):  # noqa: ANN001, ANN202
     )
 
 
-def make_kmv_fold_sink(tbl_dir: str, applied_dir: str):  # noqa: ANN201
-    """The foreachBatch fold of ``kmv_sketch_stream``, exposed as a
-    factory so tests can drive replay directly. This keeps the simpler
-    two-step protocol (table overwrite, THEN marker): a crash between
-    the two re-applies the batch on retry, which is HARMLESS here —
-    the union+distinct+k-min fold is idempotent, unlike the SUM/COUNT
-    merge in ``make_upsert_sink``, which therefore publishes data and
-    marker in one atomic rename. ``applied_dir`` MUST live outside
-    ``tbl_dir`` (each batch's overwrite deletes tbl_dir wholesale —
-    ADVICE r08; tests/test_streaming.py pins the class)."""
+def make_kmv_fold_sink(tbl_root: str):  # noqa: ANN201
+    """The k-min-values fold of ``kmv_sketch_stream`` on the
+    ``_versioned_fold`` commit: each batch's k-row sketch of hashed
+    user ids merges with the standing sketch (union → distinct →
+    k-min). The fold is idempotent, so a replay is safe by algebra as
+    well as by the version marker."""
 
-    written = WrittenParquet()
+    def kmin(hashes: DataFrame) -> DataFrame:
+        return hashes.select("h").distinct().orderBy("h").limit(_KMV_STREAM_K)
 
-    def fold(batch_df, batch_id):  # noqa: ANN001
-        marker = os.path.join(applied_dir, str(batch_id))
-        if os.path.exists(marker):
-            return  # idempotent replay
-        batch_sk = (
-            batch_df.select(_kmv_h(F.col("user_id")).alias("h"))
-            .distinct()
-            .orderBy("h")
-            .limit(_KMV_STREAM_K)
-        )
-        if os.path.exists(os.path.join(tbl_dir, "_SUCCESS")):
-            existing = written.read(batch_df.sparkSession, tbl_dir)
-            merged = existing.unionByName(batch_sk)
-        else:
-            merged = batch_sk
-        # Eager: detach from the table being overwritten.
-        out = materialize(
-            merged.select("h")
-            .distinct()
-            .orderBy("h")
-            .limit(_KMV_STREAM_K),
-            eager=True,
-        )
-        out.write.mode("overwrite").parquet(tbl_dir)
-        written.record(tbl_dir, out)
-        os.makedirs(applied_dir, exist_ok=True)
-        open(marker, "w").close()
+    def merge(batch_df, standing):  # noqa: ANN001, ANN202
+        sketch = kmin(batch_df.select(_kmv_h(F.col("user_id")).alias("h")))
+        return sketch if standing is None else kmin(standing.unionByName(sketch))
 
-    fold.written = written
-    return fold
+    return _versioned_fold(tbl_root, merge)
 
 
 def kmv_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch KMV maintenance: 3 microbatches each build their
-    own k-row sketch and FOLD it into the standing sketch table
-    (read → union → distinct → k-min → overwrite, with the applied-
-    batch idempotency markers of foreachbatch_upsert_stream). KMV
+    own k-row sketch and FOLD it into the standing sketch table. KMV
     mergeability (proved on data by agg_kmv_incremental) guarantees
     the drained state equals the sketch built directly from the full
     corpus — which the DuckDB oracle rebuilds, so the driver
     hash-checks the entire streaming fold. State is k rows REGARDLESS
     of stream length: at 100 TB this is the always-on distinct /
     overlap dashboard with O(k) memory per (segment, window)."""
-    run_id = uuid.uuid4().hex[:12]
-    src_dir = _scratch(f"kmv_src_{run_id}")
-    tbl_dir = _scratch(f"kmv_tbl_{run_id}")
-    # Idempotency markers live BESIDE the table, not inside it: each
-    # batch's overwrite deletes tbl_dir wholesale, so a marker stored
-    # within it would survive only for the latest batch and replay
-    # protection would be vacuous (ADVICE r08) — correct results would
-    # then rest on the KMV fold's idempotence alone instead of the
-    # exactly-once contract this query demonstrates.
-    applied_dir = _scratch(f"kmv_applied_{run_id}")
-
-    from sales_agent_graphdb_spark import catalog as _catalog
-
-    ev = _catalog.load_table(spark, sf_dir, "events")
-    staged = ev.select("user_id")
-    staged.repartition(3).write.mode("overwrite").parquet(src_dir)
-    batch_schema = written_schema(staged)
-
-    fold = make_kmv_fold_sink(tbl_dir, applied_dir)
-
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/*.parquet")
-    )
-    ckpt = _scratch(f"ckpt_kmv_{run_id}")
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sk = fold.written.read(spark, tbl_dir)
-    est = sk.agg(F.count(F.lit(1)).alias("m"), F.max("h").alias("kth"))
-    exact = ev.agg(F.countDistinct("user_id").alias("exact_users"))
-    union_est = F.when(
-        F.col("m") < _KMV_STREAM_K, F.col("m").cast("double")
-    ).otherwise(F.lit(float(_KMV_STREAM_K - 1)) / F.col("kth"))
-    final = materialize(
-        est.crossJoin(F.broadcast(exact))
-        .select(
-            F.lit(_KMV_STREAM_K).alias("k"),
-            "m",
-            "exact_users",
-            F.round(union_est, 6).alias("union_est"),
-        ),
-        eager=True,
-    )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(tbl_dir, ignore_errors=True)
-    shutil.rmtree(applied_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return final
+    with _run_dir("kmv_tbl") as tbl_root:
+        fold = make_kmv_fold_sink(tbl_root)
+        _drain(_staged_events(spark, sf_dir), fold)
+        est = fold.read_committed(spark).agg(
+            F.count(F.lit(1)).alias("m"), F.max("h").alias("kth")
+        )
+        exact = catalog.load_table(spark, sf_dir, "events").agg(
+            F.countDistinct("user_id").alias("exact_users")
+        )
+        union_est = F.when(
+            F.col("m") < _KMV_STREAM_K, F.col("m").cast("double")
+        ).otherwise(F.lit(float(_KMV_STREAM_K - 1)) / F.col("kth"))
+        return materialize(
+            est.crossJoin(F.broadcast(exact)).select(
+                F.lit(_KMV_STREAM_K).alias("k"),
+                "m",
+                "exact_users",
+                F.round(union_est, 6).alias("union_est"),
+            ),
+            eager=True,
+        )
 
 
 _TOPK_STREAM_K = 3  # maintained leaderboard depth per event_type
 
 
 def make_topk_fold_sink(tbl_root: str):  # noqa: ANN201
-    """foreachBatch fold maintaining the EXACT top-k rows per
-    event_type — the streaming leaderboard: each batch ranks itself,
-    keeps its per-type top-k, merges with the standing k rows, and
-    re-ranks (top-k selection is a semilattice: topk(topk(A) ∪
-    topk(B)) = topk(A ∪ B), proved in the algebra the agg_kmv family
-    uses). State is k·|types| rows regardless of stream length.
-
-    Publication reuses make_upsert_sink's version-addressed atomic
-    commit (second consumer of latest_committed_version): data and
-    applied-batch marker are ONE directory renamed into place. This
-    fold is additionally IDEMPOTENT (re-merging already-folded rows
-    is a no-op under distinct+rank), so replay is doubly safe —
-    by algebra and by marker."""
+    """The EXACT per-event_type top-k fold on the ``_versioned_fold``
+    commit — the streaming leaderboard: each batch ranks itself, keeps
+    its per-type top-k, merges with the standing k rows, and re-ranks
+    (top-k selection is a semilattice: topk(topk(A) ∪ topk(B)) =
+    topk(A ∪ B), proved in the algebra the agg_kmv family uses). State
+    is k·|types| rows regardless of stream length. The fold is also
+    idempotent (re-merging folded rows is a no-op under distinct+rank),
+    so replay is safe by algebra as well as by the version marker."""
     from pyspark.sql.window import Window as W
 
     w = W.partitionBy("event_type").orderBy(F.col("v").desc(), "event_id")
 
-    written = WrittenParquet()
-
-    def fold(batch_df, batch_id):  # noqa: ANN001
-        version_dir = os.path.join(tbl_root, f"v_{batch_id}")
-        prev = latest_committed_version(tbl_root)
-        if prev is not None and prev[0] >= batch_id:
-            return  # applied: own marker or a newer one (post-prune replay)
-        part = batch_df.select(
-            "event_type",
-            "event_id",
-            F.col("value").cast("decimal(18,2)").alias("v"),
-        )
-        topb = (
-            part.withColumn("rk", F.row_number().over(w))
+    def top(rows: DataFrame) -> DataFrame:
+        return (
+            rows.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= _TOPK_STREAM_K)
             .drop("rk")
         )
-        if prev is not None:
-            standing = written.read(batch_df.sparkSession, prev[1])
-            merged = standing.unionByName(topb).dropDuplicates(
-                ["event_type", "event_id"]
+
+    def merge(batch_df, standing):  # noqa: ANN001, ANN202
+        topb = top(
+            batch_df.select(
+                "event_type",
+                "event_id",
+                F.col("value").cast("decimal(18,2)").alias("v"),
             )
-        else:
-            merged = topb
-        out = (
-            merged.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _TOPK_STREAM_K)
-            .drop("rk")
         )
-        os.makedirs(tbl_root, exist_ok=True)
-        build = os.path.join(tbl_root, f".build_{uuid.uuid4().hex[:12]}")
-        out.write.mode("overwrite").parquet(build)
-        try:
-            os.rename(build, version_dir)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)
-            if os.path.exists(version_dir):
-                return
-            raise
-        written.record(version_dir, out)
-        prune_versions(tbl_root)
+        if standing is not None:
+            topb = standing.unionByName(topb).dropDuplicates(["event_type", "event_id"])
+        return top(topb)
 
-    fold.written = written
-    return fold
+    return _versioned_fold(tbl_root, merge)
 
 
 def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1408,54 +1229,22 @@ def topk_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     values table; after the drain the table must equal the one-shot
     batch top-k, which the driver hash-checks. At 100 TB this is the
     always-on 'largest transactions' dashboard — per-batch state is
-    k·|types| rows, the merge is map-side trivial, and the version
-    publish is the same atomic-rename commit as the SUM/COUNT upsert."""
-    run_id = uuid.uuid4().hex[:12]
-    src_dir = _scratch(f"topk_src_{run_id}")
-    tbl_root = _scratch(f"topk_tbl_{run_id}")
-
-    from sales_agent_graphdb_spark import catalog as _catalog
-
-    ev = _catalog.load_table(spark, sf_dir, "events")
-    staged = ev.select("event_id", "event_type", "value")
-    staged.repartition(3).write.mode("overwrite").parquet(src_dir)
-    batch_schema = written_schema(staged)
-
-    fold = make_topk_fold_sink(tbl_root)
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/*.parquet")
-    )
-    ckpt = _scratch(f"ckpt_topk_{run_id}")
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    k·|types| rows and the merge is map-side trivial."""
     from pyspark.sql.window import Window as W
 
-    current = latest_committed_version(tbl_root)
-    assert current is not None, (
-        f"no committed version under {tbl_root}: the drained stream "
-        "produced zero batches"
-    )
     w = W.partitionBy("event_type").orderBy(F.col("v").desc(), "event_id")
-    final = materialize(
-        fold.written.read(spark, current[1])
-        .withColumn("rk", F.row_number().over(w))
-        .select(
-            "event_type",
-            F.col("rk").cast("bigint").alias("rank"),
-            "event_id",
-            F.col("v").cast("double").alias("value"),
+    with _run_dir("topk_tbl") as tbl_root:
+        fold = make_topk_fold_sink(tbl_root)
+        _drain(_staged_events(spark, sf_dir), fold)
+        return materialize(
+            fold.read_committed(spark)
+            .withColumn("rk", F.row_number().over(w))
+            .select(
+                "event_type",
+                F.col("rk").cast("bigint").alias("rank"),
+                "event_id",
+                F.col("v").cast("double").alias("value"),
+            )
+            .orderBy("event_type", "rank"),
+            eager=True,
         )
-        .orderBy("event_type", "rank"),
-        eager=True,
-    )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(tbl_root, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return final

@@ -286,20 +286,29 @@ if __name__ == "__main__":
 # ---------------------------------------------------------------------------
 
 
-def test_upsert_publish_race_single_winner(spark, tmp_path):
+def _one_batch(spark):
+    return spark.createDataFrame(
+        [(1, 7, "click", 1.0), (2, 8, "buy", 2.0), (3, 7, "click", 3.0)],
+        "event_id long, user_id long, event_type string, value double",
+    )
+
+
+@pytest.mark.parametrize(
+    "factory", ["make_upsert_sink", "make_topk_fold_sink", "make_kmv_fold_sink"]
+)
+def test_upsert_publish_race_single_winner(spark, tmp_path, factory):
     """Two sessions delivering the SAME batch concurrently (the
     at-least-once overlap case): the version-addressed rename makes
     exactly one publish win; the loser discards its build and defers.
-    The table must count the batch ONCE and the root must hold exactly
-    one version dir and no orphaned .build_* dirs."""
+    Every fold sink shares the commit, so for each the table must hold
+    the batch folded ONCE (equal to a single delivery in a fresh root)
+    and the root exactly one version dir and no orphaned .build_* dirs."""
     import threading
 
+    make = getattr(pipelines, factory)
     root = str(tmp_path / "tbl")
-    sink = pipelines.make_upsert_sink(root)
-    batch = spark.createDataFrame(
-        [("click", 1.0), ("buy", 2.0), ("click", 3.0)],
-        "event_type string, value double",
-    )
+    sink = make(root)
+    batch = _one_batch(spark)
     errs = []
 
     def run():
@@ -316,8 +325,13 @@ def test_upsert_publish_race_single_winner(spark, tmp_path):
     assert not errs, errs
     names = sorted(os.listdir(root))
     assert names == ["v_0"], names  # one winner, zero orphaned builds
-    rows = {
-        r.event_type: (r.n_events, float(r.total_d))
-        for r in spark.read.parquet(os.path.join(root, "v_0")).collect()
-    }
-    assert rows == {"click": (2, 4.0), "buy": (1, 2.0)}
+    clean = str(tmp_path / "clean")
+    make(clean)(batch, 0)
+
+    def rows(r):
+        return sorted(map(tuple, spark.read.parquet(os.path.join(r, "v_0")).collect()))
+
+    assert rows(root) == rows(clean)
+    if factory == "make_upsert_sink":
+        got = {r[0]: (r[1], float(r[2])) for r in rows(root)}
+        assert got == {"click": (2, 4.0), "buy": (1, 2.0)}

@@ -173,7 +173,11 @@ def test_cosine_to_is_bit_identical_to_cosine(spark):
 
 # Warm jobs per call at sf0.001 (8 shuffle partitions): each is one
 # scoring job; the index, the query vector and the schemas are cached.
-_WARM_JOB_BUDGET = {"v1_knn_cosine_top5": 1, "ann_ivf_pruned_topk": 1}
+_WARM_JOB_BUDGET = {
+    "v1_knn_cosine_top5": 1,
+    "ann_ivf_pruned_topk": 1,
+    "ann_ivf_pruned_portable": 1,
+}
 
 
 @pytest.mark.parametrize("name", sorted(_WARM_JOB_BUDGET))

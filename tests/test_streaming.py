@@ -186,10 +186,26 @@ def _kmv_batches(spark):
     ]
 
 
+def _fold_batches(spark):
+    """Batches carrying every column any fold sink reads."""
+    return [
+        spark.createDataFrame(
+            [
+                (i * 10 + j, (i * 3 + j) % 7, t, v + i)
+                for j, (t, v) in enumerate(
+                    [("click", 1.5), ("click", 2.5), ("buy", 10.0)]
+                )
+            ],
+            "event_id long, user_id long, event_type string, value double",
+        )
+        for i in range(3)
+    ]
+
+
 import pytest
 
 
-def _upsert_current(spark, tbl_root):
+def _current_rows(spark, tbl_root):
     return sorted(
         map(
             tuple,
@@ -201,24 +217,26 @@ def _upsert_current(spark, tbl_root):
 
 
 def test_kmv_markers_survive_replay(spark, tmp_path):
+    """The KMV fold's version dirs are its applied-batch markers: (a)
+    every batch's marker survives the sink's own writes (the class bug
+    left only the latest one), and (b) replaying an EARLIER batch (id
+    0 — the case a latest-only marker could never protect) is a no-op
+    that publishes nothing."""
     import os
 
-    tbl_dir = str(tmp_path / "tbl")
-    applied_dir = str(tmp_path / "applied")
-    sink = pipelines.make_kmv_fold_sink(tbl_dir, applied_dir)
+    tbl_root = str(tmp_path / "tbl")
+    sink = pipelines.make_kmv_fold_sink(tbl_root)
     batches = _kmv_batches(spark)
     for i, b in enumerate(batches):
         sink(b, i)
-    # (a) every marker survived the sink's own overwrites — the class bug
-    # left only the latest one.
-    markers = sorted(os.listdir(applied_dir))
-    assert markers == ["0", "1", "2"], markers
-    before = sorted(map(tuple, spark.read.parquet(tbl_dir).collect()))
-    # (b) replaying an EARLIER batch (id 0 — the case the latest-only
-    # marker could never protect) is a no-op.
+    versions = sorted(n for n in os.listdir(tbl_root) if n.startswith("v_"))
+    assert versions == ["v_0", "v_1", "v_2"], versions
+    before = _current_rows(spark, tbl_root)
     sink(batches[0], 0)
-    after = sorted(map(tuple, spark.read.parquet(tbl_dir).collect()))
-    assert after == before
+    assert _current_rows(spark, tbl_root) == before
+    assert sorted(
+        n for n in os.listdir(tbl_root) if n.startswith("v_")
+    ) == versions
 
 
 def test_upsert_versions_are_markers_and_replay_noops(spark, tmp_path):
@@ -236,42 +254,35 @@ def test_upsert_versions_are_markers_and_replay_noops(spark, tmp_path):
         sink(b, i)
     versions = sorted(n for n in os.listdir(tbl_root) if n.startswith("v_"))
     assert versions == ["v_0", "v_1", "v_2"], versions
-    before = _upsert_current(spark, tbl_root)
+    before = _current_rows(spark, tbl_root)
     sink(batches[0], 0)
-    assert _upsert_current(spark, tbl_root) == before
+    assert _current_rows(spark, tbl_root) == before
     assert sorted(
         n for n in os.listdir(tbl_root) if n.startswith("v_")
     ) == versions
 
 
+@pytest.mark.parametrize(
+    "factory", ["make_upsert_sink", "make_topk_fold_sink", "make_kmv_fold_sink"]
+)
 def test_upsert_crash_between_write_and_publish_no_double_count(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, factory
 ):
     """VERDICT r10 #2: simulate a crash in the old vulnerable window —
     after the batch's table data is fully written but before its
     marker commits. With the atomic-rename protocol the publication IS
     the marker, so the failed attempt leaves nothing visible and the
-    retry re-merges from the PREVIOUS version: the non-idempotent
-    SUM/COUNT fold must not double-count the batch."""
+    retry re-merges from the PREVIOUS version: after the retry every
+    fold sink's current version must equal a clean two-batch run in a
+    fresh root (for the non-idempotent SUM/COUNT fold, a double count
+    would break that)."""
     import os
 
+    make = getattr(pipelines, factory)
     tbl_root = str(tmp_path / "tbl")
-    sink = pipelines.make_upsert_sink(tbl_root)
-    batches = _febu_batches(spark)
+    sink = make(tbl_root)
+    batches = _fold_batches(spark)
     sink(batches[0], 0)
-    expected_once = sorted(
-        map(
-            tuple,
-            batches[0]
-            .unionByName(batches[1])
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(20,6)")).alias("total_d"),
-            )
-            .collect(),
-        )
-    )
 
     real_rename = os.rename
 
@@ -287,9 +298,24 @@ def test_upsert_crash_between_write_and_publish_no_double_count(
     # Nothing was published: v_0 is still current, no v_1 marker.
     names = sorted(n for n in os.listdir(tbl_root) if n.startswith("v_"))
     assert names == ["v_0"], names
-    # foreachBatch redelivers batch 1; the retry must count it ONCE.
+    # foreachBatch redelivers batch 1; the retry must fold it ONCE.
     sink(batches[1], 1)
-    assert _upsert_current(spark, tbl_root) == expected_once
+    clean_root = str(tmp_path / "clean")
+    clean = make(clean_root)
+    clean(batches[0], 0)
+    clean(batches[1], 1)
+    assert _current_rows(spark, tbl_root) == _current_rows(spark, clean_root)
+    if factory == "make_upsert_sink":
+        once = (
+            batches[0]
+            .unionByName(batches[1])
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(20,6)")).alias("total_d"),
+            )
+        )
+        assert _current_rows(spark, tbl_root) == sorted(map(tuple, once.collect()))
 
 
 def test_no_foreachbatch_sink_keeps_state_in_its_output_dir():
@@ -335,10 +361,10 @@ def test_upsert_retention_bounds_versions_and_pruned_replay_noops(
         key=lambda n: int(n[2:]),
     )
     assert names == [f"v_{i}" for i in range(9 - keep, 10)], names
-    before = _upsert_current(spark, tbl_root)
+    before = _current_rows(spark, tbl_root)
     # Batch 0's own marker is gone; v_9 proves it was applied.
     sink(batch, 0)
-    assert _upsert_current(spark, tbl_root) == before
+    assert _current_rows(spark, tbl_root) == before
     assert sorted(
         (n for n in os.listdir(tbl_root) if n.startswith("v_")),
         key=lambda n: int(n[2:]),
@@ -390,3 +416,39 @@ def test_topk_retention_bounded_and_pruned_replay_noops(spark, tmp_path):
     # leaderboard must equal the one-shot top-k of all 10 batches.
     top_vals = sorted((float(r[2]) for r in rows_before), reverse=True)
     assert top_vals == [94.0, 93.0, 92.0][: len(top_vals)], top_vals
+
+
+@pytest.mark.parametrize("sink", ["foreachBatch", "memory"])
+def test_failed_drain_leaves_no_checkpoint_stream_or_view(spark, sink):
+    """A run that fails in batch 0 must re-raise from ``_drain`` and
+    leave nothing behind: no checkpoint dir under the streaming scratch
+    root, no active stream and no memory-sink view."""
+    import os
+
+    root = pipelines._scratch("")
+
+    def checkpoints():
+        if not os.path.isdir(root):
+            return set()
+        return {n for n in os.listdir(root) if n.startswith("ckpt_")}
+
+    before = checkpoints()
+    views = {t.name for t in spark.catalog.listTables()}
+    stream = pipelines._staged_events(spark, SF)
+    if sink == "foreachBatch":
+
+        def fail(batch_df, batch_id):  # noqa: ANN001
+            raise RuntimeError(f"sink failed in batch {batch_id}")
+
+        with pytest.raises(Exception, match="sink failed in batch 0"):
+            pipelines._drain(stream, fail)
+    else:
+        failing = stream.select(
+            "event_id",
+            F.assert_true(F.col("event_id") < 0, "row failed in batch 0").alias("ok"),
+        )
+        with pytest.raises(Exception, match="row failed in batch 0"):
+            pipelines._drain(failing)
+    assert checkpoints() <= before
+    assert spark.streams.active == []
+    assert {t.name for t in spark.catalog.listTables()} <= views
