@@ -191,10 +191,6 @@ def normalize_events_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 # ---------------------------------------------------------------------------
 # Reference-shaped derived views (FIXTURES.md §2)
 # ---------------------------------------------------------------------------

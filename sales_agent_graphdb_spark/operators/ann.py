@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark.catalog import read_parquet
-from sales_agent_graphdb_spark.operators.similarity import cosine, cosine_to, dot, lit_vector
+from sales_agent_graphdb_spark.operators.similarity import cosine, dot, knn, lit_vector
 
 SEED = 42
 
@@ -130,11 +130,19 @@ def hyperplane_lsh_topk(
     for t in range(n_tables):
         cond = _bucket_col(v, planes[t]) == F.lit(q_buckets[t])
         match_any = cond if match_any is None else (match_any | cond)
-    candidates = embeddings.filter(match_any)
-    scored = candidates.select(
-        F.col(id_col), cosine_to(v, query_vec).alias("sim")
+    return knn(embeddings, query_vec, k, id_col, vec_col, where=match_any)
+
+
+def _argmax_cell(v: Column, centroids: np.ndarray) -> Column:
+    """The argmax-dot centroid index: array_max over struct(dot, -i)
+    takes the max dot, ties to the lowest index."""
+    scores = F.array(
+        *[
+            F.struct(dot(v, lit_vector(c)).alias("s"), F.lit(-i).alias("negi"))
+            for i, c in enumerate(centroids)
+        ]
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return -F.array_max(scores)["negi"]
 
 
 def ivf_assign(
@@ -145,17 +153,7 @@ def ivf_assign(
     """Add a ``cell`` column = argmax-dot centroid (ties → lowest id).
     One codegen'd projection; at ingest time this is the partition
     column writers cluster by."""
-    v = F.col(vec_col)
-    scores = F.array(
-        *[
-            F.struct(
-                dot(v, lit_vector(c)).alias("s"), F.lit(-i).alias("negi")
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    # array_max on struct(s, negi): max dot, ties to the lowest index.
-    return embeddings.withColumn("cell", -F.array_max(scores)["negi"])
+    return embeddings.withColumn("cell", _argmax_cell(F.col(vec_col), centroids))
 
 
 def ivf_topk(
@@ -174,10 +172,9 @@ def ivf_topk(
     cents = _ivf_centroids(embeddings, n_cells, id_col, vec_col)
     probe = _probe_cells(cents, query_vec, n_probe)
     assigned = ivf_assign(embeddings, cents, vec_col)
-    scored = assigned.filter(F.col("cell").isin(probe)).select(
-        F.col(id_col), cosine_to(F.col(vec_col), query_vec).alias("sim")
+    return knn(
+        assigned, query_vec, k, id_col, vec_col, where=F.col("cell").isin(probe)
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
 
 def _ivf_centroids(
@@ -259,19 +256,9 @@ def ivf_assign_per_label(
     label has no centroid set (unseen label) get cell NULL — callers
     partition by (label, cell), so they surface as an explicit NULL
     partition rather than silently joining a wrong cell."""
-    v = F.col(vec_col)
     expr = None
     for lbl in sorted(cents_by_label):
-        cents = cents_by_label[lbl]
-        scores = F.array(
-            *[
-                F.struct(
-                    dot(v, lit_vector(c)).alias("s"), F.lit(-i).alias("negi")
-                )
-                for i, c in enumerate(cents)
-            ]
-        )
-        cell = (-F.array_max(scores)["negi"]).cast("int")
+        cell = _argmax_cell(F.col(vec_col), cents_by_label[lbl]).cast("int")
         cond = F.col(label_col) == int(lbl)
         expr = F.when(cond, cell) if expr is None else expr.when(cond, cell)
     return embeddings.withColumn("cell", expr)
@@ -422,10 +409,7 @@ def ivf_pruned_topk(
     the scale path ``ivf_topk`` only simulated."""
     probe = _probe_cells(centroids, query_vec, n_probe)
     idx = read_parquet(spark, index_path)
-    scored = idx.filter(F.col("cell").isin(probe)).select(
-        F.col(id_col), cosine_to(F.col(vec_col), query_vec).alias("sim")
-    )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return knn(idx, query_vec, k, id_col, vec_col, where=F.col("cell").isin(probe))
 
 
 def write_lsh_index(
@@ -477,10 +461,7 @@ def lsh_pruned_topk(
         probe = cond if probe is None else (probe | cond)
     cand_ids = idx.filter(probe).select(F.col("id").alias(id_col)).distinct()
     cand = embeddings.join(F.broadcast(cand_ids), id_col)
-    scored = cand.select(
-        F.col(id_col), cosine_to(F.col(vec_col), query_vec).alias("sim")
-    )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return knn(cand, query_vec, k, id_col, vec_col)
 
 
 def hyperplane_dedup_pairs(

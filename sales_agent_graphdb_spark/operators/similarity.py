@@ -77,13 +77,23 @@ def knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_ids: Sequence[int] | None = None,
+    where: Column | None = None,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """V1 — exact cosine top-k (reference retriever k=5,
     db_service.py:336-358). One scan, map-side score, global top-k via
     sort+limit (TakeOrderedAndProject: each partition keeps k, driver
-    merges — no full sort, no shuffle of the scored set)."""
+    merges — no full sort, no shuffle of the scored set).
+
+    The one exact top-k every approximate path is checked against:
+    ``where`` filters before scoring (a pre-filter, so only survivors
+    are scored and the predicate reaches the scan), ``carry`` columns
+    ride between ``id_col`` and ``sim``; ties break to the lowest id."""
+    if where is not None:
+        embeddings = embeddings.filter(where)
     scored = embeddings.select(
         F.col(id_col),
+        *carry,
         cosine_to(F.col(vec_col), query_vec).alias("sim"),
     )
     if exclude_ids:

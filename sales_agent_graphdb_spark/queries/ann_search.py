@@ -1,7 +1,8 @@
 """Similarity-search queries: brute-force baseline is
-`v1_knn_cosine_top5` (vector.py); these are the ANN scale paths.
-Rows-only for the driver (approximation is seed-dependent); pytest
-pins recall against the exact top-k.
+`v1_knn_cosine_top5` (vector.py); these are the ANN scale paths. Each
+is oracle-checked against the exact top-k (``similarity.knn``): either
+its rows equal the exact top-k, or it returns a recall verdict row
+(``vector._recall_verdict``) whose exact ids the oracle hashes.
 """
 
 from __future__ import annotations
@@ -17,8 +18,16 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.operators import ann
+from sales_agent_graphdb_spark.operators.similarity import knn
 from sales_agent_graphdb_spark.sources import stamp
-from sales_agent_graphdb_spark.queries.vector import _query_vec
+from sales_agent_graphdb_spark.queries.vector import (
+    _FILTER_LABELS,
+    _oracle_knn,
+    _oracle_verdict,
+    _overlap_ok,
+    _query_vec,
+    _recall_verdict,
+)
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
 
@@ -45,49 +54,44 @@ def _ensure_index(path: str, sf_dir: str, build, version: str = "") -> None:
     stamp.ensure(path, _emb_src(sf_dir), version, build)
 
 
-def _ensure_sidecar_index(path: str, sf_dir: str, side_name: str, build, decode):
-    """_ensure_index for indexes with a driver-side JSON sidecar
-    (centroids/codebooks): ``build()`` writes index + sidecar and
-    returns the payload; ``decode(text)`` parses the sidecar. A fresh
-    stamp with a corrupt/missing sidecar rebuilds under the same lock
-    (the pre-r10 per-site try/except recovery, now in one place)."""
-    sidef = Path(path) / side_name
+def _ensure_sidecar_index(path: str, sf_dir: str, build):
+    """_ensure_index for indexes with driver-side state (centroids,
+    codebooks): ``build()`` writes the index and returns a
+    JSON-serialisable payload, kept in ``_SIDECAR.json`` beside it;
+    returns the parsed payload. A fresh stamp with a corrupt or missing
+    sidecar rebuilds under the same lock."""
+    sidef = Path(path) / "_SIDECAR.json"
     holder: dict = {}
 
     def _valid() -> bool:
         try:
-            holder["v"] = decode(sidef.read_text())
+            holder["v"] = json.loads(sidef.read_text())
             return True
-        except (OSError, ValueError, KeyError):
+        except (OSError, ValueError):
             return False
 
     def _build() -> None:
-        holder["v"] = build()
+        text = json.dumps(build())
+        sidef.write_text(text)
+        holder["v"] = json.loads(text)
 
     stamp.ensure(path, _emb_src(sf_dir), "", _build, valid=_valid)
-    if "v" not in holder:  # pragma: no cover — one of the paths above ran
-        holder["v"] = decode(sidef.read_text())
     return holder["v"]
 
 
 def _centroid_index(
     spark: SparkSession, sf_dir: str, kind: str, write
 ) -> tuple[str, np.ndarray]:
-    """An IVF index partitioned by ``cell`` plus its ``_CENTROIDS.json``
-    sidecar, written by ``write(embeddings, path)`` (which returns the
-    centroids) once per embeddings stamp; a warm call reads only the
-    sidecar."""
+    """An IVF index partitioned by ``cell``, written by
+    ``write(embeddings, path)`` (which returns the centroids) once per
+    embeddings stamp; a warm call reads only the centroid sidecar."""
     path = _index_path(sf_dir, kind)
-
-    def _build():
-        c = write(catalog.load_table(spark, sf_dir, "embeddings"), path)
-        (Path(path) / "_CENTROIDS.json").write_text(json.dumps(c.tolist()))
-        return c
-
     cents = _ensure_sidecar_index(
-        path, sf_dir, "_CENTROIDS.json", _build, lambda t: np.asarray(json.loads(t))
+        path,
+        sf_dir,
+        lambda: write(catalog.load_table(spark, sf_dir, "embeddings"), path).tolist(),
     )
-    return path, cents
+    return path, np.asarray(cents)
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, np.ndarray]:
@@ -481,9 +485,28 @@ def ann_ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (b) a recall_ok boolean derived from the pruned path's overlap with
 # that exact set — falsifiable: a scoring/pruning bug collapses
 # recall or corrupts the exact side, and either reads red.
+def _filtered_ivf_verdict(
+    spark: SparkSession, sf_dir: str, labels: tuple[int, ...], n_probe: int, floor: int
+) -> DataFrame:
+    """The filtered-IVF verdict over the k-means index: the exact
+    ``label IN labels`` top-5 from the unpruned index read against the
+    same pre-filtered top-5 over the ``n_probe`` probed cells."""
+    path, cents = _ivf_index(spark, sf_dir)
+    qv = _query_vec(spark, sf_dir)
+    idx = catalog.read_parquet(spark, path)
+    where = F.col("label").isin(*labels)
+    probed = idx.filter(F.col("cell").isin(ann._probe_cells(cents, qv, n_probe)))
+    return _recall_verdict(
+        knn(idx, qv, exclude_ids=[0], where=where),
+        knn(probed, qv, exclude_ids=[0], where=where),
+        floor,
+        n_probed_cells=n_probe,
+    )
+
+
 @register(
     "ann_filtered_ivf_topk",
-    oracle=None,  # bound below (needs vector.py's filter constants)
+    oracle=_oracle_verdict(_FILTER_LABELS, n_probed_cells=8),
 )
 def ann_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ANN over the materialized IVF index — the indexed
@@ -502,75 +525,14 @@ def ann_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output are computed in-plan from the unpruned index and are
     the oracle-checked truth; recall_ok is derived from the pruned
     path's actual output."""
-    path, cents = _ivf_index(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir)
-    probe = ann._probe_cells(cents, qv, 8)
-    from sales_agent_graphdb_spark.operators.similarity import cosine_to
-    from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
-
-    idx = catalog.read_parquet(spark, path)
-    filt = F.col("label").isin(*_FILTER_LABELS) & (F.col("vec_id") != 0)
-    score = lambda df: df.select(  # noqa: E731
-        "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
-    )
-    pruned_top = (
-        score(idx.filter(F.col("cell").isin(probe)).filter(filt))
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(5)
-    )
-    exact_top = (
-        score(idx.filter(filt)).orderBy(F.col("sim").desc(), "vec_id").limit(5)
-    )
-    overlap = pruned_top.join(exact_top.select("vec_id"), "vec_id", "left_semi")
-    # exact_ids is a comma-joined STRING, not array<long>: the driver
-    # canonicalizes results through pandas sort_values/factorize, which
-    # cannot hash list cells (the r07 red row) — registered outputs
-    # must be scalar-only (enforced by tests/test_oracle_parity.py).
-    return (
-        exact_top.agg(
-            F.concat_ws(
-                ",", F.sort_array(F.collect_list("vec_id"))
-            ).alias("exact_ids"),
-        )
-        .crossJoin(overlap.agg(F.count(F.lit(1)).alias("_n")))
-        .select(
-            "exact_ids",
-            F.lit(8).alias("n_probed_cells"),
-            (F.col("_n") >= 3).alias("recall_ok"),
-        )
-    )
-
-
-def _bind_filtered_oracle() -> None:
-    from sales_agent_graphdb_spark import registry as _r
-    from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
-    cos = duckdb_cosine_sql("e.embedding", "q.embedding")
-    labels = ", ".join(str(l) for l in _FILTER_LABELS)
-    oracle = f"""
-    WITH exact AS (
-      SELECT e.vec_id, {cos} AS sim
-      FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-      WHERE e.vec_id <> 0 AND e.label IN ({labels})
-      ORDER BY sim DESC, e.vec_id LIMIT 5)
-    SELECT array_to_string(list_sort(list(vec_id)), ',') AS exact_ids,
-           8 AS n_probed_cells,
-           TRUE AS recall_ok
-    FROM exact
-    """
-    spec = _r._REGISTRY["ann_filtered_ivf_topk"]
-    _r._REGISTRY["ann_filtered_ivf_topk"] = type(spec)(
-        spec.name, spec.fn, oracle, spec.doc
-    )
-
-
-_bind_filtered_oracle()
+    return _filtered_ivf_verdict(spark, sf_dir, _FILTER_LABELS, 8, 3)
 
 
 @register(
     "ann_filtered_partitioned_topk",
-    oracle=None,  # bound below (needs vector.py's filter constants)
+    oracle=f"""
+    SELECT *, TRUE AS recall_ok FROM ({_oracle_knn(5, labels=_FILTER_LABELS)})
+    """,
 )
 def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ANN over the LABEL-PARTITIONED IVF index — the
@@ -600,71 +562,29 @@ def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     recall_ok verdict from the pruned probe (floor 3, measured 4 —
     slack 1 against k-means ulp wobble across rebuilds)."""
     path = _index_path(sf_dir, "ivf_labeled")
+
     def _build_labeled():
         emb = catalog.load_table(spark, sf_dir, "embeddings")
-        c = ann.write_ivf_index_labeled(spark, emb, path, n_cells=16, n_iter=3)
-        (Path(path) / "_CENTROIDS_BY_LABEL.json").write_text(
-            json.dumps({str(k): v.tolist() for k, v in c.items()})
-        )
-        return c
+        cbl = ann.write_ivf_index_labeled(spark, emb, path, n_cells=16, n_iter=3)
+        return {str(k): v.tolist() for k, v in cbl.items()}
 
-    cbl = _ensure_sidecar_index(
-        path,
-        sf_dir,
-        "_CENTROIDS_BY_LABEL.json",
-        _build_labeled,
-        lambda t: {int(k): np.asarray(v) for k, v in json.loads(t).items()},
-    )
+    cbl = _ensure_sidecar_index(path, sf_dir, _build_labeled)
     qv = _query_vec(spark, sf_dir)
-    from sales_agent_graphdb_spark.operators.similarity import cosine_to
-    from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
-
-    idx = catalog.read_parquet(spark, path)
-    probes = {lbl: ann._probe_cells(cbl[lbl], qv, 4) for lbl in _FILTER_LABELS}
     pruned_pred = None
-    for lbl, cells in sorted(probes.items()):
+    for lbl in sorted(_FILTER_LABELS):
+        cells = ann._probe_cells(np.asarray(cbl[str(lbl)]), qv, 4)
         p = (F.col("label") == lbl) & F.col("cell").isin(cells)
         pruned_pred = p if pruned_pred is None else (pruned_pred | p)
-    base = F.col("vec_id") != 0
-    score = lambda df: df.select(  # noqa: E731
-        "vec_id", "label", cosine_to(F.col("embedding"), qv).alias("sim")
+    idx = catalog.read_parquet(spark, path)
+    exact_top = knn(
+        idx,
+        qv,
+        exclude_ids=[0],
+        where=F.col("label").isin(*_FILTER_LABELS),
+        carry=["label"],
     )
-    exact_top = (
-        score(idx.filter(F.col("label").isin(*_FILTER_LABELS)).filter(base))
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(5)
-    )
-    pruned_top = (
-        score(idx.filter(pruned_pred).filter(base))
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(5)
-    )
-    overlap = pruned_top.join(exact_top.select("vec_id"), "vec_id", "left_semi")
-    return exact_top.crossJoin(
-        overlap.agg((F.count(F.lit(1)) >= 3).alias("recall_ok"))
-    )
-
-
-def _bind_partitioned_oracle() -> None:
-    from sales_agent_graphdb_spark import registry as _r
-    from sales_agent_graphdb_spark.queries.vector import _FILTER_LABELS
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
-    cos = duckdb_cosine_sql("e.embedding", "q.embedding")
-    labels = ", ".join(str(l) for l in _FILTER_LABELS)
-    oracle = f"""
-    SELECT e.vec_id, e.label, {cos} AS sim, TRUE AS recall_ok
-    FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0 AND e.label IN ({labels})
-    ORDER BY sim DESC, e.vec_id LIMIT 5
-    """
-    spec = _r._REGISTRY["ann_filtered_partitioned_topk"]
-    _r._REGISTRY["ann_filtered_partitioned_topk"] = type(spec)(
-        spec.name, spec.fn, oracle, spec.doc
-    )
-
-
-_bind_partitioned_oracle()
+    pruned_top = knn(idx, qv, exclude_ids=[0], where=pruned_pred)
+    return exact_top.crossJoin(_overlap_ok(exact_top, pruned_top, 3))
 
 
 # The filter labels for the ADAPTIVE path: a ~50%-selective predicate
@@ -679,7 +599,15 @@ _ADAPTIVE_BASE_PROBE = 4
 
 @register(
     "ann_filtered_adaptive_topk",
-    oracle=None,  # bound below
+    oracle=_oracle_verdict(
+        _ADAPTIVE_LABELS,
+        n_probed_cells=f"""(
+      SELECT CAST(LEAST(16, ({_ADAPTIVE_BASE_PROBE} * total + cnt - 1) // cnt) AS INT)
+      FROM (SELECT COUNT(*) AS total,
+                   COUNT(*) FILTER (WHERE label IN
+                     ({", ".join(str(l) for l in _ADAPTIVE_LABELS)})) AS cnt
+            FROM embeddings))""",
+    ),
 )
 def ann_filtered_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ANN with ADAPTIVE probe widening — the third
@@ -697,8 +625,6 @@ def ann_filtered_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output contract as the ivf/partitioned siblings: the exact
     filtered top-5 ids (computed in-plan from the unpruned index
     read, hash-checked) + the adaptively-chosen width + recall_ok."""
-    path, cents = _ivf_index(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir)
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     row = emb.agg(
         F.count(F.lit(1)).alias("n"),
@@ -706,68 +632,7 @@ def ann_filtered_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     total, cnt = int(row["n"]), int(row["c"])
     probe_n = min(16, (_ADAPTIVE_BASE_PROBE * total + cnt - 1) // cnt)
-    probe = ann._probe_cells(cents, qv, probe_n)
-    from sales_agent_graphdb_spark.operators.similarity import cosine_to
-
-    idx = catalog.read_parquet(spark, path)
-    filt = F.col("label").isin(*_ADAPTIVE_LABELS) & (F.col("vec_id") != 0)
-    score = lambda df: df.select(  # noqa: E731
-        "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
-    )
-    pruned_top = (
-        score(idx.filter(F.col("cell").isin(probe)).filter(filt))
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(5)
-    )
-    exact_top = (
-        score(idx.filter(filt)).orderBy(F.col("sim").desc(), "vec_id").limit(5)
-    )
-    overlap = pruned_top.join(exact_top.select("vec_id"), "vec_id", "left_semi")
-    return (
-        exact_top.agg(
-            F.concat_ws(
-                ",", F.sort_array(F.collect_list("vec_id"))
-            ).alias("exact_ids"),
-        )
-        .crossJoin(overlap.agg(F.count(F.lit(1)).alias("_n")))
-        .select(
-            "exact_ids",
-            F.lit(probe_n).alias("n_probed_cells"),
-            (F.col("_n") >= 4).alias("recall_ok"),
-        )
-    )
-
-
-def _bind_adaptive_oracle() -> None:
-    from sales_agent_graphdb_spark import registry as _r
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
-    cos = duckdb_cosine_sql("e.embedding", "q.embedding")
-    labels = ", ".join(str(l) for l in _ADAPTIVE_LABELS)
-    b = _ADAPTIVE_BASE_PROBE
-    oracle = f"""
-    WITH c AS (
-      SELECT COUNT(*) AS total,
-             COUNT(*) FILTER (WHERE label IN ({labels})) AS cnt
-      FROM embeddings),
-    exact AS (
-      SELECT e.vec_id, {cos} AS sim
-      FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-      WHERE e.vec_id <> 0 AND e.label IN ({labels})
-      ORDER BY sim DESC, e.vec_id LIMIT 5)
-    SELECT array_to_string(list_sort(list(vec_id)), ',') AS exact_ids,
-           (SELECT CAST(LEAST(16, ({b} * total + cnt - 1) // cnt) AS INT)
-            FROM c) AS n_probed_cells,
-           TRUE AS recall_ok
-    FROM exact
-    """
-    spec = _r._REGISTRY["ann_filtered_adaptive_topk"]
-    _r._REGISTRY["ann_filtered_adaptive_topk"] = type(spec)(
-        spec.name, spec.fn, oracle, spec.doc
-    )
-
-
-_bind_adaptive_oracle()
+    return _filtered_ivf_verdict(spark, sf_dir, _ADAPTIVE_LABELS, probe_n, 4)
 
 
 _PQ_CAND = 50  # ADC overfetch before the exact rerank
@@ -776,18 +641,7 @@ _PQ_RECALL_FLOOR = 2  # measured 3-4/5 at C=50 across all SFs (2026-08)
 
 @register(
     "ann_pq_adc_topk",
-    oracle=f"""
-    WITH exact AS (
-      SELECT e.vec_id, {{cos}} AS sim
-      FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-      WHERE e.vec_id <> 0
-      ORDER BY sim DESC, e.vec_id LIMIT 5)
-    SELECT array_to_string(list_sort(list(vec_id)), ',') AS exact_ids,
-           {_PQ_CAND} AS n_candidates,
-           32 AS compression_x,
-           TRUE AS recall_ok
-    FROM exact
-    """,
+    oracle=_oracle_verdict(n_candidates=_PQ_CAND, compression_x=32),
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCT QUANTIZATION ANN (IVF-PQ's compression half, FAISS's
@@ -826,44 +680,13 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("adc").desc(), "vec_id")
         .limit(_PQ_CAND)
     )
-    from sales_agent_graphdb_spark.operators.similarity import cosine_to
-
-    score = lambda df: df.select(  # noqa: E731
-        "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
+    return _recall_verdict(
+        knn(base, qv),
+        knn(cands, qv),
+        _PQ_RECALL_FLOOR,
+        n_candidates=_PQ_CAND,
+        compression_x=32,
     )
-    pq_top = score(cands).orderBy(F.col("sim").desc(), "vec_id").limit(5)
-    exact_top = score(base).orderBy(F.col("sim").desc(), "vec_id").limit(5)
-    overlap = pq_top.join(exact_top.select("vec_id"), "vec_id", "left_semi")
-    return (
-        exact_top.agg(
-            F.concat_ws(",", F.sort_array(F.collect_list("vec_id"))).alias(
-                "exact_ids"
-            )
-        )
-        .crossJoin(overlap.agg(F.count(F.lit(1)).alias("_n")))
-        .select(
-            "exact_ids",
-            F.lit(_PQ_CAND).alias("n_candidates"),
-            F.lit(32).alias("compression_x"),
-            (F.col("_n") >= _PQ_RECALL_FLOOR).alias("recall_ok"),
-        )
-    )
-
-
-def _bind_pq_oracle() -> None:
-    from sales_agent_graphdb_spark import registry as _r
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
-    spec = _r._REGISTRY["ann_pq_adc_topk"]
-    oracle = spec.oracle.format(
-        cos=duckdb_cosine_sql("e.embedding", "q.embedding")
-    )
-    _r._REGISTRY["ann_pq_adc_topk"] = type(spec)(
-        spec.name, spec.fn, oracle, spec.doc
-    )
-
-
-_bind_pq_oracle()
 
 
 ann_pq_adc_topk.__doc__ = ann_pq_adc_topk.__doc__.format(
@@ -878,18 +701,7 @@ _IVFPQ_RECALL_FLOOR = 2  # measured 3/4/3 at sf0.001/0.01/0.1 (2026-08)
 
 @register(
     "ann_ivfpq_pruned_topk",
-    oracle=f"""
-    WITH exact AS (
-      SELECT e.vec_id, {{cos}} AS sim
-      FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-      WHERE e.vec_id <> 0
-      ORDER BY sim DESC, e.vec_id LIMIT 5)
-    SELECT array_to_string(list_sort(list(vec_id)), ',') AS exact_ids,
-           {_IVFPQ_PROBE} AS n_probed_cells,
-           {_IVFPQ_CAND} AS n_candidates,
-           TRUE AS recall_ok
-    FROM exact
-    """,
+    oracle=_oracle_verdict(n_probed_cells=_IVFPQ_PROBE, n_candidates=_IVFPQ_CAND),
 )
 def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ over the MATERIALIZED combined index — the full
@@ -915,20 +727,10 @@ def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # init is defined on it); the query vector's own row is
         # excluded at probe time, not at ingest.
         c, b = ann.write_ivfpq_index(spark, emb, path)
-        (Path(path) / "_SIDECAR.json").write_text(
-            json.dumps({"cents": c.tolist(), "books": b.tolist()})
-        )
-        return c, b
+        return {"cents": c.tolist(), "books": b.tolist()}
 
-    cents, books = _ensure_sidecar_index(
-        path,
-        sf_dir,
-        "_SIDECAR.json",
-        _build_ivfpq,
-        lambda t: (
-            lambda d: (np.asarray(d["cents"]), np.asarray(d["books"]))
-        )(json.loads(t)),  # parse the sidecar payload once (ADVICE r10)
-    )
+    side = _ensure_sidecar_index(path, sf_dir, _build_ivfpq)
+    cents, books = np.asarray(side["cents"]), np.asarray(side["books"])
     qv = _query_vec(spark, sf_dir)
     probe = ann._probe_cells(cents, qv, _IVFPQ_PROBE)
     idx = catalog.read_parquet(spark, path)
@@ -938,55 +740,14 @@ def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("adc").desc(), "vec_id")
         .limit(_IVFPQ_CAND)
     )
-    from sales_agent_graphdb_spark.operators.similarity import cosine_to
-
-    rerank = (
-        cands.join(idx.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(5)
+    rerank = cands.join(idx.select("vec_id", "embedding"), "vec_id")
+    return _recall_verdict(
+        knn(emb, qv, exclude_ids=[0]),
+        knn(rerank, qv),
+        _IVFPQ_RECALL_FLOOR,
+        n_probed_cells=_IVFPQ_PROBE,
+        n_candidates=_IVFPQ_CAND,
     )
-    exact_top = (
-        emb.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id", cosine_to(F.col("embedding"), qv).alias("sim")
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(5)
-    )
-    overlap = rerank.join(exact_top.select("vec_id"), "vec_id", "left_semi")
-    return (
-        exact_top.agg(
-            F.concat_ws(",", F.sort_array(F.collect_list("vec_id"))).alias(
-                "exact_ids"
-            )
-        )
-        .crossJoin(overlap.agg(F.count(F.lit(1)).alias("_n")))
-        .select(
-            "exact_ids",
-            F.lit(_IVFPQ_PROBE).alias("n_probed_cells"),
-            F.lit(_IVFPQ_CAND).alias("n_candidates"),
-            (F.col("_n") >= _IVFPQ_RECALL_FLOOR).alias("recall_ok"),
-        )
-    )
-
-
-def _bind_ivfpq_oracle() -> None:
-    from sales_agent_graphdb_spark import registry as _r
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
-    spec = _r._REGISTRY["ann_ivfpq_pruned_topk"]
-    oracle = spec.oracle.format(
-        cos=duckdb_cosine_sql("e.embedding", "q.embedding")
-    )
-    _r._REGISTRY["ann_ivfpq_pruned_topk"] = type(spec)(
-        spec.name, spec.fn, oracle, spec.doc
-    )
-
-
-_bind_ivfpq_oracle()
 
 
 ann_ivfpq_pruned_topk.__doc__ = ann_ivfpq_pruned_topk.__doc__.format(

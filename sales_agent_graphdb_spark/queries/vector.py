@@ -46,14 +46,60 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]
     return list(vec)
 
 
-def _oracle_knn(k: int, threshold: float | None = None) -> str:
+def _oracle_knn(
+    k: int, threshold: float | None = None, labels: tuple[int, ...] = ()
+) -> str:
+    """DuckDB mirror of ``sim.knn`` for the vec_id=0 query vector:
+    ``labels`` is the pre-filter (``label IN labels``, carried as a
+    column), ``threshold`` a floor on the sim."""
     cos = sim.duckdb_cosine_sql("e.embedding", "q.embedding")
-    thresh = f"AND {cos} >= {threshold}" if threshold is not None else ""
+    conds = f"AND {cos} >= {threshold}" if threshold is not None else ""
+    carry = ""
+    if labels:
+        conds += f" AND e.label IN ({', '.join(str(l) for l in labels)})"
+        carry = "e.label, "
     return f"""
-    SELECT e.vec_id, {cos} AS sim
+    SELECT e.vec_id, {carry}{cos} AS sim
     FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0 {thresh}
+    WHERE e.vec_id <> 0 {conds}
     ORDER BY sim DESC, e.vec_id LIMIT {k}
+    """
+
+
+def _overlap_ok(exact_top: DataFrame, approx_top: DataFrame, floor: int) -> DataFrame:
+    """One row: ``recall_ok`` = |approx_top ∩ exact_top| (by vec_id) >= floor."""
+    overlap = approx_top.join(exact_top.select("vec_id"), "vec_id", "left_semi")
+    return overlap.agg((F.count(F.lit(1)) >= floor).alias("recall_ok"))
+
+
+def _recall_verdict(
+    exact_top: DataFrame, approx_top: DataFrame, floor: int, **consts
+) -> DataFrame:
+    """The verdict row of an approximate top-k: the exact top-k ids,
+    ``consts`` as literal columns (in keyword order), and ``recall_ok``
+    from the approximate path's overlap with the exact ids. exact_ids
+    is a comma-joined STRING, not array<long>: the driver canonicalizes
+    results through pandas, which cannot hash list cells (scalar-only
+    outputs are enforced by tests/test_oracle_parity.py)."""
+    ids = F.concat_ws(",", F.sort_array(F.collect_list("vec_id")))
+    return (
+        exact_top.agg(ids.alias("exact_ids"))
+        .crossJoin(_overlap_ok(exact_top, approx_top, floor))
+        .select(
+            "exact_ids", *[F.lit(v).alias(n) for n, v in consts.items()], "recall_ok"
+        )
+    )
+
+
+def _oracle_verdict(labels: tuple[int, ...] = (), **consts: object) -> str:
+    """DuckDB mirror of ``_recall_verdict`` over the exact top-K:
+    ``consts`` are SQL expressions; recall_ok is asserted TRUE."""
+    cols = "".join(f"{v} AS {n}, " for n, v in consts.items())
+    return f"""
+    WITH exact AS ({_oracle_knn(K, labels=labels)})
+    SELECT array_to_string(list_sort(list(vec_id)), ',') AS exact_ids,
+           {cols}TRUE AS recall_ok
+    FROM exact
     """
 
 
@@ -348,18 +394,7 @@ def vec_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FILTER_LABELS = (3, 7)
 
 
-def _oracle_knn_filtered(k: int) -> str:
-    cos = sim.duckdb_cosine_sql("e.embedding", "q.embedding")
-    labels = ", ".join(str(l) for l in _FILTER_LABELS)
-    return f"""
-    SELECT e.vec_id, e.label, {cos} AS sim
-    FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0 AND e.label IN ({labels})
-    ORDER BY sim DESC, e.vec_id LIMIT {k}
-    """
-
-
-@register("ann_filtered_exact_topk", oracle=_oracle_knn_filtered(K))
+@register("ann_filtered_exact_topk", oracle=_oracle_knn(K, labels=_FILTER_LABELS))
 def ann_filtered_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search — top-5 nearest among vectors whose
     metadata passes a predicate (label ∈ {labels}) — the constrained-
@@ -375,16 +410,15 @@ def ann_filtered_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata predicate inside each probed cell); an indexed filtered
     variant must OVERFETCH by 1/selectivity to match this baseline —
     that contract is the docstring's warning to implementers."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings").filter(
-        F.col("label").isin(*_FILTER_LABELS)
+    emb = catalog.load_table(spark, sf_dir, "embeddings")
+    return sim.knn(
+        emb,
+        _query_vec(spark, sf_dir),
+        k=K,
+        exclude_ids=[0],
+        where=F.col("label").isin(*_FILTER_LABELS),
+        carry=["label"],
     )
-    qv = _query_vec(spark, sf_dir)
-    scored = emb.select(
-        "vec_id",
-        "label",
-        sim.cosine_to(F.col("embedding"), qv).alias("sim"),
-    ).filter(F.col("vec_id") != 0)
-    return scored.orderBy(F.col("sim").desc(), "vec_id").limit(K)
 
 
 ann_filtered_exact_topk.__doc__ = ann_filtered_exact_topk.__doc__.format(
@@ -472,14 +506,7 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _query_vec(spark, sf_dir)
     # Eager: tiny (k' rows); both self-join sides below read it.
     cands = materialize(
-        emb.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            "embedding",
-            sim.cosine_to(F.col("embedding"), qv).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(_MMR_PREFETCH),
+        sim.knn(emb, qv, k=_MMR_PREFETCH, exclude_ids=[0], carry=["embedding"]),
         eager=True,
     )
     a, b = cands.alias("a"), cands.alias("b")
@@ -648,7 +675,10 @@ def _sign_word(vec: F.Column, lo: int, n: int) -> F.Column:
     return acc
 
 
-@register("vec_binary_hamming_topk", oracle=None)
+@register(
+    "vec_binary_hamming_topk",
+    oracle=_oracle_verdict(n_candidates=_HAM_CAND, bits_per_vector=64),
+)
 def vec_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BINARY-HASH ANN (sign-bit quantization + Hamming distance): each
     64-dim vector collapses to its sign bitmap — 64 BITS, the extreme
@@ -690,61 +720,13 @@ def vec_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("h"),
     )
     cands = ham.orderBy("h", "vec_id").limit(_HAM_CAND)
-    bin_top = (
-        cands.select(
-            "vec_id", sim.cosine_to(F.col("embedding"), qv).alias("s")
-        )
-        .orderBy(F.col("s").desc(), "vec_id")
-        .limit(5)
+    return _recall_verdict(
+        sim.knn(emb, qv, k=K, exclude_ids=[0]),
+        sim.knn(cands, qv, k=K),
+        _HAM_RECALL_FLOOR,
+        n_candidates=_HAM_CAND,
+        bits_per_vector=64,
     )
-    exact_top = (
-        emb.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id", sim.cosine_to(F.col("embedding"), qv).alias("s")
-        )
-        .orderBy(F.col("s").desc(), "vec_id")
-        .limit(5)
-    )
-    overlap = bin_top.join(exact_top.select("vec_id"), "vec_id", "left_semi")
-    return (
-        exact_top.agg(
-            F.concat_ws(",", F.sort_array(F.collect_list("vec_id"))).alias(
-                "exact_ids"
-            )
-        )
-        .crossJoin(F.broadcast(overlap.agg(F.count(F.lit(1)).alias("_n"))))
-        .select(
-            "exact_ids",
-            F.lit(_HAM_CAND).alias("n_candidates"),
-            F.lit(64).alias("bits_per_vector"),
-            (F.col("_n") >= _HAM_RECALL_FLOOR).alias("recall_ok"),
-        )
-    )
-
-
-def _bind_hamming_oracle() -> None:
-    from sales_agent_graphdb_spark import registry as _r
-
-    cos = sim.duckdb_cosine_sql("e.embedding", "q.embedding")
-    oracle = f"""
-    WITH exact AS (
-      SELECT e.vec_id, {cos} AS sim
-      FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-      WHERE e.vec_id <> 0
-      ORDER BY sim DESC, e.vec_id LIMIT 5)
-    SELECT array_to_string(list_sort(list(vec_id)), ',') AS exact_ids,
-           {_HAM_CAND} AS n_candidates,
-           64 AS bits_per_vector,
-           TRUE AS recall_ok
-    FROM exact
-    """
-    spec = _r._REGISTRY["vec_binary_hamming_topk"]
-    _r._REGISTRY["vec_binary_hamming_topk"] = type(spec)(
-        spec.name, spec.fn, oracle, spec.doc
-    )
-
-
-_bind_hamming_oracle()
 
 
 vec_binary_hamming_topk.__doc__ = vec_binary_hamming_topk.__doc__.format(
@@ -826,16 +808,7 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding", "label").head()
     qvec, qlabel = [float(x) for x in qrow.embedding], int(qrow.label)
-    scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            "label",
-            sim.cosine_to(F.col("embedding"), qvec).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(_NDCG_K)
-    )
+    scored = sim.knn(emb, qvec, k=_NDCG_K, exclude_ids=[0], carry=["label"])
     from pyspark.sql.window import Window as W
 
     r = scored.select(

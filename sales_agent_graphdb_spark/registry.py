@@ -1,8 +1,8 @@
 """Query registry: one entry per implemented operator (SURVEY.md §2).
 
 Each query is registered with a Spark callable ``(spark, sf_dir) ->
-DataFrame`` and, when SQL-expressible, a DuckDB oracle SQL string over
-the same parquet tables. The driver compares row-count + schema +
+DataFrame`` and its DuckDB oracle SQL string over the same parquet
+tables. The driver compares row-count + schema +
 order-insensitive value-hash, so every computed column is aliased
 identically on both sides and floating aggregates go through exact
 DECIMAL arithmetic before a final cast to double (summation order then
@@ -26,20 +26,21 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
-    doc: str = ""
+    oracle: str  # ANSI SQL for DuckDB
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(name: str, oracle: str):
     """Decorator: register a query under ``name`` with its oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""))
+        if not isinstance(oracle, str):
+            raise TypeError(f"{name}: oracle must be DuckDB SQL text")
+        _REGISTRY[name] = QuerySpec(name, fn, oracle)
         return fn
 
     return deco
@@ -98,6 +99,4 @@ def spark_queries() -> dict[str, QueryFn]:
 
 
 def oracles() -> dict[str, str]:
-    return {
-        name: spec.oracle for name, spec in all_queries().items() if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in all_queries().items()}

@@ -209,7 +209,7 @@ def test_filtered_partitioned_index_prunes_both_columns(spark):
     cbl = {
         int(k): np.asarray(v)
         for k, v in _json.loads(
-            (Path(path) / "_CENTROIDS_BY_LABEL.json").read_text()
+            (Path(path) / "_SIDECAR.json").read_text()
         ).items()
     }
     qv = _query_vec(spark, SF)
