@@ -2,7 +2,7 @@
 
 Thin shim over sales_agent_graphdb_spark: the registry holds one entry
 per implemented operator from SURVEY.md §2 (plus the LLM-pipeline
-extensions), each with a DuckDB oracle where SQL-expressible.
+extensions), each with a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -29,5 +29,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; omitted => rows-only check."""
+    """DuckDB-equivalent SQL for every query."""
     return registry.oracles()

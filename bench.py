@@ -297,8 +297,8 @@ WARM_FIRST = [
     # the recurring query path.
     "curation_pareto_front",
     # first call builds the shared okey-bucketed (okey, brand) layout
-    # (graphq._order_brand_pairs, stamped + reused by the three
-    # projection consumers); the timed lines measure the projection
+    # (graphq._order_brand_pairs, stamped + reused by every
+    # brand-graph query); the timed lines measure the projection
     # queries over the existing layout
     "graph_resource_allocation",
     # first call writes the bloom-filtered hash-distributed layout;

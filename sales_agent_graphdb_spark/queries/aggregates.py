@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.operators import graph
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -405,7 +406,8 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and in practice capped by dropping pathological mega-baskets, the
     hot-bucket rule); the pair aggregation is map-side combinable on
     the (a, b) key; the support threshold keeps the result to the
-    frequent tail. Never an all-pairs product over the catalog.
+    frequent tail. Never an all-pairs product over the catalog. The
+    pair build is graph.co_occurrence_pairs over the distinct items.
 
     The support threshold is 2 with a deterministic top-1000 cap (the
     ORDER BY is a total order, so LIMIT is stable): at the driver test
@@ -414,18 +416,16 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     production SF the cap — not the threshold — bounds the result."""
     items = (
         catalog.load_table(spark, sf_dir, "lineitem")
-        .select(
-            F.col("l_orderkey").alias("order_id"),
-            F.col("l_partkey").alias("product_id"),
-        )
+        .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    a = items.select("order_id", F.col("product_id").alias("prod_a"))
-    b = items.select("order_id", F.col("product_id").alias("prod_b"))
-    pairs = a.join(b, "order_id").filter(F.col("prod_a") < F.col("prod_b"))
     return (
-        pairs.groupBy("prod_a", "prod_b")
-        .agg(F.count(F.lit(1)).alias("n_baskets"))
+        graph.co_occurrence_pairs(items, "l_orderkey", "l_partkey")
+        .select(
+            F.col("lo").alias("prod_a"),
+            F.col("hi").alias("prod_b"),
+            F.col("w").alias("n_baskets"),
+        )
         .filter(F.col("n_baskets") >= 2)
         .orderBy(F.col("n_baskets").desc(), "prod_a", "prod_b")
         .limit(1000)

@@ -208,15 +208,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shared order↔brand bipartite layout (VERDICT r08 #6b): three queries
-# (graph_brand_projection, graph_node_jaccard, graph_modularity_score)
-# score the same projected brand graph, and each used to rebuild the
-# distinct (okey, brand) pair table — a lineitem⨝part join + distinct —
-# from scratch. The pairs are now materialized ONCE per sf as a table
-# BUCKETED ON okey, so (a) the build cost is amortized across every
-# consumer, and (b) the projection self-join on okey reads co-located
-# buckets with NO Exchange (sources/bucketing.py — the same
-# pay-at-ingest layout as join_bucketed_collocated). Single-writer
+# Shared order↔brand bipartite layout (VERDICT r08 #6b): every
+# brand-graph query scores the same projected brand graph
+# (_brand_pairs), and each used to rebuild the distinct (okey, brand)
+# pair table — a lineitem⨝part join + distinct — from scratch. The
+# pairs are now materialized ONCE per sf as a table BUCKETED ON okey,
+# so (a) the build cost is amortized across every consumer, and (b)
+# the projection self-join on okey reads co-located buckets with NO
+# Exchange (sources/bucketing.py — the same pay-at-ingest layout as
+# join_bucketed_collocated). Single-writer
 # rule: this layout is written only here and every consumer is
 # read-only; the stamp covers BOTH sources (lineitem mtime:size as the
 # stamp, part mtime:size folded into the version tag) plus a recipe
@@ -287,6 +287,21 @@ def _order_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(table)
 
 
+def _brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted brand projection (lo, hi, w): brand pairs lo < hi
+    that share an order, w = the number of orders holding both —
+    graph.co_occurrence_pairs over the okey-bucketed layout, so the
+    self-join zips co-located buckets with no Exchange."""
+    return graph.co_occurrence_pairs(_order_brand_pairs(spark, sf_dir), "okey", "brand")
+
+
+def _weighted_sym(pairs: DataFrame) -> DataFrame:
+    """Both directions (src, dst, w) of weighted (lo, hi, w) pairs."""
+    return pairs.select(
+        F.col("lo").alias("src"), F.col("hi").alias("dst"), "w"
+    ).unionByName(pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"), "w"))
+
+
 @register(
     "graph_brand_projection",
     oracle="""
@@ -310,20 +325,12 @@ def graph_brand_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, count on the pair key, top-20 via TakeOrderedAndProject. The
     self-join is the O(Σ_order |brands|²) projection — bounded by
     per-order basket size (single-digit), NEVER corpus-quadratic, so
-    the shape survives 100 TB fact tables. The (okey, brand) pairs
-    come from the shared okey-BUCKETED layout (_order_brand_pairs), so
-    the self-join zips co-located buckets with no Exchange."""
-    ob = _order_brand_pairs(spark, sf_dir)
-    a, b = ob.alias("a"), ob.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.okey") == F.col("b.okey")) & (F.col("a.brand") < F.col("b.brand")),
-    ).select(
-        F.col("a.brand").alias("brand_a"), F.col("b.brand").alias("brand_b")
-    )
+    the shape survives 100 TB fact tables. The weighted pairs are
+    _brand_pairs, whose self-join zips co-located buckets with no
+    Exchange."""
     return (
-        pairs.groupBy("brand_a", "brand_b")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
+        _brand_pairs(spark, sf_dir)
+        .toDF("brand_a", "brand_b", "n_orders")
         .orderBy(F.col("n_orders").desc(), "brand_a", "brand_b")
         .limit(20)
     )
@@ -333,7 +340,7 @@ def _proximity_edges(c: DataFrame) -> DataFrame:
     """The derived customer proximity graph shared by
     graph_triangle_count, graph_label_propagation and graph_k_core:
     each customer linked to the next 1 and next 2 custkeys within its
-    nation, as (src, dst) with src < dst. _LPA_EDGES_SQL mirrors it."""
+    nation, as (src, dst) with src < dst. _PROXIMITY_SQL mirrors it."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("c_nationkey").orderBy("c_custkey")
@@ -348,9 +355,10 @@ def _proximity_edges(c: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "graph_triangle_count",
-    oracle="""
+# _proximity_edges as DuckDB CTEs: edges (lo < hi) and sym (both
+# directions). The triangle, LPA and k-core oracles each append their
+# own CTEs.
+_PROXIMITY_SQL = """
     WITH ordered AS (
       SELECT c_custkey AS k,
              lead(c_custkey, 1) OVER w AS n1,
@@ -361,6 +369,13 @@ def _proximity_edges(c: DataFrame) -> DataFrame:
       SELECT k AS lo, n1 AS hi FROM ordered WHERE n1 IS NOT NULL
       UNION ALL
       SELECT k AS lo, n2 AS hi FROM ordered WHERE n2 IS NOT NULL),
+    sym AS (SELECT lo AS src, hi AS dst FROM edges
+            UNION ALL SELECT hi AS src, lo AS dst FROM edges)"""
+
+
+@register(
+    "graph_triangle_count",
+    oracle=_PROXIMITY_SQL + """,
     tri AS (
       SELECT e1.lo AS a, e1.hi AS b, e2.hi AS c
       FROM edges e1
@@ -432,25 +447,11 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LPA_ROUNDS = 4
 
-_LPA_EDGES_SQL = """
-    WITH ordered AS (
-      SELECT c_custkey AS k,
-             lead(c_custkey, 1) OVER w AS n1,
-             lead(c_custkey, 2) OVER w AS n2
-      FROM customer
-      WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_custkey)),
-    edges AS (
-      SELECT k AS lo, n1 AS hi FROM ordered WHERE n1 IS NOT NULL
-      UNION ALL
-      SELECT k AS lo, n2 AS hi FROM ordered WHERE n2 IS NOT NULL),
-    sym AS (SELECT lo AS src, hi AS dst FROM edges
-            UNION ALL SELECT hi AS src, lo AS dst FROM edges),
-    l0 AS (SELECT c_custkey AS node, CAST(c_custkey AS BIGINT) AS label
-           FROM customer)"""
-
 
 def _lpa_oracle(rounds: int = _LPA_ROUNDS) -> str:
-    parts = [_LPA_EDGES_SQL]
+    parts = [_PROXIMITY_SQL, """,
+    l0 AS (SELECT c_custkey AS node, CAST(c_custkey AS BIGINT) AS label
+           FROM customer)"""]
     for i in range(1, rounds + 1):
         parts.append(f""",
     r{i} AS (SELECT s.dst AS node, l.label, COUNT(*) AS wt
@@ -522,10 +523,7 @@ _KCORE_ROUNDS = 4
 
 
 def _kcore_oracle(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
-    parts = [_LPA_EDGES_SQL.replace(
-        ",\n    l0 AS (SELECT c_custkey AS node, CAST(c_custkey AS BIGINT) AS label\n           FROM customer)",
-        ",\n    n0 AS (SELECT c_custkey AS node FROM customer)",
-    )]
+    parts = [_PROXIMITY_SQL, ",\n    n0 AS (SELECT c_custkey AS node FROM customer)"]
     prev = "n0"
     for i in range(1, rounds + 1):
         parts.append(f""",
@@ -747,23 +745,12 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: relaxation rounds are bounded frontier joins; the dist
     state co-partitions with the edge list on the node key, and each
     round is a fixed-round step on graph.superstep. The weighted edge
-    build stays its own (not graph.co_occurrence_edges): weights count
-    duplicate (order, part) rows."""
-    li = catalog.load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    b = li.withColumnRenamed("l_partkey", "r_partkey")
-    pairs = (
-        li.join(b, "l_orderkey")
-        .filter(F.col("l_partkey") < F.col("r_partkey"))
-        .groupBy(F.col("l_partkey").alias("lo"), F.col("r_partkey").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = (F.lit(1.0) / F.col("cnt")).alias("w")
+    build is graph.co_occurrence_pairs over the raw lineitem rows, so
+    cnt counts duplicate (order, part) rows, as the oracle's does."""
+    li = catalog.load_table(spark, sf_dir, "lineitem")
+    pairs = graph.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
     edges = materialize(
-        pairs.select(F.col("lo").alias("src"), F.col("hi").alias("dst"), w)
-        .unionByName(pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"), w)),
-        eager=True,
+        _weighted_sym(pairs.withColumn("w", F.lit(1.0) / F.col("w"))), eager=True
     )
 
     def relax(dist: DataFrame) -> DataFrame:
@@ -819,19 +806,12 @@ def graph_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     NEVER |brands|² (the dedup_*'s candidate-pair discipline); the
     degree table is |nodes|-sized and broadcast. Jaccard is one
     integer-derived division rounded to 6 dp on both engines. The
-    (okey, brand) pairs come from the shared okey-BUCKETED layout
-    (_order_brand_pairs): build amortized across the three projection
-    consumers, pair join Exchange-free."""
-    ob = _order_brand_pairs(spark, sf_dir)
-    deg = ob.groupBy("brand").agg(F.count(F.lit(1)).alias("d"))
-    a, b = ob.alias("a"), ob.alias("b")
-    co = (
-        a.join(b, (F.col("a.okey") == F.col("b.okey")) & (F.col("a.brand") < F.col("b.brand")))
-        .groupBy(
-            F.col("a.brand").alias("brand_a"), F.col("b.brand").alias("brand_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    intersections are _brand_pairs (pair join Exchange-free); the
+    degrees come from the same okey-BUCKETED layout."""
+    deg = _order_brand_pairs(spark, sf_dir).groupBy("brand").agg(
+        F.count(F.lit(1)).alias("d")
     )
+    co = _brand_pairs(spark, sf_dir).toDF("brand_a", "brand_b", "n_common")
     da = deg.select(F.col("brand").alias("brand_a"), F.col("d").alias("da"))
     db = deg.select(F.col("brand").alias("brand_b"), F.col("d").alias("db"))
     return (
@@ -1092,17 +1072,10 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index shape; scoring is two |edges|-sized joins against
     a broadcast |nodes| community map and |C|-sized folds — at 100 TB
     the score costs one pass over the projected edges, so it runs
-    after every LPA round if wanted. The (okey, brand) pairs come
-    from the shared okey-BUCKETED layout (_order_brand_pairs)."""
-    ob = _order_brand_pairs(spark, sf_dir)
-    a, b = ob.alias("a"), ob.alias("b")
-    proj = materialize(
-        a.join(b, (F.col("a.okey") == F.col("b.okey")) & (F.col("a.brand") < F.col("b.brand")))
-        .groupBy(F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb"))
-        .agg(F.count(F.lit(1)).alias("w")),
-        eager=False,
-    )
-    comm = ob.select("brand").distinct().select(
+    after every LPA round if wanted. The projection is _brand_pairs;
+    the brand list comes from the same okey-BUCKETED layout."""
+    proj = materialize(_brand_pairs(spark, sf_dir).toDF("ba", "bb", "w"), eager=False)
+    comm = _order_brand_pairs(spark, sf_dir).select("brand").distinct().select(
         "brand",
         (
             F.conv(
@@ -1265,64 +1238,37 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhood knows each other': lcc(v) = 2·T(v) / (d(v)(d(v)−1)),
     the per-node refinement of the global triangle count
     (graph_triangle_count) and the standard community-structure
-    diagnostic next to modularity. Triangles come from the canonical
-    oriented 3-join over a<b<c edges (each triangle found EXACTLY
-    once, then credited to all three corners); degrees from the
-    symmetrized edge list. All integer until the single closed-form
+    diagnostic next to modularity. Triangles per vertex are
+    graph.triangle_count (each triangle found EXACTLY once by the
+    oriented a<b<c join, then credited to all three corners),
+    left-joined onto the degrees of the symmetrized edge list (0 for a
+    vertex in no triangle). All integer until the single closed-form
     division (exact int/int in doubles, identical both engines), 6-dp
     round.
 
-    Scale: edges come from the shared okey-BUCKETED projection
-    (_order_brand_pairs) — the candidate self-join is Exchange-free;
-    the triangle 3-join is over the PROJECTED |brand|² -bounded edge
-    list, never the fact table; degrees broadcast. The brand graph is
-    tiny by design — the shape (oriented edge join + corner credit)
-    is the one that scales, same discipline as graph_triangle_count's
-    per-partition orientation."""
-    ob = _order_brand_pairs(spark, sf_dir)
-    a, b = ob.alias("a"), ob.alias("b")
-    # Feeds degrees and the 3-join.
-    e = materialize(
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.brand") < F.col("b.brand")),
-        )
-        .select(F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb"))
-        .distinct(),
-        eager=False,
+    Scale: the edges are _brand_pairs (Exchange-free self-join); the
+    triangle joins run over the PROJECTED |brand|²-bounded edge list,
+    never the fact table. The brand graph is tiny by design — the
+    shape (oriented edge join + corner credit) is the one that
+    scales."""
+    # Feeds degrees and the triangle count.
+    e = materialize(_brand_pairs(spark, sf_dir).select("lo", "hi"), eager=False)
+    deg = graph.symmetrize(e, "lo", "hi").groupBy(F.col("src").alias("brand")).agg(
+        F.count(F.lit(1)).alias("degree")
     )
-    und = e.select(F.col("ba").alias("v"), F.col("bb").alias("w")).unionByName(
-        e.select(F.col("bb").alias("v"), F.col("ba").alias("w"))
-    )
-    deg = und.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    e1 = e.select(F.col("ba").alias("x"), F.col("bb").alias("y"))
-    e2 = e.select(F.col("ba").alias("y2"), F.col("bb").alias("z"))
-    e3 = e.select(F.col("ba").alias("x3"), F.col("bb").alias("z3"))
-    tris = materialize(
-        e1.join(e2, F.col("y") == F.col("y2"))
-        .join(e3, (F.col("x") == F.col("x3")) & (F.col("z") == F.col("z3")))
-        .select("x", "y", "z"),
-        eager=False,
-    )
-    corners = (
-        tris.select(F.col("x").alias("v"))
-        .unionByName(tris.select(F.col("y").alias("v")))
-        .unionByName(tris.select(F.col("z").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
+    tri = graph.triangle_count(e, "lo", "hi").withColumnRenamed("id", "brand")
+    n_tri = F.coalesce(F.col("n_triangles"), F.lit(0))
     return (
-        deg.join(corners, "v", "left")
+        deg.join(tri, "brand", "left")
         .select(
-            F.col("v").alias("brand"),
-            F.col("d").alias("degree"),
-            F.coalesce(F.col("n_tri"), F.lit(0)).alias("n_triangles"),
+            "brand",
+            "degree",
+            n_tri.alias("n_triangles"),
             F.round(
                 F.when(
-                    F.col("d") >= 2,
-                    (2 * F.coalesce(F.col("n_tri"), F.lit(0))).cast("double")
-                    / (F.col("d") * (F.col("d") - 1)),
+                    F.col("degree") >= 2,
+                    (2 * n_tri).cast("double")
+                    / (F.col("degree") * (F.col("degree") - 1)),
                 ).otherwise(F.lit(0.0)),
                 6,
             ).alias("clustering_coeff"),
@@ -1336,22 +1282,13 @@ def _all_pairs_brand_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier-wavefront BFS as a driver loop of DataFrame steps,
     depth-capped at 8 on BOTH engines (the co-occurrence graph's
     diameter is 2-3; the shared cap keeps the two sides identical even
-    if it weren't). Edges come from the shared okey-BUCKETED layout
-    (_order_brand_pairs), so the candidate self-join is Exchange-free
-    and each BFS level shuffles only frontier×edges — |brand|²-bounded,
-    never the fact table (held at 10× brands in SCALE.md §r11).
-    Returns (src, dst, d) for every reachable ordered pair."""
-    ob = _order_brand_pairs(spark, sf_dir)
-    a, b = ob.alias("a"), ob.alias("b")
+    if it weren't). Edges are both directions of _brand_pairs, so the
+    candidate self-join is Exchange-free and each BFS level shuffles
+    only frontier×edges — |brand|²-bounded, never the fact table (held
+    at 10× brands in SCALE.md §r11). Returns (src, dst, d) for every
+    reachable ordered pair."""
     edges = materialize(
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.brand") != F.col("b.brand")),
-        )
-        .select(F.col("a.brand").alias("src"), F.col("b.brand").alias("dst"))
-        .distinct(),
-        eager=True,
+        graph.symmetrize(_brand_pairs(spark, sf_dir), "lo", "hi"), eager=True
     )
     return _bfs_all_pairs(edges)
 
@@ -1505,10 +1442,9 @@ def graph_betweenness_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared recursive CTE and sigma with a chained 7-level DP.
 
     Scale: BFS and the triple join live on the top-40% weighted
-    backbone off the shared okey-BUCKETED layout (8th
-    distance-family consumer) — the triple join is |pairs| * degree
-    bounded inside |brand|³, KB-scale state at 10× brands
-    (SCALE.md §r11 decade row), never fact-sized. Probed
+    backbone of _brand_pairs (_backbone_edges) — the triple join is
+    |pairs| * degree bounded inside |brand|³, KB-scale state at 10×
+    brands (SCALE.md §r11 decade row), never fact-sized. Probed
     non-degenerate at all driver SFs (stress > 0 for interior
     backbone vertices; the COMPLETE raw projection would zero it,
     which is why the backbone is the measurement frame)."""
@@ -1592,9 +1528,8 @@ def graph_harmonic_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     never sees a float.
 
     Scale: the BFS runs on the PROJECTED |brand|²-bounded edge list
-    from the shared okey-BUCKETED layout (_order_brand_pairs, 5th
-    consumer — the candidate self-join is Exchange-free), never the
-    fact table; each level shuffles only frontier×edges. On a big
+    of _brand_pairs (the candidate self-join is Exchange-free), never
+    the fact table; each level shuffles only frontier×edges. On a big
     graph this is the same wavefront shape as operators/graph.py's
     bfs_distances, sharded by source vertex."""
     reach = _all_pairs_brand_distances(spark, sf_dir)
@@ -1651,23 +1586,14 @@ def graph_weighted_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach ~1e6 at sf0.1, cubes ~1e18 — past BIGINT, inside
     DECIMAL(38,0) with room), one double division at presentation.
 
-    Scale: strengths and the weighted edge list come from the shared
-    okey-BUCKETED projection (_order_brand_pairs, 6th consumer — the
-    candidate self-join is Exchange-free); the moment aggregate is
-    one map-side-combinable pass over |brand|²-bounded edges. The
-    fact table never moves."""
-    ob = _order_brand_pairs(spark, sf_dir)
-    a, b = ob.alias("a"), ob.alias("b")
+    Scale: strengths and the weighted edge list are both directions of
+    _brand_pairs (Exchange-free self-join; the weight of (a, b) is the
+    weight of (b, a)); the moment aggregate is one
+    map-side-combinable pass over |brand|²-bounded edges. The fact
+    table never moves."""
     # Feeds strengths and the moment pass.
     e = materialize(
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.brand") != F.col("b.brand")),
-        )
-        .groupBy(F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w")),
-        eager=False,
+        _weighted_sym(_brand_pairs(spark, sf_dir)).toDF("ba", "bb", "w"), eager=False
     )
     st = e.groupBy(F.col("ba").alias("v")).agg(F.sum("w").cast("bigint").alias("s"))
     ed = (
@@ -1702,24 +1628,12 @@ def _backbone_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard backbone-extraction step before any distance analysis of
     the projection, because the RAW projected brand graph is COMPLETE
     at every driver SF (r10/r11 probes: every distance metric
-    degenerates to a constant on it). Shared by graph_avg_path_length
-    and graph_betweenness_backbone; checkpointed so the BFS driver
-    loops iterate a settled frame."""
+    degenerates to a constant on it), cut from _brand_pairs. Shared by
+    graph_avg_path_length and graph_betweenness_backbone; checkpointed
+    so the BFS driver loops iterate a settled frame."""
     from pyspark.sql import Window as W
 
-    ob = _order_brand_pairs(spark, sf_dir)
-    a, b = ob.alias("a"), ob.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.brand") < F.col("b.brand")),
-        )
-        .groupBy(
-            F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-    )
+    e0 = _brand_pairs(spark, sf_dir).toDF("ba", "bb", "w")
     ranked = e0.select(
         "ba",
         "bb",
@@ -1742,20 +1656,8 @@ def _backbone_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_avg_path_length",
-    oracle="""
-    WITH RECURSIVE ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    e0 AS (
-      SELECT a.brand AS ba, b.brand AS bb, CAST(COUNT(*) AS BIGINT) AS w
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-      GROUP BY ba, bb),
-    ranked AS (
-      SELECT ba, bb, row_number() OVER (ORDER BY w DESC, ba, bb) AS rk,
-             COUNT(*) OVER () AS ne
-      FROM e0),
-    kept AS (SELECT ba, bb FROM ranked WHERE rk <= (ne * 2) // 5),
-    e AS (SELECT ba, bb FROM kept UNION ALL SELECT bb AS ba, ba AS bb FROM kept),
+    oracle=f"""
+    WITH RECURSIVE {_BACKBONE_SQL},
     walk(src, dst, d) AS (
       SELECT ba, bb, 1 FROM e
       UNION
@@ -1793,9 +1695,8 @@ def graph_avg_path_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean (6-dp round).
 
     Scale: the edge ranking and BFS live on the |brand|²-bounded
-    projection off the shared okey-BUCKETED layout (6th
-    distance-family consumer); the global aggregate collapses
-    |brand|² reach rows to one — the projection consumers are
+    projection _brand_pairs (_backbone_edges); the global aggregate
+    collapses |brand|² reach rows to one — the projection consumers are
     measured at 10× brands in SCALE.md §r11 (shuffles stay KB)."""
     reach = _bfs_all_pairs(_backbone_edges(spark, sf_dir))
     return reach.agg(
@@ -1866,26 +1767,13 @@ def graph_rich_club_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row broadcast, not a correlated subquery.
 
     Scale: strengths and the edge ranking live on the |brand|²-bounded
-    projection off the shared okey-BUCKETED layout (7th consumer);
-    the rank windows run over |brand| and |brand|² frames (31k rows
-    at 250 brands — SCALE.md §r11), never fact rows."""
+    projection _brand_pairs; the rank windows run over |brand| and
+    |brand|² frames (31k rows at 250 brands — SCALE.md §r11), never
+    fact rows."""
     from pyspark.sql import Window as W
 
-    ob = _order_brand_pairs(spark, sf_dir)
-    a, b = ob.alias("a"), ob.alias("b")
     # Feeds strengths and both rankings.
-    e = materialize(
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.brand") < F.col("b.brand")),
-        )
-        .groupBy(
-            F.col("a.brand").alias("ba"), F.col("b.brand").alias("bb")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w")),
-        eager=False,
-    )
+    e = materialize(_brand_pairs(spark, sf_dir).toDF("ba", "bb", "w"), eager=False)
     st = (
         e.select(F.col("ba").alias("v"), "w")
         .unionByName(e.select(F.col("bb").alias("v"), "w"))

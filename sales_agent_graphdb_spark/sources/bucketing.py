@@ -59,5 +59,3 @@ def collocated_join(
     task — a zipper of co-located buckets, no Exchange in the plan."""
     return spark.table(left_table).join(spark.table(right_table), on, how)
 
-
-# Backwards-compat alias for the misspelled original name.

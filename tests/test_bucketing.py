@@ -85,13 +85,18 @@ def test_bucketed_join_has_no_shuffle(no_broadcast):
 def test_order_brand_layout_self_join_is_exchange_free(spark):
     """The shared (okey, brand) projection layout (graphq.
     _order_brand_pairs) is bucketed on okey so the projection
-    self-join zips co-located buckets with no shuffle. Broadcast is
-    disabled for the probe: at test scale AQE would broadcast the
-    small side, which also avoids the shuffle but would not prove the
-    bucketing claim that matters at 100 TB."""
+    self-join zips co-located buckets with no shuffle — both the plain
+    self-join and _brand_pairs, the graph.co_occurrence_pairs join the
+    brand-graph queries run. Broadcast is disabled for the probe: at
+    test scale AQE would broadcast the small side, which also avoids
+    the shuffle but would not prove the bucketing claim that matters
+    at 100 TB."""
     from pyspark.sql import functions as F
 
-    from sales_agent_graphdb_spark.queries.graphq import _order_brand_pairs
+    from sales_agent_graphdb_spark.queries.graphq import (
+        _brand_pairs,
+        _order_brand_pairs,
+    )
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -103,10 +108,11 @@ def test_order_brand_layout_self_join_is_exchange_free(spark):
             (F.col("a.okey") == F.col("b.okey"))
             & (F.col("a.brand") < F.col("b.brand")),
         )
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning(okey" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
+        for df in (j, _brand_pairs(spark, "/root/testdata/sf0.001")):
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning(okey" not in plan, plan
+            assert "SortMergeJoin" in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -402,9 +402,10 @@ print("RELIABLE_OK", len(rdd_dirs()))
 
 def test_basket_pair_expansion_equals_self_join(spark):
     """The per-basket HOF pair expansion equals the lineitem self-join +
-    distinct, and graph.co_occurrence_edges (the self-join form the
-    co-purchase queries use) yields both directions of that pair set.
-    Data has duplicate (order, part) rows and singleton baskets."""
+    distinct; graph.co_occurrence_pairs weighs each pair by its matching
+    row pairs, and graph.co_occurrence_edges (the co-purchase queries'
+    edge build) yields both directions of the pair set. Data has
+    duplicate (order, part) rows and singleton baskets."""
     li = spark.createDataFrame(
         [(1, 10), (1, 20), (1, 10), (1, 30), (2, 5), (2, 7), (3, 9),
          (4, 2), (4, 2)],
@@ -436,6 +437,12 @@ def test_basket_pair_expansion_equals_self_join(spark):
     assert sorted(tuple(r) for r in join_pairs.collect()) == sorted(
         tuple(r) for r in hof_pairs.collect()
     ) == [(5, 7), (10, 20), (10, 30), (20, 30)]
+    # (1, 10) twice: each pair with part 10 matches two row pairs.
+    weighted = graph.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
+    assert weighted.columns == ["lo", "hi", "w"]
+    assert sorted(tuple(r) for r in weighted.collect()) == [
+        (5, 7, 1), (10, 20, 2), (10, 30, 2), (20, 30, 1)
+    ]
     sym = graph.co_occurrence_edges(li, "l_orderkey", "l_partkey")
     pairs = [(5, 7), (10, 20), (10, 30), (20, 30)]
     assert sorted(tuple(r) for r in sym.collect()) == sorted(

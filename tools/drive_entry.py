@@ -45,25 +45,6 @@ for name, fn in qs.items():
     try:
         sdf = fn(spark, SF)
         srows = [tuple(r) for r in sdf.collect()]
-        if name not in os_:
-            # rows-only check (no oracle): a legitimately-empty result
-            # is a FAILURE on both evidence trails — the artifact row
-            # and the printed verdict must agree (ADVICE r09 #4).
-            record[name] = {
-                "rows_match": len(srows) > 0,
-                "schema_match": True,
-                "hash_match": None,
-                "spark_rows": len(srows),
-                "oracle_rows": None,
-                "err": None,
-            }
-            if not srows:
-                fails.append(name)
-            print(
-                f"  {name}: rows-only {len(srows)} rows"
-                + ("" if srows else " EMPTY (counted as failure)")
-            )
-            continue
         res = con.execute(os_[name])
         ocols = [d[0] for d in res.description]
         orows = [tuple(r) for r in res.fetchall()]
@@ -90,7 +71,7 @@ for name, fn in qs.items():
         fails.append(name)
         print(f"  {name}: ERROR {record[name]['err'][:120]}")
         continue
-    ok = record[name]["rows_match"] and record[name]["schema_match"] and record[name]["hash_match"] in (True, None)
+    ok = record[name]["rows_match"] and record[name]["schema_match"] and record[name]["hash_match"]
     status = "OK" if ok else "MISMATCH"
     if not ok:
         fails.append(name)
