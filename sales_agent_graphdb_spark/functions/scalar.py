@@ -17,6 +17,34 @@ from pyspark.sql import functions as F
 MONEY = "decimal(18,2)"
 
 
+def md5_int(c: Column | str, salt: str = "", hex_digits: int = 15) -> Column:
+    """THE md5-prefix hash: bigint of the first ``hex_digits`` hex chars
+    of md5(string(c) || salt). Every sampler, split, sketch, A/B arm,
+    random walk and portable MinHash buckets rows with it, and
+    ``md5_int_sql`` is its DuckDB text — both sides must stay
+    bit-identical, so a hash tweak happens here ONCE or the Spark and
+    oracle sides silently diverge. 15 hex digits = 60 bits (modular
+    buckets); 13 = 52 bits, exact as a double (uniform thresholds);
+    8 = the hash-embedding dimensions."""
+    c = F.col(c) if isinstance(c, str) else c
+    s = c.cast("string")
+    if salt:
+        s = F.concat(s, F.lit(salt))
+    return F.conv(F.substring(F.md5(s), 1, hex_digits), 16, 10).cast("bigint")
+
+
+def md5_int_sql(expr: str, salt: str = "", hex_digits: int = 15) -> str:
+    """DuckDB twin of ``md5_int``."""
+    s = f"CAST({expr} AS VARCHAR)" + (f" || '{salt}'" if salt else "")
+    return f"CAST(('0x' || substr(md5({s}), 1, {hex_digits})) AS BIGINT)"
+
+
+# 2^52: a 13-hex-digit md5_int is a uniform integer below it, exact as
+# a double, so `h < rate · 2^52` and `h / 2^52` are bit-identical on
+# both engines (keep/drop thresholds, KMV uniforms).
+H52_SPAN = 4503599627370496.0
+
+
 def money(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     return c.cast(MONEY)

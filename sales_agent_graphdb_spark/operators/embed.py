@@ -19,6 +19,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sales_agent_graphdb_spark.functions.scalar import md5_int_sql
+
 
 def _hash_vec(text: str, dim: int) -> list[float]:
     """Dim-d vector: e_i = int(md5(text + '#i')[:8], 16) % 1000 / 1000
@@ -58,7 +60,4 @@ def embed_col(text: Column, dim: int = 8) -> Column:
 
 def duckdb_embed_dim_sql(text_expr: str, i: int) -> str:
     """Oracle for dimension i of the hash embedding."""
-    return (
-        f"CAST(CAST(('0x' || substr(md5({text_expr} || '#{i}'), 1, 8)) AS BIGINT) "
-        f"% 1000 AS DOUBLE) / 1000.0"
-    )
+    return f"CAST({md5_int_sql(text_expr, f'#{i}', 8)} % 1000 AS DOUBLE) / 1000.0"

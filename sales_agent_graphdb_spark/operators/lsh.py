@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sales_agent_graphdb_spark.functions.scalar import md5_int
 from sales_agent_graphdb_spark.session import materialize
 
 
@@ -110,13 +111,9 @@ def _rot(c: Column, i: int) -> Column:
 
 
 def _portable_hash(s: Column, seed: Column) -> Column:
-    """60-bit hash from md5(s + '#' + seed) — identical in DuckDB as
-    CAST(('0x' || substr(md5(s || '#' || seed), 1, 15)) AS BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(s, F.lit("#"), seed.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    """60-bit hash of s + '#' + seed — identical in DuckDB as
+    md5_int_sql("s || '#' || seed")."""
+    return md5_int(F.concat(s, F.lit("#"), seed.cast("string")))
 
 
 def _signatures(tokens: DataFrame, n_hashes: int, portable: bool) -> DataFrame:

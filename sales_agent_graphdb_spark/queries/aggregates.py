@@ -10,9 +10,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int, md5_int_sql, money
 from sales_agent_graphdb_spark.operators import graph
 from sales_agent_graphdb_spark.registry import register
+from sales_agent_graphdb_spark.streaming.pipelines import KMV_SALT
 
 
 @register(
@@ -541,8 +542,6 @@ def agg_exchange_reuse_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 64
 _KMV_SPEND = 800  # spender: per-user purchase value above this
 _KMV_VIEWS = 14  # heavy viewer: at least this many view events
-_KMV_SALT = "kmv8"
-_H52_DENOM = 4503599627370496.0  # 2^52
 
 
 @register(
@@ -560,8 +559,8 @@ _H52_DENOM = 4503599627370496.0  # 2^52
       SELECT 'B' AS tag, user_id FROM per WHERE vn >= {_KMV_VIEWS}),
     hashed AS (
       SELECT tag, user_id,
-             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '{_KMV_SALT}'), 1, 13)) AS BIGINT)
-               / {_H52_DENOM} AS h
+             {md5_int_sql("user_id", KMV_SALT, 13)}
+               / {H52_SPAN} AS h
       FROM members),
     sk AS (  -- per-set KMV sketch: the k smallest hashes
       SELECT tag, h
@@ -647,18 +646,7 @@ def agg_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit(_KMV_SALT))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(_H52_DENOM)
-    )
+    h = md5_int("user_id", KMV_SALT, 13) / F.lit(H52_SPAN)
     sk = (
         members.select("tag", h.alias("h"))
         .withColumn("rn", F.row_number().over(W.partitionBy("tag").orderBy("h")))
@@ -738,8 +726,8 @@ _KMV_BATCH_MOD = 7  # "new arrivals": user_id % 7 == 0
     WITH users AS (SELECT DISTINCT user_id FROM events),
     hashed AS (
       SELECT user_id,
-             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '{_KMV_SALT}'), 1, 13)) AS BIGINT)
-               / {_H52_DENOM} AS h,
+             {md5_int_sql("user_id", KMV_SALT, 13)}
+               / {H52_SPAN} AS h,
              CASE WHEN user_id % {_KMV_BATCH_MOD} = 0 THEN 'batch'
                   ELSE 'old' END AS part
       FROM users),
@@ -792,18 +780,7 @@ def agg_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     side), not data-sized."""
     ev = catalog.load_table(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit(_KMV_SALT))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(_H52_DENOM)
-    )
+    h = md5_int("user_id", KMV_SALT, 13) / F.lit(H52_SPAN)
     hashed = users.select(
         h.alias("h"),
         F.when(F.col("user_id") % _KMV_BATCH_MOD == 0, "batch")

@@ -16,49 +16,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int, md5_int_sql
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
-
-# THE md5-prefix modular hash — bigint(first 15 hex chars of md5) % m.
-# Engine-portable (DuckDB mirror: CAST(('0x' || substr(md5(x), 1, 15))
-# AS BIGINT) % m). profiling.py and dedup.py import this single
-# definition; a hash tweak must happen here ONCE or the split/sample/
-# sketch operators' Spark and oracle sides silently diverge (same rule
-# as the shared tokenizer below).
-def md5_mod(c: Column, m: int) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint") % m
-
-
-def md5_mod_sql(expr: str, m: int) -> str:
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT) % {m}"
-
-
-# THE 52-bit md5-prefix hash for probabilistic keep/drop thresholds
-# (value < rate · 2^52): 13 hex chars = 52 bits, exact as a double.
-# Same single-definition rule as md5_mod — sample_weighted_hash and
-# sample_quality_bins both build on these two; a width tweak in one
-# copy would silently desynchronize the samplers.
-H52_SPAN = 4503599627370496.0  # 2^52
-
-
-def h52(c: Column, salt: str) -> Column:
-    return F.conv(
-        F.substring(F.md5(F.concat(c, F.lit(salt))), 1, 13), 16, 10
-    ).cast("bigint")
-
-
-def h52_sql(expr: str, salt: str) -> str:
-    return f"CAST(('0x' || substr(md5({expr} || '{salt}'), 1, 13)) AS BIGINT)"
 
 
 # Deterministic content-independent shard in [0, 10): md5 of the doc id
 # string. Used for the train/eval split (decontamination) and the
 # per-stratum sample. Stable under corpus growth and re-ingestion.
 def _shard10(doc_id: Column) -> Column:
-    return md5_mod(doc_id.cast("string"), 10)
+    return md5_int(doc_id) % 10
 
 
-_SHARD10_SQL = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 10"
+_SHARD10_SQL = f"{md5_int_sql('doc_id')} % 10"
 
 # Word 5-gram array of a document, reused by decontamination. The token
 # array MUST be its own projection (see text_boilerplate_ngrams: an
@@ -97,9 +67,9 @@ def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", alnum_tokens(F.col("text")).alias("w"))
 
 
-@register(
-    "decontaminate_ngram_overlap",
-    oracle=f"""
+# The exact decontamination answer; the Bloom-prefiltered twin must
+# return it unchanged, so both queries register this one text.
+_DECONTAMINATE_ORACLE = f"""
     WITH toks AS (
       SELECT doc_id, {_SHARD10_SQL} AS shard, {_TOKENS_SQL} AS w
       FROM documents),
@@ -118,8 +88,10 @@ def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(DISTINCT e.doc_id) AS BIGINT) AS n_eval_docs
     FROM train t JOIN eval_set e ON t.gram = e.gram
     GROUP BY t.doc_id ORDER BY train_doc_id
-    """,
-)
+    """
+
+
+@register("decontaminate_ngram_overlap", oracle=_DECONTAMINATE_ORACLE)
 def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: find training documents sharing any
     word 5-gram with the held-out eval split (the n-gram-overlap
@@ -324,7 +296,7 @@ _WSAMPLE_BASE = 0.3  # base acceptance rate scaled by each source's weight
       FROM per_source CROSS JOIN tot)
     SELECT d.doc_id, d.source
     FROM documents d JOIN w ON d.source = w.source
-    WHERE CAST({h52_sql("CAST(d.doc_id AS VARCHAR)", "#ws")} AS DOUBLE)
+    WHERE CAST({md5_int_sql("d.doc_id", "#ws", 13)} AS DOUBLE)
           < w.p * {H52_SPAN}
     ORDER BY d.doc_id
     """,
@@ -348,7 +320,7 @@ def sample_weighted_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0), F.col("mix_weight") * F.lit(_WSAMPLE_BASE)
         ).alias("p"),
     )
-    h = h52(F.col("doc_id").cast("string"), "#ws")
+    h = md5_int("doc_id", "#ws", 13)
     return (
         d.join(F.broadcast(weights), "source")
         .filter(h.cast("double") < F.col("p") * F.lit(H52_SPAN))
@@ -396,7 +368,7 @@ _BIN_RATES = (0.10, 0.25, 0.50, 1.0)  # keep-rate per quality bin 0..3
                       WHEN 2 THEN {_BIN_RATES[2]} ELSE {_BIN_RATES[3]} END AS DOUBLE) AS rate
       FROM binned)
     SELECT doc_id, score, bin,
-           (CAST({h52_sql("CAST(doc_id AS VARCHAR)", "#qb")} AS DOUBLE)
+           (CAST({md5_int_sql("doc_id", "#qb", 13)} AS DOUBLE)
             < rate * {H52_SPAN}) AS kept
     FROM rated ORDER BY doc_id
     """,
@@ -439,7 +411,7 @@ def sample_quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("bin") == 2, F.lit(_BIN_RATES[2]))
         .otherwise(F.lit(_BIN_RATES[3]))
     )
-    h = h52(F.col("doc_id").cast("string"), "#qb")
+    h = md5_int("doc_id", "#qb", 13)
     return binned.select(
         "doc_id",
         "score",
@@ -468,7 +440,7 @@ _EPOCH_SALT = "#epoch1"
     oracle=f"""
     WITH keyed AS (
       SELECT doc_id,
-             CAST({md5_mod_sql("CAST(doc_id AS VARCHAR) || '" + _EPOCH_SALT + "'", _EPOCH_SHARDS)} AS INT) AS shard,
+             CAST({md5_int_sql("doc_id", _EPOCH_SALT)} % {_EPOCH_SHARDS} AS INT) AS shard,
              md5(CAST(doc_id AS VARCHAR) || '{_EPOCH_SALT}#ord') AS sort_key
       FROM documents)
     SELECT doc_id, shard,
@@ -488,14 +460,13 @@ def corpus_shuffle_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     output files and the sort rides the write's local sort;
     repartition(shard) + sortWithinPartitions, no global exchange of
     a total order). Hash keys make the permutation content-independent
-    and stable under corpus growth within an epoch. Shares md5_mod
+    and stable under corpus growth within an epoch. Shares md5_int
     with every other sharding operator in this module."""
     d = catalog.load_table(spark, sf_dir, "documents")
     sid = F.col("doc_id").cast("string")
     keyed = d.select(
         "doc_id",
-        md5_mod(F.concat(sid, F.lit(_EPOCH_SALT)), _EPOCH_SHARDS)
-        .cast("int")
+        (md5_int(sid, _EPOCH_SALT) % _EPOCH_SHARDS).cast("int")
         .alias("shard"),
         F.md5(F.concat(sid, F.lit(_EPOCH_SALT + "#ord"))).alias("sort_key"),
     )
@@ -531,8 +502,7 @@ _POOL_MOD, _POOL_KEEP = 10, 4
       SELECT event_id, event_type,
              md5(CAST(event_id AS VARCHAR)) AS h
       FROM events
-      WHERE CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))
-                 AS BIGINT) % {_POOL_MOD} < {_POOL_KEEP}),
+      WHERE {md5_int_sql("event_id")} % {_POOL_MOD} < {_POOL_KEEP}),
     ranked AS (
       SELECT event_id, event_type,
              ROW_NUMBER() OVER (PARTITION BY event_type
@@ -554,7 +524,7 @@ def sample_stratified_exact_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = catalog.load_table(spark, sf_dir, "events")
     pool = e.filter(
-        md5_mod(F.col("event_id").cast("string"), _POOL_MOD) < _POOL_KEEP
+        md5_int("event_id") % _POOL_MOD < _POOL_KEEP
     ).select(
         "event_id", "event_type", F.md5(F.col("event_id").cast("string")).alias("h")
     )
@@ -589,7 +559,7 @@ _RES_SALT = "res8"
     WITH keyed AS (
       SELECT doc_id, lang, source, n_chars,
              ROUND(
-               ln((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '{_RES_SALT}'), 1, 13)) AS BIGINT) + 1.0)
+               ln(({md5_int_sql("doc_id", _RES_SALT, 13)} + 1.0)
                   / 4503599627370498.0)
                / GREATEST(CAST(n_chars AS DOUBLE), 1.0), 9) AS k
       FROM documents),
@@ -625,7 +595,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id as the total-order tiebreak — the selected set is then
     identical by construction."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    u = (h52(F.col("doc_id").cast("string"), _RES_SALT) + F.lit(1.0)) / F.lit(
+    u = (md5_int("doc_id", _RES_SALT, 13) + F.lit(1.0)) / F.lit(
         H52_SPAN + 2.0
     )
     key = F.round(
@@ -661,29 +631,7 @@ _BLOOM_BITS = 1 << 16
 _BLOOM_WORDS = _BLOOM_BITS // 64
 
 
-@register(
-    "decontaminate_bloom_prefilter",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, {_SHARD10_SQL} AS shard, {_TOKENS_SQL} AS w
-      FROM documents),
-    grams AS (
-      SELECT doc_id, shard,
-             CASE WHEN len(w) >= {_NGRAM_N} THEN list_transform(
-               generate_series(1, len(w) - {_NGRAM_N - 1}),
-               i -> concat(w[i], ' ', w[i+1], ' ', w[i+2], ' ', w[i+3], ' ', w[i+4]))
-             ELSE [] END AS gs
-      FROM toks),
-    flat AS (SELECT DISTINCT doc_id, shard, unnest(gs) AS gram FROM grams),
-    train AS (SELECT doc_id, gram FROM flat WHERE shard <> 0),
-    eval_set AS (SELECT doc_id, gram FROM flat WHERE shard = 0)
-    SELECT t.doc_id AS train_doc_id,
-           CAST(COUNT(DISTINCT t.gram) AS BIGINT) AS n_shared_grams,
-           CAST(COUNT(DISTINCT e.doc_id) AS BIGINT) AS n_eval_docs
-    FROM train t JOIN eval_set e ON t.gram = e.gram
-    GROUP BY t.doc_id ORDER BY train_doc_id
-    """,
-)
+@register("decontaminate_bloom_prefilter", oracle=_DECONTAMINATE_ORACLE)
 def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination, BLOOM-PREFILTERED twin — the 100 TB shape of
     decontaminate_ngram_overlap: the eval grams are folded into a

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
 from sales_agent_graphdb_spark.operators import ann, lsh, similarity as sim
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
@@ -479,7 +480,7 @@ _PORTABLE_MINHASH_CTES = f"""
     seeds AS (SELECT unnest(generate_series(0, 15)) AS seed),
     minh AS (
       SELECT id, seed,
-             MIN(CAST(('0x' || substr(md5(g || '#' || seed), 1, 15)) AS BIGINT)) AS mh
+             MIN({md5_int_sql("g || '#' || seed")}) AS mh
       FROM toks CROSS JOIN seeds GROUP BY id, seed),
     banded AS (
       SELECT id, seed // 4 AS band,
@@ -539,7 +540,7 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM corpus, unnest(string_split_regex(
         trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), '\\s+')) AS u(t)),
     hashed AS (
-      SELECT id, CAST(('0x' || substr(md5(t || '#' || 0), 1, 15)) AS BIGINT) AS h
+      SELECT id, {md5_int_sql("t || '#' || 0")} AS h
       FROM toks),
     bits AS (
       SELECT id, g.j,
@@ -804,12 +805,12 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed AS (
       SELECT doc_id,
              md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS cluster_key,
-             CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 10 < 2
+             CASE WHEN {md5_int_sql("doc_id")} % 10 < 2
                   THEN 'val' ELSE 'train' END AS naive_split
       FROM corpus),
     clusters AS (
       SELECT cluster_key,
-             CASE WHEN CAST(('0x' || substr(md5(cluster_key), 1, 15)) AS BIGINT) % 10 < 2
+             CASE WHEN {md5_int_sql("cluster_key")} % 10 < 2
                   THEN 'val' ELSE 'train' END AS split,
              CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(COUNT(DISTINCT naive_split) AS BIGINT) AS n_naive_splits
@@ -840,16 +841,10 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_cluster_canonical's component id for the md5 key."""
     corpus = dup_corpus(spark, sf_dir)
     norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")
-    from sales_agent_graphdb_spark.queries.curation import md5_mod
-
-    def shard10_str(c):
-        # THE shared md5-prefix hash (curation.md5_mod) on a string key.
-        return md5_mod(c, 10)
-
     keyed = corpus.select(
         "doc_id",
         F.md5(norm).alias("cluster_key"),
-        F.when(shard10_str(F.col("doc_id").cast("string")) < 2, "val")
+        F.when(md5_int("doc_id") % 10 < 2, "val")
         .otherwise("train")
         .alias("naive_split"),
     )
@@ -857,7 +852,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("naive_split").alias("n_naive_splits"),
     ).select(
-        F.when(shard10_str(F.col("cluster_key")) < 2, "val")
+        F.when(md5_int("cluster_key") % 10 < 2, "val")
         .otherwise("train")
         .alias("split"),
         "n_docs",
@@ -988,8 +983,7 @@ _MH_EST_BOUND = 0.2  # measured planted-pair max |est−J|: 0.12/0.11/0.09
     sel AS (
       SELECT id_a, id_b,
              id_b = id_a + {DUP_OFFSET} AS is_planted,
-             CAST(('0x' || substr(md5(id_a || '_' || id_b), 1, 15)) AS BIGINT)
-               % 8 = 0 AS in_sample
+             {md5_int_sql("id_a || '_' || id_b")} % 8 = 0 AS in_sample
       FROM cand),
     verify AS (
       SELECT id_a, id_b, is_planted, in_sample FROM sel
@@ -1082,21 +1076,9 @@ def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
     agree = lsh._with_agreement(cand, minw, minw, 16)
     planted = F.col("id_b") == F.col("id_a") + DUP_OFFSET
     in_sample = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("id_a").cast("string"),
-                        F.lit("_"),
-                        F.col("id_b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            F.concat(F.col("id_a").cast("string"), F.lit("_"), F.col("id_b").cast("string"))
+        )
         % 8
         == 0
     )

@@ -19,10 +19,9 @@ from sales_agent_graphdb_spark.registry import register
 
 VAL = "decimal(20,6)"
 
-
-@register(
-    "st_tumbling_window",
-    oracle="""
+# Batch oracles; the streaming twins in streaming_exec.py register the
+# same constants, so batch/stream parity is one SQL text per window kind.
+TUMBLING_ORACLE = """
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
            event_type,
            COUNT(*) AS n_events,
@@ -30,8 +29,43 @@ VAL = "decimal(20,6)"
     FROM events
     GROUP BY window_start, event_type
     ORDER BY window_start, event_type
-    """,
-)
+    """
+SLIDING_ORACLE = """
+    WITH g AS (SELECT unnest([0, 1]) AS k),
+    w AS (
+      SELECT e.event_type, e.value,
+             to_timestamp((floor(epoch(e.ts))::BIGINT // 1800 - g.k) * 1800) AS window_start
+      FROM events e, g
+      WHERE floor(epoch(e.ts))::BIGINT // 1800 - g.k >= 0)
+    SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
+           event_type, COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+    FROM w
+    GROUP BY 1, 2 ORDER BY 1, 2
+    """
+SESSION_ORACLE = """
+    WITH ordered AS (
+      SELECT user_id, ts, event_id, value,
+             CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
+                       > 1800 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                  THEN 1 ELSE 0 END AS new_session
+      FROM events),
+    islands AS (
+      SELECT user_id, ts, value,
+             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                    ROWS UNBOUNDED PRECEDING) AS session_no
+      FROM ordered)
+    SELECT user_id,
+           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+    FROM islands
+    GROUP BY user_id, session_no
+    ORDER BY user_id, session_start
+    """
+
+
+@register("st_tumbling_window", oracle=TUMBLING_ORACLE)
 def st_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows (counts + exact sums) —
     identical code path to the streaming pipeline, minus watermark."""
@@ -52,22 +86,7 @@ def st_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "st_sliding_window",
-    oracle="""
-    WITH g AS (SELECT unnest([0, 1]) AS k),
-    w AS (
-      SELECT e.event_type, e.value,
-             to_timestamp((floor(epoch(e.ts))::BIGINT // 1800 - g.k) * 1800) AS window_start
-      FROM events e, g
-      WHERE floor(epoch(e.ts))::BIGINT // 1800 - g.k >= 0)
-    SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
-    FROM w
-    GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-)
+@register("st_sliding_window", oracle=SLIDING_ORACLE)
 def st_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows: 1-hour length, 30-minute slide — every event
     lands in 2 windows (F.window duplicates rows; the oracle mirrors
@@ -89,29 +108,7 @@ def st_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "st_session_window",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-                       > 1800 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events),
-    islands AS (
-      SELECT user_id, ts, value,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS session_no
-      FROM ordered)
-    SELECT user_id,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
-    FROM islands
-    GROUP BY user_id, session_no
-    ORDER BY user_id, session_start
-    """,
-)
+@register("st_session_window", oracle=SESSION_ORACLE)
 def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a 30-minute inactivity gap
     (`F.session_window`, the reference's Redis-TTL/session semantics in

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -267,11 +268,11 @@ def anomaly_mad_robust_z(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_ab_test_lift",
-    oracle="""
+    oracle=f"""
     WITH arms AS (
       SELECT user_id,
-             CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || 'ab8'), 1, 15)) AS BIGINT)
-                       % 2 = 0 THEN 'control' ELSE 'treatment' END AS arm,
+             CASE WHEN {md5_int_sql("user_id", "ab8")} % 2 = 0
+                  THEN 'control' ELSE 'treatment' END AS arm,
              MAX(CASE WHEN event_type = 'purchase' AND value > 150
                       THEN 1 ELSE 0 END) AS converted
       FROM events GROUP BY user_id),
@@ -314,20 +315,7 @@ def stats_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (experiment, day, segment) over the same pass — the z-test is
     the gate before any lift ships."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit("ab8"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0,
-        "control",
-    ).otherwise("treatment")
+    arm = F.when(md5_int("user_id", "ab8") % 2 == 0, "control").otherwise("treatment")
     arms = ev.groupBy("user_id").agg(
         F.max(
             F.when(
@@ -509,10 +497,9 @@ def stats_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_diff_in_diff",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
-      SELECT CASE WHEN CAST(('0x' || substr(md5(user_id || 'did9'), 1, 15))
-                       AS BIGINT) % 2 = 0
+      SELECT CASE WHEN {md5_int_sql("user_id", "did9")} % 2 = 0
                   THEN 'treat' ELSE 'control' END AS arm,
              CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00'
                   THEN 'pre' ELSE 'post' END AS period,
@@ -557,20 +544,7 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan; at 100 TB this runs per (experiment, segment) in the same
     pass."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit("did9"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0,
-        "treat",
-    ).otherwise("control")
+    arm = F.when(md5_int("user_id", "did9") % 2 == 0, "treat").otherwise("control")
     period = F.when(
         F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"), "pre"
     ).otherwise("post")
@@ -656,10 +630,7 @@ def stats_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KS_ARM = (
-    "CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || 'ks10'), 1, 15)) "
-    "AS BIGINT) % 2"
-)
+_KS_ARM = f"{md5_int_sql('user_id', 'ks10')} % 2"
 
 
 @register(
@@ -709,19 +680,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correct null baseline, same discipline as stats_diff_in_diff.
     """
     ev = catalog.load_table(spark, sf_dir, "events")
-    arm_treat = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit("ks10"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0
-    )
+    arm_treat = md5_int("user_id", "ks10") % 2 == 0
     g = (
         ev.select(
             (F.col("value").cast("decimal(18,2)") * 100)
@@ -763,10 +722,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CUPED_ARM = (
-    "CAST(('0x' || substr(md5(CAST(u.user_id AS VARCHAR) || 'ab8'), 1, 15)) "
-    "AS BIGINT) % 2"
-)
+_CUPED_ARM = f"{md5_int_sql('u.user_id', 'ab8')} % 2"
 
 
 @register(
@@ -841,19 +797,7 @@ def stats_cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFram
             .otherwise(dec0)
         ).alias("y"),
     )
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit("ab8"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0
-    )
+    treat = md5_int("user_id", "ab8") % 2 == 0
     m = u.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("x").cast("double").alias("sx"),
@@ -965,10 +909,7 @@ def stats_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MW_ARM = (
-    "CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || 'mw11'), 1, 15)) "
-    "AS BIGINT) % 2"
-)
+_MW_ARM = f"{md5_int_sql('user_id', 'mw11')} % 2"
 
 
 @register(
@@ -1022,19 +963,7 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect size sits at ~0.5 — the discipline every stats_* query
     here follows."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    arm_treat = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit("mw11"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0
-    )
+    arm_treat = md5_int("user_id", "mw11") % 2 == 0
     g = (
         ev.select(
             (F.col("value").cast("decimal(18,2)") * 100)
@@ -1158,8 +1087,7 @@ _BOOT_HI_RK = 19
       SELECT t.b, CAST(e.value AS DECIMAL(18,2)) AS v
       FROM events e CROSS JOIN range({_BOOT_B}) t(b)
       WHERE e.event_type = 'purchase'
-        AND CAST(('0x' || substr(md5(CAST(e.event_id AS VARCHAR) || ':'
-                  || CAST(t.b AS VARCHAR) || 'boot11'), 1, 15)) AS BIGINT)
+        AND {md5_int_sql("CAST(e.event_id AS VARCHAR) || ':' || CAST(t.b AS VARCHAR)", "boot11")}
             % {_BOOT_MOD} = 0),
     means AS (
       SELECT b, CAST(SUM(v) AS DOUBLE) / COUNT(*) AS m
@@ -1203,22 +1131,10 @@ def stats_bootstrap_ci_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("value").cast("decimal(18,2)")
     pur = ev.filter(F.col("event_type") == "purchase")
     keep = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("event_id").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                        F.lit("boot11"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            F.concat(F.col("event_id").cast("string"), F.lit(":"), F.col("b").cast("string")),
+            "boot11",
+        )
         % _BOOT_MOD
         == 0
     )

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
 from sales_agent_graphdb_spark.operators import fulltext, graph
 from sales_agent_graphdb_spark.queries import sources_io
 from sales_agent_graphdb_spark.registry import register
@@ -302,16 +303,26 @@ def _weighted_sym(pairs: DataFrame) -> DataFrame:
     ).unionByName(pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"), "w"))
 
 
+# The DuckDB twins of _order_brand_pairs (`ob`, the distinct (order,
+# brand) facts) and _brand_pairs (`bp`, the weighted lo < hi brand
+# pairs). Every brand-graph oracle starts from this one CTE text, so
+# all of them read the same projection the Spark side builds once.
+_OB_SQL = """ob AS MATERIALIZED (
+      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
+      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey)"""
+_BRAND_PAIRS_SQL = f"""{_OB_SQL},
+    bp AS (
+      SELECT a.brand AS lo, b.brand AS hi, CAST(COUNT(*) AS BIGINT) AS w
+      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
+      GROUP BY lo, hi)"""
+
+
 @register(
     "graph_brand_projection",
-    oracle="""
-    WITH ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey)
-    SELECT a.brand AS brand_a, b.brand AS brand_b,
-           CAST(COUNT(*) AS BIGINT) AS n_orders
-    FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-    GROUP BY brand_a, brand_b
+    oracle=f"""
+    WITH {_BRAND_PAIRS_SQL}
+    SELECT lo AS brand_a, hi AS brand_b, w AS n_orders
+    FROM bp
     ORDER BY n_orders DESC, brand_a, brand_b LIMIT 20
     """,
 )
@@ -771,17 +782,11 @@ graph_sssp_bounded.__doc__ = graph_sssp_bounded.__doc__.format(
 
 @register(
     "graph_node_jaccard",
-    oracle="""
-    WITH ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+    oracle=f"""
+    WITH {_BRAND_PAIRS_SQL},
     deg AS (
       SELECT brand, CAST(COUNT(*) AS BIGINT) AS d FROM ob GROUP BY brand),
-    co AS (
-      SELECT a.brand AS brand_a, b.brand AS brand_b,
-             CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-      GROUP BY brand_a, brand_b)
+    co AS (SELECT lo AS brand_a, hi AS brand_b, w AS n_common FROM bp)
     SELECT co.brand_a, co.brand_b, co.n_common,
            ROUND(CAST(co.n_common AS DOUBLE)
                  / (da.d + db.d - co.n_common), 6) AS jaccard
@@ -838,9 +843,7 @@ _WALK_STARTS = 200  # md5-chosen start nodes (bounded output at any SF)
 
 
 def _walk_h_sql(node: str, step: int) -> str:
-    return (
-        f"CAST(('0x' || substr(md5({node} || '|{step}|{_WALK_SALT}'), 1, 13)) AS BIGINT)"
-    )
+    return md5_int_sql(node, f"|{step}|{_WALK_SALT}", 13)
 
 
 @register(
@@ -908,13 +911,7 @@ def graph_random_walk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def h(node_col: F.Column, step: int) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(node_col, F.lit(f"|{step}|{_WALK_SALT}"))), 1, 13
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        return md5_int(node_col, f"|{step}|{_WALK_SALT}", 13)
 
     frontier = (
         und.select("src").distinct()
@@ -1010,18 +1007,12 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_modularity_score",
-    oracle="""
-    WITH ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    proj AS (  -- weighted brand projection (graph_brand_projection)
-      SELECT a.brand AS ba, b.brand AS bb, CAST(COUNT(*) AS BIGINT) AS w
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-      GROUP BY ba, bb),
+    oracle=f"""
+    WITH {_BRAND_PAIRS_SQL},
+    proj AS (SELECT lo AS ba, hi AS bb, w FROM bp),
     comm AS (
       SELECT brand,
-             CAST(('0x' || substr(md5(brand || 'mod8'), 1, 15)) AS BIGINT) % 4
-               AS c
+             {md5_int_sql("brand", "mod8")} % 4 AS c
       FROM (SELECT DISTINCT brand FROM ob)),
     parts AS (
       SELECT 'all_in_one' AS partition_name, brand, 0 AS c FROM comm
@@ -1077,14 +1068,7 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = materialize(_brand_pairs(spark, sf_dir).toDF("ba", "bb", "w"), eager=False)
     comm = _order_brand_pairs(spark, sf_dir).select("brand").distinct().select(
         "brand",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.col("brand"), F.lit("mod8"))), 1, 15),
-                16,
-                10,
-            ).cast("bigint")
-            % 4
-        ).alias("c"),
+        (md5_int("brand", "mod8") % 4).alias("c"),
     )
     parts = comm.select(
         F.lit("all_in_one").alias("partition_name"), "brand", F.lit(0).alias("c")
@@ -1142,10 +1126,8 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_resource_allocation",
-    oracle="""
-    WITH ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+    oracle=f"""
+    WITH {_OB_SQL},
     deg AS (SELECT okey, CAST(COUNT(*) AS BIGINT) AS d FROM ob GROUP BY okey)
     SELECT a.brand AS brand_a, b.brand AS brand_b,
            CAST(SUM(1000000 // deg.d) AS BIGINT) AS ra_score_ppm,
@@ -1202,13 +1184,9 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_clustering_coefficient",
-    oracle="""
-    WITH ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    e AS (
-      SELECT DISTINCT a.brand AS ba, b.brand AS bb
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand),
+    oracle=f"""
+    WITH {_BRAND_PAIRS_SQL},
+    e AS (SELECT lo AS ba, hi AS bb FROM bp),
     und AS (
       SELECT ba AS v, bb AS w FROM e UNION ALL SELECT bb, ba FROM e),
     deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY v),
@@ -1315,20 +1293,15 @@ def _bfs_all_pairs(edges: DataFrame) -> DataFrame:
     return graph.bfs_levels(seed, expand, keys=["src", "dst"], depths=range(2, 9))
 
 
-# The shared backbone CTE prefix (ob -> e0 -> ranked -> kept -> e) —
+# The shared backbone CTE prefix (ob -> bp -> ranked -> kept -> e) —
 # textually identical in every backbone oracle so the two engines cut
 # the same edge set.
-_BACKBONE_SQL = """ob AS MATERIALIZED (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    e0 AS (
-      SELECT a.brand AS ba, b.brand AS bb, CAST(COUNT(*) AS BIGINT) AS w
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-      GROUP BY ba, bb),
+_BACKBONE_SQL = f"""{_BRAND_PAIRS_SQL},
     ranked AS (
-      SELECT ba, bb, row_number() OVER (ORDER BY w DESC, ba, bb) AS rk,
+      SELECT lo AS ba, hi AS bb,
+             row_number() OVER (ORDER BY w DESC, lo, hi) AS rk,
              COUNT(*) OVER () AS ne
-      FROM e0),
+      FROM bp),
     kept AS (SELECT ba, bb FROM ranked WHERE rk <= (ne * 2) // 5),
     e AS MATERIALIZED (
       SELECT ba, bb FROM kept UNION ALL SELECT bb AS ba, ba AS bb FROM kept)"""
@@ -1491,13 +1464,9 @@ def _pair_split_centrality(edges: DataFrame) -> DataFrame:
 
 @register(
     "graph_harmonic_closeness",
-    oracle="""
-    WITH RECURSIVE ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    e AS (
-      SELECT DISTINCT a.brand AS ba, b.brand AS bb
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand <> b.brand),
+    oracle=f"""
+    WITH RECURSIVE {_BRAND_PAIRS_SQL},
+    e AS (SELECT lo AS ba, hi AS bb FROM bp UNION ALL SELECT hi, lo FROM bp),
     walk(src, dst, d) AS (
       SELECT ba, bb, 1 FROM e
       UNION
@@ -1545,14 +1514,11 @@ def graph_harmonic_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_weighted_assortativity",
-    oracle="""
-    WITH ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+    oracle=f"""
+    WITH {_BRAND_PAIRS_SQL},
     e AS (
-      SELECT a.brand AS ba, b.brand AS bb, CAST(COUNT(*) AS BIGINT) AS w
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand <> b.brand
-      GROUP BY ba, bb),
+      SELECT lo AS ba, hi AS bb, w FROM bp
+      UNION ALL SELECT hi, lo, w FROM bp),
     st AS (SELECT ba AS v, CAST(SUM(w) AS BIGINT) AS s FROM e GROUP BY ba),
     ed AS (
       SELECT e.w, sa.s AS x, sb.s AS y
@@ -1712,14 +1678,9 @@ def graph_avg_path_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_rich_club_weighted",
-    oracle="""
-    WITH ob AS (
-      SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    e AS (
-      SELECT a.brand AS ba, b.brand AS bb, CAST(COUNT(*) AS BIGINT) AS w
-      FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-      GROUP BY ba, bb),
+    oracle=f"""
+    WITH {_BRAND_PAIRS_SQL},
+    e AS (SELECT lo AS ba, hi AS bb, w FROM bp),
     st AS (
       SELECT v, CAST(SUM(w) AS BIGINT) AS s FROM (
         SELECT ba AS v, w FROM e UNION ALL SELECT bb AS v, w FROM e)

@@ -22,9 +22,9 @@ def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "mm_media_features",
-    oracle="""
+# The media features; the JVM path and the Arrow round-trip register
+# this one text.
+_MEDIA_FEATURES_ORACLE = """
     SELECT doc_id,
            CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
            substr(md5(text), 1, 16) AS sig,
@@ -32,8 +32,10 @@ def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHEN doc_id % 3 = 1 THEN 'audio/wav'
                 ELSE 'video/mp4' END AS media_type
     FROM documents ORDER BY doc_id
-    """,
-)
+    """
+
+
+@register("mm_media_features", oracle=_MEDIA_FEATURES_ORACLE)
 def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column feature extraction, JVM built-ins only
     (octet_length + md5 + struct field access — whole-stage codegen,
@@ -41,18 +43,7 @@ def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.media_features(_media(spark, sf_dir)).orderBy("doc_id")
 
 
-@register(
-    "mm_arrow_fidelity_probe",
-    oracle="""
-    SELECT doc_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           substr(md5(text), 1, 16) AS sig,
-           CASE WHEN doc_id % 3 = 0 THEN 'image/jpeg'
-                WHEN doc_id % 3 = 1 THEN 'audio/wav'
-                ELSE 'video/mp4' END AS media_type
-    FROM documents ORDER BY doc_id
-    """,
-)
+@register("mm_arrow_fidelity_probe", oracle=_MEDIA_FEATURES_ORACLE)
 def mm_arrow_fidelity_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mapInPandas feature path: binary payloads cross
     Spark→Arrow→pandas→Arrow→Spark and the Python md5 must equal the

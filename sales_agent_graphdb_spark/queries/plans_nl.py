@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.operators import matcher
 from sales_agent_graphdb_spark.plans import graph_planner, router
+from sales_agent_graphdb_spark.queries.relational import PRODUCT_SCAN_ORACLE
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -173,14 +174,7 @@ def agent_turn_check_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "nl2plan_broad_scan",
-    oracle="""
-    SELECT CAST(p_partkey AS VARCHAR) AS sku, p_name AS name,
-           p_retailprice AS price
-    FROM part ORDER BY p_partkey LIMIT 10
-    """,
-)
+@register("nl2plan_broad_scan", oracle=PRODUCT_SCAN_ORACLE)
 def nl2plan_broad_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.2 T3 — a question with no extractable noun → broad-scan
     template (project name/price, LIMIT 10 — neo4j_service.py:74)."""

@@ -9,7 +9,7 @@ training-data pipeline would need", same footing as curation.py.
 
 All metrics are exact integer/deterministic-double arithmetic so each
 query hash-checks against its DuckDB oracle. Hash-derived bucketing
-uses md5 (engine-portable), the curation.py convention.
+uses the engine-portable md5 prefix (functions/scalar.md5_int).
 """
 
 from __future__ import annotations
@@ -18,18 +18,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
 from sales_agent_graphdb_spark.queries.curation import alnum_tokens, _TOKENS_SQL
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
-
-
-# THE md5-prefix modular hash lives in curation.py (single definition
-# shared with the split/sample operators); re-exported here under the
-# names this module's oracles were written against.
-from sales_agent_graphdb_spark.queries.curation import (  # noqa: E402
-    md5_mod as _md5_mod,
-    md5_mod_sql as _md5_mod_sql,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -250,17 +242,13 @@ def _cms_bucket(i: int, key: Column) -> Column:
     costs depth full digests per row. The remaining per-row cost is
     the digest itself (string-cast + md5), which no portable hash
     family avoids."""
-    h = F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10).cast("bigint")
-    return F.shiftright(h, 9 * i) % _CMS_WIDTH
+    return F.shiftright(md5_int(key), 9 * i) % _CMS_WIDTH
 
 
 def _cms_bucket_sql(i_expr: str, key_expr: str) -> str:
     """SQL twin of _cms_bucket; ``i_expr`` may be a column reference
     (the oracle's VALUES-joined depth index) or a literal."""
-    return (
-        f"(CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR)), 1, 15)) AS BIGINT) "
-        f">> (9 * {i_expr})) % {_CMS_WIDTH}"
-    )
+    return f"({md5_int_sql(key_expr)} >> (9 * {i_expr})) % {_CMS_WIDTH}"
 
 
 @register(
@@ -312,10 +300,7 @@ def agg_countmin_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # posexplode the 4 shift-derived buckets — the digest is evaluated
     # once and the per-cell work is pure integer arithmetic (the
     # array<struct> + per-slot hash form measured ~3x slower).
-    h = F.conv(
-        F.substring(F.md5(F.col("k").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
-    hashed = li.select(h.alias("h")).select(
+    hashed = li.select(md5_int("k").alias("h")).select(
         F.posexplode(
             F.array(
                 *[

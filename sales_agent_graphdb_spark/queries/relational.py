@@ -64,14 +64,15 @@ def flagship_revenue_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scans (S5, S6)
 # ---------------------------------------------------------------------------
 
-
-@register(
-    "s6_graph_scan_limit",
-    oracle="""
+# S6's broad product scan; nl2plan_broad_scan (plans_nl.py) routes a
+# noun-less question to the same scan and registers this same text.
+PRODUCT_SCAN_ORACLE = """
     SELECT CAST(p_partkey AS VARCHAR) AS sku, p_name AS name, p_retailprice AS price
     FROM part ORDER BY p_partkey LIMIT 10
-    """,
-)
+    """
+
+
+@register("s6_graph_scan_limit", oracle=PRODUCT_SCAN_ORACLE)
 def s6_graph_scan_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 — `MATCH (p:Product) RETURN p.name, p.price LIMIT 10`
     (reference neo4j_service.py:74) as a pruned projection + sorted

@@ -13,6 +13,7 @@ from sales_agent_graphdb_spark.functions.scalar import (
     extract_price,
     is_email,
     is_http_url,
+    md5_int_sql,
     normalize_alnum,
     surrogate_sku,
 )
@@ -488,10 +489,10 @@ def udaf_grouped_pandas_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udf_scalar_iter_embed",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST((CAST(('0x' || substr(md5('m1:' || text), 1, 8)) AS BIGINT)
-                 % 1000) AS DOUBLE) / 1000.0 AS score
+           CAST(({md5_int_sql("'m1:' || text", hex_digits=8)} % 1000) AS DOUBLE)
+             / 1000.0 AS score
     FROM documents ORDER BY doc_id
     """,
 )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import md5_int
 from sales_agent_graphdb_spark.operators.skew import (
     salted_join,
     salted_join_hot_keys,
@@ -142,11 +143,13 @@ def join_salted_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_bucketed_collocated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shuffle-free fact-fact join: lineitem and orders written ONCE as
+    """Shuffle-free fact-fact join: lineitem and orders written as
     bucketed tables sharing the orderkey bucket spec
     (sources/bucketing.py), then joined via ``collocated_join`` — the
     pay-the-shuffle-at-ingest layout that makes every later join on
-    the key Exchange-free (asserted in tests/test_bucketing.py). The
+    the key Exchange-free (asserted in tests/test_bucketing.py). Each
+    call rewrites both tables (``write_bucketed`` overwrites), so the
+    shuffle is paid per call here, not once per dataset. The
     oracle is the plain join SQL over the original parquet, so the
     bucketed write→read cycle must preserve every row and type. At
     100 TB the bucket count scales to thousands (128-512 MB files);
@@ -211,21 +214,19 @@ def join_runtime_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     map stage and never reach the join shuffle.
     tests/test_skew.py asserts the plan shape (broadcast semi-join
     below the SortMergeJoin) and the row reduction."""
-    from sales_agent_graphdb_spark.queries.profiling import _md5_mod
-
     part = catalog.load_table(spark, sf_dir, "part")
     sel = part.filter(F.col("p_brand") == "Brand#13").select(
         "p_partkey", "p_size"
     )
     buckets = sel.select(
-        _md5_mod(F.col("p_partkey").cast("string"), _RF_BUCKETS).alias("bk")
+        (md5_int("p_partkey") % _RF_BUCKETS).alias("bk")
     ).distinct()
     li = catalog.load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice", "l_discount"
     )
     pre = li.join(
         F.broadcast(buckets),
-        _md5_mod(F.col("l_partkey").cast("string"), _RF_BUCKETS) == F.col("bk"),
+        md5_int("l_partkey") % _RF_BUCKETS == F.col("bk"),
         "leftsemi",
     )
     joined = pre.join(sel.hint("merge"), pre.l_partkey == sel.p_partkey)

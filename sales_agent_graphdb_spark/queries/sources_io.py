@@ -434,15 +434,17 @@ def s12_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s8_api_source_ingest",
-    oracle="""
+# The plain part-table aggregate that the batch and the streaming API
+# ingest must both reconstruct.
+_API_INGEST_ORACLE = """
     SELECT p_brand AS brand,
            CAST(COUNT(*) AS BIGINT) AS n_products,
            CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
     FROM part GROUP BY brand ORDER BY brand
-    """,
-)
+    """
+
+
+@register("s8_api_source_ingest", oracle=_API_INGEST_ORACLE)
 def s8_api_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 — external API ingest as a PLUGGABLE SOURCE (reference
     scraper_service.py: HTTP fetch → parse → insert, driver-side).
@@ -562,15 +564,7 @@ def s13_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s8b_api_stream_ingest",
-    oracle="""
-    SELECT p_brand AS brand,
-           CAST(COUNT(*) AS BIGINT) AS n_products,
-           CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-    FROM part GROUP BY brand ORDER BY brand
-    """,
-)
+@register("s8b_api_stream_ingest", oracle=_API_INGEST_ORACLE)
 def s8b_api_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8b — the STREAMING twin of the API source: the same paginated
     endpoint consumed through a Python DataSource

@@ -9,22 +9,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int_sql
+from sales_agent_graphdb_spark.queries.event_windows import (
+    SESSION_ORACLE,
+    SLIDING_ORACLE,
+    TUMBLING_ORACLE,
+)
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.streaming import pipelines
 
 
-@register(
-    "st_stream_tumbling_exec",
-    oracle="""
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY window_start, event_type
-    ORDER BY window_start, event_type
-    """,
-)
+@register("st_stream_tumbling_exec", oracle=TUMBLING_ORACLE)
 def st_stream_tumbling_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 — watermarked tumbling windows executed as an actual
     streaming query (file source, state store, availableNow drain);
@@ -152,29 +147,7 @@ def st_stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pipelines.interval_join_full_stream(spark, sf_dir)
 
 
-@register(
-    "st_stream_sessions_complete",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-                       > 1800 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events),
-    islands AS (
-      SELECT user_id, ts, value,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS session_no
-      FROM ordered)
-    SELECT user_id,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
-    FROM islands
-    GROUP BY user_id, session_no
-    ORDER BY user_id, session_start
-    """,
-)
+@register("st_stream_sessions_complete", oracle=SESSION_ORACLE)
 def st_stream_sessions_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 — the stateful sessionizer drained to completion via
     per-user end-of-stream sentinels, making the custom stateful
@@ -262,22 +235,7 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pipelines.stream_static_enrich(spark, sf_dir)
 
 
-@register(
-    "st_stream_sliding_exec",
-    oracle="""
-    WITH g AS (SELECT unnest([0, 1]) AS k),
-    w AS (
-      SELECT e.event_type, e.value,
-             to_timestamp((floor(epoch(e.ts))::BIGINT // 1800 - g.k) * 1800) AS window_start
-      FROM events e, g
-      WHERE floor(epoch(e.ts))::BIGINT // 1800 - g.k >= 0)
-    SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
-    FROM w
-    GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-)
+@register("st_stream_sliding_exec", oracle=SLIDING_ORACLE)
 def st_stream_sliding_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 — watermarked SLIDING windows (1 h length / 30 min slide)
     executed as an actual streaming query (file source, expanded
@@ -336,11 +294,11 @@ def st_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st_stream_kmv_maintain",
-    oracle="""
+    oracle=f"""
     WITH users AS (SELECT DISTINCT user_id FROM events),
     hashed AS (
-      SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || 'kmv8'), 1, 13)) AS BIGINT)
-               / 4503599627370496.0 AS h
+      SELECT {md5_int_sql("user_id", pipelines.KMV_SALT, 13)}
+               / {H52_SPAN} AS h
       FROM users),
     direct AS (
       SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn

@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
 from sales_agent_graphdb_spark.operators.chunker import chunk_documents, duckdb_chunk_sql
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
@@ -174,11 +175,10 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fingerprint,
-           CAST(('0x' || substr(md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')), 1, 15)) AS BIGINT)
-             % 1024 AS shard
+           {md5_int_sql("regexp_replace(lower(text), '[^a-z0-9]', '', 'g')")} % 1024 AS shard
     FROM documents ORDER BY doc_id
     """,
 )
@@ -957,8 +957,7 @@ _FH_DIM = 8  # hashed feature buckets (fixed-width output)
       WHERE t <> ''),
     b AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) % {_FH_DIM}
-               AS bkt
+             {md5_int_sql("t")} % {_FH_DIM} AS bkt
       FROM tok)
     SELECT doc_id,
            {", ".join(
@@ -990,9 +989,7 @@ def feature_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("t"),
     ).filter(F.col("t") != "")
-    bkt = (
-        F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("bigint") % _FH_DIM
-    )
+    bkt = md5_int("t") % _FH_DIM
     return (
         tok.select("doc_id", bkt.alias("bkt"))
         .groupBy("doc_id")

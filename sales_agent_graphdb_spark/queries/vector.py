@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import md5_int_sql
 from sales_agent_graphdb_spark.operators import similarity as sim
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
@@ -176,9 +177,9 @@ def v6_conditional_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "v4_deterministic_embed",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST((CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 1000) AS DOUBLE) / 1000.0 AS e0,
+           CAST(({md5_int_sql("text", hex_digits=8)} % 1000) AS DOUBLE) / 1000.0 AS e0,
            CAST((CAST(('0x' || substr(md5(text), 9, 8)) AS BIGINT) % 1000) AS DOUBLE) / 1000.0 AS e1
     FROM documents ORDER BY doc_id
     """,

@@ -59,6 +59,7 @@ from sales_agent_graphdb_spark.catalog import (
     read_parquet,
     written_schema,
 )
+from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int
 from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources import stamp
 
@@ -1117,23 +1118,11 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KMV_STREAM_K = 64
-_KMV_STREAM_SALT = "kmv8"  # shared with queries/aggregates.py sketches
-_KMV_STREAM_DENOM = 4503599627370496.0  # 2^52
+KMV_SALT = "kmv8"  # the KMV hash salt of every sketch, batch and stream
 
 
 def _kmv_h(col):  # noqa: ANN001, ANN202
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(col.cast("string"), F.lit(_KMV_STREAM_SALT))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(_KMV_STREAM_DENOM)
-    )
+    return md5_int(col, KMV_SALT, 13) / F.lit(H52_SPAN)
 
 
 def make_kmv_fold_sink(tbl_root: str):  # noqa: ANN201

@@ -54,3 +54,25 @@ def test_recall_verdict_flips_at_floor(spark):
 
     assert verdict(floor - 1) is False
     assert verdict(floor) is True
+
+
+# Queries that must answer the same DuckDB SQL as their twin: a stream
+# run and its batch form, a prefiltered path and its exact path, the
+# Arrow round-trip and the JVM path, an NL route and its scan.
+TWIN_ORACLES = [
+    ("st_tumbling_window", "st_stream_tumbling_exec"),
+    ("st_sliding_window", "st_stream_sliding_exec"),
+    ("st_session_window", "st_stream_sessions_complete"),
+    ("decontaminate_ngram_overlap", "decontaminate_bloom_prefilter"),
+    ("mm_media_features", "mm_arrow_fidelity_probe"),
+    ("s6_graph_scan_limit", "nl2plan_broad_scan"),
+    ("s8_api_source_ingest", "s8b_api_stream_ingest"),
+]
+
+
+def test_twin_queries_share_one_oracle():
+    from sales_agent_graphdb_spark.registry import all_queries
+
+    specs = all_queries()
+    differ = [(a, b) for a, b in TWIN_ORACLES if specs[a].oracle != specs[b].oracle]
+    assert not differ, f"twin queries with different oracle text: {differ}"

@@ -94,7 +94,7 @@ def test_exact_n_sampler_counts_and_pooling(spark):
     # the md5 pool predicate must appear below the Window (a Filter on
     # the scan side), not above it.
     win_pos = plan.find("Window ")
-    filt_pos = plan.find("conv(substring(md5")  # md5_mod's lowering
+    filt_pos = plan.find("conv(substring(md5")  # md5_int's lowering
     assert win_pos != -1 and filt_pos != -1, plan
     assert filt_pos > win_pos, (
         "pool filter should sit BELOW (after, in toString order) the "

@@ -70,7 +70,7 @@ def test_runtime_prefilter_plan_and_reduction(spark):
     sits below a SortMergeJoin, and it actually drops most fact rows
     (no-false-negative guarantee is carried by the oracle equality in
     test_oracle_parity; here we pin the mechanism)."""
-    from sales_agent_graphdb_spark.queries.profiling import _md5_mod
+    from sales_agent_graphdb_spark.functions.scalar import md5_int
     from sales_agent_graphdb_spark.queries.scale_joins import (
         _RF_BUCKETS,
         join_runtime_prefilter,
@@ -85,13 +85,13 @@ def test_runtime_prefilter_plan_and_reduction(spark):
     part = catalog.load_table(spark, SF_SMALL, "part")
     buckets = (
         part.filter(F.col("p_brand") == "Brand#13")
-        .select(_md5_mod(F.col("p_partkey").cast("string"), _RF_BUCKETS).alias("bk"))
+        .select((md5_int("p_partkey") % _RF_BUCKETS).alias("bk"))
         .distinct()
     )
     total = li.count()
     kept = li.join(
         F.broadcast(buckets),
-        _md5_mod(F.col("l_partkey").cast("string"), _RF_BUCKETS) == F.col("bk"),
+        md5_int("l_partkey") % _RF_BUCKETS == F.col("bk"),
         "leftsemi",
     ).count()
     # The signature is ~2% loaded; require at least a 5x reduction so a

@@ -11,7 +11,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from driver_protocol import make_duck, make_spark, vhash  # noqa: E402
+from driver_protocol import compare, make_duck, make_spark  # noqa: E402
 
 from sales_agent_graphdb_spark.registry import all_queries  # noqa: E402
 
@@ -39,20 +39,13 @@ def main() -> None:
     fails = []
     for name in args:
         spec = specs[name]
-        sdf = spec.fn(spark, sf)
-        srows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(spec.oracle)
-        ocols = [d[0] for d in res.description]
-        orows = [tuple(r) for r in res.fetchall()]
-        ok_n = len(srows) == len(orows)
-        ok_c = sorted(sdf.columns) == sorted(ocols)
-        ok_v = vhash(srows, sdf.columns) == vhash(orows, ocols)
-        ok = ok_n and ok_c and ok_v
+        rec, srows, orows = compare(spec.fn(spark, sf), con, spec.oracle)
+        ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
         if not ok:
             fails.append(name)
         print(
             f"  {name}: {'OK' if ok else 'MISMATCH'} rows={len(srows)}/{len(orows)}"
-            f" cols_ok={ok_c} hash_ok={ok_v}"
+            f" cols_ok={rec['schema_match']} hash_ok={rec['hash_match']}"
         )
         if not ok and srows and orows:
             print(f"    spark[:2]={srows[:2]}")

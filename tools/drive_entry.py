@@ -15,7 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from driver_protocol import make_duck, make_spark, vhash
+from driver_protocol import compare, make_duck, make_spark
 
 import __spark_entry__ as E
 
@@ -43,22 +43,7 @@ record: dict[str, dict] = {}
 # the first 50 printed here are exactly the driver's 50-slot budget.
 for name, fn in qs.items():
     try:
-        sdf = fn(spark, SF)
-        srows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(os_[name])
-        ocols = [d[0] for d in res.description]
-        orows = [tuple(r) for r in res.fetchall()]
-        ok_n = len(srows) == len(orows)
-        ok_c = sorted(sdf.columns) == sorted(ocols)
-        ok_v = vhash(srows, sdf.columns) == vhash(orows, ocols)
-        record[name] = {
-            "rows_match": ok_n,
-            "schema_match": ok_c,
-            "hash_match": ok_v,
-            "spark_rows": len(srows),
-            "oracle_rows": len(orows),
-            "err": None,
-        }
+        record[name], _, _ = compare(fn(spark, SF), con, os_[name])
     except Exception as exc:  # noqa: BLE001 — record, keep sweeping
         record[name] = {
             "rows_match": False,

@@ -63,6 +63,25 @@ def vhash(rows, cols) -> str:
     return hashlib.md5(str(canon).encode()).hexdigest()[:12]
 
 
+def compare(sdf, con, sql: str):
+    """The driver's verdict on one query: row count, sorted column names
+    and ``vhash`` of the Spark DataFrame ``sdf`` against the DuckDB
+    ``sql`` on ``con``. Returns (record, spark_rows, oracle_rows)."""
+    srows = [tuple(r) for r in sdf.collect()]
+    res = con.execute(sql)
+    ocols = [d[0] for d in res.description]
+    orows = [tuple(r) for r in res.fetchall()]
+    record = {
+        "rows_match": len(srows) == len(orows),
+        "schema_match": sorted(sdf.columns) == sorted(ocols),
+        "hash_match": vhash(srows, sdf.columns) == vhash(orows, ocols),
+        "spark_rows": len(srows),
+        "oracle_rows": len(orows),
+        "err": None,
+    }
+    return record, srows, orows
+
+
 def make_spark(app_name: str = "driver_protocol"):
     from pyspark.sql import SparkSession
 
