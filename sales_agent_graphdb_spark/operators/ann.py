@@ -15,22 +15,33 @@ the full corpus at 100 TB:
   the ``n_probe`` nearest cells. Cell id is the natural partition
   column at 100 TB, so probing = partition pruning.
 
-Both have an INGEST-TIME materialized form (the 100 TB shape): the
-index writers (``write_ivf_index`` / ``write_lsh_index``) persist the
-cell/bucket assignment partitioned by it, and the pruned query paths
-(``ivf_pruned_topk`` / ``lsh_pruned_topk``) read back with an
-equi-filter on the partition column, so the scan physically skips the
-unprobed partitions (PartitionFilters in the plan — asserted in
-tests/test_ann.py) instead of recomputing signatures over the corpus
-per query. IVF centroids come from ``kmeans_centroids`` — spherical
-k-means Lloyd iterations run as DataFrame aggregations (assignment is
-a codegen'd projection, the per-cell mean is a groupBy over exploded
-dims; only the k·dim centroid matrix ever reaches the driver, the
-same reduction shape MLlib's KMeans uses).
+Both have an INGEST-TIME materialized form (the 100 TB shape):
+``write_lsh_index`` persists the bucket assignment partitioned by
+``(t, bucket)``, and ``write_ivf_index`` — the one IVF writer — assigns
+every row its cell against the centroids it is given and writes the
+corpus partitioned by ``cell`` (by ``(label, cell)`` for per-label
+centroids). The pruned query paths (``ivf_pruned_topk`` /
+``lsh_pruned_topk``) read back with an equi-filter on the partition
+column, so the scan physically skips the unprobed partitions
+(PartitionFilters in the plan — asserted in tests/test_ann.py) instead
+of recomputing signatures over the corpus per query.
+
+IVF centroids are either a matrix (one set for the corpus) or a dict
+label → matrix (one set per label); ``ivf_assign``, the Lloyd loop and
+the writer take both. ``kmeans_centroids`` /
+``kmeans_centroids_per_label`` run one spherical k-means Lloyd loop
+(``_lloyd``) as DataFrame aggregations, with or without the label key
+(assignment is a codegen'd projection, the per-cell mean is a groupBy
+over exploded dims; only the k·dim centroid matrices ever reach the
+driver, the same reduction shape MLlib's KMeans uses). IVF-PQ adds the
+M code columns of ``pq_encode`` (the one PQ encoder, Arrow-batched)
+and hands the frame to the same writer.
 
 All scoring is JVM-side (zip_with/aggregate folds, no Python); the
 hyperplanes/centroids are inlined as array literals into the plan
 (tiny: T·b·dim doubles), the distributed analogue of a broadcast.
+Every function reads the embeddings table's own column names
+(``ID_COL`` / ``VEC_COL`` / ``LABEL_COL``); they are not per-call options.
 """
 
 from __future__ import annotations
@@ -38,13 +49,26 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark.catalog import read_parquet
-from sales_agent_graphdb_spark.operators.similarity import cosine, dot, knn, lit_vector
+from sales_agent_graphdb_spark.operators.similarity import (
+    ID_COL,
+    VEC_COL,
+    cosine,
+    dot,
+    duckdb_cosine_sql,
+    knn,
+    lit_vector,
+    norm,
+)
 
+LABEL_COL = "label"
 SEED = 42
+
+# IVF centroids: one matrix for the corpus, or one matrix per label.
+Centroids = np.ndarray | dict[int, np.ndarray]
 
 
 def _hyperplanes(n_tables: int, n_planes: int, dim: int) -> np.ndarray:
@@ -65,14 +89,12 @@ def _bucket_col(vec: Column, planes: np.ndarray) -> Column:
     return out
 
 
-def _signature_rows(
-    embeddings: DataFrame, planes: np.ndarray, id_col: str, vec_col: str
-) -> DataFrame:
+def _signature_rows(embeddings: DataFrame, planes: np.ndarray) -> DataFrame:
     """Skinny (id, t, bucket) rows, one per vector and table — no
     vector payload, so T·n small rows."""
-    v = F.col(vec_col)
+    v = F.col(VEC_COL)
     return embeddings.select(
-        F.col(id_col).alias("id"),
+        F.col(ID_COL).alias("id"),
         F.posexplode(F.array(*[_bucket_col(v, p) for p in planes])).alias("t", "bucket"),
     )
 
@@ -111,8 +133,6 @@ def hyperplane_lsh_topk(
     k: int = 5,
     n_tables: int = 8,
     n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: candidates = rows sharing the
     query's bucket in ANY of the T tables; rerank = exact cosine.
@@ -125,12 +145,12 @@ def hyperplane_lsh_topk(
     recall target."""
     planes = _hyperplanes(n_tables, n_planes, len(query_vec))
     q_buckets = _query_buckets(planes, query_vec)
-    v = F.col(vec_col)
+    v = F.col(VEC_COL)
     match_any = None
     for t in range(n_tables):
         cond = _bucket_col(v, planes[t]) == F.lit(q_buckets[t])
         match_any = cond if match_any is None else (match_any | cond)
-    return knn(embeddings, query_vec, k, id_col, vec_col, where=match_any)
+    return knn(embeddings, query_vec, k, where=match_any)
 
 
 def _argmax_cell(v: Column, centroids: np.ndarray) -> Column:
@@ -145,15 +165,31 @@ def _argmax_cell(v: Column, centroids: np.ndarray) -> Column:
     return -F.array_max(scores)["negi"]
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Add a ``cell`` column = argmax-dot centroid (ties → lowest id).
-    One codegen'd projection; at ingest time this is the partition
-    column writers cluster by."""
-    return embeddings.withColumn("cell", _argmax_cell(F.col(vec_col), centroids))
+def _label_keys(centroids: Centroids) -> list[str]:
+    """The columns a cell id is scoped by: none for one corpus-wide
+    centroid matrix, ``label`` for per-label centroids."""
+    return [LABEL_COL] if isinstance(centroids, dict) else []
+
+
+def ivf_assign(embeddings: DataFrame, centroids: Centroids) -> DataFrame:
+    """Add a ``cell`` column = argmax-dot centroid (ties → lowest id);
+    at ingest time this is the partition column writers cluster by.
+
+    A centroid matrix is one codegen'd projection. Per-label centroids
+    are one CASE chain over labels that scores each row against its
+    OWN label's set: CaseWhen evaluates only the matched branch, so a
+    row pays n_cells dot folds however many labels exist. A row whose
+    label has no centroid set gets cell NULL — an explicit NULL
+    partition rather than a silently wrong cell."""
+    v = F.col(VEC_COL)
+    if not isinstance(centroids, dict):
+        return embeddings.withColumn("cell", _argmax_cell(v, centroids))
+    expr = None
+    for lbl in sorted(centroids):
+        cell = _argmax_cell(v, centroids[lbl]).cast("int")
+        cond = F.col(LABEL_COL) == int(lbl)
+        expr = F.when(cond, cell) if expr is None else expr.when(cond, cell)
+    return embeddings.withColumn("cell", expr)
 
 
 def ivf_topk(
@@ -162,30 +198,42 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: assign cells, probe the n_probe cells
     whose centroids are nearest the query, rerank exact. The cell
     filter is the partition-pruning surrogate — at scale it prunes
     (n_cells - n_probe)/n_cells of the corpus before any scoring."""
-    cents = _ivf_centroids(embeddings, n_cells, id_col, vec_col)
+    cents = _ivf_centroids(embeddings, n_cells)
     probe = _probe_cells(cents, query_vec, n_probe)
-    assigned = ivf_assign(embeddings, cents, vec_col)
-    return knn(
-        assigned, query_vec, k, id_col, vec_col, where=F.col("cell").isin(probe)
-    )
+    assigned = ivf_assign(embeddings, cents)
+    return knn(assigned, query_vec, k, where=F.col("cell").isin(probe))
 
 
-def _ivf_centroids(
-    embeddings: DataFrame, n_cells: int, id_col: str, vec_col: str
-) -> np.ndarray:
+def _ivf_centroids(embeddings: DataFrame, n_cells: int) -> np.ndarray:
     """First n_cells vectors by id as centroids (deterministic k-means
     INIT; one tiny point-read, cached by parquet footer stats)."""
-    rows = (
-        embeddings.orderBy(id_col).select(vec_col).limit(n_cells).collect()
-    )
+    rows = embeddings.orderBy(ID_COL).select(VEC_COL).limit(n_cells).collect()
     return np.array([[float(x) for x in r[0]] for r in rows])
+
+
+def _ivf_centroids_per_label(
+    embeddings: DataFrame, n_cells: int
+) -> dict[int, np.ndarray]:
+    """First n_cells vectors by id WITHIN each label (one windowed
+    top-N — a single shuffle of n_labels·n_cells skinny rows)."""
+    w = Window.partitionBy(LABEL_COL).orderBy(ID_COL)
+    rows = (
+        embeddings.select(LABEL_COL, ID_COL, VEC_COL)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n_cells)
+        .collect()
+    )
+    by_label: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: (r[LABEL_COL], r[ID_COL])):
+        by_label.setdefault(int(r[LABEL_COL]), []).append(
+            [float(x) for x in r[VEC_COL]]
+        )
+    return {lbl: np.array(vs) for lbl, vs in by_label.items()}
 
 
 def _unit_rows(m: np.ndarray) -> np.ndarray:
@@ -194,41 +242,41 @@ def _unit_rows(m: np.ndarray) -> np.ndarray:
     return m / norms
 
 
-def kmeans_centroids(
-    embeddings: DataFrame,
-    n_cells: int = 16,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Spherical k-means via Lloyd iterations expressed as DataFrame
-    ops (replaces the first-N-by-id centroid stand-in, VERDICT r01 #2).
+def _each(centroids: Centroids, fn) -> Centroids:
+    """``fn`` over the centroid matrix, or over each label's matrix."""
+    if isinstance(centroids, dict):
+        return {lbl: fn(c) for lbl, c in centroids.items()}
+    return fn(centroids)
+
+
+def _lloyd(embeddings: DataFrame, init: Centroids, n_iter: int) -> Centroids:
+    """Spherical k-means Lloyd iterations from ``init``, for one
+    centroid matrix or per label (then every iteration is still ONE
+    pass over the corpus for all labels at once, never a per-label job
+    loop).
 
     Per iteration: (1) assignment = ``ivf_assign`` — one codegen'd
-    projection, no shuffle beyond the agg below; (2) update = per-cell
-    per-dim mean via posexplode + groupBy(cell, pos).avg — one shuffle
+    projection; (2) update = the per-dim mean of every cell (of every
+    label) via posexplode + groupBy([label,] cell, pos) — one shuffle
     of k·dim partial aggregates (map-side combined), after which only
-    the k·dim centroid matrix is collected to the driver (16×64 doubles
-    here; this driver-side reduction is the same shape MLlib's KMeans
-    uses per iteration, and is scale-independent: it grows with k·dim,
-    never with corpus size). Means are re-normalized to unit length so
-    max-dot assignment == max-cosine (spherical k-means); empty cells
-    keep their previous centroid. Determinism (r08, ADVICE r07 #2):
-    init (first-n-by-id) and iteration count are fixed, and the
-    per-cell mean SUMS IN EXACT DECIMAL(38,18) — order-independent —
-    so centroids (and every cell assignment and probe choice derived
-    from them) are bit-stable across rebuilds, partitionings, and
-    parallelism; a k-means index rebuild can never flip a
-    recall-contingent driver row. (Previously ``F.avg`` on doubles
-    merged partials in shuffle-arrival order — ulp-level wobble.) The
-    18-fractional-digit quantization of the input doubles is
-    irrelevant to clustering quality."""
-    cents = _unit_rows(_ivf_centroids(embeddings, n_cells, id_col, vec_col))
+    the k·dim centroid matrices are collected to the driver
+    (scale-independent: they grow with the model, never with the
+    corpus). Means are
+    re-normalized to unit length so max-dot assignment == max-cosine;
+    empty cells keep their previous centroid. Determinism: init and
+    iteration count are fixed, and the mean SUMS IN EXACT
+    DECIMAL(38,18) — order-independent — so centroids (and every cell
+    assignment and probe choice derived from them) are bit-stable
+    across rebuilds, partitionings and parallelism. The 18-digit
+    quantization of the input doubles is irrelevant to clustering
+    quality."""
+    keys = _label_keys(init)
+    cents = _each(init, _unit_rows)
     for _ in range(n_iter):
-        assigned = ivf_assign(embeddings, cents, vec_col)
         rows = (
-            assigned.select("cell", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-            .groupBy("cell", "pos")
+            ivf_assign(embeddings, cents)
+            .select(*keys, "cell", F.posexplode(F.col(VEC_COL)).alias("pos", "val"))
+            .groupBy(*keys, "cell", "pos")
             .agg(
                 F.avg(F.col("val").cast("decimal(38,18)"))
                 .cast("double")
@@ -236,158 +284,48 @@ def kmeans_centroids(
             )
             .collect()
         )
-        new = cents.copy()
+        new = _each(cents, np.copy)
         for r in rows:
-            new[r["cell"]][r["pos"]] = r["m"]
-        cents = _unit_rows(new)
+            (new[int(r[LABEL_COL])] if keys else new)[r["cell"]][r["pos"]] = r["m"]
+        cents = _each(new, _unit_rows)
     return cents
 
 
-def ivf_assign_per_label(
-    embeddings: DataFrame,
-    cents_by_label: dict[int, np.ndarray],
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Add a ``cell`` column = argmax-dot against the row's OWN label's
-    centroid set (ties → lowest cell id). One CASE chain over labels;
-    CaseWhen evaluates only the matched branch, so each row pays
-    n_cells dot folds regardless of how many labels exist. Rows whose
-    label has no centroid set (unseen label) get cell NULL — callers
-    partition by (label, cell), so they surface as an explicit NULL
-    partition rather than silently joining a wrong cell."""
-    expr = None
-    for lbl in sorted(cents_by_label):
-        cell = _argmax_cell(F.col(vec_col), cents_by_label[lbl]).cast("int")
-        cond = F.col(label_col) == int(lbl)
-        expr = F.when(cond, cell) if expr is None else expr.when(cond, cell)
-    return embeddings.withColumn("cell", expr)
+def kmeans_centroids(
+    embeddings: DataFrame, n_cells: int = 16, n_iter: int = 3
+) -> np.ndarray:
+    """Spherical k-means centroids for the whole corpus: ``_lloyd``
+    from the first n_cells vectors by id."""
+    return _lloyd(embeddings, _ivf_centroids(embeddings, n_cells), n_iter)
 
 
 def kmeans_centroids_per_label(
-    embeddings: DataFrame,
-    n_cells: int = 16,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
+    embeddings: DataFrame, n_cells: int = 16, n_iter: int = 3
 ) -> dict[int, np.ndarray]:
-    """Per-label spherical k-means WITHOUT a per-label job loop: every
-    Lloyd iteration is ONE pass over the corpus for all labels at once.
-    Init = first-n_cells-by-id within each label (one windowed top-N —
-    a single shuffle of n_labels·n_cells skinny rows); assignment =
-    ``ivf_assign_per_label`` (codegen'd projection); update = a single
-    groupBy(label, cell, pos).avg — map-side-combined partials, after
-    which only n_labels·k·dim doubles reach the driver (10·16·64 here;
-    grows with the model, never the corpus — the same driver-side
-    reduction shape as kmeans_centroids/MLlib). Empty cells keep their
-    previous centroid; means re-normalized so max-dot == max-cosine.
-    The mean sums in exact DECIMAL like kmeans_centroids, so rebuilds
-    are bit-deterministic."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(label_col).orderBy(id_col)
-    seed_rows = (
-        embeddings.select(label_col, id_col, vec_col)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_cells)
-        .collect()
-    )
-    by_label: dict[int, list] = {}
-    for r in sorted(seed_rows, key=lambda r: (r[label_col], r[id_col])):
-        by_label.setdefault(int(r[label_col]), []).append(
-            [float(x) for x in r[vec_col]]
-        )
-    cents_by_label = {
-        lbl: _unit_rows(np.array(vs)) for lbl, vs in by_label.items()
-    }
-    for _ in range(n_iter):
-        assigned = ivf_assign_per_label(
-            embeddings, cents_by_label, vec_col, label_col
-        )
-        rows = (
-            assigned.select(
-                label_col, "cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
-            )
-            .groupBy(label_col, "cell", "pos")
-            .agg(
-                F.avg(F.col("val").cast("decimal(38,18)"))
-                .cast("double")
-                .alias("m")
-            )
-            .collect()
-        )
-        new = {l: c.copy() for l, c in cents_by_label.items()}
-        for r in rows:
-            new[int(r[label_col])][r["cell"]][r["pos"]] = r["m"]
-        cents_by_label = {l: _unit_rows(c) for l, c in new.items()}
-    return cents_by_label
+    """Spherical k-means centroids per label: ``_lloyd`` from the first
+    n_cells vectors by id within each label; only n_labels·k·dim
+    doubles reach the driver per iteration."""
+    return _lloyd(embeddings, _ivf_centroids_per_label(embeddings, n_cells), n_iter)
 
 
-def write_ivf_index_labeled(
-    spark,
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> dict[int, np.ndarray]:
-    """FILTER-PARTITIONED IVF index (the production filtered-ANN form
-    the r07 docstring names): cluster each label's vectors with their
-    OWN centroid set and write the corpus partitioned by
-    ``(label, cell)``. A filtered probe then prunes on BOTH partition
-    columns — the metadata predicate reads only its labels' directories
-    (exact by construction, zero recall cost) and the cell probe keeps
-    its full n_probe/n_cells pruning WITHIN them, instead of the
-    unpartitioned path's doubled probe width against cells diluted by
-    every other label. Returns the per-label centroid dict (the tiny
-    query-time sidecar)."""
-    cbl = kmeans_centroids_per_label(
-        embeddings, n_cells, n_iter, id_col, vec_col, label_col
-    )
-    (
-        ivf_assign_per_label(embeddings, cbl, vec_col, label_col)
-        .write.mode("overwrite")
-        .partitionBy(label_col, "cell")
-        .parquet(path)
-    )
-    return cbl
-
-
-def write_ivf_index(
-    spark,
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def write_ivf_index(embeddings: DataFrame, path: str, centroids: Centroids) -> None:
     """INGEST-TIME IVF index materialization (reference builds its
     persistent HNSW index at ingest, db_service.py:193-199; the Spark
-    analogue is a cell-partitioned table). Runs k-means, assigns every
-    vector its cell, and writes the corpus partitioned by ``cell`` —
+    analogue is a cell-partitioned table): ``ivf_assign`` every row
+    against ``centroids`` and write the frame partitioned by ``cell``,
     so every later probe is physical partition pruning on the read,
-    not a recompute over the corpus. Returns the centroid matrix (the
-    query-time ingredient; at scale it lives next to the index as a
-    tiny sidecar table). Pay the assignment scan once at ingest,
-    amortize over every query."""
-    cents = kmeans_centroids(embeddings, n_cells, n_iter, id_col, vec_col)
-    _write_cells(embeddings, cents, path, vec_col)
-    return cents
+    not a recompute over the corpus. The centroids are the query-time
+    sidecar the caller keeps next to the index.
 
-
-def _write_cells(
-    embeddings: DataFrame, cents: np.ndarray, path: str, vec_col: str = "embedding"
-) -> None:
-    """Assign every row its cell (``ivf_assign``) and write the frame
-    partitioned by ``cell`` — the IVF index layout."""
+    Per-label centroids write the FILTER-PARTITIONED form, partitioned
+    by ``(label, cell)``: a filtered probe prunes on BOTH columns — the
+    metadata predicate reads only its labels' directories (exact by
+    construction, zero recall cost) and the cell probe keeps its full
+    n_probe/n_cells pruning WITHIN them."""
     (
-        ivf_assign(embeddings, cents, vec_col)
+        ivf_assign(embeddings, centroids)
         .write.mode("overwrite")
-        .partitionBy("cell")
+        .partitionBy(*_label_keys(centroids), "cell")
         .parquet(path)
     )
 
@@ -399,8 +337,6 @@ def ivf_pruned_topk(
     query_vec: list[float],
     k: int = 5,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k over the MATERIALIZED index: probe = equi-filter on
     the ``cell`` partition column → the parquet scan's PartitionFilters
@@ -409,7 +345,7 @@ def ivf_pruned_topk(
     the scale path ``ivf_topk`` only simulated."""
     probe = _probe_cells(centroids, query_vec, n_probe)
     idx = read_parquet(spark, index_path)
-    return knn(idx, query_vec, k, id_col, vec_col, where=F.col("cell").isin(probe))
+    return knn(idx, query_vec, k, where=F.col("cell").isin(probe))
 
 
 def write_lsh_index(
@@ -419,8 +355,6 @@ def write_lsh_index(
     dim: int,
     n_tables: int = 8,
     n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """INGEST-TIME hyperplane-LSH index: skinny (id, t, bucket) rows —
     no vectors, so the index is O(T·n) longs, not T copies of the
@@ -429,8 +363,7 @@ def write_lsh_index(
     physically skipped. T·2^b directories total (128 here); at 100 TB
     size b so each bucket partition lands in the 128-512 MB file-size
     sweet spot."""
-    planes = _hyperplanes(n_tables, n_planes, dim)
-    sigs = _signature_rows(embeddings, planes, id_col, vec_col)
+    sigs = _signature_rows(embeddings, _hyperplanes(n_tables, n_planes, dim))
     sigs.write.mode("overwrite").partitionBy("t", "bucket").parquet(path)
 
 
@@ -442,8 +375,6 @@ def lsh_pruned_topk(
     k: int = 5,
     n_tables: int = 8,
     n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH top-k over the MATERIALIZED index: compute the query's T
     bucket ids driver-side (T·b dot products on one vector), prune-read
@@ -459,9 +390,9 @@ def lsh_pruned_topk(
     for t, qb in enumerate(q_buckets):
         cond = (F.col("t") == t) & (F.col("bucket") == qb)
         probe = cond if probe is None else (probe | cond)
-    cand_ids = idx.filter(probe).select(F.col("id").alias(id_col)).distinct()
-    cand = embeddings.join(F.broadcast(cand_ids), id_col)
-    return knn(cand, query_vec, k, id_col, vec_col)
+    cand_ids = idx.filter(probe).select(F.col("id").alias(ID_COL)).distinct()
+    cand = embeddings.join(F.broadcast(cand_ids), ID_COL)
+    return knn(cand, query_vec, k)
 
 
 def hyperplane_dedup_pairs(
@@ -470,8 +401,6 @@ def hyperplane_dedup_pairs(
     threshold: float = 0.3,
     n_tables: int = 8,
     n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH-fed embedding near-dup pairs — the 100 TB replacement for the
     all-pairs cosine cartesian (queries/dedup.py dedup_embedding_cosine,
@@ -484,7 +413,7 @@ def hyperplane_dedup_pairs(
     joining the vectors back. Cost is O(Σ_bucket |bucket|²) instead of
     O(n²); recall per true pair at angle θ is 1-(1-(1-θ/π)^b)^T
     (pytest pins it against the exact kernel)."""
-    sigs = _signature_rows(embeddings, _hyperplanes(n_tables, n_planes, dim), id_col, vec_col)
+    sigs = _signature_rows(embeddings, _hyperplanes(n_tables, n_planes, dim))
     a, b = sigs.alias("a"), sigs.alias("b")
     cand = (
         a.join(
@@ -496,8 +425,8 @@ def hyperplane_dedup_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    ea = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("ea"))
-    eb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("eb"))
+    ea = embeddings.select(F.col(ID_COL).alias("id_a"), F.col(VEC_COL).alias("ea"))
+    eb = embeddings.select(F.col(ID_COL).alias("id_b"), F.col(VEC_COL).alias("eb"))
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
@@ -518,8 +447,6 @@ def duckdb_lsh_topk_sql(
     ``query_id``: literal planes, fold-order dot products (list_sum
     over list order — matches Spark's aggregate fold and
     ``_fold_dot``, proven bit-exact by the v1 oracle)."""
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
     planes = _hyperplanes(n_tables, n_planes, dim)
     match = " OR ".join(
         f"{_bucket_sql('e.embedding', planes[t], n_planes)}"
@@ -563,30 +490,37 @@ def _bucket_sql(vec: str, table_planes, n_planes: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+def duckdb_ivf_cells_sql(n_cells: int = 16) -> str:
+    """THE DuckDB IVF text, two CTEs for a ``WITH`` list: ``cents``
+    (cid, cv) — the first n_cells vectors by id, ``_ivf_centroids``'
+    derivation — and ``assign`` (vec_id, embedding, cell) — every
+    embeddings row with its argmax-fold-dot cell, ties → lowest cid via
+    ORDER BY (dot DESC, cid), ``ivf_assign``'s rule."""
+    return f"""cents AS (
+      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
+      FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {n_cells})),
+    assign AS (
+      SELECT e.vec_id, e.embedding,
+             (SELECT c.cid FROM cents c
+              ORDER BY {duckdb_fold_dot_sql("c.cv", "e.embedding")} DESC, c.cid LIMIT 1) AS cell
+      FROM embeddings e)"""
+
+
 def duckdb_ivf_topk_sql(
     k: int = 5, n_cells: int = 16, n_probe: int = 4, query_id: int = 0
 ) -> str:
     """SQL mirror of ivf_topk (and of ivf_pruned_topk over an index
     written with the first-N-by-id centroids) for the query vector of
-    id ``query_id``. Centroids come from the same first-N-by-id rows;
-    every dot is the same fold as ``_fold_dot``; probe and assignment
-    ties break to the lowest cell id via ORDER BY (dot DESC, cid)."""
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
+    id ``query_id``: ``duckdb_ivf_cells_sql``'s centroids and
+    assignment, the probe cells by the same fold-order dot with the
+    same lowest-cell tie break, exact-cosine rerank."""
     cos = duckdb_cosine_sql("a.embedding", "q.qv")
     return f"""
-    WITH cents AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-      FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {n_cells})),
+    WITH {duckdb_ivf_cells_sql(n_cells)},
     q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {query_id}),
     probe AS (
       SELECT cid FROM cents, q
-      ORDER BY {duckdb_fold_dot_sql("cv", "qv")} DESC, cid LIMIT {n_probe}),
-    assign AS (
-      SELECT e.vec_id, e.embedding,
-             (SELECT c.cid FROM cents c
-              ORDER BY {duckdb_fold_dot_sql("c.cv", "e.embedding")} DESC, c.cid LIMIT 1) AS cell
-      FROM embeddings e)
+      ORDER BY {duckdb_fold_dot_sql("cv", "qv")} DESC, cid LIMIT {n_probe})
     SELECT a.vec_id, {cos} AS sim
     FROM assign a CROSS JOIN q
     WHERE a.cell IN (SELECT cid FROM probe)
@@ -598,8 +532,6 @@ def semantic_cell_dedup(
     embeddings: DataFrame,
     n_cells: int = 16,
     threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space into cells, then
@@ -624,19 +556,17 @@ def semantic_cell_dedup(
     Returns (cell, drop_vec_id, keep_vec_id, cos_sim): one row per
     dropped vector, keep = its smallest above-threshold cell-mate,
     cos_sim = similarity of that kept pair."""
-    from sales_agent_graphdb_spark.operators.similarity import norm as _norm
-
-    cents = _ivf_centroids(embeddings, n_cells, id_col, vec_col)
+    cents = _ivf_centroids(embeddings, n_cells)
     # Precompute each row's L2 norm BEFORE the pairwise join: cosine =
     # dot/(norm_a*norm_b) evaluated per pair would fold each vector's
     # norm |cell| times; hoisting it leaves one dot-fold per pair (~3x
     # less expression work, measured ~2x wall at sf0.1). Bit-exact
     # unchanged: same fold over the same vector yields the same double
     # wherever it is computed.
-    assigned = ivf_assign(embeddings, cents, vec_col).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"),
+    assigned = ivf_assign(embeddings, cents).select(
+        F.col(ID_COL).alias("id"),
+        F.col(VEC_COL).alias("v"),
+        norm(F.col(VEC_COL)).alias("nrm"),
         "cell",
     )
     a, b = assigned.alias("a"), assigned.alias("b")
@@ -676,27 +606,16 @@ def semantic_cell_dedup(
 def duckdb_semantic_cell_dedup_sql(
     n_cells: int = 16, threshold: float = 0.3
 ) -> str:
-    """Full SQL mirror of semantic_cell_dedup: same first-N-by-id
-    centroids, same argmax-fold-dot assignment (ties → lowest cell via
-    ORDER BY dot DESC, cid — the duckdb_ivf_topk_sql technique), same
-    within-cell cosine and smallest-keeper decision, all fold-order
-    arithmetic so the driver hash-checks the whole pipeline."""
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
-    cos = duckdb_cosine_sql("a.v", "b.v")
+    """Full SQL mirror of semantic_cell_dedup: ``duckdb_ivf_cells_sql``'s
+    centroids and assignment, the same within-cell cosine and
+    smallest-keeper decision, all fold-order arithmetic so the driver
+    hash-checks the whole pipeline."""
+    cos = duckdb_cosine_sql("a.embedding", "b.embedding")
     return f"""
-    WITH cents AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-      FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {n_cells})),
-    assign AS (
-      SELECT e.vec_id AS id, e.embedding AS v,
-             (SELECT c.cid FROM cents c
-              ORDER BY {duckdb_fold_dot_sql("c.cv", "e.embedding")} DESC, c.cid
-              LIMIT 1) AS cell
-      FROM embeddings e),
+    WITH {duckdb_ivf_cells_sql(n_cells)},
     hits AS (
-      SELECT a.cell, a.id AS id_a, b.id AS id_b, {cos} AS cos_sim
-      FROM assign a JOIN assign b ON a.cell = b.cell AND a.id < b.id
+      SELECT a.cell, a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cos_sim
+      FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
       WHERE {cos} >= {threshold})
     SELECT cell, id_b AS drop_vec_id,
            MIN(id_a) AS keep_vec_id,
@@ -721,8 +640,6 @@ def duckdb_hyperplane_dedup_sql(
     registered embedding-dedup SCALE path directly hash-checkable —
     no separate twin needed, because the perf path's hashes are already
     engine-portable arithmetic."""
-    from sales_agent_graphdb_spark.operators.similarity import duckdb_cosine_sql
-
     planes = _hyperplanes(n_tables, n_planes, dim)
     buckets = ", ".join(
         _bucket_sql("embedding", planes[t], n_planes) for t in range(n_tables)
@@ -761,18 +678,12 @@ PQ_M = 8  # subspaces
 PQ_K = 16  # centroids per subspace (4-bit codes)
 
 
-def _sub(vec: Column, m: int, d_sub: int) -> Column:
-    return F.slice(vec, m * d_sub + 1, d_sub)
-
-
 def pq_codebooks(
     embeddings: DataFrame,
     dim: int,
     m_sub: int = PQ_M,
     k: int = PQ_K,
     n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_sample: int = 2048,
 ) -> np.ndarray:
     """Per-subspace Lloyd k-means over a BOUNDED DETERMINISTIC SAMPLE
@@ -782,18 +693,15 @@ def pq_codebooks(
     n·dim doubles (≈1 MB at the default) and the FULL corpus pays
     only the single pq_encode pass. Training runs driver-side in
     numpy on the collected sample — the same bounded-frame discipline
-    as vec_mmr_rerank's 380 doubles — which also removes the r08
-    scale-killer: the old in-plan Lloyd rebuilt the 128-way unrolled
-    encode expression per iteration (12.9 s of pure codegen at
-    sf0.1). Determinism: fixed first-k-by-id init, fixed iteration
-    count, single-threaded float64 updates in sample order — rebuilds
-    are bit-identical (pinned by tests/test_round8_ops.py).
-    Assignment matches pq_encode exactly: argmax of (dot − ‖c‖²/2),
-    ties to the LOWEST code; codes with no members keep their previous
-    centroid."""
+    as vec_mmr_rerank's 380 doubles. Determinism: fixed first-k-by-id
+    init, fixed iteration count, single-threaded float64 updates in
+    sample order — rebuilds are bit-identical (pinned by
+    tests/test_round8_ops.py). Assignment matches pq_encode exactly:
+    argmax of (dot − ‖c‖²/2), ties to the LOWEST code; codes with no
+    members keep their previous centroid."""
     d_sub = dim // m_sub
     sample = (
-        embeddings.orderBy(id_col).select(vec_col).limit(max(n_sample, k)).collect()
+        embeddings.orderBy(ID_COL).select(VEC_COL).limit(max(n_sample, k)).collect()
     )
     x = np.array([[float(v) for v in r[0]] for r in sample])  # [N][dim]
     books = np.stack(
@@ -816,50 +724,15 @@ def pq_codebooks(
     return books
 
 
-def pq_encode(
-    embeddings: DataFrame, books: np.ndarray, vec_col: str = "embedding"
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame, books: np.ndarray) -> DataFrame:
     """Add code_m columns: per subspace, the index of the centroid with
-    min Euclidean distance (== max (dot − ‖c‖²/2)); ties → lowest code.
-    One codegen'd projection (M·K fused folds per row). At 100 TB this
-    is the single encode pass whose output (M bytes/vector) is what
-    the ANN tier stores and scans; a Pandas-UDF batch encode is the
-    drop-in when M·K grows past comfortable codegen width."""
-    m_sub, k, d_sub = books.shape
-    out = embeddings
-    v = F.col(vec_col)
-    for m in range(m_sub):
-        sv = _sub(v, m, d_sub)
-        scores = F.array(
-            *[
-                F.struct(
-                    (
-                        dot(sv, lit_vector(books[m][c]))
-                        - float(books[m][c] @ books[m][c]) / 2.0
-                    ).alias("s"),
-                    F.lit(-c).alias("negc"),
-                )
-                for c in range(k)
-            ]
-        )
-        out = out.withColumn(f"code_{m}", -F.array_max(scores)["negc"])
-    return out
-
-
-def pq_encode_arrow(
-    embeddings: DataFrame, books: np.ndarray, vec_col: str = "embedding"
-) -> DataFrame:
-    """Arrow-batched twin of pq_encode — the drop-in its docstring
-    names for when the M·K unrolled expression outgrows comfortable
-    codegen width: the JVM form is ~M·K·d_sub expression nodes
-    (1024 at 8×16×8), which costs ~8 s of one-time Janino compile and
-    several seconds of py4j plan construction PER CALL (measured r09,
-    the bulk of ann_pq_adc_topk's 14 s bench line), while this form is
-    one mapInPandas pass doing the same argmax(dot − ‖c‖²/2) in numpy
-    (ties → lowest code via np.argmax's first-max, identical rule).
-    The materialized-index writer keeps the JVM form — encode there is
-    ingest-time and amortized; THIS form serves query-time encodes.
-    """
+    min Euclidean distance (== max (dot − ‖c‖²/2)); ties → lowest code
+    (np.argmax's first max). One mapInPandas pass doing the M·K scores
+    per Arrow batch in numpy; an unrolled JVM expression for the same
+    argmax is ~M·K·d_sub nodes (1024 at 8×16×8), measured at ~8 s of
+    one-time Janino compile plus seconds of py4j plan construction per
+    call. At 100 TB this is the single encode pass whose output
+    (M bytes/vector) is what the ANN tier stores and scans."""
     m_sub, k, d_sub = books.shape
     cbs = [np.asarray(books[m], dtype=np.float64) for m in range(m_sub)]
     half = [0.5 * np.einsum("ij,ij->i", c, c) for c in cbs]
@@ -867,8 +740,7 @@ def pq_encode_arrow(
         [f"{f.name} {f.dataType.simpleString()}" for f in embeddings.schema.fields]
         + [f"code_{m} int" for m in range(m_sub)]
     )
-    cols = [f.name for f in embeddings.schema.fields]
-    vpos = cols.index(vec_col)
+    vpos = embeddings.columns.index(VEC_COL)
 
     def encode(batches):
         for pdf in batches:
@@ -922,26 +794,20 @@ def pq_adc_score(books: np.ndarray, query_vec: list[float]) -> Column:
 
 
 def write_ivfpq_index(
-    spark,
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, path: str, n_cells: int = 16, dim: int = 64
 ) -> tuple[np.ndarray, np.ndarray]:
-    """INGEST-TIME IVF-PQ index: one table, cell-PARTITIONED (probes
-    are physical partition pruning) with the M PQ code columns stored
-    NEXT TO the full vector — candidate generation reads only
-    (vec_id, code_*) via column pruning (M bytes of codes instead of
-    dim floats), the exact rerank reads the vector column for the C
+    """INGEST-TIME IVF-PQ index: ``pq_encode``, then ``write_ivf_index``
+    with k-means centroids — one table, cell-PARTITIONED (probes are
+    physical partition pruning) with the M PQ code columns stored NEXT
+    TO the full vector: candidate generation reads only (vec_id,
+    code_*) via column pruning (M bytes of codes instead of dim
+    floats), the exact rerank reads the vector column for the C
     survivors only. Returns (centroids, codebooks) — the query-time
     sidecar. Both trainings are deterministic (cells: DECIMAL-exact
     distributed Lloyd; PQ codebooks: driver-side numpy Lloyd on the
     first-n-by-id sample), so the index and every verdict derived
     from it are bit-stable across rebuilds."""
-    cents = kmeans_centroids(embeddings, n_cells, id_col=id_col, vec_col=vec_col)
-    books = pq_codebooks(embeddings, dim=dim, id_col=id_col, vec_col=vec_col)
-    enc = pq_encode(ivf_assign(embeddings, cents, vec_col), books, vec_col)
-    enc.write.mode("overwrite").partitionBy("cell").parquet(path)
+    cents = kmeans_centroids(embeddings, n_cells)
+    books = pq_codebooks(embeddings, dim=dim)
+    write_ivf_index(pq_encode(embeddings, books), path, cents)
     return cents, books

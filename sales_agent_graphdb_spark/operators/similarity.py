@@ -11,6 +11,9 @@ same fold) matches bit-for-bit.
 At 100 TB the exact path is the rerank stage; candidate generation goes
 through the LSH operators in ``lsh.py`` (signature bucketing), keeping
 the all-pairs cost off the table.
+
+Every operator reads the embeddings table's own column names
+(``ID_COL`` / ``VEC_COL``); they are not per-call options.
 """
 
 from __future__ import annotations
@@ -20,6 +23,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+ID_COL = "vec_id"
+VEC_COL = "embedding"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -74,8 +80,6 @@ def knn(
     embeddings: DataFrame,
     query_vec: Sequence[float],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_ids: Sequence[int] | None = None,
     where: Column | None = None,
     carry: Sequence[str] = (),
@@ -88,29 +92,30 @@ def knn(
     The one exact top-k every approximate path is checked against:
     ``where`` filters before scoring (a pre-filter, so only survivors
     are scored and the predicate reaches the scan), ``carry`` columns
-    ride between ``id_col`` and ``sim``; ties break to the lowest id."""
+    ride between the id and ``sim``; ties break to the lowest id."""
     if where is not None:
         embeddings = embeddings.filter(where)
     scored = embeddings.select(
-        F.col(id_col),
+        F.col(ID_COL),
         *carry,
-        cosine_to(F.col(vec_col), query_vec).alias("sim"),
+        cosine_to(F.col(VEC_COL), query_vec).alias("sim"),
     )
     if exclude_ids:
-        scored = scored.filter(~F.col(id_col).isin(*[int(i) for i in exclude_ids]))
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+        scored = scored.filter(~F.col(ID_COL).isin(*[int(i) for i in exclude_ids]))
+    return scored.orderBy(F.col("sim").desc(), F.col(ID_COL)).limit(k)
 
 
 def semantic_cache_probe(
     cache: DataFrame,
     query_vec: Sequence[float],
     threshold: float = 0.85,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    exclude_ids: Sequence[int] | None = None,
 ) -> DataFrame:
     """V2 — thresholded top-1 lookup (reference semantic_cache.py:27-58):
-    hit iff best cosine ≥ threshold; empty result = cache miss."""
-    top1 = knn(cache, query_vec, k=1, id_col=id_col, vec_col=vec_col)
+    hit iff best cosine ≥ threshold; empty result = cache miss.
+    ``exclude_ids`` passes through to ``knn`` (a probe with a cached
+    row's own vector skips that row)."""
+    top1 = knn(cache, query_vec, k=1, exclude_ids=exclude_ids)
     return top1.filter(F.col("sim") >= threshold)
 
 
@@ -133,7 +138,7 @@ def duckdb_cosine_sql(vec_expr_a: str, vec_expr_b: str) -> str:
     return f"({prod} / ({na} * {nb}))"
 
 
-def embedding_qc(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def embedding_qc(df: DataFrame) -> DataFrame:
     """Per-vector quality control for an embedding column — the sanity
     gate a training-data pipeline runs before indexing/dedup: dimension,
     L2 norm (same strict fold as ``dot``), non-finite and exact-zero
@@ -144,7 +149,7 @@ def embedding_qc(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_i
     scan speed on any corpus size. Corpus-level checks (norm outliers
     vs the distribution) belong in a separate aggregate so this gate
     stays embarrassingly parallel."""
-    v = F.col(vec_col)
+    v = F.col(VEC_COL)
     inf, ninf = F.lit(float("inf")), F.lit(float("-inf"))
     l2 = F.sqrt(
         F.aggregate(
@@ -152,7 +157,7 @@ def embedding_qc(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_i
         )
     )
     m = df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.size(v).cast("int").alias("dim"),
         l2.alias("l2_norm"),
         F.size(

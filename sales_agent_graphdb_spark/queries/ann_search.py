@@ -45,17 +45,8 @@ def _emb_src(sf_dir: str) -> str:
     return f"{sf_dir.rstrip('/')}/embeddings.parquet"
 
 
-def _ensure_index(path: str, sf_dir: str, build, version: str = "") -> None:
-    """Single-builder guard for a materialized index (stamp.ensure):
-    fresh fast path, else exactly one racing session builds under the
-    layout lock and the rest wait and reuse — closing the first-build
-    race the r09 plan audit measured on the shared graph layout for
-    EVERY stamped index here."""
-    stamp.ensure(path, _emb_src(sf_dir), version, build)
-
-
 def _ensure_sidecar_index(path: str, sf_dir: str, build):
-    """_ensure_index for indexes with driver-side state (centroids,
+    """stamp.ensure for indexes with driver-side state (centroids,
     codebooks): ``build()`` writes the index and returns a
     JSON-serialisable payload, kept in ``_SIDECAR.json`` beside it;
     returns the parsed payload. A fresh stamp with a corrupt or missing
@@ -80,27 +71,30 @@ def _ensure_sidecar_index(path: str, sf_dir: str, build):
 
 
 def _centroid_index(
-    spark: SparkSession, sf_dir: str, kind: str, write
-) -> tuple[str, np.ndarray]:
-    """An IVF index partitioned by ``cell``, written by
-    ``write(embeddings, path)`` (which returns the centroids) once per
-    embeddings stamp; a warm call reads only the centroid sidecar."""
+    spark: SparkSession, sf_dir: str, kind: str, train
+) -> tuple[str, ann.Centroids]:
+    """An IVF index written by ``ann.write_ivf_index`` with the
+    centroids ``train(embeddings)`` returns (a matrix, or a dict
+    label → matrix), once per embeddings stamp; a warm call reads only
+    the centroid sidecar. Returns (path, centroids)."""
     path = _index_path(sf_dir, kind)
-    cents = _ensure_sidecar_index(
-        path,
-        sf_dir,
-        lambda: write(catalog.load_table(spark, sf_dir, "embeddings"), path).tolist(),
-    )
-    return path, np.asarray(cents)
+
+    def build():
+        emb = catalog.load_table(spark, sf_dir, "embeddings")
+        cents = train(emb)
+        ann.write_ivf_index(emb, path, cents)
+        return ann._each(cents, np.ndarray.tolist)
+
+    side = _ensure_sidecar_index(path, sf_dir, build)
+    if isinstance(side, dict):
+        return path, {int(lbl): np.asarray(c) for lbl, c in side.items()}
+    return path, np.asarray(side)
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, np.ndarray]:
     """The k-means IVF index (16 cells) and its centroids."""
     return _centroid_index(
-        spark,
-        sf_dir,
-        "ivf",
-        lambda emb, path: ann.write_ivf_index(spark, emb, path, n_cells=16, n_iter=3),
+        spark, sf_dir, "ivf", lambda emb: ann.kmeans_centroids(emb, n_cells=16, n_iter=3)
     )
 
 
@@ -116,10 +110,14 @@ def _require_dim64(dim: int, query: str) -> None:
         )
 
 
-@register(
-    "ann_lsh_topk",
-    oracle=ann.duckdb_lsh_topk_sql(k=5, n_tables=8, n_planes=4, dim=64, query_id=0),
-)
+# The DuckDB mirrors every top-5 LSH and IVF query here answers: the
+# exact rerank of the query's bucket / probed-cell candidates.
+_LSH_ORACLE = ann.duckdb_lsh_topk_sql(k=5, n_tables=8, n_planes=4, dim=64, query_id=0)
+_IVF_ORACLE = ann.duckdb_ivf_topk_sql(k=5, n_cells=16, n_probe=4, query_id=0)
+
+
+@register("ann_lsh_topk", oracle=_LSH_ORACLE)
+@register("ann_lsh_topk_portable", oracle=_LSH_ORACLE)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH top-5 (8 tables × 4 planes) — candidates
     from bucket collisions, exact-cosine rerank. pytest asserts
@@ -128,33 +126,33 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUERY-TIME variant (re-signs the corpus per query) — kept as the
     index-free form; the scale path is ann_lsh_pruned_topk below.
 
-    ORACLED DIRECTLY: the planes are seeded literals and every dot —
-    the corpus side in-plan, the query buckets driver-side
-    (``ann._query_buckets``) — is a fold-order sum the DuckDB mirror
-    reproduces bit-for-bit, so the candidate set and the exact rerank
-    are the oracle's. ann_lsh_topk_portable runs the same operator;
-    tests/test_ann.py pins the equality."""
+    ORACLED DIRECTLY, and registered a second time as
+    ann_lsh_topk_portable: the seeded hyperplanes are inlined as
+    literals on BOTH engines and every dot — the corpus side in-plan,
+    the query buckets driver-side (``ann._query_buckets``) — is the
+    same left-to-right fold, so sign bits, bucket equality and the
+    exact-cosine rerank are reproducible in DuckDB bit-for-bit."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     _require_dim64(len(qv), "ann_lsh_topk")
     return ann.hyperplane_lsh_topk(emb, qv, k=5)
 
 
-@register(
-    "ann_ivf_topk",
-    oracle=ann.duckdb_ivf_topk_sql(k=5, n_cells=16, n_probe=4, query_id=0),
-)
+@register("ann_ivf_topk", oracle=_IVF_ORACLE)
+@register("ann_ivf_topk_portable", oracle=_IVF_ORACLE)
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5 (16 cells, probe 4): coarse-quantize, prune 12/16 of
     the corpus, exact rerank. QUERY-TIME variant (assigns cells per
     query) — the scale path is ann_ivf_pruned_topk below, which
     materializes the assignment at ingest.
 
-    ORACLED DIRECTLY: centroids are the deterministic first-16-by-id
-    (same derivation as the oracle's CTE) and the probe cells come
-    from the same fold-order dots with the same lowest-cell tie break
-    (``ann._probe_cells``). ann_ivf_topk_portable runs the same
-    operator; tests/test_ann.py pins the equality."""
+    ORACLED DIRECTLY, and registered a second time as
+    ann_ivf_topk_portable: deterministic first-16-by-id centroids
+    (read identically by the SQL mirror), argmax-dot cell assignment
+    with ties → lowest cell, top-4-cell probe (``ann._probe_cells``),
+    exact-cosine rerank — every dot the same sequential double fold on
+    Spark, Python and DuckDB. The k-means variant
+    (ann_ivf_pruned_topk) stays the quality/scale path."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     return ann.ivf_topk(emb, _query_vec(spark, sf_dir), k=5, n_cells=16, n_probe=4)
 
@@ -172,10 +170,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # containment oracle (dedup-family pattern) was considered and
 # deliberately not used: raw-row equality is the stronger check while
 # it holds, and the pinned test makes silent drift impossible.
-@register(
-    "ann_ivf_pruned_topk",
-    oracle=ann.duckdb_ivf_topk_sql(k=5, n_cells=16, n_probe=4, query_id=0),
-)
+@register("ann_ivf_pruned_topk", oracle=_IVF_ORACLE)
 def ann_ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5 over a MATERIALIZED index (VERDICT r01 #2): ingest
     step runs spherical k-means (Lloyd as DataFrame aggs) and writes
@@ -200,10 +195,8 @@ def ann_ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ann_lsh_pruned_topk",
-    oracle=ann.duckdb_lsh_topk_sql(k=5, n_tables=8, n_planes=4, dim=64, query_id=0),
-)
+@register("ann_lsh_pruned_topk", oracle=_LSH_ORACLE)
+@register("ann_lsh_pruned_portable", oracle=_LSH_ORACLE)
 def ann_lsh_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH top-5 over a MATERIALIZED index (VERDICT r01 #2):
     ingest step writes skinny (id, t, bucket) signature rows
@@ -212,24 +205,22 @@ def ann_lsh_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranks exact — no per-query corpus scan. pytest pins recall and
     asserts the partition-pruned plan.
 
-    ORACLED DIRECTLY: write_lsh_index's per-row sign bits and the
-    query buckets are both fold-order dots, exactly what the DuckDB
-    mirror computes. ann_lsh_pruned_portable runs the same operator
-    over the same index; tests/test_ann.py pins the equality."""
+    ORACLED DIRECTLY, and registered a second time as
+    ann_lsh_pruned_portable: write_lsh_index's per-row sign bits and
+    the query buckets are both fold-order dots, exactly what the
+    DuckDB mirror computes, so the row certifies the production index
+    build, the (t, bucket) partition prune and the exact rerank."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     _require_dim64(len(qv), "ann_lsh_pruned_topk")
     path = _index_path(sf_dir, "lsh")
-    _ensure_index(
-        path, sf_dir, lambda: ann.write_lsh_index(spark, emb, path, dim=len(qv))
+    stamp.ensure(
+        path, _emb_src(sf_dir), "", lambda: ann.write_lsh_index(spark, emb, path, dim=len(qv))
     )
     return ann.lsh_pruned_topk(spark, path, emb, qv, k=5)
 
 
-@register(
-    "ann_ivf_pruned_portable",
-    oracle=ann.duckdb_ivf_topk_sql(k=5, n_cells=16, n_probe=4, query_id=0),
-)
+@register("ann_ivf_pruned_portable", oracle=_IVF_ORACLE)
 def ann_ivf_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5 over a MATERIALIZED index, HASH-CHECKED END-TO-END
     (VERDICT r02 #3): the portable twin of ann_ivf_pruned_topk. Ingest
@@ -240,88 +231,50 @@ def ann_ivf_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     path serves — so the driver's value hash covers the index BUILD
     (cell assignment at write), the physical partition PRUNE, and the
     rerank. The k-means variant stays the quality/scale path."""
-
-    def write(emb, path):  # noqa: ANN001, ANN202
-        cents = ann._ivf_centroids(emb, 16, "vec_id", "embedding")
-        ann._write_cells(emb, cents, path)
-        return cents
-
-    path, cents = _centroid_index(spark, sf_dir, "ivf_portable", write)
+    path, cents = _centroid_index(
+        spark, sf_dir, "ivf_portable", lambda emb: ann._ivf_centroids(emb, 16)
+    )
     return ann.ivf_pruned_topk(
         spark, path, cents, _query_vec(spark, sf_dir), k=5, n_probe=4
     )
 
 
-@register(
-    "ann_lsh_pruned_portable",
-    oracle=ann.duckdb_lsh_topk_sql(k=5, n_tables=8, n_planes=4, dim=64, query_id=0),
-)
-def ann_lsh_pruned_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH top-5 over the MATERIALIZED index, HASH-CHECKED
-    END-TO-END: the index is the SAME one ann_lsh_pruned_topk serves
-    (write_lsh_index's per-row sign bits are Spark fold dots — exactly
-    what the DuckDB mirror computes), so this row certifies the shared
-    production index build + the (t, bucket) partition prune + the
-    exact rerank; the query runs the same ``ann.lsh_pruned_topk``."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    _require_dim64(len(qv), "ann_lsh_pruned_portable")
-    path = _index_path(sf_dir, "lsh")
-    _ensure_index(
-        path, sf_dir, lambda: ann.write_lsh_index(spark, emb, path, dim=len(qv))
-    )
-    return ann.lsh_pruned_topk(spark, path, emb, qv, k=5)
-
-
-@register(
-    "ann_lsh_topk_portable",
-    oracle=ann.duckdb_lsh_topk_sql(k=5, n_tables=8, n_planes=4, dim=64, query_id=0),
-)
-def ann_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH top-5, HASH-CHECKED END-TO-END: the same
-    ``ann.hyperplane_lsh_topk`` as ann_lsh_topk. The seeded hyperplanes
-    are inlined as literals on BOTH engines, and the query buckets use
-    the same left-to-right fold dot product as the corpus side — so
-    sign bits, bucket equality, and the exact-cosine rerank are all
-    reproducible in DuckDB bit-for-bit (the fold-order trick proven by
-    the v1 oracle)."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    _require_dim64(len(qv), "ann_lsh_topk_portable")
-    return ann.hyperplane_lsh_topk(emb, qv, k=5)
-
-
-@register(
-    "ann_ivf_topk_portable",
-    oracle=ann.duckdb_ivf_topk_sql(k=5, n_cells=16, n_probe=4, query_id=0),
-)
-def ann_ivf_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-5, HASH-CHECKED END-TO-END: deterministic first-16-by-id
-    centroids (read identically by the SQL mirror), argmax-dot cell
-    assignment with ties→lowest cell, top-4-cell probe, exact-cosine
-    rerank — every dot the same sequential double fold on Spark,
-    Python (driver-side probe), and DuckDB; the same ``ann.ivf_topk``
-    as ann_ivf_topk. The k-means variant (ann_ivf_pruned_topk) stays
-    the quality/scale path."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    return ann.ivf_topk(emb, _query_vec(spark, sf_dir), k=5, n_cells=16, n_probe=4)
-
-
 # ---------------------------------------------------------------------------
 # Incremental index maintenance — upsert a batch of NEW vectors into
-# the materialized LSH index without rebuilding it, using DYNAMIC
-# partition overwrite: only the (t, bucket) partitions the batch
-# touches are rewritten; every other partition directory is untouched
-# bytes on disk. This is the nightly index-maintenance shape at
-# 100 TB (a day's new embeddings vs a corpus-sized index), and the
-# oracle certifies the STRONG invariant: incrementally-maintained
-# index content == what a from-scratch rebuild over the full corpus
-# would produce.
+# a materialized index without rebuilding it, using DYNAMIC partition
+# overwrite: only the partitions the batch touches are rewritten;
+# every other partition directory is untouched bytes on disk. This is
+# the nightly index-maintenance shape at 100 TB (a day's new
+# embeddings vs a corpus-sized index), and each oracle certifies the
+# STRONG invariant: incrementally-maintained index content == what a
+# from-scratch rebuild over the full corpus would produce.
 # ---------------------------------------------------------------------------
 
 _INC_TABLES = 4
 _INC_PLANES = 4
 _INC_SPLIT = 400  # vec_id < 400 = base corpus; >= 400 = the new batch
+
+
+def _upsert_partitions(
+    spark: SparkSession, path: str, new_rows: DataFrame, parts: list[str]
+) -> None:
+    """Merge ``new_rows`` into the index at ``path`` (partitioned by
+    ``parts``): union them with the existing rows of ONLY the
+    partitions they touch and rewrite exactly those directories (the
+    write's own partitionOverwriteMode=dynamic option; static mode
+    would wipe the untouched partitions, and the session conf is never
+    touched). Write amplification is |touched partitions|, not
+    |index|."""
+    touched = new_rows.select(*parts).distinct()
+    existing = catalog.read_parquet(spark, path).join(F.broadcast(touched), parts)
+    # Eager: detach from the partitions the write replaces.
+    updated = materialize(existing.unionByName(new_rows), eager=True)
+    (
+        updated.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*parts)
+        .parquet(path)
+    )
 
 
 def _inc_oracle() -> str:
@@ -347,55 +300,37 @@ def _inc_oracle() -> str:
 def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental LSH-index maintenance, HASH-CHECKED END-TO-END:
     build the skinny (id, t, bucket) index from the base corpus
-    (vec_id < 400), then MERGE the new batch (vec_id >= 400) in with
-    dynamic partition overwrite — union the new signature rows with
-    the existing rows of ONLY the affected (t, bucket) partitions and
-    rewrite exactly those directories (the write's own
-    partitionOverwriteMode=dynamic option; static mode would wipe the
-    untouched partitions, and the session conf is never touched). The
-    union frame is materialized eagerly before the write so the
-    self-overwrite read is cut from the plan. The returned per-partition profile
+    (vec_id < 400), then merge the new batch's (vec_id >= 400)
+    signature rows in with ``_upsert_partitions`` — only the affected
+    (t, bucket) partitions rewrite. The returned per-partition profile
     (count + id checksum) must hash-equal the oracle's FROM-SCRATCH
     rebuild over the full corpus: the driver row certifies the merge
     semantics, not just the arithmetic.
 
-    Scale: write amplification is |affected partitions|, not |index|;
-    a day's batch touches the buckets its vectors hash to, nothing
-    else. The same recipe maintains the IVF index (cell instead of
-    (t, bucket)). Reference parity: ChromaDB add() on an existing
+    Scale: a day's batch touches the buckets its vectors hash to,
+    nothing else. Reference parity: ChromaDB add() on an existing
     collection (db_service.py:193-199) — here the add is a
     partition-local merge instead of an HNSW mutation."""
     _require_dim64(len(_query_vec(spark, sf_dir)), "ann_index_incremental_upsert")
     path = _index_path(sf_dir, "lsh_incremental")
-    src = _emb_src(sf_dir)
+
     def _build_incr():
         emb = catalog.load_table(spark, sf_dir, "embeddings")
-        base = emb.filter(F.col("vec_id") < _INC_SPLIT)
         ann.write_lsh_index(
-            spark, base, path, dim=64, n_tables=_INC_TABLES, n_planes=_INC_PLANES
+            spark,
+            emb.filter(F.col("vec_id") < _INC_SPLIT),
+            path,
+            dim=64,
+            n_tables=_INC_TABLES,
+            n_planes=_INC_PLANES,
         )
         new_sigs = ann._signature_rows(
             emb.filter(F.col("vec_id") >= _INC_SPLIT),
             ann._hyperplanes(_INC_TABLES, _INC_PLANES, 64),
-            "vec_id",
-            "embedding",
         )
-        affected = new_sigs.select("t", "bucket").distinct()
-        existing = (
-            catalog.read_parquet(spark, path)
-            .join(F.broadcast(affected), ["t", "bucket"])
-            .select("id", "t", "bucket")
-        )
-        # Eager: detach from the partitions the write replaces.
-        updated = materialize(existing.unionByName(new_sigs), eager=True)
-        (
-            updated.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("t", "bucket")
-            .parquet(path)
-        )
+        _upsert_partitions(spark, path, new_sigs, ["t", "bucket"])
 
-    stamp.ensure(path, src, "incr-v1-upserted", _build_incr)
+    stamp.ensure(path, _emb_src(sf_dir), "incr-v1-upserted", _build_incr)
     idx = catalog.read_parquet(spark, path)
     return (
         idx.groupBy("t", F.col("bucket").cast("bigint").alias("bucket"))
@@ -408,17 +343,8 @@ def ann_index_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_inc_oracle(n_cells: int = 16) -> str:
-    from sales_agent_graphdb_spark.operators.ann import duckdb_fold_dot_sql
-
     return f"""
-    WITH cents AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-      FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {n_cells})),
-    assign AS (
-      SELECT e.vec_id, (SELECT c.cid FROM cents c
-              ORDER BY {duckdb_fold_dot_sql("c.cv", "e.embedding")} DESC, c.cid
-              LIMIT 1) AS cell
-      FROM embeddings e)
+    WITH {ann.duckdb_ivf_cells_sql(n_cells)}
     SELECT CAST(cell AS INT) AS cell,
            CAST(COUNT(*) AS BIGINT) AS n_ids,
            CAST(SUM(vec_id) AS BIGINT) AS id_sum
@@ -429,41 +355,29 @@ def _ivf_inc_oracle(n_cells: int = 16) -> str:
 @register("ann_ivf_index_incremental", oracle=_ivf_inc_oracle())
 def ann_ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF-index maintenance — the cell-partitioned twin of
-    ann_index_incremental_upsert, turning that query's "same recipe
-    maintains the IVF index" claim into a checked row: centroids are
-    FROZEN at base-build time (the production contract — batches
-    assign against the serving centroids; re-clustering is a separate
-    offline rebuild), the new batch (vec_id >= 400) assigns to cells
-    with the same argmax-fold-dot as the build, and only the touched
-    cell partitions rewrite under dynamic partition overwrite. The
-    oracle re-derives the full assignment from scratch: incremental
-    content == full rebuild, per-cell count + id checksum. Centroids
-    here are the deterministic first-16-by-id (all inside the base
-    corpus), so the frozen-centroid contract and the oracle's
+    ann_index_incremental_upsert: centroids are FROZEN at base-build
+    time (the production contract — batches assign against the serving
+    centroids; re-clustering is a separate offline rebuild), the new
+    batch (vec_id >= 400) assigns to cells with the same
+    argmax-fold-dot as the build (``ann.ivf_assign``), and
+    ``_upsert_partitions`` rewrites only the touched cell partitions.
+    The oracle re-derives the full assignment from scratch:
+    incremental content == full rebuild, per-cell count + id checksum.
+    Centroids here are the deterministic first-16-by-id (all inside
+    the base corpus), so the frozen-centroid contract and the oracle's
     full-corpus derivation agree exactly."""
     _require_dim64(len(_query_vec(spark, sf_dir)), "ann_ivf_index_incremental")
     path = _index_path(sf_dir, "ivf_incremental")
-    src = _emb_src(sf_dir)
+
     def _build_ivf_incr():
         emb = catalog.load_table(spark, sf_dir, "embeddings")
         base = emb.filter(F.col("vec_id") < _INC_SPLIT)
-        cents = ann._ivf_centroids(base, 16, "vec_id", "embedding")
-        ann._write_cells(base, cents, path)
+        cents = ann._ivf_centroids(base, 16)
+        ann.write_ivf_index(base, path, cents)
         new_rows = ann.ivf_assign(emb.filter(F.col("vec_id") >= _INC_SPLIT), cents)
-        affected = new_rows.select("cell").distinct()
-        existing = catalog.read_parquet(spark, path).join(
-            F.broadcast(affected), ["cell"]
-        )
-        # Eager: detach from the partitions the write replaces.
-        updated = materialize(existing.unionByName(new_rows), eager=True)
-        (
-            updated.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell")
-            .parquet(path)
-        )
+        _upsert_partitions(spark, path, new_rows, ["cell"])
 
-    stamp.ensure(path, src, "ivf-incr-v2-upserted", _build_ivf_incr)
+    stamp.ensure(path, _emb_src(sf_dir), "ivf-incr-v2-upserted", _build_ivf_incr)
     idx = catalog.read_parquet(spark, path)
     return (
         idx.groupBy(F.col("cell").cast("int").alias("cell"))
@@ -538,7 +452,8 @@ def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     """FILTERED ANN over the LABEL-PARTITIONED IVF index — the
     production filtered-search form ann_filtered_ivf_topk's docstring
     names: the index is written partitioned by ``(label, cell)`` with
-    PER-LABEL k-means centroids (operators/ann.write_ivf_index_labeled),
+    PER-LABEL k-means centroids (operators/ann.kmeans_centroids_per_label
+    and write_ivf_index),
     so the metadata predicate is pure partition pruning (exact by
     construction — label directories contain exactly the filtered
     population) and the cell probe regains its 4/16 pruning WITHIN the
@@ -561,18 +476,16 @@ def ann_filtered_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     label-pruned-only read, fully hash-checked per row), plus a
     recall_ok verdict from the pruned probe (floor 3, measured 4 —
     slack 1 against k-means ulp wobble across rebuilds)."""
-    path = _index_path(sf_dir, "ivf_labeled")
-
-    def _build_labeled():
-        emb = catalog.load_table(spark, sf_dir, "embeddings")
-        cbl = ann.write_ivf_index_labeled(spark, emb, path, n_cells=16, n_iter=3)
-        return {str(k): v.tolist() for k, v in cbl.items()}
-
-    cbl = _ensure_sidecar_index(path, sf_dir, _build_labeled)
+    path, cbl = _centroid_index(
+        spark,
+        sf_dir,
+        "ivf_labeled",
+        lambda emb: ann.kmeans_centroids_per_label(emb, n_cells=16, n_iter=3),
+    )
     qv = _query_vec(spark, sf_dir)
     pruned_pred = None
     for lbl in sorted(_FILTER_LABELS):
-        cells = ann._probe_cells(np.asarray(cbl[str(lbl)]), qv, 4)
+        cells = ann._probe_cells(cbl[lbl], qv, 4)
         p = (F.col("label") == lbl) & F.col("cell").isin(cells)
         pruned_pred = p if pruned_pred is None else (pruned_pred | p)
     idx = catalog.read_parquet(spark, path)
@@ -657,10 +570,9 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate scan reads ONLY code columns — at 100 TB the ANN
     tier scans 32× fewer bytes and touches full vectors only for the
     C={cand} rerank survivors; the query-time corpus encode runs
-    Arrow-batched (operators/ann.pq_encode_arrow — the 1024-node JVM
-    codegen twin costs seconds of Janino compile + py4j plan
-    construction per call, measured r09, and stays on the amortized
-    ingest path). Output contract (the filtered-ANN
+    Arrow-batched (operators/ann.pq_encode — an unrolled 1024-node JVM
+    expression for it cost seconds of Janino compile + py4j plan
+    construction per call, measured r09). Output contract (the filtered-ANN
     pattern): the oracle-checked exact top-5 truth + a recall verdict
     from the PQ path — measured 3-4/5 at every SF on these
     near-random embeddings (floor {floor}, one notch of slack;
@@ -672,7 +584,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _query_vec(spark, sf_dir)
     books = ann.pq_codebooks(emb, dim=64)
     base = emb.filter(F.col("vec_id") != 0)
-    enc = ann.pq_encode_arrow(base, books)
+    enc = ann.pq_encode(base, books)
     cands = (
         enc.select(
             "vec_id", ann.pq_adc_score(books, qv).alias("adc"), "embedding"
@@ -726,7 +638,7 @@ def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Train AND index the full corpus (the deterministic first-k
         # init is defined on it); the query vector's own row is
         # excluded at probe time, not at ingest.
-        c, b = ann.write_ivfpq_index(spark, emb, path)
+        c, b = ann.write_ivfpq_index(emb, path)
         return {"cents": c.tolist(), "books": b.tolist()}
 
     side = _ensure_sidecar_index(path, sf_dir, _build_ivfpq)

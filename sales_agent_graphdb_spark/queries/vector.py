@@ -118,8 +118,9 @@ def v2_semantic_cache_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V2 — thresholded top-1 semantic-cache probe (reference
     semantic_cache.py:27-58): hit iff cosine ≥ threshold."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    top1 = sim.knn(emb, _query_vec(spark, sf_dir), k=1, exclude_ids=[0])
-    return top1.filter(F.col("sim") >= PROBE_THRESHOLD)
+    return sim.semantic_cache_probe(
+        emb, _query_vec(spark, sf_dir), threshold=PROBE_THRESHOLD, exclude_ids=[0]
+    )
 
 
 @register(

@@ -235,7 +235,7 @@ def test_semantic_cell_dedup_decisions_are_sound(spark):
     assert out, "threshold 0.3 must produce semantic duplicates at sf0.001"
     # ground truth: within-cell exact pairs over the same deterministic
     # centroids/assignment
-    cents = ann._ivf_centroids(emb, 16, "vec_id", "embedding")
+    cents = ann._ivf_centroids(emb, 16)
     assigned = ann.ivf_assign(emb, cents).select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("v"), "cell"
     )

@@ -58,7 +58,8 @@ def test_recall_verdict_flips_at_floor(spark):
 
 # Queries that must answer the same DuckDB SQL as their twin: a stream
 # run and its batch form, a prefiltered path and its exact path, the
-# Arrow round-trip and the JVM path, an NL route and its scan.
+# Arrow round-trip and the JVM path, an NL route and its scan, an ANN
+# perf path and its portable name.
 TWIN_ORACLES = [
     ("st_tumbling_window", "st_stream_tumbling_exec"),
     ("st_sliding_window", "st_stream_sliding_exec"),
@@ -67,6 +68,10 @@ TWIN_ORACLES = [
     ("mm_media_features", "mm_arrow_fidelity_probe"),
     ("s6_graph_scan_limit", "nl2plan_broad_scan"),
     ("s8_api_source_ingest", "s8b_api_stream_ingest"),
+    ("ann_lsh_topk", "ann_lsh_topk_portable"),
+    ("ann_ivf_topk", "ann_ivf_topk_portable"),
+    ("ann_lsh_pruned_topk", "ann_lsh_pruned_portable"),
+    ("ann_ivf_pruned_topk", "ann_ivf_pruned_portable"),
 ]
 
 

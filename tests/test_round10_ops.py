@@ -110,27 +110,27 @@ def test_calibration_bin_div_agrees_cross_engine_on_negatives(spark):
 
 
 def test_pq_encode_arrow_empty_batch(spark):
-    """pq_encode_arrow must pass an empty Arrow batch through instead
+    """pq_encode (Arrow-batched) must pass an empty batch through instead
     of crashing on the 1-D np.array([]) (ADVICE r09): empty batches
     are routine at scale (empty partitions after a filter)."""
     import numpy as np
 
-    from sales_agent_graphdb_spark.operators.ann import pq_codebooks, pq_encode_arrow
+    from sales_agent_graphdb_spark.operators.ann import pq_codebooks, pq_encode
 
     dim, m = 8, 2
     rng = np.random.RandomState(7)
     vecs = [(i, [float(x) for x in rng.rand(dim)]) for i in range(64)]
-    df = spark.createDataFrame(vecs, "id long, emb array<double>")
-    books = pq_codebooks(df, dim=dim, m_sub=m, k=4, id_col="id", vec_col="emb")
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    books = pq_codebooks(df, dim=dim, m_sub=m, k=4)
     # An all-empty input exercises the empty-Arrow-batch path directly.
-    encoded = pq_encode_arrow(df.filter(F.col("id") < -1), books, vec_col="emb")
+    encoded = pq_encode(df.filter(F.col("vec_id") < -1), books)
     assert encoded.count() == 0  # empty in, empty out — no IndexError
     assert [f for f in encoded.columns if f.startswith("code_")] == [
         "code_0",
         "code_1",
     ]
     # and the non-empty path still encodes every row
-    full = pq_encode_arrow(df, books, vec_col="emb")
+    full = pq_encode(df, books)
     assert full.count() == 64
 
 
