@@ -30,13 +30,24 @@ def md5_int(c: Column | str, salt: str = "", hex_digits: int = 15) -> Column:
     s = c.cast("string")
     if salt:
         s = F.concat(s, F.lit(salt))
-    return F.conv(F.substring(F.md5(s), 1, hex_digits), 16, 10).cast("bigint")
+    return hex_int(F.md5(s), hex_digits)
 
 
 def md5_int_sql(expr: str, salt: str = "", hex_digits: int = 15) -> str:
     """DuckDB twin of ``md5_int``."""
     s = f"CAST({expr} AS VARCHAR)" + (f" || '{salt}'" if salt else "")
-    return f"CAST(('0x' || substr(md5({s}), 1, {hex_digits})) AS BIGINT)"
+    return hex_int_sql(f"md5({s})", hex_digits)
+
+
+def hex_int(c: Column, hex_digits: int = 15) -> Column:
+    """bigint of the first ``hex_digits`` chars of a hex digest — the
+    prefix step of ``md5_int``, for a caller that carries the digest."""
+    return F.conv(F.substring(c, 1, hex_digits), 16, 10).cast("bigint")
+
+
+def hex_int_sql(expr: str, hex_digits: int = 15) -> str:
+    """DuckDB twin of ``hex_int``."""
+    return f"CAST(('0x' || substr({expr}, 1, {hex_digits})) AS BIGINT)"
 
 
 # 2^52: a 13-hex-digit md5_int is a uniform integer below it, exact as
@@ -75,12 +86,6 @@ def surrogate_sku(name: Column | str) -> Column:
     under any parallelism, unlike monotonically_increasing_id."""
     name = F.col(name) if isinstance(name, str) else name
     return F.concat(F.lit("GEN-"), F.upper(F.substring(F.md5(F.lower(name)), 1, 8)))
-
-
-def normalize_alnum(c: Column | str) -> Column:
-    """F8 — lowercase, strip non-alphanumerics (reference Chat.jsx:225-227)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.regexp_replace(F.lower(c), "[^a-z0-9]", "")
 
 
 def is_email(c: Column | str) -> Column:

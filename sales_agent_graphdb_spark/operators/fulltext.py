@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sales_agent_graphdb_spark.functions import text as tk
+
 
 def inverted_index(
     df: DataFrame, text_col: str = "name", id_col: str = "sku"
@@ -24,7 +26,7 @@ def inverted_index(
     return (
         df.select(
             F.col(id_col).alias("id"),
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token"),
+            F.explode(tk.lower_ws_tokens(F.col(text_col))).alias("token"),
         )
         .filter(F.length("token") > 0)
         .distinct()
@@ -95,9 +97,6 @@ _BM25_TERM_SCORE = (
     " * ((tf * {k1_plus_1})/(tf + {k1}*({one_minus_b} + {b}*(dl/avgdl))))"
 ).format(k1_plus_1=BM25_K1 + 1.0, k1=BM25_K1, one_minus_b=1.0 - BM25_B, b=BM25_B)
 
-_TOKEN_SPLIT = "[^a-z0-9]+"
-
-
 def bm25_rank(
     docs: DataFrame, terms: list[str], k: int = 10, ngrams: int = 1
 ) -> DataFrame:
@@ -138,22 +137,14 @@ def bm25_rank(
     # into every element_at of the n-gram lambdas (the CollapseProject
     # pitfall text_boilerplate_ngrams documents — measured ~10x slower
     # inlined for the bigram stream).
-    base = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), _TOKEN_SPLIT),
-            lambda x: F.length(x) > 0,
-        ).alias("_toks"),
-    )
+    base = docs.select("doc_id", tk.alnum_run_tokens(F.col("text")).alias("_toks"))
     arr = F.col("_toks")
     toks = base.select("doc_id", F.explode(arr).alias("token"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("dl"))
     if ngrams > 1:
-        from sales_agent_graphdb_spark.queries.curation import _word_ngrams
-
         gram_arr = arr
         for n in range(2, ngrams + 1):
-            gram_arr = F.concat(gram_arr, _word_ngrams(arr, n))
+            gram_arr = F.concat(gram_arr, tk.word_ngrams(arr, n))
         toks = base.select("doc_id", F.explode(gram_arr).alias("token"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -206,19 +197,13 @@ def duckdb_bm25_sql(terms: list[str], k: int = 10, ngrams: int = 1) -> str:
     )
     gram_legs = ["SELECT doc_id, unnest(arr) AS token FROM arrs"]
     for n in range(2, ngrams + 1):
-        joined = " || ' ' || ".join(f"arr[i+{j}]" for j in range(n))
         gram_legs.append(
-            f"SELECT doc_id, unnest(CASE WHEN len(arr) >= {n} THEN"
-            f" list_transform(generate_series(1, len(arr) - {n - 1}),"
-            f" i -> {joined}) ELSE [] END) AS token FROM arrs"
+            f"SELECT doc_id, unnest({tk.word_ngrams_sql('arr', n)}) AS token FROM arrs"
         )
     grams_sql = " UNION ALL ".join(gram_legs)
     return f"""
     WITH arrs AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '{_TOKEN_SPLIT}'),
-                         x -> length(x) > 0) AS arr
-      FROM documents),
+      SELECT doc_id, {tk.alnum_run_tokens_sql()} AS arr FROM documents),
     toks AS ({grams_sql}),
     dl AS (SELECT doc_id, CAST(COUNT(*) AS DOUBLE) AS dl
            FROM arrs, unnest(arr) AS u(tok) GROUP BY doc_id),

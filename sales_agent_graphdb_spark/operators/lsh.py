@@ -28,11 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark.functions.scalar import md5_int
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.session import materialize
-
-
-def normalized(c: Column) -> Column:
-    return F.regexp_replace(F.lower(c), r"[^a-z0-9 ]", "")
 
 
 def char_shingles(c: Column, k: int = 5) -> Column:
@@ -46,7 +43,7 @@ def char_shingles(c: Column, k: int = 5) -> Column:
     full-corpus scan (~300 regex evals per row). Bulk paths must use
     ``shingle_tokens`` below, which materializes the normalization
     once per row behind a Generate barrier."""
-    norm = normalized(c)
+    norm = tk.shingle_norm(c)
     n_pos = F.greatest(F.length(norm) - (k - 1), F.lit(1))
     return F.array_distinct(
         F.transform(F.sequence(F.lit(1), n_pos), lambda p: norm.substr(p, F.lit(k)))
@@ -78,7 +75,7 @@ def shingle_tokens(
     bulk shingling path (and already the shape MinHash aggregation
     wants)."""
     normed = _spread(df).select(
-        F.col(id_col).alias("id"), normalized(F.col(text_col)).alias("norm")
+        F.col(id_col).alias("id"), tk.shingle_norm(F.col(text_col)).alias("norm")
     )
     pos = normed.select(
         "id",
@@ -88,10 +85,6 @@ def shingle_tokens(
         ).alias("p"),
     )
     return pos.select("id", F.col("norm").substr(F.col("p"), F.lit(k)).alias("g"))
-
-
-def word_tokens(c: Column) -> Column:
-    return F.split(F.trim(normalized(c)), r"\s+")
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -411,7 +404,7 @@ def simhash(c: Column, n_bits: int = 64) -> Column:
     ? +1 : -1). The string form keeps everything inside built-in
     higher-order functions (bit shifts by a *column* amount don't
     exist as JVM expressions) and banding/hamming work on substrings."""
-    toks = word_tokens(c)
+    toks = tk.shingle_words(c)
     # each token hash as a 64-char two's-complement bit string
     tok_bits = F.transform(
         toks, lambda t: F.lpad(F.bin(F.xxhash64(t)), 64, "0")
@@ -471,7 +464,7 @@ def simhash_near_dup_pairs(
     n_bits = 60 if portable else 64
     chunk_len = n_bits // 4
     toks = _spread(df).select(
-        F.col(id_col).alias("id"), F.explode(word_tokens(F.col(text_col))).alias("t")
+        F.col(id_col).alias("id"), F.explode(tk.shingle_words(F.col(text_col))).alias("t")
     )
     h = _portable_hash(F.col("t"), F.lit(0)) if portable else F.xxhash64("t")
     sums = toks.select("id", h.alias("h")).groupBy("id").agg(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
 
@@ -30,56 +31,22 @@ def _shard10(doc_id: Column) -> Column:
 
 _SHARD10_SQL = f"{md5_int_sql('doc_id')} % 10"
 
-# Word 5-gram array of a document, reused by decontamination. The token
-# array MUST be its own projection (see text_boilerplate_ngrams: an
-# inline split re-evaluates per element_at, measured 22x slower).
-_NGRAM_N = 5
-
-
-def _word_ngrams(w: Column, n: int = _NGRAM_N) -> Column:
-    return F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(w, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-# THE alnum word tokenizer — one Spark expression + one SQL mirror.
-# dedup.py and text.py import these; a tokenization tweak must happen
-# here ONCE or the six call sites' oracle/plan pairs silently diverge.
-_TOKENS_SQL = (
-    "string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', ' ', 'g'))), '\\s+')"
-)
-
-
-def alnum_tokens(c: Column) -> Column:
-    """Spark twin of _TOKENS_SQL: lowercase, non-alnum → space, trim,
-    split on whitespace."""
-    return F.split(F.trim(F.lower(F.regexp_replace(c, "[^a-zA-Z0-9 ]", " "))), r"\s+")
+_NGRAM_N = 5  # decontamination's word n-gram order
 
 
 def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = catalog.load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", alnum_tokens(F.col("text")).alias("w"))
+    return d.select("doc_id", tk.alnum_tokens(F.col("text")).alias("w"))
 
 
 # The exact decontamination answer; the Bloom-prefiltered twin must
 # return it unchanged, so both queries register this one text.
 _DECONTAMINATE_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, {_SHARD10_SQL} AS shard, {_TOKENS_SQL} AS w
+      SELECT doc_id, {_SHARD10_SQL} AS shard, {tk.alnum_tokens_sql()} AS w
       FROM documents),
     grams AS (
-      SELECT doc_id, shard,
-             CASE WHEN len(w) >= {_NGRAM_N} THEN list_transform(
-               generate_series(1, len(w) - {_NGRAM_N - 1}),
-               i -> concat(w[i], ' ', w[i+1], ' ', w[i+2], ' ', w[i+3], ' ', w[i+4]))
-             ELSE [] END AS gs
-      FROM toks),
+      SELECT doc_id, shard, {tk.word_ngrams_sql("w", _NGRAM_N)} AS gs FROM toks),
     flat AS (SELECT DISTINCT doc_id, shard, unnest(gs) AS gram FROM grams),
     train AS (SELECT doc_id, gram FROM flat WHERE shard <> 0),
     eval_set AS (SELECT doc_id, gram FROM flat WHERE shard = 0)
@@ -109,7 +76,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Read by both join sides.
     flat = materialize(
         toks.select(
-            "doc_id", "shard", F.explode(_word_ngrams(F.col("w"))).alias("gram")
+            "doc_id", "shard", F.explode(tk.word_ngrams(F.col("w"), _NGRAM_N)).alias("gram")
         )
         .distinct(),
         eager=False,
@@ -158,7 +125,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_mix_weights",
     oracle=f"""
     WITH per_doc AS (
-      SELECT doc_id, source, len({_TOKENS_SQL}) AS n_tokens FROM documents),
+      SELECT doc_id, source, len({tk.alnum_tokens_sql()}) AS n_tokens FROM documents),
     per_source AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
@@ -177,7 +144,7 @@ def _source_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample_weighted_hash applies it; a drift between the two would make
     the applied sample disagree with the reported weights."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    per_doc = d.select("source", alnum_tokens(F.col("text")).alias("w"))
+    per_doc = d.select("source", tk.alnum_tokens(F.col("text")).alias("w"))
     per_source = per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.col("w"))).alias("n_tokens"),
@@ -225,7 +192,7 @@ _PACK_BUDGET = 2500  # tokens per source; sf0.01 sources hold ~1.1-1.6k
     oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
-             CAST(len(string_split_regex(trim(text), '\\s+')) AS INT) AS n_tokens
+             CAST(len({tk.ws_tokens_sql()}) AS INT) AS n_tokens
       FROM documents),
     c AS (
       SELECT doc_id, source, n_tokens,
@@ -251,7 +218,7 @@ def corpus_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select(
         "doc_id",
         "source",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("int").alias("n_tokens"),
+        F.size(tk.ws_tokens(F.col("text"))).cast("int").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("source")
@@ -282,7 +249,7 @@ _WSAMPLE_BASE = 0.3  # base acceptance rate scaled by each source's weight
     "sample_weighted_hash",
     oracle=f"""
     WITH per_doc AS (
-      SELECT doc_id, source, len({_TOKENS_SQL}) AS n_tokens FROM documents),
+      SELECT doc_id, source, len({tk.alnum_tokens_sql()}) AS n_tokens FROM documents),
     per_source AS (
       SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
       FROM per_doc GROUP BY source),
@@ -350,7 +317,7 @@ _BIN_RATES = (0.10, 0.25, 0.50, 1.0)  # keep-rate per quality bin 0..3
     oracle=f"""
     WITH scored AS (
       SELECT doc_id,
-             CAST(len(list_distinct({_TOKENS_SQL})) AS BIGINT) AS score
+             CAST(len(list_distinct({tk.alnum_tokens_sql()})) AS BIGINT) AS score
       FROM documents),
     edges AS (
       SELECT MIN(score) AS minv, MAX(score) - MIN(score) + 1 AS span FROM scored),
@@ -391,7 +358,7 @@ def sample_quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = catalog.load_table(spark, sf_dir, "documents")
     scored = d.select(
         "doc_id",
-        F.size(F.array_distinct(alnum_tokens(F.col("text")))).cast("bigint").alias("score"),
+        F.size(F.array_distinct(tk.alnum_tokens(F.col("text")))).cast("bigint").alias("score"),
     )
     edges = scored.agg(
         F.min("score").alias("minv"),
@@ -653,7 +620,7 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     toks = _tokenized(spark, sf_dir).withColumn("shard", _shard10(F.col("doc_id")))
     flat = materialize(
         toks.select(
-            "doc_id", "shard", F.explode(_word_ngrams(F.col("w"))).alias("gram")
+            "doc_id", "shard", F.explode(tk.word_ngrams(F.col("w"), _NGRAM_N)).alias("gram")
         )
         .distinct(),
         eager=False,
@@ -702,11 +669,10 @@ decontaminate_bloom_prefilter.__doc__ = decontaminate_bloom_prefilter.__doc__.fo
 
 @register(
     "curation_canonical_by_quality",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT doc_id, lang, n_chars,
-             array_to_string(
-               string_split_regex(lower(text), '[^a-z]+')[1:8], ' ') AS ck
+             array_to_string({tk.letter_tokens_sql()}[1:8], ' ') AS ck
       FROM documents),
     ranked AS (
       SELECT doc_id, lang,
@@ -744,9 +710,7 @@ def curation_canonical_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame
     no second scan, no join back."""
     d = catalog.load_table(spark, sf_dir, "documents").withColumn(
         "ck",
-        F.array_join(
-            F.slice(F.split(F.lower("text"), "[^a-z]+"), 1, 8), " "
-        ),
+        F.array_join(F.slice(tk.letter_tokens(F.col("text")), 1, 8), " "),
     )
     w = Window.partitionBy("ck")
     rank_w = w.orderBy(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.operators import ann, lsh, similarity as sim
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
@@ -52,7 +53,7 @@ def dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_exact_hash",
     oracle=f"""
     WITH corpus AS ({_CORPUS_SQL})
-    SELECT md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS content_hash,
+    SELECT {tk.content_fp_sql()} AS content_hash,
            MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
     FROM corpus
     GROUP BY content_hash
@@ -65,9 +66,8 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the scale-out form of the reference's seen-set at
     db_service.py:379-387). One shuffle on a 32-char key."""
     corpus = dup_corpus(spark, sf_dir)
-    norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")
     return (
-        corpus.groupBy(F.md5(norm).alias("content_hash"))
+        corpus.groupBy(tk.content_fp(F.col("text")).alias("content_hash"))
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_copies"))
         .filter(F.col("n_copies") > 1)
         .orderBy("keep_doc_id")
@@ -81,8 +81,8 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh AS (
       SELECT doc_id,
              list_distinct(list_transform(
-               generate_series(1, greatest(length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')) - 4, 1)),
-               p -> substr(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), p, 5))) AS grams
+               generate_series(1, greatest(length({tk.shingle_norm_sql()}) - 4, 1)),
+               p -> substr({tk.shingle_norm_sql()}, p, 5))) AS grams
       FROM corpus WHERE doc_id < 40 OR doc_id >= {DUP_OFFSET})
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -472,7 +472,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PORTABLE_MINHASH_CTES = f"""
     corpus AS ({_CORPUS_SQL}),
     norm AS (
-      SELECT doc_id AS id, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS t
+      SELECT doc_id AS id, {tk.shingle_norm_sql()} AS t
       FROM corpus),
     toks AS (
       SELECT DISTINCT id, substr(t, u.p, 5) AS g
@@ -537,8 +537,7 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS ({_CORPUS_SQL}),
     toks AS (
       SELECT doc_id AS id, u.t
-      FROM corpus, unnest(string_split_regex(
-        trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), '\\s+')) AS u(t)),
+      FROM corpus, unnest({tk.shingle_words_sql()}) AS u(t)),
     hashed AS (
       SELECT id, {md5_int_sql("t || '#' || 0")} AS h
       FROM toks),
@@ -698,23 +697,14 @@ _CONTAIN_MAX_DF = 50  # stop-shingle cap: shingles in more docs than
 # this are boilerplate; dropping them bounds the inverted-index join
 # fan-out (the same role as minhash_lsh_pairs' max_bucket_size).
 _CONTAIN_THRESHOLD = 0.9
-from sales_agent_graphdb_spark.queries.curation import (  # noqa: E402
-    _TOKENS_SQL as _CONTAIN_TOKENS_SQL,
-    alnum_tokens as _alnum_tokens,
-)
 
 
 @register(
     "dedup_containment",
     oracle=f"""
     WITH corpus AS ({_CORPUS_SQL}),
-    toks AS (SELECT doc_id, {_CONTAIN_TOKENS_SQL} AS t FROM corpus),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 3),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-                    || ' ' || t[i+4])) AS g
-      FROM toks WHERE len(t) >= 5),
+    toks AS (SELECT doc_id, {tk.alnum_tokens_sql()} AS t FROM corpus),
+    sh AS (SELECT DISTINCT doc_id, unnest({tk.word_ngrams_sql("t", 5)}) AS g FROM toks),
     big AS (SELECT g FROM sh GROUP BY g HAVING COUNT(*) > {_CONTAIN_MAX_DF}),
     shf AS (SELECT sh.doc_id, sh.g FROM sh ANTI JOIN big USING (g)),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
@@ -746,12 +736,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts come from a map-side-combinable groupBy on the pair key.
     Cost is O(Σ_gram df²) with df capped, never O(n²) over docs."""
     corpus = dup_corpus(spark, sf_dir)
-    toks = corpus.select("doc_id", _alnum_tokens(F.col("text")).alias("t"))
-    from sales_agent_graphdb_spark.queries.curation import _word_ngrams
-
+    toks = corpus.select("doc_id", tk.alnum_tokens(F.col("text")).alias("t"))
     # Eager: the `big` broadcast build and the main stages read it concurrently.
     sh = materialize(
-        toks.select("doc_id", F.explode(_word_ngrams(F.col("t"), 5)).alias("g"))
+        toks.select("doc_id", F.explode(tk.word_ngrams(F.col("t"), 5)).alias("g"))
         .distinct(),
         eager=True,
     )
@@ -804,7 +792,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS ({_CORPUS_SQL}),
     keyed AS (
       SELECT doc_id,
-             md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS cluster_key,
+             {tk.content_fp_sql()} AS cluster_key,
              CASE WHEN {md5_int_sql("doc_id")} % 10 < 2
                   THEN 'val' ELSE 'train' END AS naive_split
       FROM corpus),
@@ -840,10 +828,9 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The same keying generalizes to near-dup clusters by substituting
     dedup_cluster_canonical's component id for the md5 key."""
     corpus = dup_corpus(spark, sf_dir)
-    norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")
     keyed = corpus.select(
         "doc_id",
-        F.md5(norm).alias("cluster_key"),
+        tk.content_fp(F.col("text")).alias("cluster_key"),
         F.when(md5_int("doc_id") % 10 < 2, "val")
         .otherwise("train")
         .alias("naive_split"),
@@ -891,7 +878,7 @@ _PASSAGE_MIN_DOCS = 2  # recurs in >= 2 distinct docs => boilerplate
     "dedup_repeated_passages",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_CONTAIN_TOKENS_SQL} AS w FROM documents),
+      SELECT doc_id, {tk.alnum_tokens_sql()} AS w FROM documents),
     segs AS (
       SELECT doc_id,
              md5(array_to_string(list_slice(w, (i-1)*{_PASSAGE_W}+1, i*{_PASSAGE_W}), ' ')) AS seg_hash
@@ -925,7 +912,7 @@ def dedup_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. The doc x doc comparison never happens: cost is
     O(total segments), not O(docs^2)."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _alnum_tokens(F.col("text")).alias("w"))
+    toks = d.select("doc_id", tk.alnum_tokens(F.col("text")).alias("w"))
     w = F.col("w")
     seg_exprs = F.when(
         F.size(w) >= _PASSAGE_W,

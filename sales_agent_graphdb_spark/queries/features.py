@@ -20,6 +20,7 @@ from pyspark.sql.window import Window as W
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -1173,11 +1174,10 @@ def stats_bootstrap_ci_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_spearman_rho",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT CAST(length(text) AS BIGINT) AS q,
-             CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-               AS cents
+             CAST(len({tk.ws_tokens_sql()}) AS BIGINT) AS cents
       FROM documents),
     joint AS (
       SELECT q, cents, CAST(COUNT(*) AS BIGINT) AS m
@@ -1249,9 +1249,7 @@ def stats_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = catalog.load_table(spark, sf_dir, "documents")
     t = d.select(
         F.length("text").cast("bigint").alias("q"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("bigint")
-        .alias("cents"),
+        F.size(tk.ws_tokens(F.col("text"))).cast("bigint").alias("cents"),
     )
     joint = t.groupBy("q", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("m")

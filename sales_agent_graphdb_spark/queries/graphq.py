@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.operators import fulltext, graph
 from sales_agent_graphdb_spark.queries import sources_io
 from sales_agent_graphdb_spark.registry import register
@@ -35,10 +36,10 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "g6_fulltext_fuzzy",
-    oracle="""
+    oracle=f"""
     WITH idx AS (
       SELECT DISTINCT CAST(p_partkey AS VARCHAR) AS id, t.token
-      FROM part, unnest(string_split_regex(lower(p_name), '\\s+')) AS t(token)
+      FROM part, unnest({tk.lower_ws_tokens_sql("p_name")}) AS t(token)
       WHERE length(t.token) > 0),
     scored AS (
       SELECT id, MIN(levenshtein(token, 'widgit')) AS distance

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.operators import matcher
 from sales_agent_graphdb_spark.plans import graph_planner, router
 from sales_agent_graphdb_spark.queries.relational import PRODUCT_SCAN_ORACLE
@@ -82,10 +83,10 @@ def nl2plan_category_browse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "nl2plan_fuzzy_name",
-    oracle="""
+    oracle=f"""
     WITH idx AS (
       SELECT DISTINCT CAST(p_partkey AS VARCHAR) AS id, t.token
-      FROM part, unnest(string_split_regex(lower(p_name), '\\s+')) AS t(token)
+      FROM part, unnest({tk.lower_ws_tokens_sql("p_name")}) AS t(token)
       WHERE length(t.token) > 0),
     hits AS (
       SELECT id, MIN(levenshtein(token, 'widgit')) AS distance

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
-from sales_agent_graphdb_spark.queries.curation import alnum_tokens, _TOKENS_SQL
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
 
@@ -155,7 +155,7 @@ _TFIDF_K = 3
     "text_tfidf_keywords",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents),
+      SELECT doc_id, unnest({tk.alnum_tokens_sql()}) AS term FROM documents),
     tf AS (
       SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
       FROM toks WHERE term <> '' GROUP BY doc_id, term),
@@ -191,7 +191,7 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus scale with a bounded vocabulary."""
     d = catalog.load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(alnum_tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(tk.alnum_tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # Read by the df aggregation and the scored join.

@@ -14,9 +14,9 @@ from sales_agent_graphdb_spark.functions.scalar import (
     is_email,
     is_http_url,
     md5_int_sql,
-    normalize_alnum,
     surrogate_sku,
 )
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -83,11 +83,11 @@ def f4_f5_dates_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "f6_f8_f9_text_kit",
-    oracle="""
+    oracle=f"""
     SELECT p_partkey AS id,
            split_part(p_name, ' ', 1) AS first_word,
            split_part(p_name, ' ', 2) AS second_word,
-           regexp_replace(lower(p_name), '[^a-z0-9]', '', 'g') AS normalized,
+           {tk.normalize_alnum_sql("p_name")} AS normalized,
            regexp_extract('Product ''' || p_name || ''' ordered', 'Product ''([^'']+)''', 1) AS between_markers,
            regexp_replace(p_name, ' \\(\\d+\\)$', '') AS counts_stripped
     FROM part ORDER BY id
@@ -106,7 +106,7 @@ def f6_f8_f9_text_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_partkey").alias("id"),
             F.element_at(words, 1).alias("first_word"),
             F.element_at(words, 2).alias("second_word"),
-            normalize_alnum("p_name").alias("normalized"),
+            tk.normalize_alnum(F.col("p_name")).alias("normalized"),
             F.regexp_extract(marker, r"Product '([^']+)'", 1).alias("between_markers"),
             F.regexp_replace(F.col("p_name"), r" \(\d+\)$", "").alias("counts_stripped"),
         )
@@ -224,7 +224,7 @@ _UDTF_DOCS = 20  # bounded slice — same precedent as dedup_ngram_jaccard
     "udtf_ngram_expand",
     oracle=f"""
     WITH docs AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT {_UDTF_DOCS}),
-    toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM docs),
+    toks AS (SELECT doc_id, {tk.ws_tokens_sql()} AS t FROM docs),
     ix AS (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks)
     SELECT doc_id, CAST(i - 1 AS INT) AS pos, t[i] || ' ' || t[i + 1] AS ngram
     FROM ix ORDER BY doc_id, pos

@@ -10,7 +10,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions.scalar import hex_int, hex_int_sql, md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.operators.chunker import chunk_documents, duckdb_chunk_sql
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
@@ -25,20 +26,26 @@ LANG_STOPWORDS = {
     "zh": ["的", "是", "不", "了", "在", "人", "有"],
 }
 
+
+def _stopword_hits(toks: Column, lang: str = "en") -> Column:
+    return F.size(F.filter(toks, lambda w: w.isin(*LANG_STOPWORDS[lang])))
+
+
+def _stopword_hits_sql(toks: str = "toks", lang: str = "en") -> str:
+    words = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
+    return f"len(list_filter({toks}, w -> w IN ({words})))"
+
+
 CHUNK_SIZE, CHUNK_OVERLAP = 120, 20  # docs are 48-553 chars; reference
 # constants are 1000/200 (db_service.py:209-212) — same operator,
 # smaller size so the testdata actually splits.
 
 
-def _tokens(c: Column) -> Column:
-    return F.split(F.trim(c), r"\s+")
-
-
 @register(
     "text_token_count",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(len(string_split_regex(trim(text), '\\s+')) AS INT) AS n_tokens,
+           CAST(len({tk.ws_tokens_sql()}) AS INT) AS n_tokens,
            CAST(length(text) AS INT) AS n_chars_actual,
            CAST(length(replace(text, ' ', '')) AS INT) AS n_nonspace
     FROM documents ORDER BY doc_id
@@ -50,7 +57,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = catalog.load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.size(_tokens(F.col("text"))).alias("n_tokens"),
+        F.size(tk.ws_tokens(F.col("text"))).alias("n_tokens"),
         F.length("text").cast("int").alias("n_chars_actual"),
         F.length(F.regexp_replace("text", " ", "")).cast("int").alias("n_nonspace"),
     ).orderBy("doc_id")
@@ -83,20 +90,18 @@ def text_bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_quality_score",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             string_split_regex(trim(text), '\\s+') AS toks,
+             {tk.ws_tokens_sql()} AS toks,
              length(text) AS n
       FROM documents)
     SELECT doc_id,
            CAST(len(toks) AS INT) AS n_tokens,
            CAST(n AS DOUBLE) / len(toks) AS avg_token_len,
-           CAST(len(list_filter(toks, w -> w IN ('the','and','of','to','a','in','is'))) AS DOUBLE)
-             / len(toks) AS stopword_ratio,
+           CAST({_stopword_hits_sql()} AS DOUBLE) / len(toks) AS stopword_ratio,
            (len(toks) BETWEEN 5 AND 1000) AND
-             (CAST(len(list_filter(toks, w -> w IN ('the','and','of','to','a','in','is'))) AS DOUBLE)
-               / len(toks) > 0.01) AS passes_quality
+             (CAST({_stopword_hits_sql()} AS DOUBLE) / len(toks) > 0.01) AS passes_quality
     FROM t ORDER BY doc_id
     """,
 )
@@ -104,18 +109,16 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length / stopword-ratio heuristics (the
     C4/Gopher-style filter family) as pure column math."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    en = LANG_STOPWORDS["en"]
     # Materialize the token array in its OWN projection: four consumer
     # columns below would otherwise each re-run the trim+regex split
     # after CollapseProject (the text_boilerplate_ngrams trap).
     base = d.select(
         "doc_id",
         F.length("text").alias("_len"),
-        _tokens(F.col("text")).alias("toks"),
+        tk.ws_tokens(F.col("text")).alias("toks"),
     )
     n_tokens = F.size("toks")
-    stop_hits = F.size(F.filter(F.col("toks"), lambda w: w.isin(*en)))
-    stop_ratio = stop_hits.cast("double") / n_tokens
+    stop_ratio = _stopword_hits(F.col("toks")).cast("double") / n_tokens
     return base.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
@@ -125,26 +128,18 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _stopword_hits(toks: Column, words: list[str]) -> Column:
-    return F.size(F.filter(toks, lambda w: w.isin(*words)))
-
-
 def _lang_scores(toks: Column) -> dict[str, Column]:
-    return {lang: _stopword_hits(toks, words) for lang, words in LANG_STOPWORDS.items()}
+    return {lang: _stopword_hits(toks, lang) for lang in LANG_STOPWORDS}
 
 
 @register(
     "text_langid",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents),
+      SELECT doc_id, lang, {tk.ws_tokens_sql("lower(text)")} AS toks FROM documents),
     s AS (
       SELECT doc_id, lang,
-             len(list_filter(toks, w -> w IN ('the','and','of','to','a','in','is'))) AS s_en,
-             len(list_filter(toks, w -> w IN ('der','die','das','und','ist','ein','nicht'))) AS s_de,
-             len(list_filter(toks, w -> w IN ('el','la','de','que','y','en','un'))) AS s_es,
-             len(list_filter(toks, w -> w IN ('le','la','et','les','des','un','une'))) AS s_fr,
-             len(list_filter(toks, w -> w IN ('的','是','不','了','在','人','有'))) AS s_zh
+             {", ".join(f"{_stopword_hits_sql(lang=g)} AS s_{g}" for g in LANG_STOPWORDS)}
       FROM t)
     SELECT doc_id, lang AS labeled_lang,
            CASE WHEN s_en >= greatest(s_de, s_es, s_fr, s_zh) THEN 'en'
@@ -159,7 +154,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID via stopword-hit scoring with a deterministic
     priority tie-break (en > de > es > fr > zh)."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.lower(F.col("text")))
+    toks = tk.ws_tokens(F.lower(F.col("text")))
     s = _lang_scores(toks)
     predicted = (
         F.when(s["en"] >= F.greatest(s["de"], s["es"], s["fr"], s["zh"]), "en")
@@ -177,8 +172,8 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_fingerprint",
     oracle=f"""
     SELECT doc_id,
-           md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fingerprint,
-           {md5_int_sql("regexp_replace(lower(text), '[^a-z0-9]', '', 'g')")} % 1024 AS shard
+           {tk.content_fp_sql()} AS fingerprint,
+           {md5_int_sql(tk.normalize_alnum_sql())} % 1024 AS shard
     FROM documents ORDER BY doc_id
     """,
 )
@@ -187,12 +182,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     a derived shard bucket (the distribution key a 100 TB dedup would
     partition on)."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")
-    fp = F.md5(norm)
     return d.select(
         "doc_id",
-        fp.alias("fingerprint"),
-        (F.conv(F.substring(fp, 1, 15), 16, 10).cast("bigint") % 1024).alias("shard"),
+        tk.content_fp(F.col("text")).alias("fingerprint"),
+        (md5_int(tk.normalize_alnum(F.col("text"))) % 1024).alias("shard"),
     ).orderBy("doc_id")
 
 
@@ -215,18 +208,9 @@ def f11_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_boilerplate_ngrams",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             string_split_regex(trim(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', ' ', 'g'))), '\\s+') AS w
-      FROM documents),
-    grams AS (
-      SELECT doc_id,
-             CASE WHEN len(w) >= 3 THEN list_transform(
-               generate_series(1, len(w) - 2),
-               i -> concat(w[i], ' ', w[i+1], ' ', w[i+2]))
-             ELSE [] END AS gs
-      FROM toks),
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {tk.alnum_tokens_sql()} AS w FROM documents),
+    grams AS (SELECT doc_id, {tk.word_ngrams_sql("w", 3)} AS gs FROM toks),
     flat AS (SELECT DISTINCT doc_id, unnest(gs) AS gram FROM grams)
     SELECT gram, CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM flat GROUP BY gram HAVING COUNT(*) >= 3
@@ -249,20 +233,10 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # element_at inside the transform lambda (Catalyst's CollapseProject
     # keeps a non-cheap expr referenced more than once in its own
     # Project, but only if we alias it) — measured 22x slower inlined.
-    from sales_agent_graphdb_spark.queries.curation import alnum_tokens
-
-    d = d.select("doc_id", alnum_tokens(F.col("text")).alias("w"))
-    w = F.col("w")
-    grams = F.when(
-        F.size(w) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - 2),
-            lambda i: F.concat_ws(
-                " ", F.element_at(w, i), F.element_at(w, i + 1), F.element_at(w, i + 2)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    flat = d.select("doc_id", F.explode(grams).alias("gram")).distinct()
+    d = d.select("doc_id", tk.alnum_tokens(F.col("text")).alias("w"))
+    flat = d.select(
+        "doc_id", F.explode(tk.word_ngrams(F.col("w"), 3)).alias("gram")
+    ).distinct()
     return (
         flat.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -337,11 +311,10 @@ from sales_agent_graphdb_spark.queries.dedup import _CORPUS_SQL, dup_corpus  # n
     WITH corpus AS ({_CORPUS_SQL}),
     q AS (
       SELECT doc_id, text,
-             len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-             CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-                  w -> w IN ('the','and','of','to','a','in','is'))) AS DOUBLE)
-               / len(string_split_regex(trim(text), '\\s+')) AS stop_ratio,
-             md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
+             len({tk.ws_tokens_sql()}) AS n_tokens,
+             CAST({_stopword_hits_sql(tk.ws_tokens_sql())} AS DOUBLE)
+               / len({tk.ws_tokens_sql()}) AS stop_ratio,
+             {tk.content_fp_sql()} AS fp
       FROM corpus),
     kept AS (
       SELECT * FROM q
@@ -350,7 +323,7 @@ from sales_agent_graphdb_spark.queries.dedup import _CORPUS_SQL, dup_corpus  # n
       SELECT fp, MIN(doc_id) AS doc_id, MIN(n_tokens) AS n_tokens
       FROM kept GROUP BY fp)
     SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-           CASE WHEN CAST(('0x' || substr(fp, 1, 15)) AS BIGINT) % 100 < 90
+           CASE WHEN {hex_int_sql("fp")} % 100 < 90
                 THEN 'train' ELSE 'val' END AS split
     FROM deduped ORDER BY doc_id
     """,
@@ -371,23 +344,18 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Token array in its own projection (see text_quality_score).
     base = corpus.select(
         "doc_id",
-        _tokens(F.col("text")).alias("toks"),
-        F.md5(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")).alias("fp"),
+        tk.ws_tokens(F.col("text")).alias("toks"),
+        tk.content_fp(F.col("text")).alias("fp"),
     )
     n_tokens = F.size("toks")
-    stop_ratio = (
-        F.size(F.filter(F.col("toks"), lambda w: w.isin(*LANG_STOPWORDS["en"]))).cast(
-            "double"
-        )
-        / n_tokens
-    )
+    stop_ratio = _stopword_hits(F.col("toks")).cast("double") / n_tokens
     kept = base.select(
         "doc_id", n_tokens.alias("n_tokens"), stop_ratio.alias("stop_ratio"), "fp",
     ).filter(F.col("n_tokens").between(5, 1000) & (F.col("stop_ratio") > 0.01))
     deduped = kept.groupBy("fp").agg(
         F.min("doc_id").alias("doc_id"), F.min("n_tokens").alias("n_tokens")
     )
-    shard = F.conv(F.substring(F.col("fp"), 1, 15), 16, 10).cast("bigint") % 100
+    shard = hex_int(F.col("fp")) % 100
     return deduped.select(
         "doc_id",
         F.col("n_tokens").cast("int").alias("n_tokens"),
@@ -452,30 +420,20 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from pyspark.sql import Window  # noqa: E402
 
-from sales_agent_graphdb_spark.queries.curation import _word_ngrams  # noqa: E402
-
-_GOPHER_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents),
+_GOPHER_ORACLE = f"""
+WITH toks AS (SELECT doc_id, {tk.ws_tokens_sql()} AS t FROM documents),
 base AS (
   SELECT doc_id, CAST(len(t) AS INT) AS n_words,
          CAST(list_aggregate(list_transform(t, x -> length(x)), 'sum') AS BIGINT)
            AS word_chars
   FROM toks),
-bgx AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
-  FROM toks WHERE len(t) >= 2),
+bgx AS (SELECT doc_id, unnest({tk.word_ngrams_sql("t", 2)}) AS g FROM toks),
 bgc AS (SELECT doc_id, g, COUNT(*) AS c FROM bgx GROUP BY doc_id, g),
 topb AS (
   SELECT doc_id, g, c FROM bgc
   QUALIFY row_number() OVER (
     PARTITION BY doc_id ORDER BY c DESC, length(g) DESC, g) = 1),
-trix AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(t) - 1),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g
-  FROM toks WHERE len(t) >= 3),
+trix AS (SELECT doc_id, unnest({tk.word_ngrams_sql("t", 3)}) AS g FROM toks),
 tris AS (
   SELECT doc_id, COUNT(*) AS n_tri, COUNT(DISTINCT g) AS n_tri_d
   FROM trix GROUP BY doc_id),
@@ -513,7 +471,7 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB."""
     d = catalog.load_table(spark, sf_dir, "documents")
     # Eager: the word-stats, bigram and trigram leaf stages read it concurrently.
-    toks = materialize(d.select("doc_id", _tokens(F.col("text")).alias("t")), eager=True)
+    toks = materialize(d.select("doc_id", tk.ws_tokens(F.col("text")).alias("t")), eager=True)
     base = toks.select(
         "doc_id",
         F.size("t").cast("int").alias("n_words"),
@@ -529,8 +487,8 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(
             F.concat(
-                F.transform(_word_ngrams(F.col("t"), 2), lambda g: F.struct(F.lit(2).alias("n"), g.alias("g"))),
-                F.transform(_word_ngrams(F.col("t"), 3), lambda g: F.struct(F.lit(3).alias("n"), g.alias("g"))),
+                F.transform(tk.word_ngrams(F.col("t"), 2), lambda g: F.struct(F.lit(2).alias("n"), g.alias("g"))),
+                F.transform(tk.word_ngrams(F.col("t"), 3), lambda g: F.struct(F.lit(3).alias("n"), g.alias("g"))),
             )
         ).alias("p"),
     ).select("doc_id", "p.n", "p.g")
@@ -588,17 +546,11 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-from sales_agent_graphdb_spark.queries.curation import (  # noqa: E402
-    _TOKENS_SQL,
-    alnum_tokens,
-)
-
-
 @register(
     "text_vocab_build",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents),
+      SELECT doc_id, unnest({tk.alnum_tokens_sql()}) AS term FROM documents),
     stats AS (
       SELECT term, CAST(COUNT(*) AS BIGINT) AS tf_total,
              CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df_docs
@@ -621,12 +573,12 @@ def text_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's two-phase distinct agg); only the VOCAB-sized survivor
     frame enters the global ranking window — bounded by vocabulary
     size (~1e5-1e6 rows at any corpus scale), never by corpus size, so
-    the single-partition window is safe at 100 TB. Uses THE shared
-    alnum tokenizer (curation.py) so vocab ids line up with every
+    the single-partition window is safe at 100 TB. Uses the kit's
+    alnum tokenizer (functions/text.py) so vocab ids line up with every
     other text operator's tokens."""
     d = catalog.load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(alnum_tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(tk.alnum_tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     stats = toks.groupBy("term").agg(
         F.count(F.lit(1)).alias("tf_total"),
@@ -641,8 +593,6 @@ def text_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "df_docs",
     ).orderBy("token_id")
 
-
-from sales_agent_graphdb_spark.queries.curation import _TOKENS_SQL as _CORPUS_TOKENS_SQL  # noqa: E402
 
 _LM_FLAG = -3.5  # below = unusually improbable under the corpus LM
 
@@ -660,7 +610,7 @@ _LM_ORACLE = """
            CAST(CAST(SUM(lp) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_logp,
            (CAST(CAST(SUM(lp) AS DOUBLE) / COUNT(*) AS DOUBLE) < {flag}) AS flagged
     FROM scored GROUP BY doc_id ORDER BY doc_id
-""".format(toks=_CORPUS_TOKENS_SQL, flag=_LM_FLAG)
+""".format(toks=tk.alnum_tokens_sql(), flag=_LM_FLAG)
 
 
 @register(
@@ -698,7 +648,7 @@ def text_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BM25 family)."""
     docs = catalog.load_table(spark, sf_dir, "documents")
     # Eager: the c12, c1, scoring-join and |V| leaf stages read these concurrently.
-    toks = materialize(docs.select("doc_id", alnum_tokens(F.col("text")).alias("t")), eager=True)
+    toks = materialize(docs.select("doc_id", tk.alnum_tokens(F.col("text")).alias("t")), eager=True)
     n = F.size("t")
     big = materialize(
         toks.select(
@@ -762,7 +712,7 @@ _ENTROPY_FLAG = 2.0  # nats; measured (2026-08): sf0.01 min 1.64 / p05
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             {_CORPUS_TOKENS_SQL} AS w
+             {tk.alnum_tokens_sql()} AS w
       FROM documents),
     words AS (
       SELECT doc_id, lang, unnest(w) AS word FROM toks),
@@ -803,11 +753,9 @@ def text_entropy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL before aggregation (order-independent); the per-doc closed
     form and the final mean are identical double expression trees on
     both engines, rounded to 6 dp."""
-    from sales_agent_graphdb_spark.queries.curation import alnum_tokens
-
     d = catalog.load_table(spark, sf_dir, "documents")
     words = d.select(
-        "doc_id", "lang", F.explode(alnum_tokens(F.col("text"))).alias("word")
+        "doc_id", "lang", F.explode(tk.alnum_tokens(F.col("text"))).alias("word")
     ).filter(F.col("word") != "")
     wc = words.groupBy("doc_id", "lang", "word").agg(
         F.count(F.lit(1)).alias("c")
@@ -862,16 +810,14 @@ _CLF_W_LEN = 0.004  # token count
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
-             string_split_regex(trim(text), '\\s+') AS toks,
+             {tk.ws_tokens_sql()} AS toks,
              length(text) AS n
       FROM documents),
     f AS (
       SELECT doc_id, lang,
              CAST(len(toks) AS DOUBLE) AS n_tokens,
              CAST(n AS DOUBLE) / len(toks) AS atl,
-             CAST(len(list_filter(toks,
-                    w -> w IN ('the','and','of','to','a','in','is')))
-                  AS DOUBLE) / len(toks) AS stop_ratio
+             CAST({_stopword_hits_sql()} AS DOUBLE) / len(toks) AS stop_ratio
       FROM t),
     s AS (
       SELECT doc_id, lang,
@@ -908,13 +854,8 @@ def text_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFram
     round trip in the hot path. The measured keep rate on this corpus
     is ~60-70% (non-vacuous both ways at every SF, pinned in tests)."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    stop = F.size(
-        F.filter(
-            toks,
-            lambda w: w.isin("the", "and", "of", "to", "a", "in", "is"),
-        )
-    )
+    toks = tk.ws_tokens(F.col("text"))
+    stop = _stopword_hits(toks)
     f = d.select(
         "lang",
         F.size(toks).cast("double").alias("n_tokens"),
@@ -952,7 +893,7 @@ _FH_DIM = 8  # hashed feature buckets (fixed-width output)
     WITH tok AS (
       SELECT doc_id, t FROM (
         SELECT doc_id,
-               unnest(string_split_regex(lower(text), '[^a-z]+')) AS t
+               unnest({tk.letter_tokens_sql()}) AS t
         FROM documents WHERE doc_id < 20)
       WHERE t <> ''),
     b AS (
@@ -987,7 +928,7 @@ def feature_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = catalog.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     tok = d.select(
         "doc_id",
-        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("t"),
+        F.explode(tk.letter_tokens(F.col("text"))).alias("t"),
     ).filter(F.col("t") != "")
     bkt = md5_int("t") % _FH_DIM
     return (
@@ -1005,10 +946,10 @@ def feature_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_ttr_lexical_diversity",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             string_split_regex(trim(text), '\\s+') AS toks
+             {tk.ws_tokens_sql()} AS toks
       FROM documents),
     d AS (
       SELECT doc_id,
@@ -1049,7 +990,7 @@ def text_ttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     never as a corpus-wide distinct. The decile histogram is the
     fixed-width output regardless of corpus size."""
     d = catalog.load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tk.ws_tokens(F.col("text"))
     base = d.select(
         F.size(toks).cast("bigint").alias("n_tokens"),
         F.size(

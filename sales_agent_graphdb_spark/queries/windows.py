@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -195,10 +196,10 @@ def w6_rank_distributions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONE oracle for both global-running-sum decompositions (w7 two-pass,
 # w7b single-exchange): the plain ordered-window form. A drift between
 # the two would let the variants silently certify different results.
-_W7_ORACLE = """
+_W7_ORACLE = f"""
     WITH t AS (
       SELECT doc_id,
-             CAST(len(string_split_regex(trim(text), '\\s+')) AS INT) AS n_tokens
+             CAST(len({tk.ws_tokens_sql()}) AS INT) AS n_tokens
       FROM documents)
     SELECT doc_id, n_tokens,
            CAST(SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
@@ -222,7 +223,7 @@ def w7_global_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = catalog.load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("int").alias("n_tokens"),
+        F.size(tk.ws_tokens(F.col("text"))).cast("int").alias("n_tokens"),
     )
     out = global_prefix_sum(t, "doc_id", "n_tokens", out_col="cum_tokens")
     return out.select(
@@ -247,7 +248,7 @@ def w7b_running_sum_single_exchange(spark: SparkSession, sf_dir: str) -> DataFra
     d = catalog.load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("int").alias("n_tokens"),
+        F.size(tk.ws_tokens(F.col("text"))).cast("int").alias("n_tokens"),
     )
     out = global_prefix_sum_single_exchange(
         t, "doc_id", "n_tokens", out_col="cum_tokens"

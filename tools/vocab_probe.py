@@ -142,19 +142,16 @@ def containment_candidates(spark, sf_dir: str) -> int:
     """Candidate pairs of dedup_containment's inverted-index self-join
     (post stop-shingle cap, pre containment threshold) — the frame
     whose growth the SCALE.md super-linear row is about."""
-    from sales_agent_graphdb_spark.queries.curation import (
-        _word_ngrams,
-        alnum_tokens,
-    )
+    from sales_agent_graphdb_spark.functions import text as tk
     from sales_agent_graphdb_spark.queries.dedup import (
         _CONTAIN_MAX_DF,
         dup_corpus,
     )
 
     corpus = dup_corpus(spark, sf_dir)
-    toks = corpus.select("doc_id", alnum_tokens(F.col("text")).alias("t"))
+    toks = corpus.select("doc_id", tk.alnum_tokens(F.col("text")).alias("t"))
     sh = (
-        toks.select("doc_id", F.explode(_word_ngrams(F.col("t"), 5)).alias("g"))
+        toks.select("doc_id", F.explode(tk.word_ngrams(F.col("t"), 5)).alias("g"))
         .distinct()
         .localCheckpoint(eager=False)
     )
