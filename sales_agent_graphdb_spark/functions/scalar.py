@@ -3,18 +3,40 @@
 All helpers return Column expressions built from pyspark.sql.functions
 so they run JVM-side inside whole-stage codegen — no Python UDFs in the
 hot path. Each cites the reference behavior it re-expresses.
+
+Exact-number grids (SURVEY hard case (c): DECIMAL(10,2) fidelity vs
+DuckDB double math — pin types in both engines). Three decimal grids
+carry every order-insensitive float aggregate, each spelled only here
+as a Spark cast, its DuckDB text and (for the streaming state
+functions) a Python quantizer:
+
+- money ``decimal(18,2)``: ``money``/``money_sql``, and the integer
+  cents ``money_cents``/``money_cents_sql``;
+- rate ``decimal(4,2)``: ``rate``/``rate_sql``;
+- 6-dp value ``decimal(20,6)``: ``dec6``/``dec6_sql``/``dec6_quantizer``.
+
+Rules (the flagship_revenue_by_brand conventions): money doubles cast
+to the money grid and rate doubles to the rate grid BEFORE arithmetic;
+products and sums stay exact DECIMAL and cast to double only at the
+end, so the result is independent of partitioning and summation order
+and Spark and the DuckDB oracle agree bit for bit; averages are one
+double division of exact aggregates, the same operation order on both
+engines.
+
+Invariant: a grid cast is portable only for inputs already on the
+grid. Spark and Python round the shortest decimal repr HALF_UP, DuckDB
+rounds the binary double: ``CAST(123456.1234565 AS DECIMAL(20,6))`` is
+``123456.123457`` in Spark and Python but ``123456.123456`` in DuckDB.
+The test tables hold 2-dp money, 2-dp rates and 2-dp ``events.value``
+(no value at sf0.01 or sf0.1 has more decimals), so every cast here is
+exact on both engines; a source with finer values breaks the oracles,
+not the Spark side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Exact-money type used for deterministic aggregation: double inputs are
-# 2-decimal money in the testdata; summing exact decimals makes the
-# result independent of partitioning/summation order, so Spark and the
-# DuckDB oracle agree bit-for-bit after the final cast back to double.
-MONEY = "decimal(18,2)"
 
 
 def md5_int(c: Column | str, salt: str = "", hex_digits: int = 15) -> Column:
@@ -56,14 +78,75 @@ def hex_int_sql(expr: str, hex_digits: int = 15) -> str:
 H52_SPAN = 4503599627370496.0
 
 
-def money(c: Column | str) -> Column:
+MONEY = "decimal(18,2)"
+RATE = "decimal(4,2)"
+DEC6 = "decimal(20,6)"
+
+
+def _cast(c: Column | str, grid: str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
-    return c.cast(MONEY)
+    return c.cast(grid)
 
 
-def money_sum(c: Column, alias: str) -> Column:
-    """SUM over exact decimals, surfaced as double (order-insensitive)."""
-    return F.sum(c).cast("double").alias(alias)
+def _cast_sql(expr: str, grid: str) -> str:
+    return f"CAST({expr} AS {grid.upper()})"
+
+
+def money(c: Column | str) -> Column:
+    """``c`` on the money grid."""
+    return _cast(c, MONEY)
+
+
+def money_sql(expr: str) -> str:
+    """DuckDB twin of ``money``."""
+    return _cast_sql(expr, MONEY)
+
+
+def money_cents(c: Column | str) -> Column:
+    """``c`` as integer cents: money grid × 100 as bigint."""
+    return (money(c) * 100).cast("bigint")
+
+
+def money_cents_sql(expr: str) -> str:
+    """DuckDB twin of ``money_cents``."""
+    return f"CAST({money_sql(expr)} * 100 AS BIGINT)"
+
+
+def rate(c: Column | str) -> Column:
+    """``c`` on the rate grid."""
+    return _cast(c, RATE)
+
+
+def rate_sql(expr: str) -> str:
+    """DuckDB twin of ``rate``."""
+    return _cast_sql(expr, RATE)
+
+
+def dec6(c: Column | str) -> Column:
+    """``c`` on the 6-dp value grid."""
+    return _cast(c, DEC6)
+
+
+def dec6_sql(expr: str) -> str:
+    """DuckDB twin of ``dec6``."""
+    return _cast_sql(expr, DEC6)
+
+
+def dec6_quantizer():
+    """The Python twin of ``dec6`` for state functions that run on
+    Python workers: returns ``q(value) -> Decimal``, 6 dp HALF_UP on
+    the shortest repr — Spark's double→decimal(20,6) cast
+    (BigDecimal.valueOf → setScale(6, HALF_UP)). The quantizer is a
+    closure, so cloudpickle ships it by value and a worker needs no
+    package import path."""
+    import decimal
+
+    q6 = decimal.Decimal("0.000001")
+
+    def q(value) -> decimal.Decimal:
+        return decimal.Decimal(str(value)).quantize(q6, rounding=decimal.ROUND_HALF_UP)
+
+    return q
 
 
 def extract_price(c: Column | str) -> Column:

@@ -10,7 +10,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int, md5_int_sql, money
+from sales_agent_graphdb_spark.functions.scalar import (
+    H52_SPAN,
+    dec6,
+    dec6_sql,
+    md5_int,
+    md5_int_sql,
+    money,
+    money_sql,
+)
 from sales_agent_graphdb_spark.operators import graph
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.streaming.pipelines import KMV_SALT
@@ -18,9 +26,9 @@ from sales_agent_graphdb_spark.streaming.pipelines import KMV_SALT
 
 @register(
     "a1_order_totals",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey AS order_id,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_amount,
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE) AS total_amount,
            COUNT(*) AS n_items
     FROM lineitem GROUP BY order_id ORDER BY order_id
     """,
@@ -134,10 +142,10 @@ def a6_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_rollup",
-    oracle="""
+    oracle=f"""
     SELECT COALESCE(p_brand, 'ALL') AS brand,
            COALESCE(l_returnflag, 'ALL') AS returnflag,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE) AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY ROLLUP(p_brand, l_returnflag)
     ORDER BY brand, returnflag
@@ -163,11 +171,11 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_cube",
-    oracle="""
+    oracle=f"""
     SELECT COALESCE(o_orderstatus, 'ALL') AS status,
            COALESCE(o_orderpriority, 'ALL') AS priority,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total
     FROM orders
     GROUP BY CUBE(o_orderstatus, o_orderpriority)
     ORDER BY status, priority
@@ -273,11 +281,11 @@ def agg_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "feature_zscore_stats",
-    oracle="""
+    oracle=f"""
     WITH moments AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS s1,
+             CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS s1,
              CAST(SUM(CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6))) AS DOUBLE) AS s2
       FROM events GROUP BY event_type)
     SELECT event_type, n,
@@ -302,7 +310,7 @@ def feature_zscore_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d6 = F.col("value").cast("decimal(19,6)")
     m = e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("s1"),
+        F.sum(dec6("value")).cast("double").alias("s1"),
         F.sum(d6 * d6).cast("double").alias("s2"),
     )
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
@@ -340,11 +348,11 @@ def agg_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_grouping_sets",
-    oracle="""
+    oracle=f"""
     SELECT COALESCE(o_orderstatus, 'ALL') AS status,
            COALESCE(o_orderpriority, 'ALL') AS priority,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
     ORDER BY status, priority
@@ -476,9 +484,9 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_exchange_reuse_mom",
-    oracle="""
+    oracle=f"""
     WITH m AS (SELECT date_trunc('month', o_orderdate) AS m,
-                      SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
+                      SUM({money_sql("o_totalprice")}) AS rev
                FROM orders GROUP BY 1)
     SELECT strftime(cur.m, '%Y-%m') AS month,
            CAST(cur.rev AS DOUBLE) AS revenue,
@@ -506,7 +514,7 @@ def agg_exchange_reuse_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     o = catalog.load_table(spark, sf_dir, "orders")
     m = o.groupBy(F.date_trunc("month", "o_orderdate").alias("m")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
+        F.sum(money("o_totalprice")).alias("rev")
     )
     cur, prev = m.alias("cur"), m.alias("prev")
     j = cur.join(
@@ -550,7 +558,7 @@ _KMV_VIEWS = 14  # heavy viewer: at least this many view events
     WITH per AS (
       SELECT user_id,
              SUM(CASE WHEN event_type = 'purchase'
-                      THEN CAST(value AS DECIMAL(20,6)) ELSE 0 END) AS pval,
+                      THEN {dec6_sql("value")} ELSE 0 END) AS pval,
              COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS vn
       FROM events GROUP BY user_id),
     members AS (
@@ -632,8 +640,8 @@ def agg_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.col("value").cast("decimal(20,6)"),
-            ).otherwise(F.lit(0).cast("decimal(20,6)"))
+                dec6("value"),
+            ).otherwise(dec6(F.lit(0)))
         ).alias("pval"),
         F.count(F.when(F.col("event_type") == "view", 1)).alias("vn"),
     )

@@ -98,6 +98,25 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, np.ndarray]:
     )
 
 
+def _ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, np.ndarray, np.ndarray]:
+    """The IVF-PQ index (16 k-means cells, 8 PQ code columns next to
+    the vector) written by ``ann.write_ivfpq_index`` once per
+    embeddings stamp; a warm call reads only its sidecar. Returns
+    (path, centroids, codebooks)."""
+    path = _index_path(sf_dir, "ivfpq")
+
+    def build():
+        # Train AND index the full corpus (the deterministic first-k
+        # init is defined on it); the query vector's own row is
+        # excluded at probe time, not at ingest.
+        emb = catalog.load_table(spark, sf_dir, "embeddings")
+        c, b = ann.write_ivfpq_index(emb, path)
+        return {"cents": c.tolist(), "books": b.tolist()}
+
+    side = _ensure_sidecar_index(path, sf_dir, build)
+    return path, np.asarray(side["cents"]), np.asarray(side["books"])
+
+
 def _require_dim64(dim: int, query: str) -> None:
     """The portable LSH oracles inline 64-dim hyperplane literals at
     registration; a silently different runtime dim would use a
@@ -562,19 +581,16 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes (32× fewer bytes) via per-subspace Lloyd codebooks
     (operators/ann.pq_codebooks — trained on a bounded deterministic
     sample, first-2048-by-id, driver-side numpy Lloyd; bit-stable
-    across rebuilds so this row's verdict can never flip, and the
-    full corpus pays only the one encode pass — the r08 query-time
-    full-corpus training this replaces cost 12.9 s of plan codegen
-    per run), queries scored by Asymmetric Distance Computation: a
-    driver-computed 8×16 lookup table rides the plan as literals and
-    the candidate scan reads ONLY code columns — at 100 TB the ANN
-    tier scans 32× fewer bytes and touches full vectors only for the
-    C={cand} rerank survivors; the query-time corpus encode runs
-    Arrow-batched (operators/ann.pq_encode — an unrolled 1024-node JVM
-    expression for it cost seconds of Janino compile + py4j plan
-    construction per call, measured r09). Output contract (the filtered-ANN
-    pattern): the oracle-checked exact top-5 truth + a recall verdict
-    from the PQ path — measured 3-4/5 at every SF on these
+    across rebuilds so this row's verdict can never flip), queries
+    scored by Asymmetric Distance Computation: a driver-computed 8×16
+    lookup table rides the plan as literals over the stored code
+    columns, and the C={cand} best candidates go to the exact rerank.
+    The codebooks and codes are those of the stamped IVF-PQ index
+    (``_ivfpq_index``, shared with ann_ivfpq_pruned_topk), scored with
+    no cell filter and reranked from the ``embedding`` column read in
+    the same scan: a warm call trains and encodes nothing. Output
+    contract (the filtered-ANN pattern): the oracle-checked exact
+    top-5 truth + a recall verdict from the PQ path — measured 3-4/5 at every SF on these
     near-random embeddings (floor {floor}, one notch of slack;
     contrast vec_random_projection_topk's 0-1/5 at the same
     compression: learned codebooks beat data-blind projections on
@@ -582,18 +598,15 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     that tradeoff)."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    books = ann.pq_codebooks(emb, dim=64)
-    base = emb.filter(F.col("vec_id") != 0)
-    enc = ann.pq_encode(base, books)
+    path, _, books = _ivfpq_index(spark, sf_dir)
+    idx = catalog.read_parquet(spark, path).filter(F.col("vec_id") != 0)
     cands = (
-        enc.select(
-            "vec_id", ann.pq_adc_score(books, qv).alias("adc"), "embedding"
-        )
+        idx.select("vec_id", ann.pq_adc_score(books, qv).alias("adc"), "embedding")
         .orderBy(F.col("adc").desc(), "vec_id")
         .limit(_PQ_CAND)
     )
     return _recall_verdict(
-        knn(base, qv),
+        knn(emb, qv, exclude_ids=[0]),
         knn(cands, qv),
         _PQ_RECALL_FLOOR,
         n_candidates=_PQ_CAND,
@@ -633,16 +646,7 @@ def ann_ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as ann_pq_adc_topk; measured combined recall 3-4/5 at
     every SF (floor {floor})."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    path = _index_path(sf_dir, "ivfpq")
-    def _build_ivfpq():
-        # Train AND index the full corpus (the deterministic first-k
-        # init is defined on it); the query vector's own row is
-        # excluded at probe time, not at ingest.
-        c, b = ann.write_ivfpq_index(emb, path)
-        return {"cents": c.tolist(), "books": b.tolist()}
-
-    side = _ensure_sidecar_index(path, sf_dir, _build_ivfpq)
-    cents, books = np.asarray(side["cents"]), np.asarray(side["books"])
+    path, cents, books = _ivfpq_index(spark, sf_dir)
     qv = _query_vec(spark, sf_dir)
     probe = ann._probe_cells(cents, qv, _IVFPQ_PROBE)
     idx = catalog.read_parquet(spark, path)

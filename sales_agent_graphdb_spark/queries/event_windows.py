@@ -15,22 +15,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import dec6, dec6_sql
 from sales_agent_graphdb_spark.registry import register
-
-VAL = "decimal(20,6)"
 
 # Batch oracles; the streaming twins in streaming_exec.py register the
 # same constants, so batch/stream parity is one SQL text per window kind.
-TUMBLING_ORACLE = """
+TUMBLING_ORACLE = f"""
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
            event_type,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM events
     GROUP BY window_start, event_type
     ORDER BY window_start, event_type
     """
-SLIDING_ORACLE = """
+SLIDING_ORACLE = f"""
     WITH g AS (SELECT unnest([0, 1]) AS k),
     w AS (
       SELECT e.event_type, e.value,
@@ -39,11 +38,11 @@ SLIDING_ORACLE = """
       WHERE floor(epoch(e.ts))::BIGINT // 1800 - g.k >= 0)
     SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
            event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM w
     GROUP BY 1, 2 ORDER BY 1, 2
     """
-SESSION_ORACLE = """
+SESSION_ORACLE = f"""
     WITH ordered AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
@@ -58,7 +57,7 @@ SESSION_ORACLE = """
     SELECT user_id,
            strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM islands
     GROUP BY user_id, session_no
     ORDER BY user_id, session_start
@@ -74,7 +73,7 @@ def st_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -96,7 +95,7 @@ def st_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -119,7 +118,7 @@ def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .select(
             "user_id",
@@ -276,10 +275,10 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rollup_hierarchy",
-    oracle="""
+    oracle=f"""
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM events
     GROUP BY day, event_type
     ORDER BY day, event_type
@@ -301,7 +300,7 @@ def rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(20,6)")).alias("total_dec"),
+        F.sum(dec6("value")).alias("total_dec"),
     )
     daily = hourly.groupBy(
         F.date_trunc("day", F.col("hour")).alias("day_t"), "event_type"

@@ -19,14 +19,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions.scalar import (
+    dec6,
+    dec6_sql,
+    md5_int,
+    md5_int_sql,
+    money,
+    money_cents,
+    money_cents_sql,
+    money_sql,
+)
 from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 
 
 @register(
     "feature_winsorize",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT l_returnflag, l_extendedprice AS v,
              row_number() OVER (PARTITION BY l_returnflag
@@ -52,7 +61,7 @@ from sales_agent_graphdb_spark.registry import register
            MAX(lo_cut) AS lo_cut, MAX(hi_cut) AS hi_cut,
            CAST(SUM(is_lo) AS BIGINT) AS n_clipped_low,
            CAST(SUM(is_hi) AS BIGINT) AS n_clipped_high,
-           ROUND(CAST(SUM(CAST(cv AS DECIMAL(20,6))) AS DOUBLE) / MAX(n_rows), 6)
+           ROUND(CAST(SUM({dec6_sql("cv")}) AS DOUBLE) / MAX(n_rows), 6)
              AS mean_winsorized
     FROM clipped GROUP BY l_returnflag ORDER BY l_returnflag
     """,
@@ -103,9 +112,7 @@ def feature_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("l_extendedprice") > F.col("hi_cut")).cast("long")).alias(
                 "n_clipped_high"
             ),
-            F.round(
-                F.sum(cv.cast("decimal(20,6)")).cast("double") / F.max("n_rows"), 6
-            ).alias("mean_winsorized"),
+            F.round(F.sum(dec6(cv)).cast("double") / F.max("n_rows"), 6).alias("mean_winsorized"),
         )
         .orderBy("l_returnflag")
     )
@@ -356,10 +363,10 @@ def stats_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "feature_target_encoding_loo",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT l.l_orderkey, l.l_linenumber, p.p_brand AS brand,
-             CAST(l.l_extendedprice AS DECIMAL(18,2)) AS y
+             {money_sql("l.l_extendedprice")} AS y
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
     stats AS (
       SELECT brand, CAST(COUNT(*) AS BIGINT) AS n,
@@ -396,7 +403,7 @@ def feature_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.col("p_brand").alias("brand"),
-        F.col("l_extendedprice").cast("decimal(18,2)").alias("y"),
+        money("l_extendedprice").alias("y"),
     )
     stats = base.groupBy("brand").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("s")
@@ -419,9 +426,9 @@ def feature_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_roc_auc",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT CAST(value AS DECIMAL(18,2)) AS sc,
+      SELECT {money_sql("value")} AS sc,
              CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                   AS BIGINT) AS np
@@ -466,7 +473,7 @@ def stats_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the standard histogram-AUC: no global sort of raw rows, no
     per-row ranks."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    s = ev.groupBy(F.col("value").cast("decimal(18,2)").alias("sc")).agg(
+    s = ev.groupBy(money("value").alias("sc")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
@@ -504,7 +511,7 @@ def stats_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
                   THEN 'treat' ELSE 'control' END AS arm,
              CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00'
                   THEN 'pre' ELSE 'post' END AS period,
-             CAST(value AS DECIMAL(18,2)) AS v
+             {money_sql("value")} AS v
       FROM events),
     m AS (
       SELECT arm, period,
@@ -553,7 +560,7 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             arm.alias("arm"),
             period.alias("period"),
-            F.col("value").cast("decimal(18,2)").alias("v"),
+            money("value").alias("v"),
         )
         .groupBy("arm", "period")
         .agg(
@@ -580,9 +587,9 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_calibration_bins",
-    oracle="""
+    oracle=f"""
     WITH b AS (
-      SELECT CAST(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) // 5600
+      SELECT CAST({money_cents_sql("value")} // 5600
                   AS INT) AS bin,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
       FROM events)
@@ -613,9 +620,7 @@ def stats_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-quality artifact there is, and the one that catches
     overconfident classifiers AUC cannot."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    bin_col = F.expr(
-        "cast(cast(cast(value as decimal(18,2)) * 100 as bigint) div 5600 as int)"
-    )
+    bin_col = F.expr(f"cast({money_cents_sql('value')} div 5600 as int)")
     y = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
     return (
         ev.select(bin_col.alias("bin"), y.alias("y"))
@@ -638,7 +643,7 @@ _KS_ARM = f"{md5_int_sql('user_id', 'ks10')} % 2"
     "stats_ks_two_sample",
     oracle=f"""
     WITH t AS (
-      SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+      SELECT {money_cents_sql("value")} AS cents,
              CASE WHEN {_KS_ARM} = 0 THEN 1 ELSE 0 END AS a
       FROM events),
     g AS (
@@ -684,9 +689,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm_treat = md5_int("user_id", "ks10") % 2 == 0
     g = (
         ev.select(
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            money_cents("value").alias("cents"),
             F.when(arm_treat, 1).otherwise(0).alias("a"),
         )
         .groupBy("cents")
@@ -732,9 +735,9 @@ _CUPED_ARM = f"{md5_int_sql('u.user_id', 'ab8')} % 2"
     WITH u AS (
       SELECT user_id,
              SUM(CASE WHEN ts <  TIMESTAMP '2024-01-15 00:00:00'
-                      THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS x,
+                      THEN {money_sql("value")} ELSE {money_sql("0")} END) AS x,
              SUM(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00'
-                      THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS y
+                      THEN {money_sql("value")} ELSE {money_sql("0")} END) AS y
       FROM events GROUP BY user_id),
     m AS (
       SELECT CAST(COUNT(*) AS DOUBLE) AS n,
@@ -743,8 +746,8 @@ _CUPED_ARM = f"{md5_int_sql('u.user_id', 'ab8')} % 2"
              CAST(SUM(CAST(x * y AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
              CAST(SUM(CAST(y * y AS DECIMAL(38,4))) AS DOUBLE) AS syy,
              CAST(SUM(CASE WHEN {_CUPED_ARM} = 0 THEN 1 ELSE 0 END) AS DOUBLE) AS nt,
-             CAST(SUM(CASE WHEN {_CUPED_ARM} = 0 THEN x ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS sxt,
-             CAST(SUM(CASE WHEN {_CUPED_ARM} = 0 THEN y ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS syt
+             CAST(SUM(CASE WHEN {_CUPED_ARM} = 0 THEN x ELSE {money_sql("0")} END) AS DOUBLE) AS sxt,
+             CAST(SUM(CASE WHEN {_CUPED_ARM} = 0 THEN y ELSE {money_sql("0")} END) AS DOUBLE) AS syt
       FROM u)
     SELECT CAST(n AS BIGINT) AS n_users,
            ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS theta,
@@ -787,16 +790,10 @@ def stats_cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFram
     platform ships."""
     ev = catalog.load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    dec0 = F.lit(0).cast("decimal(18,2)")
+    dec0 = money(F.lit(0))
     u = ev.groupBy("user_id").agg(
-        F.sum(
-            F.when(F.col("ts") < cut, F.col("value").cast("decimal(18,2)"))
-            .otherwise(dec0)
-        ).alias("x"),
-        F.sum(
-            F.when(F.col("ts") >= cut, F.col("value").cast("decimal(18,2)"))
-            .otherwise(dec0)
-        ).alias("y"),
+        F.sum(F.when(F.col("ts") < cut, money("value")).otherwise(dec0)).alias("x"),
+        F.sum(F.when(F.col("ts") >= cut, money("value")).otherwise(dec0)).alias("y"),
     )
     treat = md5_int("user_id", "ab8") % 2 == 0
     m = u.agg(
@@ -854,9 +851,9 @@ _POWER_EFFECT_FRAC = 0.02  # minimum detectable effect: 2% of the mean
     oracle=f"""
     WITH m AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(18,2))
-                           * CAST(value AS DECIMAL(18,2)) AS DECIMAL(38,4)))
+             CAST(SUM({money_sql("value")}) AS DOUBLE) AS s,
+             CAST(SUM(CAST({money_sql("value")}
+                           * {money_sql("value")} AS DECIMAL(38,4)))
                   AS DOUBLE) AS ss
       FROM events WHERE event_type = 'purchase')
     SELECT n AS n_obs,
@@ -889,7 +886,7 @@ def stats_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     move, nothing else. The cheapest pre-experiment artifact there is,
     and the one that prevents underpowered launches."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    v = F.col("value").cast("decimal(18,2)")
+    v = money("value")
     m = ev.filter(F.col("event_type") == "purchase").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(v).cast("double").alias("s"),
@@ -917,7 +914,7 @@ _MW_ARM = f"{md5_int_sql('user_id', 'mw11')} % 2"
     "stats_mann_whitney_u",
     oracle=f"""
     WITH t AS (
-      SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+      SELECT {money_cents_sql("value")} AS cents,
              CASE WHEN {_MW_ARM} = 0 THEN 1 ELSE 0 END AS a
       FROM events),
     g AS (
@@ -967,9 +964,7 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm_treat = md5_int("user_id", "mw11") % 2 == 0
     g = (
         ev.select(
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            money_cents("value").alias("cents"),
             F.when(arm_treat, 1).otherwise(0).alias("a"),
         )
         .groupBy("cents")
@@ -1002,10 +997,10 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_gini_concentration",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             CAST(SUM({money_sql("o_totalprice")}) * 100 AS BIGINT)
                AS cents
       FROM orders GROUP BY o_custkey),
     r AS (
@@ -1046,11 +1041,7 @@ def stats_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = catalog.load_table(spark, sf_dir, "orders")
     spend = (
         o.groupBy("o_custkey")
-        .agg(
-            (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
-            .cast("bigint")
-            .alias("cents")
-        )
+        .agg((F.sum(money("o_totalprice")) * 100).cast("bigint").alias("cents"))
     )
     r = spend.select(
         "cents",
@@ -1085,7 +1076,7 @@ _BOOT_HI_RK = 19
     "stats_bootstrap_ci_hash",
     oracle=f"""
     WITH reps AS (
-      SELECT t.b, CAST(e.value AS DECIMAL(18,2)) AS v
+      SELECT t.b, {money_sql("e.value")} AS v
       FROM events e CROSS JOIN range({_BOOT_B}) t(b)
       WHERE e.event_type = 'purchase'
         AND {md5_int_sql("CAST(e.event_id AS VARCHAR) || ':' || CAST(t.b AS VARCHAR)", "boot11")}
@@ -1097,7 +1088,7 @@ _BOOT_HI_RK = 19
       SELECT m, row_number() OVER (ORDER BY m, b) AS rk FROM means),
     base AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_obs,
-             CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS pm
+             CAST(SUM({money_sql("value")}) AS DOUBLE) / COUNT(*) AS pm
       FROM events WHERE event_type = 'purchase')
     SELECT base.n_obs, ROUND(base.pm, 6) AS point_mean,
            ROUND(MAX(CASE WHEN rk = {_BOOT_LO_RK} THEN m END), 6) AS ci_lo,
@@ -1129,7 +1120,7 @@ def stats_bootstrap_ci_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     B~100 and the residue class per budget — still one pass. The
     replica-mean window runs over B rows."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    v = F.col("value").cast("decimal(18,2)")
+    v = money("value")
     pur = ev.filter(F.col("event_type") == "purchase")
     keep = (
         md5_int(

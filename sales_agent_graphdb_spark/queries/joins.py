@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.functions.scalar import money, money_sql
 from sales_agent_graphdb_spark.registry import register
 
 
@@ -194,10 +194,10 @@ def j4_validation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j5_customer_orders",
-    oracle="""
+    oracle=f"""
     SELECT c.c_custkey AS id, c.c_name AS full_name,
            COUNT(o.o_orderkey) AS n_orders,
-           CAST(COALESCE(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))), 0) AS DOUBLE) AS lifetime_value
+           CAST(COALESCE(SUM({money_sql("o.o_totalprice")}), 0) AS DOUBLE) AS lifetime_value
     FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
     GROUP BY id, full_name
     ORDER BY id
@@ -213,7 +213,7 @@ def j5_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_custkey").alias("id"), F.col("c_name").alias("full_name"))
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(F.sum(money("o_totalprice")), F.lit(0).cast("decimal(18,2)"))
+            F.coalesce(F.sum(money("o_totalprice")), money(F.lit(0)))
             .cast("double")
             .alias("lifetime_value"),
         )

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.functions.scalar import money, money_sql, rate, rate_sql
 from sales_agent_graphdb_spark.operators.merge import (
     delete_by_key,
     merge_create_only,
@@ -84,11 +84,11 @@ def g3_detach_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "m1_product_crud",
-    oracle="""
+    oracle=f"""
     WITH after_update AS (
       SELECT p_partkey AS id, p_name AS name,
              CASE WHEN p_brand = 'Brand#7'
-                  THEN CAST(CAST(p_retailprice AS DECIMAL(18,2)) * CAST(1.10 AS DECIMAL(4,2)) AS DOUBLE)
+                  THEN CAST({money_sql("p_retailprice")} * {rate_sql("1.10")} AS DOUBLE)
                   ELSE p_retailprice END AS price
       FROM part WHERE p_partkey % 13 <> 0)
     SELECT id, name, price FROM after_update
@@ -115,7 +115,7 @@ def m1_product_crud(spark: SparkSession, sf_dir: str) -> DataFrame:
         "name",
         F.when(
             F.col("brand") == "Brand#7",
-            (money("price") * F.lit(1.10).cast("decimal(4,2)")).cast("double"),
+            (money("price") * rate(F.lit(1.10))).cast("double"),
         )
         .otherwise(F.col("price"))
         .alias("price"),
@@ -129,9 +129,9 @@ def m1_product_crud(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "m3_stock_decrement",
-    oracle="""
+    oracle=f"""
     WITH demand AS (
-      SELECT l_partkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+      SELECT l_partkey, CAST(SUM({money_sql("l_quantity")}) AS DOUBLE) AS qty
       FROM lineitem WHERE l_orderkey < 100 GROUP BY l_partkey)
     SELECT p.p_partkey AS product_id, p.p_size AS stock_before,
            CAST(p.p_size - COALESCE(d.qty, 0) AS DOUBLE) AS stock_after,
@@ -531,18 +531,18 @@ def m8_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "m9_dynamic_partition_overwrite",
-    oracle="""
+    oracle=f"""
     WITH rewritten AS (
       SELECT l_extendedprice, l_discount,
              strftime(l_shipdate, '%Y-%m') AS ship_month,
              CASE WHEN strftime(l_shipdate, '%Y-%m') = '1996-07'
-                  THEN CAST(ROUND(CAST(l_extendedprice AS DECIMAL(18,2))
+                  THEN CAST(ROUND({money_sql("l_extendedprice")}
                                   * CAST(0.9 AS DECIMAL(2,1)), 2) AS DOUBLE)
                   ELSE l_extendedprice END AS price_eff
       FROM lineitem)
     SELECT ship_month,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(price_eff AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+           CAST(SUM({money_sql("price_eff")}) AS DOUBLE) AS revenue
     FROM rewritten
     WHERE ship_month IN ('1996-06', '1996-07', '1996-08')
     GROUP BY ship_month ORDER BY ship_month
@@ -599,7 +599,7 @@ def m9_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
         li.filter(month == "1996-07")
         .select(
             F.round(
-                F.col("l_extendedprice").cast("decimal(18,2)")
+                money("l_extendedprice")
                 * F.lit("0.9").cast("decimal(2,1)"),
                 2,
             )
@@ -624,9 +624,7 @@ def m9_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
         back.groupBy("ship_month")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue"),
+            F.sum(money("l_extendedprice")).cast("double").alias("revenue"),
         )
         .orderBy("ship_month")
     )

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
 from sales_agent_graphdb_spark.functions import text as tk
+from sales_agent_graphdb_spark.functions.scalar import money, money_cents_sql
 from sales_agent_graphdb_spark.operators import matcher
 from sales_agent_graphdb_spark.plans import graph_planner, router
 from sales_agent_graphdb_spark.queries.relational import PRODUCT_SCAN_ORACLE
@@ -113,15 +114,15 @@ def nl2plan_fuzzy_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agent_turn_check_order",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderkey AS id,
            strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
-           format('{:,}', CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 100)
+           format('{{:,}}', {money_cents_sql("o.o_totalprice")} // 100)
              || '.' ||
-             lpad(CAST(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) % 100 AS VARCHAR), 2, '0')
+             lpad(CAST({money_cents_sql("o.o_totalprice")} % 100 AS VARCHAR), 2, '0')
              AS total_str,
            string_agg(
-             format('{:d}x {:s}', CAST(l.l_quantity AS INT), p.p_name),
+             format('{{:d}}x {{:s}}', CAST(l.l_quantity AS INT), p.p_name),
              ', ' ORDER BY l.l_linenumber, CAST(l.l_quantity AS INT), p.p_name) AS items_str
     FROM orders o
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -150,9 +151,7 @@ def agent_turn_check_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.col("o_orderkey").alias("id"),
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            F.format_number(F.col("o_totalprice").cast("decimal(18,2)"), 2).alias(
-                "total_str"
-            ),
+            F.format_number(money("o_totalprice"), 2).alias("total_str"),
         )
         .agg(
             F.array_join(

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions.scalar import md5_int, md5_int_sql, money, money_sql
 from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
@@ -687,9 +687,9 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq_observe_one_pass",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE) AS total_price,
            CAST(SUM(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_qty,
            CAST(MIN(l_shipdate) AS VARCHAR) AS min_ship,
            CAST(COUNT(DISTINCT l_returnflag) AS BIGINT) AS n_flag_groups
@@ -718,9 +718,7 @@ def dq_observe_one_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = li.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
+        F.sum(money("l_extendedprice")).cast("double").alias("total_price"),
         F.sum(F.col("l_quantity").isNull().cast("long")).alias("null_qty"),
         F.min("l_shipdate").cast("string").alias("min_ship"),
     )
@@ -839,7 +837,7 @@ _BENFORD_VALUES_SQL = ", ".join(
     "dq_benford_first_digit",
     oracle=f"""
     WITH digits AS (
-      SELECT CAST(SUBSTR(CAST(CAST(FLOOR(CAST(o_totalprice AS DECIMAL(18,2)))
+      SELECT CAST(SUBSTR(CAST(CAST(FLOOR({money_sql("o_totalprice")})
                                    AS BIGINT) AS VARCHAR), 1, 1) AS INT)
                AS digit
       FROM orders WHERE o_totalprice > 0),
@@ -876,7 +874,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable count — sketch-free, one pass, 9 rows out."""
     o = catalog.load_table(spark, sf_dir, "orders")
     digit = F.substring(
-        F.floor(F.col("o_totalprice").cast("decimal(18,2)"))
+        F.floor(money("o_totalprice"))
         .cast("bigint")
         .cast("string"),
         1,

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.functions.scalar import money, money_sql, rate_sql
 from sales_agent_graphdb_spark.operators import graph
 from sales_agent_graphdb_spark.registry import register
 
@@ -27,12 +27,12 @@ from sales_agent_graphdb_spark.registry import register
 
 @register(
     "flagship_revenue_by_brand",
-    oracle="""
+    oracle=f"""
     SELECT p.p_brand AS brand,
            l.l_returnflag AS returnflag,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-           CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {money_sql("l.l_discount")})) AS DOUBLE) AS revenue,
+           CAST(SUM({money_sql("l.l_quantity")}) AS DOUBLE) AS sum_qty,
            COUNT(*) AS n_items
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY brand, returnflag
@@ -50,7 +50,7 @@ def flagship_revenue_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"), F.col("l_returnflag").alias("returnflag"))
         .agg(
-            F.sum(money("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - money("l_discount")))
+            F.sum(money("l_extendedprice") * (money(F.lit(1)) - money("l_discount")))
             .cast("double")
             .alias("revenue"),
             F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
@@ -434,16 +434,16 @@ def p11_result_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pushdown — all from SQL text.
 # ---------------------------------------------------------------------------
 
-_SQL_Q5 = """
+_SQL_Q5 = f"""
     SELECT /*+ BROADCAST(n), BROADCAST(c) */
            n.n_name AS nation,
            CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS n_customers,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-    FROM {cust} c
-    JOIN {nat} n ON c.c_nationkey = n.n_nationkey
-    JOIN {ord} o ON o.o_custkey = c.c_custkey
-    JOIN {li} l ON l.l_orderkey = o.o_orderkey
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {money_sql("l.l_discount")})) AS DOUBLE) AS revenue
+    FROM {{cust}} c
+    JOIN {{nat}} n ON c.c_nationkey = n.n_nationkey
+    JOIN {{ord}} o ON o.o_custkey = c.c_custkey
+    JOIN {{li}} l ON l.l_orderkey = o.o_orderkey
     GROUP BY n.n_name
     ORDER BY nation
 """
@@ -659,11 +659,11 @@ def sql_api_exists_in(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Grouped HAVING: post-aggregation predicate from text.
-_SQL_HAVING = """
+_SQL_HAVING = f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+           CAST(SUM({money_sql("l_quantity")}) AS DOUBLE) AS sum_qty,
            CAST(COUNT(*) AS BIGINT) AS n_items
-    FROM {li}
+    FROM {{li}}
     GROUP BY l_returnflag, l_linestatus
     HAVING COUNT(*) > 100
     ORDER BY l_returnflag, l_linestatus
@@ -685,12 +685,12 @@ def sql_api_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # CTE chain: aggregate CTE -> windowed CTE -> final projection.
-_SQL_CTE = """
+_SQL_CTE = f"""
     WITH brand_rev AS (
       SELECT /*+ BROADCAST(p) */ p.p_brand AS brand,
-             SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                 * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS rev
-      FROM {li} l JOIN {part} p ON l.l_partkey = p.p_partkey
+             SUM({money_sql("l.l_extendedprice")}
+                 * (1 - {money_sql("l.l_discount")})) AS rev
+      FROM {{li}} l JOIN {{part}} p ON l.l_partkey = p.p_partkey
       GROUP BY p.p_brand
     ), ranked AS (
       SELECT brand, rev,
@@ -724,10 +724,10 @@ def sql_api_cte_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_api_parameterized",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority AS priority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
       AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
@@ -748,10 +748,10 @@ def sql_api_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sqlapi_orders"
     )
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority AS priority,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+               CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total
         FROM sqlapi_orders
         WHERE o_orderdate >= CAST(:start AS TIMESTAMP)
           AND o_orderdate < CAST(:end AS TIMESTAMP)
@@ -925,11 +925,11 @@ def sql_api_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines now share (Spark 4 / DuckDB); certifies the resolution rule
 # (every non-aggregate select item becomes a group key, in select
 # order) agrees cross-dialect. Statement == oracle verbatim.
-_SQL_GBA = """
+_SQL_GBA = f"""
     SELECT l_returnflag, l_linestatus,
            CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM {li}
+           CAST(SUM({money_sql("l_quantity")}) AS DOUBLE) AS sum_qty
+    FROM {{li}}
     GROUP BY ALL
     ORDER BY ALL
 """
@@ -1000,16 +1000,16 @@ def sql_api_exec_immediate_vars(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle inlines the same expression, certifying the UDF indirection
 # invisible.
 _SQL_UDF_BODY = (
-    "CAST(p AS DECIMAL(18,2)) * (1 - CAST(d AS DECIMAL(18,2)))"
+    f"{money_sql('p')} * (1 - {money_sql('d')})"
 )
 
 
 @register(
     "sql_api_sql_udf",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+           CAST(SUM({money_sql("l_extendedprice")}
+                    * (1 - {money_sql("l_discount")})) AS DOUBLE)
              AS revenue
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
@@ -1048,17 +1048,17 @@ def sql_api_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sub-1e6 magnitudes convert to DOUBLE exactly, so the cast loses
 # nothing; the lateral-alias chain under test is untouched in the
 # inner select.
-_SQL_LCA = """
+_SQL_LCA = f"""
     SELECT o_orderkey,
            CAST(price_d AS DOUBLE) AS price_d,
            CAST(tax AS DOUBLE) AS tax,
            CAST(total AS DOUBLE) AS total
     FROM (
         SELECT o_orderkey,
-               CAST(o_totalprice AS DECIMAL(18,2)) AS price_d,
-               price_d * CAST(0.05 AS DECIMAL(4,2)) AS tax,
+               {money_sql("o_totalprice")} AS price_d,
+               price_d * {rate_sql("0.05")} AS tax,
                price_d + tax AS total
-        FROM {o} WHERE o_orderkey < 100
+        FROM {{o}} WHERE o_orderkey < 100
     ) ORDER BY o_orderkey
 """
 
@@ -1108,16 +1108,16 @@ def sql_api_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_api_pivot_stmt",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority AS priority,
            CAST(SUM(CASE WHEN o_orderstatus = 'F'
-                         THEN CAST(o_totalprice AS DECIMAL(18,2)) END)
+                         THEN {money_sql("o_totalprice")} END)
                 AS DOUBLE) AS total_f,
            CAST(SUM(CASE WHEN o_orderstatus = 'O'
-                         THEN CAST(o_totalprice AS DECIMAL(18,2)) END)
+                         THEN {money_sql("o_totalprice")} END)
                 AS DOUBLE) AS total_o,
            CAST(SUM(CASE WHEN o_orderstatus = 'P'
-                         THEN CAST(o_totalprice AS DECIMAL(18,2)) END)
+                         THEN {money_sql("o_totalprice")} END)
                 AS DOUBLE) AS total_p
     FROM orders GROUP BY o_orderpriority ORDER BY priority
     """,
@@ -1136,14 +1136,14 @@ def sql_api_pivot_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sqlapi_orders"
     )
     return spark.sql(
-        """
+        f"""
         SELECT priority,
                CAST(f AS DOUBLE) AS total_f,
                CAST(o AS DOUBLE) AS total_o,
                CAST(p AS DOUBLE) AS total_p
         FROM (
           SELECT o_orderpriority AS priority, o_orderstatus AS status,
-                 CAST(o_totalprice AS DECIMAL(18,2)) AS price
+                 {money_sql("o_totalprice")} AS price
           FROM sqlapi_orders
         )
         PIVOT (SUM(price) FOR status IN ('F' AS f, 'O' AS o, 'P' AS p))
@@ -1195,9 +1195,9 @@ def agg_scalar_subquery_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_api_unpivot_stmt",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority AS priority, o_orderstatus AS status,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total
     FROM orders WHERE o_orderstatus IN ('F', 'O', 'P')
     GROUP BY 1, 2 ORDER BY priority, status
     """,
@@ -1216,15 +1216,15 @@ def sql_api_unpivot_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sqlapi_orders"
     )
     return spark.sql(
-        """
+        f"""
         WITH wide AS (
           SELECT o_orderpriority AS priority,
                  SUM(CASE WHEN o_orderstatus = 'F'
-                          THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS f,
+                          THEN {money_sql("o_totalprice")} END) AS f,
                  SUM(CASE WHEN o_orderstatus = 'O'
-                          THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS o,
+                          THEN {money_sql("o_totalprice")} END) AS o,
                  SUM(CASE WHEN o_orderstatus = 'P'
-                          THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS p
+                          THEN {money_sql("o_totalprice")} END) AS p
           FROM sqlapi_orders GROUP BY o_orderpriority)
         SELECT priority, status, CAST(total AS DOUBLE) AS total
         FROM wide UNPIVOT (total FOR status IN (f AS `F`, o AS `O`, p AS `P`))
@@ -1233,17 +1233,17 @@ def sql_api_unpivot_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FILTER_CLAUSE = """
+_SQL_FILTER_CLAUSE = f"""
     SELECT o_orderpriority AS priority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
            CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT)
              AS n_finished,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+           CAST(SUM({money_sql("o_totalprice")})
                   FILTER (WHERE o_orderstatus = 'F') AS DOUBLE)
              AS finished_value,
            CAST(COUNT(*) FILTER (WHERE o_totalprice > 100000.0) AS BIGINT)
              AS n_big
-    FROM {orders} GROUP BY o_orderpriority ORDER BY priority
+    FROM {{orders}} GROUP BY o_orderpriority ORDER BY priority
 """
 
 
@@ -1296,10 +1296,10 @@ def sql_api_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 # o5_keyset_pagination is the production form (seek on an indexed/
 # sorted key). Registered to pin the STATEMENT semantics both engines
 # share; the two docstrings together document the tradeoff.
-_SQL_LIMIT_OFFSET = """
+_SQL_LIMIT_OFFSET = f"""
     SELECT o_orderkey, o_custkey,
-           CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-    FROM {orders} ORDER BY o_orderkey LIMIT 10 OFFSET 25
+           CAST({money_sql("o_totalprice")} AS DOUBLE) AS price
+    FROM {{orders}} ORDER BY o_orderkey LIMIT 10 OFFSET 25
 """
 
 
@@ -1379,7 +1379,7 @@ _TIER_ROWS = """('1-URGENT','hot'),('2-HIGH','hot'),('3-MEDIUM','warm'),
     "sql_api_values_inline",
     oracle=f"""
     SELECT t.tier, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+           CAST(SUM({money_sql("o.o_totalprice")}) AS DOUBLE)
              AS total
     FROM orders o
     JOIN (VALUES {_TIER_ROWS}) AS t(prio, tier)
@@ -1397,7 +1397,7 @@ def sql_api_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT t.tier, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+               CAST(SUM({money_sql("o.o_totalprice")}) AS DOUBLE)
                  AS total
         FROM sqlapi_orders o
         JOIN (VALUES {_TIER_ROWS}) AS t(prio, tier)
@@ -1409,12 +1409,12 @@ def sql_api_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_api_sql_table_udf",
-    oracle="""
+    oracle=f"""
     WITH f AS (
       SELECT o_custkey, o_orderkey,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total,
+             CAST({money_sql("o_totalprice")} AS DOUBLE) AS total,
              row_number() OVER (PARTITION BY o_custkey
-                                ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) DESC,
+                                ORDER BY {money_sql("o_totalprice")} DESC,
                                          o_orderkey) AS rn
       FROM orders WHERE o_custkey IN (7, 11, 21))
     SELECT CAST(o_custkey AS BIGINT) AS cust_id, o_orderkey, total
@@ -1441,11 +1441,11 @@ def sql_api_sql_table_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     executes correctly."""
     _sqlapi_views(spark, sf_dir)
     spark.sql(
-        """
+        f"""
         CREATE OR REPLACE TEMPORARY FUNCTION sqlapi_cust_top(cust BIGINT)
         RETURNS TABLE(o_orderkey BIGINT, total DOUBLE)
         RETURN SELECT o_orderkey,
-                      CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE)
+                      CAST({money_sql("o_totalprice")} AS DOUBLE)
                FROM sqlapi_orders WHERE o_custkey = cust
                ORDER BY 2 DESC, o_orderkey LIMIT 3
         """

@@ -9,23 +9,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.functions.scalar import (
+    dec6,
+    dec6_sql,
     extract_price,
     is_email,
     is_http_url,
     md5_int_sql,
+    money,
+    money_cents,
+    money_cents_sql,
+    money_sql,
     surrogate_sku,
 )
-from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 
 
 @register(
     "f2_f3_price_and_surrogate",
-    oracle="""
+    oracle=f"""
     SELECT p_partkey AS id,
-           'was 1,099.99 now ' || CAST(CAST(p_retailprice AS DECIMAL(18,2)) AS VARCHAR) AS messy,
-           CAST(replace(regexp_extract('was 1,099.99 now ' || CAST(CAST(p_retailprice AS DECIMAL(18,2)) AS VARCHAR),
+           'was 1,099.99 now ' || CAST({money_sql("p_retailprice")} AS VARCHAR) AS messy,
+           CAST(replace(regexp_extract('was 1,099.99 now ' || CAST({money_sql("p_retailprice")} AS VARCHAR),
                         '([0-9][0-9,]*(\\.[0-9]+)?)$', 1), ',', '') AS DOUBLE) AS extracted_price,
            'GEN-' || upper(substr(md5(lower(p_name)), 1, 8)) AS gen_sku
     FROM part ORDER BY id
@@ -39,7 +45,7 @@ def f2_f3_price_and_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = catalog.load_table(spark, sf_dir, "part")
     messy = F.concat(
         F.lit("was 1,099.99 now "),
-        F.col("p_retailprice").cast("decimal(18,2)").cast("string"),
+        money("p_retailprice").cast("string"),
     )
     return (
         p.select(
@@ -54,12 +60,12 @@ def f2_f3_price_and_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "f4_f5_dates_numbers",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey AS id,
            strftime(o_orderdate, '%Y-%m-%d') AS order_date,
            strftime(o_orderdate, '%Y-%m') AS order_month,
            CAST(year(o_orderdate) AS INT) AS order_year,
-           CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS amount_str
+           CAST({money_sql("o_totalprice")} AS VARCHAR) AS amount_str
     FROM orders ORDER BY id LIMIT 1000
     """,
 )
@@ -76,7 +82,7 @@ def f4_f5_dates_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
             F.year("o_orderdate").cast("int").alias("order_year"),
-            F.col("o_totalprice").cast("decimal(18,2)").cast("string").alias("amount_str"),
+            money("o_totalprice").cast("string").alias("amount_str"),
         )
     )
 
@@ -177,14 +183,14 @@ def f14_f15_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "f16_variant_semistructured",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k, value
       FROM events)
     SELECT CAST(k // 10 AS INT) AS k_decade,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(MIN(k) AS INT) AS k_min, CAST(MAX(k) AS INT) AS k_max,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM x GROUP BY 1 ORDER BY k_decade NULLS FIRST
     """,
 )
@@ -209,9 +215,7 @@ def f16_variant_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.min("k").alias("k_min"),
             F.max("k").alias("k_max"),
-            F.sum(F.col("value").cast("decimal(20,6)"))
-            .cast("double")
-            .alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .orderBy("k_decade")
     )
@@ -642,20 +646,18 @@ def udf_map_in_arrow_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "f20_higher_order_kit",
-    oracle="""
+    oracle=f"""
     WITH lo AS (
       SELECT l_orderkey,
              list(CAST(l_quantity AS BIGINT)
                   ORDER BY l_linenumber,
                            CAST(l_quantity AS BIGINT),
-                           CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-                                AS BIGINT)) AS qs
+                           {money_cents_sql("l_extendedprice")}) AS qs
       FROM lineitem WHERE l_orderkey < 2000 GROUP BY l_orderkey),
     qp AS (
       SELECT l_orderkey,
              CAST(SUM(CAST(l_quantity AS BIGINT)
-                      * CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT)) AS BIGINT) AS qp_sum
+                      * {money_cents_sql("l_extendedprice")}) AS BIGINT) AS qp_sum
       FROM lineitem WHERE l_orderkey < 2000 GROUP BY l_orderkey)
     SELECT lo.l_orderkey AS okey,
            CAST(len(qs) AS INT) AS n_items,
@@ -691,9 +693,7 @@ def f20_higher_order_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = catalog.load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") < 2000
     )
-    cents = F.expr(
-        "cast(cast(l_extendedprice as decimal(18,2)) * 100 as bigint)"
-    )
+    cents = money_cents("l_extendedprice")
     # ONE sorted struct array feeds both projections: (ln, q, p) is a
     # TOTAL order (the synthetic data duplicates l_linenumber within
     # an order — measured 11,785 dup pairs at sf0.01 — so ln alone

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import md5_int
+from sales_agent_graphdb_spark.functions.scalar import dec6, dec6_sql, md5_int, money, money_sql
 from sales_agent_graphdb_spark.operators.skew import (
     salted_join,
     salted_join_hot_keys,
@@ -48,7 +48,7 @@ _TYPE_WEIGHTS = [
       {", ".join(f"('{t}', CAST({w} AS DECIMAL(6,2)))" for t, w in _TYPE_WEIGHTS)})
     SELECT e.event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(e.value AS DECIMAL(20,6)) * w) AS DOUBLE) AS weighted_value
+           CAST(SUM({dec6_sql("e.value")} * w) AS DOUBLE) AS weighted_value
     FROM events e JOIN weights USING (event_type)
     GROUP BY e.event_type ORDER BY e.event_type
     """,
@@ -72,7 +72,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(20,6)") * F.col("w"))
+            F.sum(dec6("value") * F.col("w"))
             .cast("double")
             .alias("weighted_value"),
         )
@@ -82,14 +82,14 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_salted_hot_keys",
-    oracle="""
+    oracle=f"""
     WITH f AS (
       SELECT CASE WHEN l_orderkey % 10 < 3 THEN 42 ELSE l_partkey END AS p_partkey,
              l_quantity
       FROM lineitem)
     SELECT p.p_brand,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(f.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+           CAST(SUM({money_sql("f.l_quantity")}) AS DOUBLE) AS sum_qty
     FROM f JOIN part p USING (p_partkey)
     GROUP BY p.p_brand ORDER BY p.p_brand
     """,
@@ -124,9 +124,7 @@ def join_salted_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
+            F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
         )
         .orderBy("p_brand")
     )
@@ -134,10 +132,10 @@ def join_salted_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_bucketed_collocated",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderstatus AS status,
            CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+           CAST(SUM({money_sql("l.l_quantity")}) AS DOUBLE) AS sum_qty
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY status ORDER BY status
     """,
@@ -175,9 +173,7 @@ def join_bucketed_collocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
+            F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
         )
         .orderBy("status")
     )
@@ -188,11 +184,11 @@ _RF_BUCKETS = 4096  # prefilter signature buckets (load factor ~2% here)
 
 @register(
     "join_runtime_prefilter",
-    oracle="""
+    oracle=f"""
     SELECT p.p_size AS size,
            CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {money_sql("l.l_discount")})) AS DOUBLE) AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE p.p_brand = 'Brand#13'
     GROUP BY size ORDER BY size
@@ -234,10 +230,7 @@ def join_runtime_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy(F.col("p_size").alias("size"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
-            )
+            F.sum(money("l_extendedprice") * (money(F.lit(1)) - money("l_discount")))
             .cast("double")
             .alias("revenue"),
         )
@@ -247,10 +240,10 @@ def join_runtime_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_agg_maintenance",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority AS priority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total
     FROM orders WHERE o_orderkey <= 3000
     GROUP BY priority ORDER BY priority
     """,
@@ -274,7 +267,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("o_orderpriority").alias("priority"))
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("total_d"),
+                F.sum(money("o_totalprice")).alias("total_d"),
             )
         )
 
@@ -367,12 +360,12 @@ def join_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_runtime_bloom_native",
-    oracle="""
+    oracle=f"""
     SELECT CAST(p.p_size AS INTEGER) AS size,
            CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1 AS DECIMAL(18,2))
-                       - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * ({money_sql("1")}
+                       - {money_sql("l.l_discount")})) AS DOUBLE)
              AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE p.p_brand = 'Brand#13'
@@ -434,11 +427,8 @@ def join_runtime_bloom_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_items"),
                 F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,2)")
-                    * (
-                        F.lit(1).cast("decimal(18,2)")
-                        - F.col("l_discount").cast("decimal(18,2)")
-                    )
+                    money("l_extendedprice")
+                    * (money(F.lit(1)) - money("l_discount"))
                 )
                 .cast("double")
                 .alias("revenue"),

@@ -18,6 +18,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import (
+    dec6,
+    dec6_sql,
+    money,
+    money_sql,
+    rate,
+    rate_sql,
+)
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources import connectors
@@ -138,9 +146,9 @@ def s3_s4_json_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "s9b_orc_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag AS returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+           CAST(SUM({money_sql("l_quantity")}) AS DOUBLE) AS sum_qty,
            CAST(MIN(l_shipdate) AS VARCHAR) AS min_shipdate
     FROM lineitem WHERE l_orderkey <= 1000
     GROUP BY l_returnflag ORDER BY returnflag
@@ -170,9 +178,7 @@ def s9b_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy(F.col("l_returnflag").alias("returnflag"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
+            F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
             F.min("l_shipdate").cast("string").alias("min_shipdate"),
         )
         .orderBy("returnflag")
@@ -181,10 +187,10 @@ def s9b_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s9c_schema_evolution",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus AS status,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total
     FROM (
       SELECT o_orderkey, o_totalprice,
              CASE WHEN o_orderkey <= 500 THEN NULL ELSE o_orderstatus END AS o_orderstatus
@@ -221,9 +227,7 @@ def s9c_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total"),
+            F.sum(money("o_totalprice")).cast("double").alias("total"),
         )
         .orderBy(F.col("status").asc_nulls_first())
     )
@@ -231,9 +235,9 @@ def s9c_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s10_sorted_scan_pruning",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE) AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate <  TIMESTAMP '1997-01-01'
@@ -274,17 +278,15 @@ def s10_sorted_scan_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return year.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("revenue"),
+        F.sum(money("l_extendedprice")).cast("double").alias("revenue"),
     )
 
 
 @register(
     "s11_xml_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS total,
            CAST(MIN(o_orderdate) AS VARCHAR) AS min_orderdate
     FROM orders WHERE o_orderkey <= 1000
     GROUP BY o_orderstatus ORDER BY status
@@ -327,9 +329,7 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total"),
+            F.sum(money("o_totalprice")).cast("double").alias("total"),
             F.min("o_orderdate").cast("string").alias("min_orderdate"),
         )
         .orderBy("status")
@@ -338,13 +338,13 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s12_zorder_pruning",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT MAX(l_partkey) // 5 AS p_lo, (MAX(l_partkey) * 3) // 10 AS p_hi,
              MAX(l_suppkey) // 5 AS s_lo, (MAX(l_suppkey) * 3) // 10 AS s_hi
       FROM lineitem)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE) AS revenue
     FROM lineitem, b
     WHERE l_partkey >= b.p_lo AND l_partkey < b.p_hi
       AND l_suppkey >= b.s_lo AND l_suppkey < b.s_hi
@@ -428,18 +428,16 @@ def s12_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return box.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("revenue"),
+        F.sum(money("l_extendedprice")).cast("double").alias("revenue"),
     )
 
 
 # The plain part-table aggregate that the batch and the streaming API
 # ingest must both reconstruct.
-_API_INGEST_ORACLE = """
+_API_INGEST_ORACLE = f"""
     SELECT p_brand AS brand,
            CAST(COUNT(*) AS BIGINT) AS n_products,
-           CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+           CAST(SUM({money_sql("p_retailprice")}) AS DOUBLE) AS total_price
     FROM part GROUP BY brand ORDER BY brand
     """
 
@@ -471,9 +469,7 @@ def s8_api_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         api.groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count(F.lit(1)).alias("n_products"),
-            F.sum(F.col("p_retailprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            F.sum(money("p_retailprice")).cast("double").alias("total_price"),
         )
         .orderBy("brand")
     )
@@ -495,12 +491,12 @@ _FRAG_FILES = 8  # files per day-partition in the fragmented layout
 
 @register(
     "s13_compact_small_files",
-    oracle="""
+    oracle=f"""
     SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(MIN(event_id) AS BIGINT) AS min_event_id,
            CAST(MAX(event_id) AS BIGINT) AS max_event_id,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM events
     GROUP BY day ORDER BY day
     """,
@@ -558,7 +554,7 @@ def s13_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.min("event_id").alias("min_event_id"),
             F.max("event_id").alias("max_event_id"),
-            F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .orderBy("day")
     )
@@ -609,9 +605,7 @@ def s8b_api_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count(F.lit(1)).alias("n_products"),
-            F.sum(F.col("p_retailprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            F.sum(money("p_retailprice")).cast("double").alias("total_price"),
         )
         .orderBy("brand")
     )
@@ -624,10 +618,10 @@ def s8b_api_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s8c_stream_restart_resume",
-    oracle="""
+    oracle=f"""
     SELECT p_brand AS brand,
            CAST(COUNT(*) AS BIGINT) AS n_products,
-           CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+           CAST(SUM({money_sql("p_retailprice")}) AS DOUBLE) AS total_price,
            TRUE AS run1_strict_prefix,
            TRUE AS resumed_batch_numbering,
            TRUE AS batches_align_pages
@@ -758,9 +752,7 @@ def s8c_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             final.groupBy(F.col("p_brand").alias("brand"))
             .agg(
                 F.count(F.lit(1)).alias("n_products"),
-                F.sum(F.col("p_retailprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_price"),
+                F.sum(money("p_retailprice")).cast("double").alias("total_price"),
             )
             .crossJoin(verdict)
             .select(
@@ -779,12 +771,12 @@ def s8c_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s14_corrupt_quarantine",
-    oracle="""
+    oracle=f"""
     WITH base AS (SELECT * FROM orders WHERE o_orderkey <= 1000),
     valid AS (SELECT * FROM base WHERE o_orderkey % 7 <> 0)
     SELECT o_orderstatus AS status,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE) AS sum_price
     FROM valid GROUP BY 1
     UNION ALL
     SELECT '~QUARANTINED' AS status,
@@ -845,9 +837,7 @@ def s14_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantined = parsed.filter(F.col("_corrupt_record").isNotNull())
     good = valid.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_price"),
+        F.sum(money("o_totalprice")).cast("double").alias("sum_price"),
     )
     bad = quarantined.agg(
         F.lit("~QUARANTINED").alias("status"),
@@ -859,10 +849,10 @@ def s14_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s15_api_sink_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM events
     GROUP BY event_type ORDER BY event_type
     """,
@@ -906,9 +896,7 @@ def s15_api_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(20,6)"))
-            .cast("double")
-            .alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .orderBy("event_type")
     )
@@ -982,11 +970,11 @@ def build_dpp_layout(spark: SparkSession, sf_dir: str) -> None:
 
 @register(
     "dpp_partition_pruned",
-    oracle="""
+    oracle=f"""
     SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
+           CAST(SUM({money_sql("l_extendedprice")}
+                    * (1 - {rate_sql("l_discount")})) AS DOUBLE) AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-07-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1996-10-01 00:00:00'
@@ -1018,10 +1006,7 @@ def dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("ship_month")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (1 - F.col("l_discount").cast("decimal(4,2)"))
-            )
+            F.sum(money("l_extendedprice") * (1 - rate("l_discount")))
             .cast("double")
             .alias("revenue"),
         )
@@ -1076,10 +1061,10 @@ def build_nested_orders(spark: SparkSession, sf_dir: str) -> None:
 
 @register(
     "s16_nested_schema_pruning",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority AS priority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE)
              AS sum_total
     FROM orders
     WHERE o_orderstatus = 'F'
@@ -1105,9 +1090,7 @@ def s16_nested_schema_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("customer.priority").alias("priority"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("money.total").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_total"),
+            F.sum(money("money.total")).cast("double").alias("sum_total"),
         )
         .orderBy("priority")
     )
@@ -1194,7 +1177,7 @@ def read_snapshot(spark: SparkSession, sf_dir: str, version: str | None = None) 
            CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(SUM(CASE WHEN o_orderstatus = 'X' THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_cancelled,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+           CAST(SUM({money_sql("o_totalprice")}) AS DOUBLE)
              AS total_value
     FROM snaps GROUP BY version ORDER BY version
     """,
@@ -1222,9 +1205,7 @@ def s17_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("o_orderstatus") == "X", 1).otherwise(0)
             ).alias("n_cancelled"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
+            F.sum(money("o_totalprice")).cast("double").alias("total_value"),
         )
         .orderBy("version")
     )
@@ -1296,11 +1277,11 @@ def s18_text_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s19_parquet_bloom_probe",
-    oracle="""
+    oracle=f"""
     WITH b AS (SELECT MAX(l_orderkey) AS mx FROM lineitem)
     SELECT l_orderkey,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE)
              AS revenue
     FROM lineitem, b
     WHERE l_orderkey IN (b.mx // 2, b.mx // 3, b.mx // 5)
@@ -1360,9 +1341,7 @@ def s19_parquet_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue"),
+            F.sum(money("l_extendedprice")).cast("double").alias("revenue"),
         )
         .orderBy("l_orderkey")
     )

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int_sql
+from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, dec6_sql, md5_int_sql, money_sql
 from sales_agent_graphdb_spark.queries.event_windows import (
     SESSION_ORACLE,
     SLIDING_ORACLE,
@@ -30,7 +30,7 @@ def st_stream_tumbling_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st_stream_stateful_sessions",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
@@ -46,7 +46,7 @@ def st_stream_tumbling_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, session_no,
              strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
              COUNT(*) AS n_events,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+             CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
       FROM islands
       GROUP BY user_id, session_no)
     SELECT user_id, session_start, n_events, total_value
@@ -161,10 +161,10 @@ def st_stream_sessions_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st_stream_foreachbatch_upsert",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM events GROUP BY event_type ORDER BY event_type
     """,
 )
@@ -179,7 +179,7 @@ def st_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "st_stream_user_profile",
-    oracle="""
+    oracle=f"""
     WITH per AS (
       SELECT user_id, event_type, COUNT(*) AS c
       FROM events GROUP BY user_id, event_type),
@@ -190,7 +190,7 @@ def st_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     agg AS (
       SELECT user_id,
              CAST(COUNT(*) AS BIGINT) AS n_events,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value,
+             CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value,
              CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types
       FROM events GROUP BY user_id)
     SELECT a.user_id, a.n_events, a.total_value, a.n_types, t.top_type
@@ -214,10 +214,10 @@ def st_stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st_stream_static_enrich",
-    oracle="""
+    oracle=f"""
     SELECT c.c_mktsegment AS segment, e.event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(e.value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("e.value")}) AS DOUBLE) AS total_value
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY segment, e.event_type
     ORDER BY segment, e.event_type
@@ -325,12 +325,12 @@ def st_stream_kmv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st_stream_topk_maintain",
-    oracle="""
+    oracle=f"""
     WITH r AS (
-      SELECT event_type, event_id, CAST(value AS DECIMAL(18,2)) AS v,
+      SELECT event_type, event_id, {money_sql("value")} AS v,
              row_number() OVER (
                PARTITION BY event_type
-               ORDER BY CAST(value AS DECIMAL(18,2)) DESC, event_id) AS rk
+               ORDER BY {money_sql("value")} DESC, event_id) AS rk
       FROM events)
     SELECT event_type, CAST(rk AS BIGINT) AS rank, event_id,
            CAST(v AS DOUBLE) AS value

@@ -30,10 +30,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import (
+    dec6,
+    dec6_sql,
+    money,
+    money_cents,
+    money_cents_sql,
+    money_sql,
+)
 from sales_agent_graphdb_spark.registry import register
 from sales_agent_graphdb_spark.session import materialize
-
-VAL = "decimal(20,6)"
 
 
 @register(
@@ -118,7 +124,7 @@ _BANDS_VALUES = ", ".join(f"('{b}', {lo}, {hi})" for b, lo, hi in _BANDS)
     WITH bands(band, lo, hi) AS (VALUES {_BANDS_VALUES})
     SELECT band, CAST(lo AS DOUBLE) AS lo, CAST(hi AS DOUBLE) AS hi,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
     GROUP BY band, b.lo, b.hi ORDER BY b.lo
     """,
@@ -139,7 +145,7 @@ def range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band", "lo", "hi")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .orderBy("lo")
     )
@@ -243,22 +249,44 @@ def pct_approx_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ts_gap_fill_locf",
-    oracle="""
-    WITH hourly AS (
-      SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(COUNT(*) AS BIGINT) AS n_events,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
-      FROM events GROUP BY event_type, hour),
-    bounds AS (
+# The dense per-key hour spine both gap-fill queries left-join their
+# hourly aggregate onto: every hour from the first event's hour to the
+# last's, for every event type.
+_HOUR_SPINE_SQL = """bounds AS (
       SELECT date_trunc('hour', MIN(ts)) AS min_h,
              date_trunc('hour', MAX(ts)) AS max_h
       FROM events),
     spine AS (
       SELECT t.event_type,
              unnest(generate_series(b.min_h, b.max_h, INTERVAL 1 HOUR)) AS hour
-      FROM (SELECT DISTINCT event_type FROM events) t CROSS JOIN bounds b),
+      FROM (SELECT DISTINCT event_type FROM events) t CROSS JOIN bounds b)"""
+
+
+def _hour_spine(e: DataFrame) -> DataFrame:
+    """Spark side of ``_HOUR_SPINE_SQL``: one ``sequence(min_h, max_h,
+    1 hour)`` explode per key from a one-row bounds broadcast."""
+    bounds = e.agg(
+        F.date_trunc("hour", F.min("ts")).alias("min_h"),
+        F.date_trunc("hour", F.max("ts")).alias("max_h"),
+    )
+    types = e.select("event_type").distinct()
+    return types.crossJoin(F.broadcast(bounds)).select(
+        "event_type",
+        F.explode(
+            F.sequence(F.col("min_h"), F.col("max_h"), F.expr("interval 1 hour"))
+        ).alias("hour"),
+    )
+
+
+@register(
+    "ts_gap_fill_locf",
+    oracle=f"""
+    WITH hourly AS (
+      SELECT event_type, date_trunc('hour', ts) AS hour,
+             CAST(COUNT(*) AS BIGINT) AS n_events,
+             CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
+      FROM events GROUP BY event_type, hour),
+    {_HOUR_SPINE_SQL},
     joined AS (
       SELECT s.event_type, s.hour,
              COALESCE(h.n_events, 0) AS n_events,
@@ -298,20 +326,9 @@ def ts_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"),
+        F.sum(dec6("value")).cast("double").alias("total_value"),
     )
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("min_h"),
-        F.date_trunc("hour", F.max("ts")).alias("max_h"),
-    )
-    types = e.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(bounds)).select(
-        "event_type",
-        F.explode(
-            F.sequence(F.col("min_h"), F.col("max_h"), F.expr("interval 1 hour"))
-        ).alias("hour"),
-    )
-    j = spine.join(hourly, ["event_type", "hour"], "left")
+    j = _hour_spine(e).join(hourly, ["event_type", "hour"], "left")
     w = (
         W.partitionBy("event_type")
         .orderBy("hour")
@@ -386,7 +403,7 @@ SCD2_ASOF_ORACLE = f"""
       FROM u)
     SELECT seg_at AS segment, event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
     FROM w WHERE side = 1
     GROUP BY seg_at, event_type ORDER BY segment, event_type
     """
@@ -448,7 +465,7 @@ def join_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("seg_at").alias("segment"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .orderBy("segment", "event_type")
     )
@@ -507,7 +524,7 @@ def _interval_cells(intervals: DataFrame) -> DataFrame:
     WITH {_PROMOS_SQL}
     SELECT p.promo_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(e.value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+           CAST(SUM({dec6_sql("e.value")}) AS DOUBLE) AS total_value
     FROM promos p JOIN events e
       ON e.ts >= p.start_ts AND e.ts < p.end_ts
     GROUP BY p.promo_id ORDER BY p.promo_id
@@ -549,7 +566,7 @@ def range_join_grid_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("promo_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
         .orderBy("promo_id")
     )
@@ -632,7 +649,7 @@ def range_join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_downsample_ohlc",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT event_type, date_trunc('hour', ts) AS bucket, value,
              row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
@@ -646,7 +663,7 @@ def range_join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(value) AS low,
            MAX(CASE WHEN rn_d = 1 THEN value END) AS close,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS volume
+           CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS volume
     FROM r GROUP BY event_type, bucket
     ORDER BY event_type, bucket
     """,
@@ -683,7 +700,7 @@ def ts_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("value").alias("low"),
             F.max(F.when(F.col("rn_d") == 1, F.col("value"))).alias("close"),
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("volume"),
+            F.sum(dec6("value")).cast("double").alias("volume"),
         )
         .orderBy("event_type", "bucket")
     )
@@ -918,11 +935,11 @@ def pct_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "anomaly_seasonal_baseline",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT event_type, EXTRACT(hour FROM ts) AS hod,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE)
+             CAST(SUM({dec6_sql("value")}) AS DOUBLE)
                / COUNT(*) AS baseline
       FROM events GROUP BY 1, 2),
     flagged AS (
@@ -960,10 +977,7 @@ def anomaly_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.hour("ts").alias("hod")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        (
-            F.sum(F.col("value").cast("decimal(20,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("baseline"),
+        (F.sum(dec6("value")).cast("double") / F.count(F.lit(1))).alias("baseline"),
     )
     scored = ev.select(
         "event_type", F.hour("ts").alias("hod"), "value"
@@ -1148,19 +1162,12 @@ def ts_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_gap_fill_linear",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
       SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value
+             CAST(SUM({dec6_sql("value")}) AS DOUBLE) AS total_value
       FROM events GROUP BY event_type, hour),
-    bounds AS (
-      SELECT date_trunc('hour', MIN(ts)) AS min_h,
-             date_trunc('hour', MAX(ts)) AS max_h
-      FROM events),
-    spine AS (
-      SELECT t.event_type,
-             unnest(generate_series(b.min_h, b.max_h, INTERVAL 1 HOUR)) AS hour
-      FROM (SELECT DISTINCT event_type FROM events) t CROSS JOIN bounds b),
+    {_HOUR_SPINE_SQL},
     joined AS (
       SELECT s.event_type, s.hour, h.total_value,
              row_number() OVER (PARTITION BY s.event_type ORDER BY s.hour)
@@ -1213,19 +1220,8 @@ def ts_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = catalog.load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.sum(F.col("value").cast(VAL)).cast("double").alias("total_value"))
-    bounds = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("min_h"),
-        F.date_trunc("hour", F.max("ts")).alias("max_h"),
-    )
-    types = e.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(bounds)).select(
-        "event_type",
-        F.explode(
-            F.sequence(F.col("min_h"), F.col("max_h"), F.expr("interval 1 hour"))
-        ).alias("hour"),
-    )
-    j = spine.join(hourly, ["event_type", "hour"], "left").withColumn(
+    ).agg(F.sum(dec6("value")).cast("double").alias("total_value"))
+    j = _hour_spine(e).join(hourly, ["event_type", "hour"], "left").withColumn(
         "rn", F.row_number().over(W.partitionBy("event_type").orderBy("hour"))
     )
     wb = (
@@ -1275,9 +1271,9 @@ def ts_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_cusum_changepoint",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-      SELECT event_type, ts, event_id, CAST(value AS DECIMAL(18,2)) AS v
+      SELECT event_type, ts, event_id, {money_sql("value")} AS v
       FROM events),
     c AS (
       SELECT event_type, ts, event_id,
@@ -1330,7 +1326,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     production monitors per (entity, metric) — thousands of shards,
     same plan."""
     e = catalog.load_table(spark, sf_dir, "events").select(
-        "event_type", "ts", "event_id", F.col("value").cast("decimal(18,2)").alias("v")
+        "event_type", "ts", "event_id", money("value").alias("v")
     )
     wc = (
         W.partitionBy("event_type")
@@ -1402,7 +1398,7 @@ _ROLL_W = 24  # trailing observations per rolling fit
     oracle=f"""
     WITH hourly AS (
       SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DECIMAL(20,6)) AS y
+             {dec6_sql(f"SUM({dec6_sql('value')})")} AS y
       FROM events GROUP BY event_type, hour),
     idx AS (
       SELECT event_type, hour, y,
@@ -1449,7 +1445,7 @@ def ts_rolling_regression_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = catalog.load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.sum(F.col("value").cast(VAL)).cast(VAL).alias("y"))
+    ).agg(dec6(F.sum(dec6("value"))).alias("y"))
     idx = hourly.withColumn(
         "t",
         F.row_number()
@@ -1493,10 +1489,10 @@ def ts_rolling_regression_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_var_expected_shortfall",
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT event_type,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+             {money_cents_sql("value")} AS cents,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM events GROUP BY event_type, cents),
     c AS (
@@ -1548,9 +1544,7 @@ def ts_var_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (
         ev.select(
             "event_type",
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            money_cents("value").alias("cents"),
         )
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1605,7 +1599,7 @@ _ACF_LAGS = (1, 24)  # adjacent-hour persistence + daily seasonality
     oracle=f"""
     WITH hourly AS (
       SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS y
+             CAST(SUM({money_sql("value")}) * 100 AS BIGINT) AS y
       FROM events GROUP BY event_type, hour),
     idx AS (
       SELECT event_type, y,
@@ -1664,11 +1658,7 @@ def ts_acf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = catalog.load_table(spark, sf_dir, "events")
     hourly = (
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour"))
-        .agg(
-            (F.sum(F.col("value").cast("decimal(18,2)")) * 100)
-            .cast("bigint")
-            .alias("y")
-        )
+        .agg((F.sum(money("value")) * 100).cast("bigint").alias("y"))
     )
     wp = W.partitionBy("event_type")
     idx = hourly.select(
@@ -1796,12 +1786,12 @@ def ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_theil_sen_slope",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
              DATE_DIFF('day', DATE '1970-01-01',
                        CAST(date_trunc('day', ts) AS DATE)) AS d,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
+             CAST(SUM({money_cents_sql("value")})
                   AS BIGINT) AS cents
       FROM events GROUP BY event_type, d),
     pairs AS (
@@ -1859,7 +1849,7 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("d"),
     ).agg(
         F.sum(
-            (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+            money_cents("value")
         )
         .cast("bigint")
         .alias("cents")

@@ -10,7 +10,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import hex_int, hex_int_sql, md5_int, md5_int_sql
+from sales_agent_graphdb_spark.functions.scalar import (
+    dec6,
+    dec6_sql,
+    hex_int,
+    hex_int_sql,
+    md5_int,
+    md5_int_sql,
+)
 from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.operators.chunker import chunk_documents, duckdb_chunk_sql
 from sales_agent_graphdb_spark.registry import register
@@ -732,7 +739,7 @@ _ENTROPY_FLAG = 2.0  # nats; measured (2026-08): sf0.01 min 1.64 / p05
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN entropy < {_ENTROPY_FLAG} THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_flagged,
-           ROUND(CAST(SUM(CAST(entropy AS DECIMAL(20,6))) AS DOUBLE)
+           ROUND(CAST(SUM({dec6_sql("entropy")}) AS DOUBLE)
                  / COUNT(*), 6) AS avg_entropy
     FROM h GROUP BY lang ORDER BY lang
     """,
@@ -778,7 +785,7 @@ def text_entropy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("entropy") < _ENTROPY_FLAG, 1).otherwise(0)
             ).alias("n_flagged"),
             F.round(
-                F.sum(F.col("entropy").cast("decimal(20,6)")).cast("double")
+                F.sum(dec6("entropy")).cast("double")
                 / F.count(F.lit(1)),
                 6,
             ).alias("avg_entropy"),
@@ -829,7 +836,7 @@ _CLF_W_LEN = 0.004  # token count
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN margin > 0 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_kept,
-           ROUND(CAST(SUM(CAST(margin AS DECIMAL(20,6))) AS DOUBLE)
+           ROUND(CAST(SUM({dec6_sql("margin")}) AS DOUBLE)
                  / COUNT(*), 6) AS avg_margin
     FROM s GROUP BY lang ORDER BY lang
     """,
@@ -875,7 +882,7 @@ def text_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFram
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.when(F.col("margin") > 0, 1).otherwise(0)).alias("n_kept"),
             F.round(
-                F.sum(F.col("margin").cast("decimal(20,6)")).cast("double")
+                F.sum(dec6("margin")).cast("double")
                 / F.count(F.lit(1)),
                 6,
             ).alias("avg_margin"),

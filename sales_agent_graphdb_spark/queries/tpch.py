@@ -5,14 +5,8 @@ yardstick, registered so the engine's analytics core is measured on
 queries every reviewer already knows. The reference has no equivalent
 surface (its relational reads are point/ilike lookups — tools.py:31-91);
 these anchor the "full analytics engine" claim the rest of the registry
-makes piecewise.
-
-Exactness rules (the flagship_revenue_by_brand conventions): money
-doubles cast to DECIMAL(18,2) and rate doubles to DECIMAL(4,2) BEFORE
-arithmetic (both grids are exact 2-dp values — verified, no rounding
-boundary), products/sums stay in exact DECIMAL and cast to double only
-at the end; averages are one double division of exact aggregates, the
-same operation order on both engines.
+makes piecewise. Money and rates ride the exact grids of
+functions/scalar.py.
 """
 
 from __future__ import annotations
@@ -21,28 +15,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
+from sales_agent_graphdb_spark.functions.scalar import money, money_sql, rate, rate_sql
 from sales_agent_graphdb_spark.registry import register
-
-_MONEY = "decimal(18,2)"
-_RATE = "decimal(4,2)"
 
 
 @register(
     "tpch_q1_pricing_summary",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(4,2)))
-                    * (1 + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS sum_charge,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+           CAST(SUM({money_sql("l_quantity")}) AS DOUBLE) AS sum_qty,
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE) AS sum_base_price,
+           CAST(SUM({money_sql("l_extendedprice")}
+                    * (1 - {rate_sql("l_discount")})) AS DOUBLE) AS sum_disc_price,
+           CAST(SUM({money_sql("l_extendedprice")}
+                    * (1 - {rate_sql("l_discount")})
+                    * (1 + {rate_sql("l_tax")})) AS DOUBLE) AS sum_charge,
+           CAST(SUM({money_sql("l_quantity")}) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE) AS avg_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+           CAST(SUM({money_sql("l_extendedprice")}) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE) AS avg_price,
-           CAST(SUM(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE)
+           CAST(SUM({rate_sql("l_discount")}) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE) AS avg_disc,
            CAST(COUNT(*) AS BIGINT) AS count_order
     FROM lineitem
@@ -64,11 +56,11 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = catalog.load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
     )
-    price = F.col("l_extendedprice").cast(_MONEY)
-    disc = F.col("l_discount").cast(_RATE)
-    tax = F.col("l_tax").cast(_RATE)
+    price = money("l_extendedprice")
+    disc = rate("l_discount")
+    tax = rate("l_tax")
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast(_MONEY)).alias("_sq"),
+        F.sum(money("l_quantity")).alias("_sq"),
         F.sum(price).alias("_sp"),
         F.sum(price * (1 - disc)).alias("_sd"),
         F.sum(price * (1 - disc) * (1 + tax)).alias("_sc"),
@@ -92,10 +84,10 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q3_shipping_priority",
-    oracle="""
+    oracle=f"""
     SELECT l.l_orderkey AS orderkey,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {rate_sql("l.l_discount")})) AS DOUBLE) AS revenue,
            o.o_orderdate AS orderdate,
            o.o_orderpriority AS priority
     FROM customer c
@@ -130,10 +122,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = catalog.load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15 00:00:00").cast("timestamp")
     )
-    rev = (
-        F.col("l_extendedprice").cast(_MONEY)
-        * (1 - F.col("l_discount").cast(_RATE))
-    )
+    rev = money("l_extendedprice") * (1 - rate("l_discount"))
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
@@ -151,10 +140,10 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q5_local_supplier_volume",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name AS nation,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {rate_sql("l.l_discount")})) AS DOUBLE) AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -190,10 +179,7 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     r = catalog.load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
     )
-    rev = (
-        F.col("l_extendedprice").cast(_MONEY)
-        * (1 - F.col("l_discount").cast(_RATE))
-    )
+    rev = money("l_extendedprice") * (1 - rate("l_discount"))
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
@@ -212,9 +198,9 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "tpch_q6_forecast_revenue",
-    oracle="""
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
+    oracle=f"""
+    SELECT CAST(SUM({money_sql("l_extendedprice")}
+                    * {rate_sql("l_discount")}) AS DOUBLE) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_candidates
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -242,22 +228,17 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 24)
     )
     return li.agg(
-        F.sum(
-            F.col("l_extendedprice").cast(_MONEY)
-            * F.col("l_discount").cast(_RATE)
-        )
-        .cast("double")
-        .alias("revenue"),
+        F.sum(money("l_extendedprice") * rate("l_discount")).cast("double").alias("revenue"),
         F.count(F.lit(1)).alias("n_candidates"),
     )
 
 
 @register(
     "tpch_q10_returned_items",
-    oracle="""
+    oracle=f"""
     SELECT c.c_custkey AS custkey, c.c_name AS name,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {rate_sql("l.l_discount")})) AS DOUBLE) AS revenue,
            n.n_name AS nation,
            CAST(c.c_acctbal AS DOUBLE) AS acctbal
     FROM customer c
@@ -289,10 +270,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag") == "R"
     )
     n = catalog.load_table(spark, sf_dir, "nation")
-    rev = (
-        F.col("l_extendedprice").cast(_MONEY)
-        * (1 - F.col("l_discount").cast(_RATE))
-    )
+    rev = money("l_extendedprice") * (1 - rate("l_discount"))
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
@@ -319,11 +297,11 @@ _Q18_QTY = 150
     WITH big AS (
       SELECT l_orderkey FROM lineitem
       GROUP BY l_orderkey
-      HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > {_Q18_QTY})
+      HAVING SUM({money_sql("l_quantity")}) > {_Q18_QTY})
     SELECT c.c_name AS name, c.c_custkey AS custkey,
            o.o_orderkey AS orderkey, o.o_orderdate AS orderdate,
            CAST(o.o_totalprice AS DOUBLE) AS totalprice,
-           CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+           CAST(SUM({money_sql("l.l_quantity")}) AS DOUBLE) AS sum_qty
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -346,7 +324,7 @@ def tpch_q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFram
     TakeOrderedAndProject with a deterministic (orderdate, orderkey)
     tie-break."""
     li = catalog.load_table(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast(_MONEY)
+    qty = money("l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(qty).alias("_tq"))
@@ -366,7 +344,7 @@ def tpch_q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("o_orderdate").alias("orderdate"),
             F.col("o_totalprice").cast("double").alias("totalprice"),
         )
-        .agg(F.sum(F.col("l_quantity").cast(_MONEY)).cast("double").alias("sum_qty"))
+        .agg(F.sum(money("l_quantity")).cast("double").alias("sum_qty"))
         .orderBy(F.col("totalprice").desc(), "orderdate", "orderkey")
         .limit(20)
     )
@@ -447,14 +425,14 @@ def _tpch_views(spark: SparkSession, sf_dir: str) -> None:
         catalog.load_table(spark, sf_dir, t).createOrReplaceTempView(f"tpch_{t}")
 
 
-_Q17 = """
-    SELECT CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+_Q17 = f"""
+    SELECT CAST(CAST(SUM({money_sql("l.l_extendedprice")}) AS DOUBLE)
                 / 7.0 AS DOUBLE) AS avg_yearly,
            CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM {li} l JOIN {part} p ON p.p_partkey = l.l_partkey
+    FROM {{li}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
     WHERE p.p_brand = 'Brand#3' AND p.p_type = 'PROMO'
       AND l.l_quantity < (SELECT 0.5 * AVG(l2.l_quantity)
-                          FROM {li} l2 WHERE l2.l_partkey = l.l_partkey)
+                          FROM {{li}} l2 WHERE l2.l_partkey = l.l_partkey)
 """
 
 
@@ -512,11 +490,11 @@ def tpch_q2_top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFra
     return spark.sql(_Q2.format(sup="tpch_supplier", nat="tpch_nation", reg="tpch_region"))
 
 
-_Q19 = """
-    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
+_Q19 = f"""
+    SELECT CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {rate_sql("l.l_discount")})) AS DOUBLE) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM {li} l JOIN {part} p ON p.p_partkey = l.l_partkey
+    FROM {{li}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
     WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
            AND l.l_quantity BETWEEN 1 AND 11)
        OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25
@@ -620,15 +598,15 @@ def tpch_q12_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q12.format(ord="tpch_orders", li="tpch_lineitem"))
 
 
-_Q14 = """
-    SELECT CAST(100.00 * CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                                  * (1 - CAST(l.l_discount AS DECIMAL(4,2))))
+_Q14 = f"""
+    SELECT CAST(100.00 * CAST(SUM({money_sql("l.l_extendedprice")}
+                                  * (1 - {rate_sql("l.l_discount")}))
                               FILTER (WHERE p.p_type = 'PROMO') AS DOUBLE)
-           / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                      * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE)
+           / CAST(SUM({money_sql("l.l_extendedprice")}
+                      * (1 - {rate_sql("l.l_discount")})) AS DOUBLE)
            AS DOUBLE) AS promo_revenue_pct,
            CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM {li} l JOIN {part} p ON l.l_partkey = p.p_partkey
+    FROM {{li}} l JOIN {{part}} p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
       AND l.l_shipdate <  TIMESTAMP '1996-10-01 00:00:00'
 """
@@ -664,17 +642,17 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # classification). Same statement-is-oracle convention.
 # ---------------------------------------------------------------------------
 
-_Q7 = """
+_Q7 = f"""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            CAST(EXTRACT(year FROM l.l_shipdate) AS INT) AS l_year,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-    FROM {sup} s
-    JOIN {li} l ON s.s_suppkey = l.l_suppkey
-    JOIN {ord} o ON o.o_orderkey = l.l_orderkey
-    JOIN {cust} c ON c.c_custkey = o.o_custkey
-    JOIN {nat} n1 ON s.s_nationkey = n1.n_nationkey
-    JOIN {nat} n2 ON c.c_nationkey = n2.n_nationkey
+           CAST(SUM({money_sql("l.l_extendedprice")}
+                    * (1 - {rate_sql("l.l_discount")})) AS DOUBLE) AS revenue
+    FROM {{sup}} s
+    JOIN {{li}} l ON s.s_suppkey = l.l_suppkey
+    JOIN {{ord}} o ON o.o_orderkey = l.l_orderkey
+    JOIN {{cust}} c ON c.c_custkey = o.o_custkey
+    JOIN {{nat}} n1 ON s.s_nationkey = n1.n_nationkey
+    JOIN {{nat}} n2 ON c.c_nationkey = n2.n_nationkey
     WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
         OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
       AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -704,23 +682,23 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust="tpch_customer", nat="tpch_nation"))
 
 
-_Q8 = """
+_Q8 = f"""
     SELECT o_year,
            CAST(CAST(SUM(volume) FILTER (WHERE supp_nation = 'NATION_3') AS DOUBLE)
                 / CAST(SUM(volume) AS DOUBLE) AS DOUBLE) AS mkt_share
     FROM (
       SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS o_year,
-             CAST(l.l_extendedprice AS DECIMAL(18,2))
-                  * (1 - CAST(l.l_discount AS DECIMAL(4,2))) AS volume,
+             {money_sql("l.l_extendedprice")}
+                  * (1 - {rate_sql("l.l_discount")}) AS volume,
              n2.n_name AS supp_nation
-      FROM {part} p
-      JOIN {li} l ON p.p_partkey = l.l_partkey
-      JOIN {sup} s ON s.s_suppkey = l.l_suppkey
-      JOIN {ord} o ON o.o_orderkey = l.l_orderkey
-      JOIN {cust} c ON c.c_custkey = o.o_custkey
-      JOIN {nat} n1 ON c.c_nationkey = n1.n_nationkey
-      JOIN {reg} r ON n1.n_regionkey = r.r_regionkey
-      JOIN {nat} n2 ON s.s_nationkey = n2.n_nationkey
+      FROM {{part}} p
+      JOIN {{li}} l ON p.p_partkey = l.l_partkey
+      JOIN {{sup}} s ON s.s_suppkey = l.l_suppkey
+      JOIN {{ord}} o ON o.o_orderkey = l.l_orderkey
+      JOIN {{cust}} c ON c.c_custkey = o.o_custkey
+      JOIN {{nat}} n1 ON c.c_nationkey = n1.n_nationkey
+      JOIN {{reg}} r ON n1.n_regionkey = r.r_regionkey
+      JOIN {{nat}} n2 ON s.s_nationkey = n2.n_nationkey
       WHERE r.r_name = 'EUROPE' AND p.p_type = 'PROMO'
         AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00') t
@@ -782,18 +760,18 @@ def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.sql(_Q13.format(cust="tpch_customer", ord="tpch_orders"))
 
 
-_Q15 = """
+_Q15 = f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                 * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS total_rev
-      FROM {li}
+             SUM({money_sql("l_extendedprice")}
+                 * (1 - {rate_sql("l_discount")})) AS total_rev
+      FROM {{li}}
       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
       GROUP BY l_suppkey)
     SELECT s.s_suppkey AS suppkey, s.s_name AS name,
            CAST(r.total_rev AS DOUBLE) AS total_revenue
-    FROM {sup} s JOIN revenue r ON s.s_suppkey = r.supplier_no
+    FROM {{sup}} s JOIN revenue r ON s.s_suppkey = r.supplier_no
     WHERE r.total_rev = (SELECT MAX(total_rev) FROM revenue)
     ORDER BY suppkey
 """
@@ -817,15 +795,15 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q15.format(li="tpch_lineitem", sup="tpch_supplier"))
 
 
-_Q22 = """
+_Q22 = f"""
     SELECT SUBSTRING(c.c_name, 17, 1) AS cntrycode,
            CAST(COUNT(*) AS BIGINT) AS numcust,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-    FROM {cust} c
-    WHERE c.c_acctbal > (SELECT AVG(c2.c_acctbal) FROM {cust} c2
+           CAST(SUM({money_sql("c.c_acctbal")}) AS DOUBLE) AS totacctbal
+    FROM {{cust}} c
+    WHERE c.c_acctbal > (SELECT AVG(c2.c_acctbal) FROM {{cust}} c2
                          WHERE c2.c_acctbal > 0.0)
       AND SUBSTRING(c.c_name, 17, 1) IN ('0','1','2','3','4','5','6')
-      AND NOT EXISTS (SELECT 1 FROM {ord} o WHERE o.o_custkey = c.c_custkey
+      AND NOT EXISTS (SELECT 1 FROM {{ord}} o WHERE o.o_custkey = c.c_custkey
                       AND o.o_orderstatus = 'P')
     GROUP BY cntrycode ORDER BY cntrycode
 """
@@ -896,7 +874,7 @@ def tpch_q17_prefiltered_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualified = li.join(thr, "l_partkey").filter(F.col("l_quantity") < F.col("_thr"))
     return qualified.agg(
         (
-            F.sum(F.col("l_extendedprice").cast(_MONEY)).cast("double") / 7.0
+            F.sum(money("l_extendedprice")).cast("double") / 7.0
         ).alias("avg_yearly"),
         F.count(F.lit(1)).alias("n_lines"),
     )

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sales_agent_graphdb_spark import catalog
-from sales_agent_graphdb_spark.functions.scalar import money
+from sales_agent_graphdb_spark.functions.scalar import dec6, dec6_sql, money, money_sql
 from sales_agent_graphdb_spark.functions import text as tk
 from sales_agent_graphdb_spark.registry import register
 
@@ -40,9 +40,9 @@ def w1_last6_per_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w2_running_sum",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey AS customer_id, o_orderkey AS id,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+           CAST(SUM({money_sql("o_totalprice")})
                 OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
     FROM orders ORDER BY customer_id, id
@@ -260,10 +260,10 @@ def w7b_running_sum_single_exchange(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "w8_time_range_frame",
-    oracle="""
+    oracle=f"""
     SELECT user_id, event_id,
            CAST(COUNT(*) OVER w AS BIGINT) AS n_1h,
-           CAST(SUM(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE) AS sum_1h
+           CAST(SUM({dec6_sql("value")}) OVER w AS DOUBLE) AS sum_1h
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
                  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
@@ -292,7 +292,7 @@ def w8_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             F.count(F.lit(1)).over(w).alias("n_1h"),
-            F.sum(F.col("value").cast("decimal(20,6)"))
+            F.sum(dec6("value"))
             .over(w)
             .cast("double")
             .alias("sum_1h"),
@@ -303,7 +303,7 @@ def w8_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "anomaly_rolling_zscore",
-    oracle="""
+    oracle=f"""
     WITH corpus AS (
       SELECT user_id, event_id, ts, value FROM events
       UNION ALL
@@ -313,7 +313,7 @@ def w8_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
       SELECT user_id, event_id, value,
              CAST(COUNT(*) OVER w AS BIGINT) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE) AS s1,
+             CAST(SUM({dec6_sql("value")}) OVER w AS DOUBLE) AS s1,
              CAST(SUM(CAST(value AS DECIMAL(19,3)) * CAST(value AS DECIMAL(19,3)))
                   OVER w AS DOUBLE) AS s2
       FROM corpus
@@ -378,7 +378,7 @@ def anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "value",
         F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(F.col("value").cast("decimal(20,6)")).over(w).cast("double").alias("s1"),
+        F.sum(dec6("value")).over(w).cast("double").alias("s1"),
         F.sum(d3 * d3).over(w).cast("double").alias("s2"),
     )
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")

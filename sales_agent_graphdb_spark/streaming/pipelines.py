@@ -59,7 +59,13 @@ from sales_agent_graphdb_spark.catalog import (
     read_parquet,
     written_schema,
 )
-from sales_agent_graphdb_spark.functions.scalar import H52_SPAN, md5_int
+from sales_agent_graphdb_spark.functions.scalar import (
+    H52_SPAN,
+    dec6,
+    dec6_quantizer,
+    md5_int,
+    money,
+)
 from sales_agent_graphdb_spark.session import materialize
 from sales_agent_graphdb_spark.sources import stamp
 
@@ -189,7 +195,7 @@ def _windowed_counts_stream(
         .groupBy(window_col.alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("total_value"),
+            F.sum(dec6("value")).cast("double").alias("total_value"),
         )
     )
     out = _drain(agg, mode="complete")
@@ -389,26 +395,19 @@ def _make_session_fn_exact(gap_s: int):
     """Per-group stateful sessionizer (a self-contained closure:
     cloudpickle serializes it by VALUE, so executors need no package
     import path). Accumulates value in exact decimal, so the flushed
-    total matches SUM(CAST(value AS
-    DECIMAL(20,6))) bit-for-bit — required for the oracle-checked
-    complete-sessions query. Each event is quantized to 6 dp with
-    HALF_UP on the shortest repr, which is exactly Spark's
-    double→DECIMAL(20,6) cast (BigDecimal.valueOf → setScale(6,
-    HALF_UP)) — the same cast every other oracle-green query applies
-    JVM-side, so this query diverges from the DuckDB oracle only if
-    they all do. Sentinel events (event-time far past every real
-    event) close each user's final session; the sentinel's own
-    singleton session stays in state and is never emitted."""
+    total matches SUM(CAST(value AS DECIMAL(20,6))) bit-for-bit —
+    required for the oracle-checked complete-sessions query. Each event
+    is quantized by ``scalar.dec6_quantizer``, the Python twin of the
+    6-dp cast every other oracle-green query applies JVM-side, so this
+    query diverges from the DuckDB oracle only if they all do. Sentinel
+    events (event-time far past every real event) close each user's
+    final session; the sentinel's own singleton session stays in state
+    and is never emitted."""
     import decimal as _decimal
 
     import pandas as _pd
 
-    _Q6 = _decimal.Decimal("0.000001")
-
-    def _dec6(value) -> _decimal.Decimal:
-        return _decimal.Decimal(str(value)).quantize(
-            _Q6, rounding=_decimal.ROUND_HALF_UP
-        )
+    _dec6 = dec6_quantizer()
 
     def session_fn(key, pdf_iter, state):
         (user_id,) = key
@@ -649,7 +648,7 @@ def make_upsert_sink(tbl_root: str):  # noqa: ANN201
     def merge(batch_df, standing):  # noqa: ANN001, ANN202
         part = batch_df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,6)")).alias("total_d"),
+            F.sum(dec6("value")).alias("total_d"),
         )
         merged = part if standing is None else standing.unionByName(part)
         return merged.groupBy("event_type").agg(
@@ -704,22 +703,17 @@ _PROFILE_STATE_SCHEMA = "n long, total string, type_counts string"
 def _make_profile_fn():
     """Per-user profile accumulator (closure ⇒ cloudpickle serializes
     by value, same rationale as _make_session_fn_exact, whose exact
-    decimal quantization it reuses verbatim: each event is quantized
-    to 6 dp HALF_UP — Spark's double→DECIMAL(20,6) cast — so the total
-    matches SUM(CAST(value AS DECIMAL(20,6))) bit-for-bit). The
-    sentinel row sorts last (far-future event time); on seeing it the
-    user's profile row flushes and state clears."""
+    decimal quantization it shares: each event goes through
+    ``scalar.dec6_quantizer``, so the total matches SUM(CAST(value AS
+    DECIMAL(20,6))) bit-for-bit). The sentinel row sorts last
+    (far-future event time); on seeing it the user's profile row
+    flushes and state clears."""
     import decimal as _decimal
     import json as _json
 
     import pandas as _pd
 
-    _Q6 = _decimal.Decimal("0.000001")
-
-    def _dec6(value) -> _decimal.Decimal:
-        return _decimal.Decimal(str(value)).quantize(
-            _Q6, rounding=_decimal.ROUND_HALF_UP
-        )
+    _dec6 = dec6_quantizer()
 
     def profile_fn(key, pdf_iter, state):
         (user_id,) = key
@@ -820,6 +814,8 @@ def user_profile_transform_with_state(
         )
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+    _dec6 = dec6_quantizer()
+
     class _ProfileProcessor(StatefulProcessor):
         def init(self, handle) -> None:
             self._agg = handle.getValueState("agg", "n long, total string")
@@ -830,7 +826,6 @@ def user_profile_transform_with_state(
 
             import pandas as _pd
 
-            _q6 = _decimal.Decimal("0.000001")
             (user_id,) = key
             pdf = _pd.concat(list(rows)).sort_values(["ts_us", "event_id"])
             if self._agg.exists():
@@ -844,9 +839,7 @@ def user_profile_transform_with_state(
                     flush = True
                     continue
                 n += 1
-                total += _decimal.Decimal(str(value)).quantize(
-                    _q6, rounding=_decimal.ROUND_HALF_UP
-                )
+                total += _dec6(value)
                 prev = (
                     self._types.getValue((et,))[0]
                     if self._types.containsKey((et,))
@@ -930,9 +923,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = events.join(F.broadcast(dim), "user_id")
     agg = enriched.groupBy("c_mktsegment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(20,6)"))
-        .cast("double")
-        .alias("total_value"),
+        F.sum(dec6("value")).cast("double").alias("total_value"),
     )
     out = _drain(agg, mode="complete")
     return out.select(
@@ -1100,9 +1091,7 @@ def scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("seg_at").alias("segment"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(20,6)"))
-                .cast("double")
-                .alias("total_value"),
+                F.sum(dec6("value")).cast("double").alias("total_value"),
             )
             .orderBy("segment", "event_type")
         )
@@ -1202,7 +1191,7 @@ def make_topk_fold_sink(tbl_root: str):  # noqa: ANN201
             batch_df.select(
                 "event_type",
                 "event_id",
-                F.col("value").cast("decimal(18,2)").alias("v"),
+                money("value").alias("v"),
             )
         )
         if standing is not None:

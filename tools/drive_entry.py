@@ -3,7 +3,8 @@
 Usage: python tools/drive_entry.py [--json OUT.json]
 
 With --json, also writes a CORRECTNESS-style artifact ({name:
-{rows_match, schema_match, hash_match, spark_rows, oracle_rows, err}})
+{rows_match, schema_match, hash_match, spark_rows, oracle_rows,
+spark_hash, oracle_hash, err}})
 covering the FULL registry — the committed evidence trail for queries
 the budget-capped real driver never reaches (ADVICE r08 #4: the
 changelog's "all green" claim must be backed by a committed artifact,

@@ -71,12 +71,15 @@ def compare(sdf, con, sql: str):
     res = con.execute(sql)
     ocols = [d[0] for d in res.description]
     orows = [tuple(r) for r in res.fetchall()]
+    shash, ohash = vhash(srows, sdf.columns), vhash(orows, ocols)
     record = {
         "rows_match": len(srows) == len(orows),
         "schema_match": sorted(sdf.columns) == sorted(ocols),
-        "hash_match": vhash(srows, sdf.columns) == vhash(orows, ocols),
+        "hash_match": shash == ohash,
         "spark_rows": len(srows),
         "oracle_rows": len(orows),
+        "spark_hash": shash,
+        "oracle_hash": ohash,
         "err": None,
     }
     return record, srows, orows
